@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, InputFileName}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, FileSourceMetadataAttribute}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -14,8 +14,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the optimizer has pushed down to a lake table's parquet relation
   * (directly, or across the projection that re-attaches manifest
   * partition values) is compiled against the table's manifest —
-  * per-file min/max stats, bloom sidecars, partition values when the
-  * layout carries them natively
+  * per-file min/max stats, bloom sidecars, manifest partition values
   * ([[MergeTable.scanEntriesByCondition]], the same planner behind
   * `scan(predicate)`) — and the relation is swapped for one over only
   * the files that may match. Parquet footer pruning still applies
@@ -27,24 +26,28 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Consumers get it for free: the `graft_table` TVF expansion,
   * `spark.sql` over it, or a Scala-API `t.read().filter(...)` — any
   * relation whose file set IS a registered table's live snapshot —
-  * without calling `scan()` explicitly. A predicate on the PARTITION
-  * column of a multi-commit-dir layout takes a second pattern: the
-  * optimizer folds it into the broadcast (file → partition value)
-  * map's LocalRelation and tightens the attach join to Inner, and the
+  * without calling `scan()` explicitly.
+  *
+  * A predicate on a PARTITION column takes a second pattern. Every
+  * partitioned read ([[MergeTable]]'s one file reader) keys its scan
+  * with [[MergeTable.FileKeyCol]], taken from `_metadata.file_path`,
+  * and re-attaches partition values by joining a broadcast (file key →
+  * partition value) map on it. The optimizer folds the predicate into
+  * that map's LocalRelation and tightens the attach join to Inner; the
   * rule then prunes the scan to the map's surviving file keys — a
   * REGISTRY-FREE rewrite (the map is that read's own file-set source
   * of truth, so it is sound for version reads too).
   *
   * Safety gates, in match order:
+  *   - the relation must be manifest-backed ([[ManifestFileIndex]] —
+  *     every relation [[MergeTable]] builds is one; any other relation
+  *     is left alone);
   *   - every attribute the condition references must be an output of
   *     the relation ITSELF (by ExprId, not name — an alias shadowing a
   *     stats column's name can never mis-prune);
   *   - the relation's file set must EQUAL the table's live snapshot (a
   *     time-travel read's file set differs → untouched: pruning a
   *     historical relation against the LIVE manifest would be wrong);
-  *   - the pruned rebuild must contain exactly one parquet relation
-  *     with the original's schema (deletion-vector tables divert to
-  *     the anti-join read → untouched);
   *   - the predicate compiles under the same keep-everything-on-
   *     unknown-shapes discipline as `scan()` — `scan(p) ≡
   *     read().filter(p)` is spec-pinned, and the full `Filter` stays
@@ -54,15 +57,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *     per relation per query.
   */
 class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
-  import GraftScanPruning.{Examined, ExaminedMap, FileKeyCol}
+  import GraftScanPruning.{Examined, ExaminedMap}
+  import MergeTable.FileKeyCol
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, child) =>
       rewrite(cond, child).map(Filter(cond, _)).getOrElse(f)
-    // Partition-predicate file skipping on the multi-commit-dir layout:
-    // a predicate on the partition column folds into the broadcast
-    // (file → partition value) map's LocalRelation, and the outer join
-    // tightens to Inner — from then on, any scanned file whose key is
+    // Partition-predicate file skipping: a predicate on a partition
+    // column folds into the broadcast (file → partition value) map's
+    // LocalRelation, and the outer join tightens to Inner — from then on, any scanned file whose key is
     // ABSENT from the map only produces rows the join drops. Prune the
     // scan to the map's surviving file keys. Registry-free and sound
     // for ANY of our reads (version reads carry their own map): the
@@ -81,13 +84,13 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
   /** Soundness of pattern B rests on "a scanned file whose key is
     * absent from the map only produces rows the join DROPS" — which is
     * only true when the join condition is an equality on the
-    * `__graft_file` key itself. `readEntriesPhys` builds exactly that
-    * (a USING-join on the key), but a future plan variant reusing the
-    * same structural shape under a different condition must not be
+    * [[MergeTable.FileKeyCol]] key itself. The reader builds exactly
+    * that (a USING-join on the key), but a future plan variant reusing
+    * the same structural shape under a different condition must not be
     * mis-pruned: require at least one EqualTo/EqualNullSafe conjunct
-    * whose one side is the map's `__graft_file` attribute and whose
-    * other side is a `__graft_file` attribute NOT from the map (the
-    * scan's). (r10 ADVICE finding.) */
+    * whose one side is the map's key attribute and whose other side is
+    * a key attribute NOT from the map (the scan's). (r10 ADVICE
+    * finding.) */
   private[lake] def isFileKeyEquiJoin(cond: Option[Expression],
       fileMap: LocalRelation): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo}
@@ -141,20 +144,34 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Structural signature of [[MergeTable.readEntriesPhys]]'s
-    * partition-value attach: a Project aliasing [[FileKeyCol]] from
-    * `input_file_name()` directly over a parquet relation. A user join
-    * that merely reuses the column name can't match this shape. */
+  /** Structural signature of [[MergeTable]]'s partition-value attach:
+    * a Project aliasing [[MergeTable.FileKeyCol]] from the `_metadata`
+    * column of a parquet relation reached through Projects and
+    * (pushed-down) Filters only. A user join that merely reuses the
+    * column name can't match this shape. */
   private def isFileAttach(plan: LogicalPlan): Boolean = plan match {
-    case Project(projList, _: LogicalRelation) =>
-      projList.exists {
-        case a: Alias if a.name == FileKeyCol =>
-          a.child.exists(_.isInstanceOf[InputFileName])
-        case _ => false
-      }
-    case Project(_, inner) => isFileAttach(inner)
+    case Project(projList, inner) =>
+      scanUnder(inner).exists { rel =>
+        projList.exists {
+          case a: Alias if a.name == FileKeyCol =>
+            a.child.references.exists(r =>
+              FileSourceMetadataAttribute.isValid(r.metadata) &&
+                rel.outputSet.contains(r))
+          case _ => false
+        }
+      } || isFileAttach(inner)
+    case Filter(_, inner) => isFileAttach(inner)
     case _ => false
   }
+
+  /** The relation under a chain of Projects and Filters. */
+  private def scanUnder(plan: LogicalPlan): Option[LogicalRelation] =
+    plan match {
+      case rel: LogicalRelation => Some(rel)
+      case Project(_, inner)    => scanUnder(inner)
+      case Filter(_, inner)     => scanUnder(inner)
+      case _                    => None
+    }
 
   /** Prune the attach-side scan to the file keys surviving in the
     * map. */
@@ -179,42 +196,27 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
           case h: HadoopFsRelation => h
           case _                   => return None
         }
-        fsRel.location match {
-          // manifest-backed scan (r15): prune by rebuilding the index
-          // over the admitted (path, length) pairs — zero listing I/O
-          case m: ManifestFileIndex =>
-            val kept = m.files.filter { case (p, _) =>
-              admitted(fileKeyOf(p.toUri.getPath))
-            }
-            if (kept.size == m.files.size) None
-            else if (kept.isEmpty) Some(LocalRelation(rel.output))
-            else {
-              val idx = new ManifestFileIndex(m.rootPaths.head, kept)
-              val out =
-                rel.copy(relation = fsRel.copy(location = idx)(spark))
-              out.setTagValue(ExaminedMap, true)
-              Some(out)
-            }
-          case loc =>
-            val all = loc.rootPaths
-            val pruned =
-              all.filter(p => admitted(fileKeyOf(p.toUri.getPath)))
-            if (pruned.size == all.size) None
-            else if (pruned.isEmpty) Some(LocalRelation(rel.output))
-            else {
-              val idx = new org.apache.spark.sql.execution.datasources
-                .InMemoryFileIndex(spark, pruned, fsRel.options,
-                  if (fsRel.partitionSchema.nonEmpty)
-                    Some(fsRel.partitionSchema)
-                  else None)
-              val out =
-                rel.copy(relation = fsRel.copy(location = idx)(spark))
-              out.setTagValue(ExaminedMap, true)
-              Some(out)
-            }
+        val m = fsRel.location match {
+          case m: ManifestFileIndex => m
+          case _                    => return None
+        }
+        // rebuild the index over the admitted (path, length) pairs —
+        // zero listing I/O
+        val kept = m.files.filter { case (p, _) =>
+          admitted(fileKeyOf(p.toUri.getPath))
+        }
+        if (kept.size == m.files.size) None
+        else if (kept.isEmpty) Some(LocalRelation(rel.output))
+        else {
+          val idx = new ManifestFileIndex(m.rootPaths.head, kept)
+          val out = rel.copy(relation = fsRel.copy(location = idx)(spark))
+          out.setTagValue(ExaminedMap, true)
+          Some(out)
         }
       case p @ Project(_, inner) =>
         swap(inner).map(nc => p.copy(child = nc))
+      case f @ Filter(_, inner) =>
+        swap(inner).map(nc => f.copy(child = nc))
       case _ => None
     }
     swap(left)
@@ -242,29 +244,12 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
     if (registry.isEmpty) return None
     // alias-shadowing guard: prune only on the relation's own attrs
     if (!cond.references.forall(rel.outputSet.contains)) return None
-    val fsRel = rel.relation match {
-      case h: HadoopFsRelation => h
-      case _                   => return None
+    val (fsRel, m) = rel.relation match {
+      case h @ HadoopFsRelation(m: ManifestFileIndex, _, _, _, _, _) =>
+        (h, m)
+      case _ => return None
     }
-    // CHEAP ownership pre-check on rootPaths (I/O-free for every index
-    // shape) before materializing the per-file set: inputFiles on a
-    // lazily-listed index of some UNRELATED table (a metastore
-    // CatalogFileIndex at 10^5+ files) would force a full listing in
-    // the optimizer (r15 review). A graft relation's rootPaths — the
-    // table root (manifest index) or its file paths (spark.read) —
-    // always sit at-or-under a registered root.
-    val ownerRoots = registry.map(_._2.root.toAbsolutePath.normalize
-      .toString)
-    val underSomeRoot = fsRel.location.rootPaths.exists { p =>
-      val s = p.toUri.getPath
-      ownerRoots.exists(r => s == r || s.startsWith(r + "/"))
-    }
-    if (!underSomeRoot) return None
-    // per-FILE set: the manifest-backed index roots at the TABLE, so
-    // rootPaths is no longer a file list — inputFiles is, for every
-    // index shape (r15)
-    val relFiles = fsRel.location.inputFiles.toSeq
-      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    val relFiles = m.files.map(_._1.toUri.getPath).toSet
     if (relFiles.isEmpty) return None
     val owner = registry.iterator.map(_._2)
       .flatMap { t =>
@@ -287,34 +272,12 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan] {
       else {
         // Structure-preserving substitution (the Delta PrepareDeltaScan
         // move): keep the ORIGINAL relation — schemas, options, format,
-        // output ExprIds — and swap only its file index for one over
-        // the admitted files. This survives both physical layouts (the
-        // multi-dir plain-file read whose partition values re-attach
-        // via the manifest join, and the compacted hive read whose
-        // partition column is native — the original partitionSchema is
-        // re-used for inference so value-subset type drift can't
-        // happen). A manifest-backed original rebuilds manifest-backed
-        // (pruning stays listing-free); a hive original keeps the
-        // InMemoryFileIndex path its partition inference needs.
-        val idx: org.apache.spark.sql.execution.datasources.FileIndex =
-          fsRel.location match {
-            case m: ManifestFileIndex =>
-              val prunedSet = pruned.map(e => t.root.resolve(e.relPath)
-                .toAbsolutePath.normalize.toString).toSet
-              new ManifestFileIndex(m.rootPaths.head,
-                m.files.filter { case (p, _) =>
-                  prunedSet(p.toUri.getPath)
-                })
-            case _ =>
-              val prunedPaths =
-                pruned.map(e => new org.apache.hadoop.fs.Path(
-                  t.root.resolve(e.relPath).toUri))
-              new org.apache.spark.sql.execution.datasources
-                .InMemoryFileIndex(spark, prunedPaths, fsRel.options,
-                  if (fsRel.partitionSchema.nonEmpty)
-                    Some(fsRel.partitionSchema)
-                  else None)
-          }
+        // output ExprIds — and swap only its file index for a manifest
+        // index over the admitted files (pruning stays listing-free).
+        val prunedSet = pruned.map(e => t.root.resolve(e.relPath)
+          .toAbsolutePath.normalize.toString).toSet
+        val idx = new ManifestFileIndex(m.rootPaths.head,
+          m.files.filter { case (p, _) => prunedSet(p.toUri.getPath) })
         val out = rel.copy(relation = fsRel.copy(location = idx)(spark))
         out.setTagValue(Examined, true)
         Some(out)
@@ -332,8 +295,4 @@ object GraftScanPruning {
     * pruning and map pruning examine a relation independently. */
   private[lake] val ExaminedMap =
     TreeNodeTag[Boolean]("graft.scan.examined.map")
-
-  /** The partition-value attach join's file-key column name (must stay
-    * in sync with [[MergeTable.readEntriesPhys]]'s fpMap). */
-  private[lake] val FileKeyCol = "__graft_file"
 }

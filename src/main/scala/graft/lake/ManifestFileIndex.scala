@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.StructType
   * Delta/Iceberg scan shape (`TahoeLogFileIndex`): the log, not the
   * filesystem, is the source of truth for which files a snapshot
   * holds, so scan-plan construction does ZERO listing or per-path
-  * status I/O. This is the 10^5–10^7-file cold-open fix the r15
-  * OpenProfile probe measured: `spark.read.parquet(20k paths)` costs
+  * status I/O. This is the 10^5–10^7-file cold-open fix; measured in
+  * r15, `spark.read.parquet(20k paths)` costs
   * ~16 s of driver-side path resolution (glob-check + file status per
   * path, ~0.8 ms each) on EVERY read — warm or cold — while this
   * index hands `FileSourceScanExec` pre-built statuses in

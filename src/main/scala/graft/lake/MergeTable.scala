@@ -754,7 +754,7 @@ final class MergeTable private (
         require(live.nonEmpty,
           s"MergeTable at $root: no declared schema and no data — " +
             "declareSchema first")
-        readEntriesPhys(live).schema
+        physicalSchemaOf(live)
       }
       val (ren, drops) = if (v == 0L) (Map.empty[String, String], Set.empty[String]) else mappingAt(v)
       val taken = base.fieldNames.toSet ++ ren.values ++ drops
@@ -824,7 +824,7 @@ final class MergeTable private (
         require(live.nonEmpty,
           s"MergeTable at $root: no declared schema and no data — " +
             "declareSchema first")
-        readEntriesPhys(live).schema
+        physicalSchemaOf(live)
       }
       val phys = physicalOf(name)
       val i = base.fieldNames.indexOf(phys)
@@ -868,7 +868,7 @@ final class MergeTable private (
 
   private def currentMapping(): (Map[String, String], Set[String]) = {
     val v = latestVersion()
-    if (v == 0L) (Map.empty, Set.empty) else mappingAt(v)
+    if (v == 0L) NoMapping else mappingAt(v)
   }
 
   /** Current renames as physical → logical (empty when no column was
@@ -2951,17 +2951,13 @@ final class MergeTable private (
         }.toSeq
         val touched = bins.flatten.toSeq
         import spark.implicits._
-        val binDf = broadcast(binOf.toDF(FileTag, BinCol))
-        val tracked = touched.forall(_.rowIds.isDefined)
-        val src =
-          if (tracked)
-            presentLogical(
-              readEntriesRowIdsPhys(touched, keep = Seq(FileTag)))
-          else readEntriesTagged(touched, keep = Seq(FileTag))
+        val binDf = broadcast(binOf.toDF(FileKeyCol, BinCol))
+        val src = readEntries(touched, keep = Seq(FileKeyCol),
+          rowIds = touched.forall(_.rowIds.isDefined))
         val packed = src
-          .join(binDf, Seq(FileTag))
+          .join(binDf, Seq(FileKeyCol))
           .repartition(bins.length, col(BinCol))
-          .drop(BinCol, FileTag)
+          .drop(BinCol, FileKeyCol)
         val (_, entries) = writeData(packed, allowHidden = true)
         (CommitDelta(entries, touched.map(_.relPath)), version)
       }
@@ -3199,9 +3195,9 @@ final class MergeTable private (
     * orphan commit dirs. */
   private def vectorize(live: Seq[FileEntry], predicate: Column)
       : Option[(Seq[FileEntry], Seq[FileEntry], Seq[FileEntry])] = {
-    val pos = readEntriesTagged(live, keep = Seq(FileTag, PosCol))
+    val pos = readEntries(live, keep = Seq(FileKeyCol, PosCol))
       .filter(coalesce(predicate, lit(false)))
-      .select(col(FileTag).as(DvFile), col(PosCol).as(DvPos))
+      .select(col(FileKeyCol).as(DvFile), col(PosCol).as(DvPos))
       .persist()
     try {
       val hit = pos.select(DvFile).distinct()
@@ -3766,14 +3762,14 @@ final class MergeTable private (
   }
 
   /** [[fileKey]]s of live files holding at least one `predicate` match.
-    * The tag is captured at the scan stage by [[readEntriesTagged]]
+    * The key is captured at the scan stage by [[readEntries]]
     * (exact even when the deletion-vector anti-join adds an exchange —
     * `input_file_name()` after a shuffle reads empty). */
   private def touchedFileNames(live: Seq[FileEntry],
       predicate: Column): Set[String] =
-    readEntriesTagged(live, keep = Seq(FileTag))
+    readEntries(live, keep = Seq(FileKeyCol))
       .filter(predicate)
-      .select(col(FileTag)).distinct()
+      .select(col(FileKeyCol)).distinct()
       .collect().map(_.getString(0)).toSet
 
   /** VACUUM with Delta's default 7-day retention window
@@ -4797,10 +4793,9 @@ final class MergeTable private (
     * CDF column sets must stay aligned across rename boundaries for
     * incremental consumers — pinned by ColumnMappingSpec.) */
   def readVersion(version: Long): DataFrame =
-    presentLogicalAs(
-      readEntriesPhysWith(snapshotAt(version),
-        if (version == 0L) None else schemaAt(version)),
-      if (version == 0L) (Map.empty, Set.empty) else mappingAt(version))
+    readEntries(snapshotAt(version),
+      if (version == 0L) None else schemaAt(version),
+      if (version == 0L) NoMapping else mappingAt(version))
 
   /** Change data feed between two committed versions (the Delta CDF
     * shape): every row inserted, updated, or deleted from `fromV` to
@@ -4946,8 +4941,7 @@ final class MergeTable private (
     def side(sel: Seq[FileEntry], v: Long,
         forceSchema: Boolean): DataFrame = {
       val declared = if (v == 0L) None else schemaAt(v)
-      val mapping: (Map[String, String], Set[String]) =
-        if (v == 0L) (Map.empty, Set.empty) else mappingAt(v)
+      val mapping = if (v == 0L) NoMapping else mappingAt(v)
       if (sel.isEmpty && !forceSchema)
         // metadata-cost empty side (the common pure-append poll: a
         // version contributes no changed partitions): the NONEMPTY
@@ -4972,7 +4966,7 @@ final class MergeTable private (
         // schema with a non-trailing partition column breaks the
         // stable-schema law this branch exists for), else data fields
         // then partition columns, then the identity pair.
-        val base = emptyLikePhysWith(declared)
+        val base = emptyLikePhys(declared)
         val (pc, dc) = base.columns.partition(partitionCols.contains)
         val shaped = base.select(
           declaredColumnOrder(declared, (dc ++ pc).toSeq).map(col): _*)
@@ -4982,8 +4976,7 @@ final class MergeTable private (
           .withColumnRenamed(RidCol, "row_id")
           .withColumnRenamed(RcvCol, "row_commit")
       }
-      presentLogicalAs(
-        readEntriesRowIdsPhysWith(sel, declared, Nil), mapping)
+      readEntries(sel, declared, mapping, rowIds = true)
         .withColumnRenamed(RidCol, "row_id")
         .withColumnRenamed(RcvCol, "row_commit")
     }
@@ -5495,9 +5488,6 @@ final class MergeTable private (
     mroot
   }
 
-  private def readEntries(entries: Seq[FileEntry]): DataFrame =
-    presentLogical(readEntriesPhys(entries))
-
   /** Drop the materialized row-tracking columns wherever a
     * footer-derived schema could surface them — they are engine state,
     * never data ([[MergeTable.RidCol]]). Declared-schema reads never
@@ -5506,49 +5496,154 @@ final class MergeTable private (
     if (df.columns.exists(HiddenCols.contains)) df.drop(HiddenCols.toSeq: _*)
     else df
 
-  /** PHYSICAL read of `entries` surfacing each row's ABSOLUTE row id
-    * and row commit version in [[MergeTable.RidCol]]/[[MergeTable.RcvCol]]:
-    * the scan schema includes the materialized columns (files without
-    * them read NULL), and NULL falls back to the manifest allotment —
-    * `base + row_index` for the id, the adding commit for the version
-    * — attached per file through a broadcast of numFiles metadata
-    * rows. Deletion vectors are anti-joined out at the scan like every
-    * tagged read. Every entry must carry an allotment. */
-  private def readEntriesRowIdsPhys(entries: Seq[FileEntry],
-      keep: Seq[String] = Nil): DataFrame =
-    readEntriesRowIdsPhysWith(entries, declaredSchema, keep)
-
-  private def readEntriesRowIdsPhysWith(entries: Seq[FileEntry],
-      declared: Option[org.apache.spark.sql.types.StructType],
-      keep: Seq[String]): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    val (dataFields0, partFields) =
-      resolvePartFields(declared, byDir)
-    val longT = org.apache.spark.sql.types.LongType
-    val dataFields = dataFields0 ++ Seq(
-      org.apache.spark.sql.types.StructField(RidCol, longT),
-      org.apache.spark.sql.types.StructField(RcvCol, longT))
-    val base = manifestScan(entries,
-        org.apache.spark.sql.types.StructType(dataFields))
-      .withColumn(FileTag, fileTagExpr(col("_metadata.file_path")))
-      .withColumn(PosCol, col("_metadata.row_index"))
+  /** THE file reader: every read of the table's data files — current,
+    * time travel, row tracking, and the MERGE/DELETE/OPTIMIZE rewrite
+    * scans — is built here, as ONE manifest-backed scan of all
+    * `entries` regardless of commit-dir count.
+    *
+    * The scan reads the DATA fields of [[readFields]] (the declared
+    * schema, or the union of the per-dir footer schemas; a file lacking
+    * a column reads NULL). Partition values are re-attached from the
+    * MANIFEST, not the path layout — the log is the source of truth, as
+    * in Delta — through a broadcast (file key → value) map joined on
+    * [[MergeTable.FileKeyCol]]. That key and the in-file row position
+    * ([[MergeTable.PosCol]]) are captured AT THE SCAN from `_metadata`,
+    * as real columns before any join or exchange, so they stay exact
+    * downstream (an `input_file_name()` evaluated after a shuffle reads
+    * empty) and the scan keeps parquet filter pushdown. A read needing
+    * no file identity (unpartitioned, no deletion vectors, no row ids,
+    * nothing kept) adds no columns at all.
+    *
+    * Deletion vectors are anti-joined out here, which is why every
+    * caller needing file identity (DELETE/UPDATE discovery,
+    * [[compactSmall]]'s bin packing) passes `keep` instead of bolting a
+    * file column onto a plain read. `rowIds` appends each row's
+    * ABSOLUTE row id and commit version as [[MergeTable.RidCol]] /
+    * [[MergeTable.RcvCol]]: the materialized columns where a rewrite
+    * persisted them, else the manifest allotment (`base + row_index`,
+    * the adding commit); every entry must then carry an allotment.
+    *
+    * `declared` is the schema to read under ([[readVersion]] threads the
+    * AS-OF schema, so a later metadata-only addColumn does not appear);
+    * `mapping` is the physical → logical presentation, applied exactly
+    * once, here ([[MergeTable.NoMapping]] reads physically). Result
+    * columns: the visible columns in declared order, then the row-id
+    * pair, then `keep`. `keep` needs non-empty `entries`. */
+  private[lake] def readEntries(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType] =
+        declaredSchema,
+      mapping: (Map[String, String], Set[String]) = currentMapping(),
+      keep: Seq[String] = Nil,
+      rowIds: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, NullType, StructField, StructType}
+    val idFields =
+      if (rowIds) Seq(RidCol, RcvCol).map(StructField(_, LongType)) else Nil
+    if (entries.isEmpty) {
+      require(keep.isEmpty, s"MergeTable at $root: no files to tag")
+      val empty = idFields.foldLeft(emptyLikePhys(declared)) {
+        (d, f) => d.withColumn(f.name, lit(null).cast(LongType))
+      }
+      return presentLogicalAs(empty, mapping)
+    }
+    // Many dirs of small files still cost scan TASKS (not plan nodes);
+    // compaction remains the small-file remedy.
+    val dirs = entries.map(e => commitDirOf(e.relPath)).distinct.size
+    if (dirs >= CompactionAdviceDirs)
+      logger.warn(s"MergeTable at $root: live files span $dirs commit " +
+        "dirs; run compact() to coalesce small files")
+    val (dataFields, partFields) = readFields(declared, entries)
+    val vectored = entries.exists(_.dv.isDefined)
+    val withPos = vectored || rowIds || keep.contains(PosCol)
+    val withKey = withPos || partFields.nonEmpty || keep.contains(FileKeyCol)
+    val scan = manifestScan(entries, StructType(dataFields ++ idFields))
+    val keyed =
+      if (!withKey) scan
+      else scan.withColumn(FileKeyCol, fileTagExpr(col("_metadata.file_path")))
+    val tagged =
+      if (withPos) keyed.withColumn(PosCol, col("_metadata.row_index"))
+      else keyed
     val restored =
-      if (partitionCols.nonEmpty && partFields.size == partitionCols.size) {
-        val joined = base.join(broadcast(partValueMap(entries, FileTag)),
-          Seq(FileTag), "left")
-        partitionCols.zip(partFields).foldLeft(joined) {
-          case (d, (pc, pf)) =>
-            val pv =
-              if (pf.dataType == org.apache.spark.sql.types.NullType)
-                lit(null)
-              else col(PvColPrefix + pc).cast(pf.dataType)
-            d.withColumn(pc, pv)
-        }
-      } else base
+      if (partFields.isEmpty) tagged
+      else partFields.foldLeft(tagged.join(broadcast(partValueMap(entries)),
+          Seq(FileKeyCol), "left")) { (d, pf) =>
+        d.withColumn(pf.name,
+          if (pf.dataType == NullType) lit(null)
+          else col(PvColPrefix + pf.name).cast(pf.dataType))
+      }
     val masked = applyVectors(restored, entries)
+    val withIds = if (rowIds) attachRowIds(masked, entries) else masked
+    val visible = declaredColumnOrder(declared,
+      (dataFields ++ partFields).map(_.name))
+    presentLogicalAs(withIds.select(
+      (visible ++ idFields.map(_.name) ++ keep).map(col): _*), mapping)
+  }
+
+  /** The scan's data fields and the partition fields to re-attach, for
+    * a non-empty read of `entries` under `declared`: data fields from
+    * the declared schema or the per-commit-dir footer union; one field
+    * per partition column (its declared type, else the hive-inferred
+    * one), or none when some partition column has no field (a declared
+    * schema without it, a layout not hive-partitioned by it). A dir
+    * whose every file sits in the hive default (null) partition infers
+    * NullType for a partition column — prefer a dir with a real
+    * inferred type; all-null attaches a null literal. Partition fields
+    * come back bare (nullable, no metadata), the shape the attach
+    * yields. Groups by commitDirOf (not the first path component) so a
+    * clone's rebased "../source/commit-x" entries resolve per SOURCE
+    * commit dir. */
+  private def readFields(
+      declared: Option[org.apache.spark.sql.types.StructType],
+      entries: Seq[FileEntry])
+      : (Vector[org.apache.spark.sql.types.StructField],
+         Seq[org.apache.spark.sql.types.StructField]) = {
+    val (dataFields, partFields) = declared match {
+      case Some(s) =>
+        (s.fields.filterNot(f => partitionCols.contains(f.name)).toVector,
+          partitionCols.flatMap(pc => s.fields.find(_.name == pc)))
+      case None =>
+        val dirSchemas = entries.groupBy(e => commitDirOf(e.relPath))
+          .toSeq.sortBy(_._1).map { case (dir, es) => dirSchema(dir, es) }
+        (dirSchemas.flatMap(_.fields)
+          .filterNot(f => partitionCols.contains(f.name) ||
+            HiddenCols.contains(f.name))
+          .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
+            (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
+          },
+          partitionCols.flatMap { pc =>
+            val fs = dirSchemas.flatMap(_.fields.find(_.name == pc))
+            fs.find(_.dataType != org.apache.spark.sql.types.NullType)
+              .orElse(fs.headOption)
+          })
+    }
+    (dataFields,
+      if (partFields.size == partitionCols.size)
+        partFields.map(f => org.apache.spark.sql.types.StructField(
+          f.name, f.dataType))
+      else Nil)
+  }
+
+  /** The broadcast (file key -> per-column partition value) attach map:
+    * [[MergeTable.FileKeyCol]] plus one string column per partition
+    * column, named [[PvColPrefix]]`<col>`. */
+  private def partValueMap(entries: Seq[FileEntry]): DataFrame = {
+    val schema = org.apache.spark.sql.types.StructType(
+      org.apache.spark.sql.types.StructField(FileKeyCol,
+        org.apache.spark.sql.types.StringType) +:
+        partitionCols.map(c => org.apache.spark.sql.types.StructField(
+          PvColPrefix + c, org.apache.spark.sql.types.StringType)))
+    val rows = entries.map(e => org.apache.spark.sql.Row.fromSeq(
+      fileKey(e.relPath) +: partValuesOf(e.partitionValue).map(_.orNull)))
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Fill NULL [[MergeTable.RidCol]]/[[MergeTable.RcvCol]] of a keyed,
+    * positioned read from the manifest allotment of each file, attached
+    * through a broadcast of one metadata row per file. */
+  private def attachRowIds(df: DataFrame,
+      entries: Seq[FileEntry]): DataFrame = {
+    val longT = org.apache.spark.sql.types.LongType
     val riSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(FileTag,
+      org.apache.spark.sql.types.StructField(FileKeyCol,
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField(RiBaseCol, longT),
       org.apache.spark.sql.types.StructField(RiVerCol, longT)))
@@ -5559,16 +5654,10 @@ final class MergeTable private (
           "(withRowTracking before the first data commit)"))
       org.apache.spark.sql.Row(fileKey(e.relPath), ri.base, ri.version)
     }
-    val withIds = masked
-      .join(broadcast(spark.createDataFrame(riRows.asJava, riSchema)),
-        Seq(FileTag), "left")
-      .withColumn(RidCol,
-        coalesce(col(RidCol), col(RiBaseCol) + col(PosCol)))
+    df.join(broadcast(spark.createDataFrame(riRows.asJava, riSchema)),
+        Seq(FileKeyCol), "left")
+      .withColumn(RidCol, coalesce(col(RidCol), col(RiBaseCol) + col(PosCol)))
       .withColumn(RcvCol, coalesce(col(RcvCol), col(RiVerCol)))
-    val visible = declaredColumnOrder(declared, dataFields0.map(_.name) ++
-      (if (partFields.size == partitionCols.size) partitionCols else Nil))
-    withIds.select(
-      (visible ++ Seq(RidCol, RcvCol) ++ keep).map(col): _*)
   }
 
   /** The table with two extra columns, Delta's row-tracking surface:
@@ -5584,16 +5673,10 @@ final class MergeTable private (
     * on at 100 TB: a stable join key per row that survives OPTIMIZE,
     * which no expression over row CONTENT (and no
     * `monotonically_increasing_id`) can provide. */
-  def readWithRowIds(): DataFrame = {
-    val (_, live) = latest()
-    if (live.isEmpty)
-      return readEntries(live)
-        .withColumn("row_id", lit(null).cast("long"))
-        .withColumn("row_commit", lit(null).cast("long"))
-    presentLogical(readEntriesRowIdsPhys(live))
+  def readWithRowIds(): DataFrame =
+    readEntries(latest()._2, rowIds = true)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
-  }
 
   /** [[readWithRowIds]] under time travel: the snapshot AT `version`
     * with each row's identity — ids are assigned AT COMMIT and ride
@@ -5601,69 +5684,46 @@ final class MergeTable private (
     * `row_id` in both reads (the lineage key across history), and
     * `row_commit` is at most `version` by construction. As-of schema
     * and column mapping apply exactly as in [[readVersion]]. */
-  def readVersionWithRowIds(version: Long): DataFrame = {
-    val entries = snapshotAt(version)
-    val declared = if (version == 0L) None else schemaAt(version)
-    val mapping: (Map[String, String], Set[String]) =
-      if (version == 0L) (Map.empty, Set.empty) else mappingAt(version)
-    if (entries.isEmpty)
-      return readVersion(version)
-        .withColumn("row_id", lit(null).cast("long"))
-        .withColumn("row_commit", lit(null).cast("long"))
-    presentLogicalAs(
-      readEntriesRowIdsPhysWith(entries, declared, Nil), mapping)
+  def readVersionWithRowIds(version: Long): DataFrame =
+    readEntries(snapshotAt(version),
+        if (version == 0L) None else schemaAt(version),
+        if (version == 0L) NoMapping else mappingAt(version),
+        rowIds = true)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
-  }
 
   /** Rewrite-side read for the OPTIMIZE family: on a row-tracked
     * snapshot, carry each row's absolute id/version as the MATERIALIZED
     * physical columns so [[writeData]] persists them through the
     * rewrite; otherwise the plain logical read. */
   private def readForRewrite(entries: Seq[FileEntry]): DataFrame =
-    if (entries.nonEmpty && entries.forall(_.rowIds.isDefined))
-      presentLogical(readEntriesRowIdsPhys(entries))
-    else readEntries(entries)
+    readEntries(entries,
+      rowIds = entries.nonEmpty && entries.forall(_.rowIds.isDefined))
 
-  /** The PHYSICAL schema [[readEntriesPhysWith]] would produce for
-    * `entries`, computed from (memoized) metadata alone — no throwaway
-    * scan plan over the live paths. r13's LogDepthBench: at 1000 live
-    * files a `readEntries(live).schema` costs ~1.6 s of driver path
-    * resolution, and append's schema check paid it on EVERY commit.
-    * The branch structure mirrors [[readEntriesPhysWith]]; the
-    * deletion-vector divert is schema-neutral (the tagged read drops
-    * its tag columns and selects the same visible columns). */
-  private def physicalSchemaOf(entries: Seq[FileEntry])
+  /** The PHYSICAL schema of a plain [[readEntries]] of `entries`,
+    * computed from (memoized) metadata alone — no throwaway scan plan
+    * over the live paths. At 1000 live files a `readEntries(live).schema`
+    * cost ~1.6 s of driver path resolution (r13), and append's schema
+    * check paid it on EVERY commit. Built from the same [[readFields]]
+    * split and column order as the read; the deletion-vector anti-join
+    * is schema-neutral. */
+  private[lake] def physicalSchemaOf(entries: Seq[FileEntry])
       : org.apache.spark.sql.types.StructType = {
     val declared = declaredSchema
-    if (entries.isEmpty) return emptyLikePhys().schema
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    if (declared.isEmpty && byDir.size == 1) {
-      val (dir, es) = byDir.head
-      return org.apache.spark.sql.types.StructType(
-        dirSchema(dir, es).fields.filterNot(f =>
-          HiddenCols.contains(f.name)))
-    }
-    val (dataFields, partFields) = resolvePartFields(declared, byDir)
-    if (partitionCols.nonEmpty && partFields.size == partitionCols.size) {
-      val fields =
-        dataFields ++ partitionCols.zip(partFields).map { case (pc, pf) =>
-          org.apache.spark.sql.types.StructField(pc, pf.dataType)
-        }
-      org.apache.spark.sql.types.StructType(
-        declaredColumnOrder(declared, fields.map(_.name))
-          .flatMap(n => fields.find(_.name == n)).toArray)
-    } else org.apache.spark.sql.types.StructType(dataFields.toArray)
+    if (entries.isEmpty) return emptyLikePhys(declared).schema
+    val (dataFields, partFields) = readFields(declared, entries)
+    val fields = dataFields ++ partFields
+    org.apache.spark.sql.types.StructType(
+      declaredColumnOrder(declared, fields.map(_.name))
+        .map(n => fields.find(_.name == n).get))
   }
 
   /** Reorder a read's visible columns into DECLARED order when the
     * table declares a schema and the resolved column set matches it —
     * the partition column surfaces at its declared position, exactly
-    * as the empty-table read already presents it. Before r15 the
-    * multi-dir reads appended restored partition columns LAST, so the
-    * same table read empty vs non-empty changed column order, and SQL
-    * positional `INSERT INTO t VALUES ...` on a non-empty partitioned
-    * declared table cast values against the wrong columns. */
+    * as the empty-table read presents it (so SQL positional
+    * `INSERT INTO t VALUES ...` casts values against the right
+    * columns whether or not the table holds data). */
   private def declaredColumnOrder(
       declared: Option[org.apache.spark.sql.types.StructType],
       cols: Seq[String]): Seq[String] = declared match {
@@ -5683,193 +5743,7 @@ final class MergeTable private (
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       physicalSchemaOf(entries))).schema
 
-  private[lake] def readEntriesPhys(entries: Seq[FileEntry]): DataFrame =
-    readEntriesPhysWith(entries, declaredSchema)
-
-  /** [[readEntriesPhys]] with an explicit declared-schema override —
-    * what [[readVersion]] threads the AS-OF schema through, so time
-    * travel on a declared-schema table shows the schema of THAT
-    * version (a later metadata-only addColumn must not appear). */
-  private def readEntriesPhysWith(entries: Seq[FileEntry],
-      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    if (entries.isEmpty) return emptyLikePhysWith(declared)
-    // Vectored entries divert to the tagged read (which anti-joins the
-    // deletion vectors); the clean path below stays byte-identical to
-    // the vector-free plan.
-    if (entries.exists(_.dv.isDefined))
-      return readEntriesTaggedPhysWith(entries, keep = Nil, declared)
-    // Group by commit dir: each dir is one hive-partitioned write whose
-    // basePath restores the partition column. commitDirOf (not the
-    // first path component) so a clone's rebased "../source/commit-x"
-    // entries group per SOURCE commit dir, preserving the per-dir
-    // schema-resolution path.
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    // Many dirs of small files still cost scan TASKS (not plan nodes);
-    // compaction remains the small-file remedy.
-    if (byDir.size >= CompactionAdviceDirs)
-      logger.warn(
-        s"MergeTable at $root: live files span ${byDir.size} commit dirs; " +
-          "run compact() to coalesce small files")
-    // NOTE (r15): single-dir reads deliberately take the SAME
-    // manifest-backed path as multi-dir ones. The old single-dir
-    // `hiveRead` shortcut paid Spark's DataFrameReader planning on
-    // EVERY read — a per-read footer-inference job plus per-path
-    // driver resolution — while the manifest scan is zero-listing and
-    // the dir schema is memo-served (seeded at write time for
-    // unpartitioned dirs). Lifecycle tables live in exactly one commit
-    // dir most of their life, so they paid that job on every read.
-    // ONE scan node regardless of commit-dir count (a long merge history
-    // previously contributed one scan node per live dir, degrading every
-    // read plan linearly): scan ALL live files in a single multi-path
-    // read under the table schema — the DECLARED log schema when the
-    // table has one (a metadata-only addColumn'd field reads NULL from
-    // every pre-evolution file), else the UNION of the per-dir footer
-    // schemas (per-file missing columns read NULL — covers evolveSchema
-    // history) — and re-attach the partition column from MANIFEST
-    // metadata — the log, not the path layout, is the source of truth
-    // (as in Delta) — via a broadcast (fileName → partitionValue) map,
-    // cast to the schema's type. Per-dir footer resolution is a driver
-    // metadata read (no jobs); part-file names embed a job UUID so they
-    // are unique across dirs (the same invariant `withStats` keys on).
-    val (dataFields, partFields) = resolvePartFields(declared, byDir)
-    val base = manifestScan(entries,
-      org.apache.spark.sql.types.StructType(dataFields))
-    if (partitionCols.nonEmpty && partFields.size == partitionCols.size) {
-      val attached = base
-        .withColumn("__graft_file", fileTagExpr(input_file_name()))
-        .join(broadcast(partValueMap(entries, "__graft_file")),
-          Seq("__graft_file"), "left")
-      val withParts = partitionCols.zip(partFields).foldLeft(attached) {
-        case (d, (pc, pf)) =>
-          val pv =
-            if (pf.dataType == org.apache.spark.sql.types.NullType)
-              lit(null)
-            else col(PvColPrefix + pc).cast(pf.dataType)
-          d.withColumn(pc, pv)
-      }
-      withParts.select(declaredColumnOrder(declared,
-        dataFields.map(_.name) ++ partitionCols).map(col): _*)
-    } else base
-  }
-
-  /** The (data fields, partition fields) split for a multi-dir read:
-    * data fields from the declared schema or the per-dir footer union;
-    * one hive-typed field per partition column. A dir whose every file
-    * sits in the hive default (null) partition infers NullType for a
-    * partition column — prefer a dir with a real inferred type;
-    * all-null falls back to a typed null literal at the attach. */
-  private def resolvePartFields(
-      declared: Option[org.apache.spark.sql.types.StructType],
-      byDir: Map[String, Seq[FileEntry]])
-      : (Vector[org.apache.spark.sql.types.StructField],
-         Seq[org.apache.spark.sql.types.StructField]) = declared match {
-    case Some(s) =>
-      (s.fields.filterNot(f => partitionCols.contains(f.name)).toVector,
-        partitionCols.flatMap(pc => s.fields.find(_.name == pc)))
-    case None =>
-      val dirSchemas = byDir.toSeq.sortBy(_._1)
-        .map { case (dir, es) => dirSchema(dir, es) }
-      (dirSchemas.flatMap(_.fields)
-        .filterNot(f => partitionCols.contains(f.name) ||
-          HiddenCols.contains(f.name))
-        .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
-          (acc, f) => if (acc.exists(_.name == f.name)) acc else acc :+ f
-        },
-        partitionCols.flatMap { pc =>
-          val fs = dirSchemas.flatMap(_.fields.find(_.name == pc))
-          fs.find(_.dataType != org.apache.spark.sql.types.NullType)
-            .orElse(fs.headOption)
-        })
-  }
-
-  /** The broadcast (file key -> per-column partition value) attach map
-    * — the log, not the path layout, is the read's source of truth for
-    * partition values (as in Delta). One string column per partition
-    * column, named [[PvColPrefix]]`<col>`. */
-  private def partValueMap(entries: Seq[FileEntry],
-      keyCol: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(keyCol,
-        org.apache.spark.sql.types.StringType) +:
-        partitionCols.map(c => org.apache.spark.sql.types.StructField(
-          PvColPrefix + c, org.apache.spark.sql.types.StringType)))
-    val rows = entries.map(e => org.apache.spark.sql.Row.fromSeq(
-      fileKey(e.relPath) +: partValuesOf(e.partitionValue).map(_.orNull)))
-    spark.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Read `entries` with the file identity ([[FileTag]] = [[fileKey]])
-    * and in-file row position ([[PosCol]] = `_metadata.row_index`)
-    * captured AT THE SCAN — as real columns, before any join or
-    * exchange, so they stay exact downstream (an `input_file_name()`
-    * evaluated after a shuffle reads empty). Deletion vectors are
-    * anti-joined out here, which is why every caller that needs file
-    * identity (DELETE/UPDATE discovery, [[compactSmall]]'s bin packing)
-    * must come through this read, not bolt `input_file_name()` onto
-    * [[readEntries]]' output. `keep` names the internal columns
-    * ([[FileTag]], [[PosCol]]) to retain in the result; all other
-    * columns and their order match [[readEntries]]. Callers pass
-    * non-empty `entries`. */
-  private def readEntriesTagged(entries: Seq[FileEntry],
-      keep: Seq[String]): DataFrame =
-    presentLogical(readEntriesTaggedPhys(entries, keep))
-
-  /** [[readEntriesTagged]] WITHOUT the logical presentation — the
-    * deletion-vector divert inside [[readEntriesPhys]] comes through
-    * here so presentation happens exactly once per read, at
-    * [[readEntries]]. (Presenting in both places was idempotent for
-    * simple mappings but remaps AGAIN when a logical name equals a
-    * physical mapping key — the rename-reuse case [[renameColumn]]'s
-    * namespace guard now rejects; this keeps the read path correct by
-    * construction rather than by guard.) */
-  private def readEntriesTaggedPhys(entries: Seq[FileEntry],
-      keep: Seq[String]): DataFrame =
-    readEntriesTaggedPhysWith(entries, keep, declaredSchema)
-
-  private def readEntriesTaggedPhysWith(entries: Seq[FileEntry],
-      keep: Seq[String],
-      declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
-    def tagged(scan: DataFrame): DataFrame = scan
-      .withColumn(FileTag,
-        fileTagExpr(col("_metadata.file_path")))
-      .withColumn(PosCol, col("_metadata.row_index"))
-    val byDir = entries.groupBy(e => commitDirOf(e.relPath))
-    // Base scan + partition restore: the same two shapes as readEntries
-    // (single-dir hive read / multi-dir union-schema read with the
-    // partition value re-attached from manifest metadata), with the tag
-    // columns added directly on the scan node in both.
-    // Single-dir reads go manifest-backed too — same rationale as
-    // [[readEntriesPhysWith]] (r15: the hiveRead shortcut cost a
-    // footer-inference job per read).
-    val (restored, dataCols): (DataFrame, Seq[String]) =
-      {
-        val (dataFields, partFields) = resolvePartFields(declared, byDir)
-        val base = tagged(manifestScan(entries,
-          org.apache.spark.sql.types.StructType(dataFields)))
-        if (partitionCols.nonEmpty &&
-            partFields.size == partitionCols.size) {
-          val joined =
-            base.join(broadcast(partValueMap(entries, FileTag)),
-              Seq(FileTag), "left")
-          val withParts = partitionCols.zip(partFields).foldLeft(joined) {
-            case (d, (pc, pf)) =>
-              val pv =
-                if (pf.dataType == org.apache.spark.sql.types.NullType)
-                  lit(null)
-                else col(PvColPrefix + pc).cast(pf.dataType)
-              d.withColumn(pc, pv)
-          }
-          (withParts.drop(partitionCols.map(PvColPrefix + _): _*),
-            declaredColumnOrder(declared,
-              dataFields.map(_.name) ++ partitionCols))
-        } else (base, dataFields.map(_.name).toSeq)
-      }
-    val masked = applyVectors(restored, entries)
-    masked.select((dataCols ++ keep).map(col): _*)
-  }
-
-  /** Anti-join `df` (carrying scan-level [[FileTag]]/[[PosCol]]) against
+  /** Anti-join `df` (carrying scan-level [[FileKeyCol]]/[[PosCol]]) against
     * the deletion vectors of `entries`. Each vectored entry references
     * exactly ONE vector dir holding its complete position set; a dir is
     * loaded once, filtered to the files that reference IT (an entry
@@ -5892,7 +5766,7 @@ final class MergeTable private (
       if (vectored.map(_.dv.get.card).sum <= DvBroadcastMax) broadcast(dv)
       else dv
     df.join(hinted,
-      df(FileTag) === hinted(DvFile) && df(PosCol) === hinted(DvPos),
+      df(FileKeyCol) === hinted(DvFile) && df(PosCol) === hinted(DvPos),
       "left_anti")
   }
 
@@ -5940,10 +5814,10 @@ final class MergeTable private (
 
   /** MEMOIZED per-commit-dir schema resolution for the multi-dir read.
     * Each [[hiveRead]]`.schema` costs a driver-side file listing plus
-    * footer reads (~80 ms) and [[resolvePartFields]] runs one per live
-    * commit dir PER READ — r13's LogDepthBench measured a 100-commit
-    * streaming-append table paying 7.6 s cold and 9.4 s WARM for every
-    * `read()` from exactly this. Commit dirs are immutable (a commit
+    * footer reads (~80 ms) and [[readFields]] runs one per live
+    * commit dir PER READ — a 100-commit streaming-append table measured
+    * 7.6 s cold and 9.4 s WARM for every `read()` from exactly this
+    * (r13). Commit dirs are immutable (a commit
     * writes a fresh dir; vacuum removes whole dirs), so the resolution
     * is a pure function of (dir, live subset) — the subset is part of
     * the key because hive partition-TYPE inference unions the VALUE
@@ -5961,18 +5835,15 @@ final class MergeTable private (
     root.resolve(dir).toAbsolutePath.normalize.toString + "|" +
       es.map(_.relPath).sorted.mkString(",")
 
-  /** Empty frame with the table's PHYSICAL schema. Stays physical on
-    * purpose: [[readEntriesPhys]] returns it for an empty snapshot, and
-    * each caller then applies its OWN presentation exactly once —
-    * [[readEntries]] the current mapping, [[readVersion]] the as-of
-    * mapping. (Presenting here with the current mapping made time
-    * travel to an empty version of a since-renamed table show current
-    * names — the as-of re-mapping keyed on physical names no-opped
-    * over already-renamed columns; r10 ADVICE finding.) */
-  private def emptyLikePhys(): DataFrame =
-    emptyLikePhysWith(declaredSchema)
-
-  private def emptyLikePhysWith(
+  /** Empty frame with the table's PHYSICAL schema under `declared`.
+    * Stays physical on purpose: [[readEntries]] presents it for an
+    * empty snapshot under the mapping ITS caller chose — the current
+    * one, or [[readVersion]]'s as-of one. (Presenting here with the
+    * current mapping made time travel to an empty version of a
+    * since-renamed table show current names — the as-of re-mapping
+    * keyed on physical names no-opped over already-renamed columns;
+    * r10 ADVICE finding.) */
+  private def emptyLikePhys(
       declared: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
     // Declared schema first: a never-written CREATE'd table reads as a
     // correctly-typed empty frame straight from the log.
@@ -5986,7 +5857,7 @@ final class MergeTable private (
     vs.iterator
       .flatMap(v => scala.util.Try(snapshotAt(v)).toOption)
       .find(_.nonEmpty) match {
-      case Some(entries) => readEntriesPhys(entries).limit(0)
+      case Some(entries) => readEntries(entries, mapping = NoMapping).limit(0)
       case None => throw new IllegalStateException(
         s"MergeTable at $root has no data and no history")
     }
@@ -6137,7 +6008,7 @@ object MergeTable {
     * A-line-less text file).
     *
     * The default sits at the MEASURED crossover's side of caution
-    * (CkptScaleBench, r15): at 100k entries the text fold costs
+    * (r15): at 100k entries the text fold costs
     * 0.126 s (~1.3 µs/line) while the parquet fold pays ~0.65 s of
     * fixed Spark-job overhead — text wins until roughly 5×10^5
     * entries, beyond which linear driver parse (and the O(live) text
@@ -6253,7 +6124,15 @@ object MergeTable {
       : org.apache.spark.sql.types.StructType =
     allNullable(st: org.apache.spark.sql.types.DataType)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-  private val FileTag = "__graft_file_tag"
+  /** The file-key column: a read's [[fileKey]] of the row's data file,
+    * taken from `_metadata.file_path` at the scan. It keys the
+    * partition-value attach map, the deletion-vector anti-join, the
+    * row-id allotment join and compaction's bin map, and is the column
+    * [[GraftScanPruning]]'s attach pattern matches on. */
+  private[lake] val FileKeyCol = "__graft_file"
+  /** The empty column mapping: a read presented physically. */
+  private val NoMapping: (Map[String, String], Set[String]) =
+    (Map.empty, Set.empty)
 
   /** StructField-metadata key carrying a declared column DEFAULT
     * expression (SQL text) in the log schema. */
@@ -6276,7 +6155,7 @@ object MergeTable {
   private val DvDirName = "_graft_dv"
   /** Column names inside a deletion-vector parquet: the [[fileKey]] of
     * the data file and the deleted row position. Distinct from
-    * [[FileTag]]/[[PosCol]] so the read-side anti-join needs no
+    * [[FileKeyCol]]/[[PosCol]] so the read-side anti-join needs no
     * renames. */
   private val DvFile = "__graft_dv_file"
   private val DvPos = "__graft_dv_pos"

@@ -64,9 +64,8 @@ class GraftScanPruningSpec extends SparkSpec {
     assert(p.count() === 100L)
     assert(t.scanEntries(col("p") === "b").size === 1,
       "scan() file-prunes the partition predicate too")
-    // …but a COMPACTED single-dir layout carries the partition column
-    // natively, and the partition predicate file-prunes through the
-    // rule too
+    // …and after compaction (one commit dir) the partition predicate
+    // still file-prunes through the rule
     t.compact()
     GraftSql.register("prune_sql", t) // re-register post-compact
     val pc = t.read().filter(col("p") === "b")
@@ -146,17 +145,39 @@ class GraftScanPruningSpec extends SparkSpec {
     assert(p.count() === 100L)
   }
 
+  test("a partition + data predicate plans one file and pushes the data " +
+      "predicate into the parquet scan") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val t = table("push")
+    GraftSql.register("prune_push", t)
+    val q = t.read().filter(col("p") === "b" && col("id") === 150L)
+    assert(plannedFiles(q).size === 1,
+      s"must plan one file:\n${q.queryExecution.optimizedPlan.treeString}")
+    assert(q.as[(Long, String, String)].collect().toSeq ===
+      Seq((150L, "v150", "b")))
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s
+      }
+    assert(scans.size === 1, q.queryExecution.executedPlan.treeString)
+    val pushed = scans.head.metadata.getOrElse("PushedFilters", "")
+    assert(pushed.contains("EqualTo(id,150)"),
+      s"id predicate must reach the parquet scan, got $pushed:\n" +
+        q.queryExecution.executedPlan.treeString)
+  }
+
   test("pattern-B soundness guard: pruning requires a __graft_file " +
       "equi-join condition (r10 ADVICE canary)") {
     import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, GreaterThan}
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.types.StringType
-    val mapAttr = AttributeReference("__graft_file", StringType)()
-    val scanAttr = AttributeReference("__graft_file", StringType)()
+    val mapAttr = AttributeReference(MergeTable.FileKeyCol, StringType)()
+    val scanAttr = AttributeReference(MergeTable.FileKeyCol, StringType)()
     val other = AttributeReference("other", StringType)()
     val fm = LocalRelation(Seq(mapAttr))
     val rule = new GraftScanPruning(spark)
-    // the shape readEntriesPhys builds: EqualTo across the two sides
+    // the shape the reader builds: EqualTo across the two sides
     assert(rule.isFileKeyEquiJoin(Some(EqualTo(scanAttr, mapAttr)), fm))
     assert(rule.isFileKeyEquiJoin(Some(EqualNullSafe(mapAttr, scanAttr)), fm))
     // buried in a conjunction still qualifies

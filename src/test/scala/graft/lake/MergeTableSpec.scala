@@ -1200,4 +1200,46 @@ class MergeTableSpec extends SparkSpec {
     val inferred = spark.read.parquet(commitDir.toString).schema
     assert(got === inferred)
   }
+
+  test("physicalSchemaOf equals the reader's physical schema on every " +
+      "layout") {
+    import org.apache.spark.sql.types.StringType
+    def same(t: MergeTable, layout: String): Unit = {
+      val live = t.liveEntries()
+      assert(live.nonEmpty, layout)
+      assert(t.physicalSchemaOf(live) ===
+        t.readEntries(live, mapping = (Map.empty, Set.empty)).schema, layout)
+    }
+    val flat = MergeTable(spark, tmpDir("pso_flat").toString)
+    flat.overwrite(orders(("o1", "d1", 1.0), ("o2", "d2", 2.0)))
+    same(flat, "unpartitioned")
+    val t = MergeTable(spark, tmpDir("pso_part").toString, Some("date"))
+    t.overwrite(orders(("o1", "d1", 1.0), ("o2", "d2", 2.0)))
+    same(t, "one partitioned commit dir")
+    t.merge(orders(("o3", "d3", 3.0)), "order_id")
+    t.merge(orders(("o1", "d1", 9.0)), "order_id")
+    assert(t.liveEntries().map(e => e.relPath.split('/').head).distinct
+      .size === 3)
+    same(t, "many commit dirs")
+    t.addColumn("note", StringType)
+    assert(t.declaredSchema.isDefined)
+    same(t, "declared schema with a metadata-only added column")
+    val nulls = MergeTable(spark, tmpDir("pso_null").toString, Some("date"))
+    nulls.overwrite(Seq(("o1", null: String, 1.0), ("o2", null: String, 2.0))
+      .toDF("order_id", "date", "amount"))
+    same(nulls, "all-null partition dir")
+    val dv = MergeTable(spark, tmpDir("pso_dv").toString, Some("date"),
+      Seq("order_id"), deletionVectors = true)
+    dv.overwrite(orders(("o1", "d1", 1.0), ("o2", "d1", 2.0)).coalesce(1))
+    dv.delete(col("order_id") === "o1")
+    assert(dv.liveEntries().exists(_.dv.isDefined))
+    same(dv, "deletion-vector entries")
+    val rt = MergeTable(spark, tmpDir("pso_rt").toString, Some("date"))
+      .withRowTracking
+    rt.append(orders(("o1", "d1", 1.0)))
+    rt.append(orders(("o2", "d1", 2.0)))
+    rt.compact()
+    assert(rt.liveEntries().forall(_.rowIds.isDefined))
+    same(rt, "row-tracked entries")
+  }
 }
