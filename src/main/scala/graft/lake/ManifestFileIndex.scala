@@ -3,9 +3,16 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
+
+/** One live data file as the scan sees it: its path, its exact byte
+  * length and its partition values, typed to the owning index's
+  * `partitionSchema`. Kept together so no narrowing of an index can
+  * separate a file from its partition row. */
+private[lake] final case class ManifestFile(path: HPath, length: Long,
+    partition: InternalRow)
 
 /** A [[FileIndex]] served entirely from MANIFEST metadata — the
   * Delta/Iceberg scan shape (`TahoeLogFileIndex`): the log, not the
@@ -25,31 +32,60 @@ import org.apache.spark.sql.types.StructType
   * all and a cold one pays one `stat` per live file (~10 µs, 100×
   * cheaper than Spark's per-path resolution).
   *
-  * Partition values are NOT surfaced here ([[partitionSchema]] empty):
-  * graft attaches them post-scan from manifest metadata via a
-  * broadcast map-join (the read path's existing design), which keeps
-  * this index trivially correct — every pruning decision already
-  * happened at the manifest level before the index is built, so
-  * [[listFiles]] ignores its filter arguments. */
+  * Partition values come from the manifest too, as in Delta's
+  * `TahoeFileIndex`: each [[ManifestFile]] carries one typed row of
+  * `partitionSchema`, and the scan appends those values to the file's
+  * rows as per-file constants. [[listFiles]] groups the files by that
+  * row and evaluates the partition filters against it, as Spark's
+  * `PartitioningAwareFileIndex.prunePartitions` does — it MUST, since
+  * `FileSourceStrategy` does not re-apply partition-only filters after
+  * the scan. */
 private[lake] final class ManifestFileIndex(
     tableRoot: HPath,
-    private[lake] val files: Seq[(HPath, Long)]) extends FileIndex {
+    override val partitionSchema: StructType,
+    private[lake] val files: Seq[ManifestFile]) extends FileIndex {
 
   override def rootPaths: Seq[HPath] = Seq(tableRoot)
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty,
-      files.map { case (p, len) =>
-        new FileStatus(len, false, 1, 128L << 20, 0L, p)
-      }.toArray))
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val admits = partitionPredicate(partitionFilters)
+    val dirs = scala.collection.mutable.LinkedHashMap
+      .empty[InternalRow, Vector[FileStatus]]
+    files.foreach { f =>
+      dirs(f.partition) = dirs.getOrElse(f.partition, Vector.empty) :+
+        new FileStatus(f.length, false, 1, 128L << 20, 0L, f.path)
+    }
+    dirs.iterator.collect { case (row, statuses) if admits(row) =>
+      PartitionDirectory(row, statuses.toArray)
+    }.toSeq
+  }
+
+  /** The conjunction of `filters` — predicates over partition columns
+    * only, referenced by name — as a test on a partition row. */
+  private[lake] def partitionPredicate(
+      filters: Seq[Expression]): InternalRow => Boolean =
+    filters.reduceOption(And) match {
+      case None => _ => true
+      case Some(cond) =>
+        val bound = Predicate.createInterpreted(cond.transform {
+          case a: AttributeReference =>
+            val i = partitionSchema.fieldNames.indexOf(a.name)
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+        })
+        bound.eval
+    }
+
+  /** This index over only the files `keep` admits: the one way any
+    * pruning path narrows an index. */
+  private[lake] def filterFiles(keep: ManifestFile => Boolean)
+      : ManifestFileIndex =
+    new ManifestFileIndex(tableRoot, partitionSchema, files.filter(keep))
 
   override def inputFiles: Array[String] =
-    files.map(_._1.toString).toArray
+    files.map(_.path.toString).toArray
 
   override def refresh(): Unit = ()
 
-  override def sizeInBytes: Long = files.iterator.map(_._2).sum
-
-  override def partitionSchema: StructType = StructType(Nil)
+  override def sizeInBytes: Long = files.iterator.map(_.length).sum
 }

@@ -5073,8 +5073,8 @@ final class MergeTable private (
           s"levels (${partitionCols.mkString("/")})")
       // with partition columns, EVERY file must sit under the full
       // pc0=/pc1=/... chain IN ORDER — a shallower file would read NULL
-      // partition values (its value lives in the data column the
-      // manifest attach then shadows)
+      // partition values (its value lives in a data column the scan's
+      // manifest partition values shadow)
       if (partitionCols.nonEmpty) {
         val segs = rel.split('/')
         require(segs.length == partitionCols.size + 1 &&
@@ -5503,16 +5503,18 @@ final class MergeTable private (
     *
     * The scan reads the DATA fields of [[readFields]] (the declared
     * schema, or the union of the per-dir footer schemas; a file lacking
-    * a column reads NULL). Partition values are re-attached from the
-    * MANIFEST, not the path layout — the log is the source of truth, as
-    * in Delta — through a broadcast (file key → value) map joined on
-    * [[MergeTable.FileKeyCol]]. That key and the in-file row position
+    * a column reads NULL). Partition values come from the MANIFEST, not
+    * the path layout — the log is the source of truth, as in Delta: the
+    * typed partition fields are the relation's partition schema, and
+    * the [[ManifestFileIndex]] hands the scan each file's values as
+    * per-file constants, so partition predicates prune files at
+    * planning and no join is needed. An all-null partition column
+    * (NullType) reads as a null literal. The file key
+    * ([[MergeTable.FileKeyCol]]) and the in-file row position
     * ([[MergeTable.PosCol]]) are captured AT THE SCAN from `_metadata`,
     * as real columns before any join or exchange, so they stay exact
     * downstream (an `input_file_name()` evaluated after a shuffle reads
-    * empty) and the scan keeps parquet filter pushdown. A read needing
-    * no file identity (unpartitioned, no deletion vectors, no row ids,
-    * nothing kept) adds no columns at all.
+    * empty); only deletion vectors, row ids and `keep` add them.
     *
     * Deletion vectors are anti-joined out here, which is why every
     * caller needing file identity (DELETE/UPDATE discovery,
@@ -5552,10 +5554,12 @@ final class MergeTable private (
       logger.warn(s"MergeTable at $root: live files span $dirs commit " +
         "dirs; run compact() to coalesce small files")
     val (dataFields, partFields) = readFields(declared, entries)
+    val (nullParts, typedParts) = partFields.partition(_.dataType == NullType)
     val vectored = entries.exists(_.dv.isDefined)
     val withPos = vectored || rowIds || keep.contains(PosCol)
-    val withKey = withPos || partFields.nonEmpty || keep.contains(FileKeyCol)
-    val scan = manifestScan(entries, StructType(dataFields ++ idFields))
+    val withKey = withPos || keep.contains(FileKeyCol)
+    val scan = manifestScan(entries, StructType(dataFields ++ idFields),
+      StructType(typedParts))
     val keyed =
       if (!withKey) scan
       else scan.withColumn(FileKeyCol, fileTagExpr(col("_metadata.file_path")))
@@ -5563,13 +5567,7 @@ final class MergeTable private (
       if (withPos) keyed.withColumn(PosCol, col("_metadata.row_index"))
       else keyed
     val restored =
-      if (partFields.isEmpty) tagged
-      else partFields.foldLeft(tagged.join(broadcast(partValueMap(entries)),
-          Seq(FileKeyCol), "left")) { (d, pf) =>
-        d.withColumn(pf.name,
-          if (pf.dataType == NullType) lit(null)
-          else col(PvColPrefix + pf.name).cast(pf.dataType))
-      }
+      nullParts.foldLeft(tagged)((d, pf) => d.withColumn(pf.name, lit(null)))
     val masked = applyVectors(restored, entries)
     val withIds = if (rowIds) attachRowIds(masked, entries) else masked
     val visible = declaredColumnOrder(declared,
@@ -5578,7 +5576,7 @@ final class MergeTable private (
       (visible ++ idFields.map(_.name) ++ keep).map(col): _*), mapping)
   }
 
-  /** The scan's data fields and the partition fields to re-attach, for
+  /** The scan's data fields and its partition fields, for
     * a non-empty read of `entries` under `declared`: data fields from
     * the declared schema or the per-commit-dir footer union; one field
     * per partition column (its declared type, else the hive-inferred
@@ -5586,8 +5584,8 @@ final class MergeTable private (
     * schema without it, a layout not hive-partitioned by it). A dir
     * whose every file sits in the hive default (null) partition infers
     * NullType for a partition column — prefer a dir with a real
-    * inferred type; all-null attaches a null literal. Partition fields
-    * come back bare (nullable, no metadata), the shape the attach
+    * inferred type; all-null reads as a null literal. Partition fields
+    * come back bare (nullable, no metadata), the shape the scan
     * yields. Groups by commitDirOf (not the first path component) so a
     * clone's rebased "../source/commit-x" entries resolve per SOURCE
     * commit dir. */
@@ -5620,20 +5618,6 @@ final class MergeTable private (
         partFields.map(f => org.apache.spark.sql.types.StructField(
           f.name, f.dataType))
       else Nil)
-  }
-
-  /** The broadcast (file key -> per-column partition value) attach map:
-    * [[MergeTable.FileKeyCol]] plus one string column per partition
-    * column, named [[PvColPrefix]]`<col>`. */
-  private def partValueMap(entries: Seq[FileEntry]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField(FileKeyCol,
-        org.apache.spark.sql.types.StringType) +:
-        partitionCols.map(c => org.apache.spark.sql.types.StructField(
-          PvColPrefix + c, org.apache.spark.sql.types.StringType)))
-    val rows = entries.map(e => org.apache.spark.sql.Row.fromSeq(
-      fileKey(e.relPath) +: partValuesOf(e.partitionValue).map(_.orNull)))
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Fill NULL [[MergeTable.RidCol]]/[[MergeTable.RcvCol]] of a keyed,
@@ -5778,20 +5762,35 @@ final class MergeTable private (
     * files, warm or cold); a [[ManifestFileIndex]] hands the scan
     * pre-built statuses straight from log metadata, with exact
     * lengths served by a JVM-wide memo over the immutable committed
-    * files (one `stat` per file on a cold driver, none warm). */
+    * files (one `stat` per file on a cold driver, none warm). Each
+    * file's manifest partition value is cast once per distinct value
+    * to the `partSchema` types (a null slot stays null); the relation
+    * outputs `schema` then `partSchema`. */
   private def manifestScan(entries: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      schema: org.apache.spark.sql.types.StructType,
+      partSchema: org.apache.spark.sql.types.StructType =
+        org.apache.spark.sql.types.StructType(Nil)): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val rowOf = entries.map(_.partitionValue).distinct.map { pv =>
+      val vals = partValuesOf(pv)
+      pv -> InternalRow.fromSeq(partSchema.fields.toSeq.map { f =>
+        vals(partitionCols.indexOf(f.name)).map(v =>
+          Cast(Literal(v), f.dataType, tz).eval()).orNull
+      })
+    }.toMap
     val files = entries.map { e =>
       val p = root.resolve(e.relPath)
       val len: Long = fileSizeMemo
         .get(p.toAbsolutePath.normalize.toString)(Files.size(p))
-      (new org.apache.hadoop.fs.Path(p.toUri), len)
+      ManifestFile(new org.apache.hadoop.fs.Path(p.toUri), len,
+        rowOf(e.partitionValue))
     }
     val index = new ManifestFileIndex(
-      new org.apache.hadoop.fs.Path(root.toUri), files)
+      new org.apache.hadoop.fs.Path(root.toUri), partSchema, files)
     val relation = org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(index,
-        partitionSchema = org.apache.spark.sql.types.StructType(Nil),
+      .HadoopFsRelation(index, partitionSchema = partSchema,
         dataSchema = schema, bucketSpec = None,
         fileFormat = new org.apache.spark.sql.execution.datasources
           .parquet.ParquetFileFormat,
@@ -5801,7 +5800,7 @@ final class MergeTable private (
       org.apache.spark.sql.execution.datasources.LogicalRelation(
         relation,
         org.apache.spark.sql.catalyst.types.DataTypeUtils
-          .toAttributes(schema),
+          .toAttributes(relation.schema),
         None, isStreaming = false, None))
   }
 
@@ -5963,8 +5962,9 @@ final class MergeTable private (
     * level; a MULTI-level layout needs every partition dir in the key —
     * one task writing (a=1,b=1) and (a=2,b=1) emits the same
     * `b=1/part-00000-<uuid>` tail under both parents, so a two-component
-    * key would collide across sibling partitions (duplicating rows at
-    * the partition-value attach, mis-binning compaction). */
+    * key would collide across sibling partitions (applying one file's
+    * deletion vector or row-id allotment to the other, mis-binning
+    * compaction). */
   private val fileKeyDepth: Int = math.max(2, partitionCols.size + 1)
 
   /** The scan-side file-identity tag — the same trailing components of
@@ -6126,9 +6126,8 @@ object MergeTable {
       .asInstanceOf[org.apache.spark.sql.types.StructType]
   /** The file-key column: a read's [[fileKey]] of the row's data file,
     * taken from `_metadata.file_path` at the scan. It keys the
-    * partition-value attach map, the deletion-vector anti-join, the
-    * row-id allotment join and compaction's bin map, and is the column
-    * [[GraftScanPruning]]'s attach pattern matches on. */
+    * deletion-vector anti-join, the row-id allotment join and
+    * compaction's bin map; a read adds it only for those. */
   private[lake] val FileKeyCol = "__graft_file"
   /** The empty column mapping: a read presented physically. */
   private val NoMapping: (Map[String, String], Set[String]) =
@@ -6138,9 +6137,6 @@ object MergeTable {
     * expression (SQL text) in the log schema. */
   private[lake] val DefaultKey = "graft.default"
 
-  /** Prefix of the per-partition-column value columns the attach map
-    * carries (one per partition column). */
-  private val PvColPrefix = "__graft_pv_"
   /** Scan-level row position within the physical file
     * (`_metadata.row_index`) — the coordinate deletion vectors are
     * expressed in. Stable because committed files are immutable. */
@@ -6585,7 +6581,7 @@ object MergeTable {
     * `partitionBy(a, b, ...)`): the layout nests one hive level per
     * column (`a=x/b=y/part-*.parquet`), the manifest records the full
     * value tuple per file, and every partition-aware path — pruning
-    * (both optimizer-rule patterns), OPTIMIZE WHERE, MERGE's
+    * (manifest stats and partition values), OPTIMIZE WHERE, MERGE's
     * touched-partition probe, generated-column derivation — operates
     * per column. */
   def apply(spark: SparkSession, root: String,

@@ -12,37 +12,10 @@ import org.apache.spark.sql.functions._
   * Prints warm medians and the planned file counts.
   * Usage: runMain graft.tools.PruneBench [nFiles] [rowsPerFile]
   *
-  * Pattern B (`B` as the first arg): the REGISTRY-FREE partition-map
-  * pattern on a multi-commit-dir PARTITIONED table — the layout whose
-  * partition values re-attach from the manifest via the broadcast
-  * (file → pv) map, where parquet partition pruning does not exist and
-  * the rule's map pattern is the ONLY file skipping. Point and
-  * multi-partition (`isin`) predicates are measured with the rule
-  * (extensions on) and then in a FRESH extension-less session over the
-  * same table (full scan), with planned-file counts from the optimized
-  * plan both ways.
-  * Usage: runMain graft.tools.PruneBench B [nParts] [rowsPerPart]
-  *
-  * Pattern B2 (`B2`): pattern B on a TWO-COLUMN (a × b) partitioned
-  * multi-commit-dir layout — the file keys carry three components
-  * (fileKeyDepth scales with partition depth) and the rule infers the
-  * depth from the map's own keys. A conjunctive (a AND b) point
-  * predicate and a single-column (a only) predicate are measured.
-  * Usage: runMain graft.tools.PruneBench B2 [nA] [nB] [rowsPerPart]
+  * Pattern C (`C` as the first arg): see [[patternC]].
   */
 object PruneBench {
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("B")) {
-      patternB(args.lift(1).map(_.toInt).getOrElse(1024),
-        args.lift(2).map(_.toInt).getOrElse(2000))
-      return
-    }
-    if (args.headOption.contains("B2")) {
-      patternB2(args.lift(1).map(_.toInt).getOrElse(32),
-        args.lift(2).map(_.toInt).getOrElse(32),
-        args.lift(3).map(_.toInt).getOrElse(2000))
-      return
-    }
     if (args.headOption.contains("C")) {
       patternC(args.lift(1).map(_.toInt).getOrElse(256),
         args.lift(2).map(_.toInt).getOrElse(5000),
@@ -98,19 +71,6 @@ object PruneBench {
     println(f"planned files with rule: $planned of $nFiles; speedup ${full / pruned}%.1fx")
     spark.stop()
   }
-
-  /** Planned parquet files of `df`'s OPTIMIZED plan (pattern B leaves
-    * the attach join in place, so count every parquet relation's root
-    * paths under it). */
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.inputFiles.length
-          case _ => 0
-        }
-    }.sum
 
   /** Pattern C (`C`): the INCREMENTAL-DEDUP index probe
     * ([[graft.ext.DedupQueries.dedupIncremental]]'s layout) in its
@@ -175,127 +135,5 @@ object PruneBench {
       f"probe_join=$mp%.3f s probe_join_rel=$mr%.3f s " +
       f"full_join=$mf%.3f s rows=$cp")
     spark.stop()
-  }
-
-  private def patternB(nParts: Int, rowsPer: Int): Unit = {
-    def session(ext: Boolean): SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions",
-        if (ext) "graft.functions.GraftExtensions" else "")
-      .config("spark.ui.enabled", "false").getOrCreate()
-
-    val dir = java.nio.file.Files.createTempDirectory("prunebenchB").toString
-    val n = nParts.toLong * rowsPer
-
-    def build(spark: SparkSession): graft.lake.MergeTable = {
-      val t = graft.lake.MergeTable(spark, dir, Some("p"))
-      if (t.latestVersion() == 0L) {
-        // two commits covering disjoint partition halves → the live
-        // snapshot spans TWO commit dirs, forcing the multi-dir read
-        // whose partition column re-attaches via the broadcast map
-        val rows = spark.range(n).select(col("id"),
-          concat(lit("p"), col("id") % nParts).as("p"),
-          sha2(col("id").cast("string"), 256).as("payload"))
-        t.overwrite(rows.filter((col("id") % nParts) % 2 === 0)
-          .repartition(col("p")))
-        t.merge(rows.filter((col("id") % nParts) % 2 === 1)
-          .repartition(col("p")), "id")
-      }
-      t
-    }
-
-    def measure(spark: SparkSession, label: String): Unit = {
-      val t = build(spark)
-      val point = () => t.read().filter(col("p") === "p7")
-      val multi = () => t.read().filter(col("p").isin("p7", "p250", "p901"))
-      def timeWarm(mk: () => org.apache.spark.sql.DataFrame,
-          expect: Long): Double = {
-        val runs = (1 to 5).map { _ =>
-          val t0 = System.nanoTime()
-          val c = mk().count()
-          require(c == expect, s"probe lost: $c != $expect")
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        runs(runs.size / 2)
-      }
-      val files = t.read().inputFiles.length
-      val mp = timeWarm(point, rowsPer.toLong)
-      val mm = timeWarm(multi, 3L * rowsPer)
-      println(f"$label files=$files " +
-        f"point: planned=${plannedFiles(point())} median=$mp%.3f s; " +
-        f"isin3: planned=${plannedFiles(multi())} median=$mm%.3f s")
-    }
-
-    val s1 = session(ext = true)
-    s1.sparkContext.setLogLevel("WARN")
-    measure(s1, "with rule   ")
-    s1.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s0 = session(ext = false)
-    s0.sparkContext.setLogLevel("WARN")
-    measure(s0, "without rule")
-    s0.stop()
-  }
-
-  private def patternB2(nA: Int, nB: Int, rowsPer: Int): Unit = {
-    def session(ext: Boolean): SparkSession = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions",
-        if (ext) "graft.functions.GraftExtensions" else "")
-      .config("spark.ui.enabled", "false").getOrCreate()
-
-    val dir = java.nio.file.Files.createTempDirectory("prunebenchB2").toString
-    val n = nA.toLong * nB * rowsPer
-
-    def build(spark: SparkSession): graft.lake.MergeTable = {
-      val t = graft.lake.MergeTable(spark, dir, Seq("a", "b"), Nil,
-        deletionVectors = false, bloomCols = Nil)
-      if (t.latestVersion() == 0L) {
-        val rows = spark.range(n).select(col("id"),
-          concat(lit("a"), col("id") % nA).as("a"),
-          concat(lit("b"), floor(col("id") / nA).cast("long") % nB).as("b"),
-          sha2(col("id").cast("string"), 256).as("payload"))
-        t.overwrite(rows.filter(col("id") % 2 === 0)
-          .repartition(col("a"), col("b")))
-        t.merge(rows.filter(col("id") % 2 === 1)
-          .repartition(col("a"), col("b")), "id")
-      }
-      t
-    }
-
-    def measure(spark: SparkSession, label: String): Unit = {
-      val t = build(spark)
-      val both = () =>
-        t.read().filter(col("a") === "a7" && col("b") === "b3")
-      val one = () => t.read().filter(col("a") === "a7")
-      def timeWarm(mk: () => org.apache.spark.sql.DataFrame): Double = {
-        val runs = (1 to 5).map { _ =>
-          val t0 = System.nanoTime()
-          mk().count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
-        runs(runs.size / 2)
-      }
-      val files = t.read().inputFiles.length
-      val mb = timeWarm(both)
-      val mo = timeWarm(one)
-      println(f"$label files=$files " +
-        f"a&b: planned=${plannedFiles(both())} median=$mb%.3f s; " +
-        f"a-only: planned=${plannedFiles(one())} median=$mo%.3f s")
-    }
-
-    val s1 = session(ext = true)
-    s1.sparkContext.setLogLevel("WARN")
-    measure(s1, "with rule   ")
-    s1.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s0 = session(ext = false)
-    s0.sparkContext.setLogLevel("WARN")
-    measure(s0, "without rule")
-    s0.stop()
   }
 }

@@ -52,10 +52,10 @@ class GraftScanPruningSpec extends SparkSpec {
     val r = t.read().filter(col("id") >= 200L)
     assert(plannedFiles(r).size === 1)
     assert(r.count() === 100L)
-    // A PARTITION predicate on the multi-commit-dir layout folds into
-    // the partition-value re-attach join's file map; the second rule
-    // pattern prunes the scan to the map's surviving keys — and this
-    // path needs NO registration (the map is that read's own file-set
+    // A PARTITION predicate on the multi-commit-dir layout is evaluated
+    // against the manifest partition rows of the read's file index; the
+    // rule narrows the index to the files it admits — and this path
+    // needs NO registration (the index is that read's own file-set
     // source of truth)
     val p = t.read().filter(col("p") === "b")
     assert(plannedFiles(p).size === 1,
@@ -138,8 +138,8 @@ class GraftScanPruningSpec extends SparkSpec {
     val q = t.read().filter(col("id") === 150L)
     assert(plannedFiles(q).size === 3, "no registry entry → no stats pruning")
     assert(q.count() === 1L)
-    // …but the partition-map pattern is registry-free: the read's own
-    // file map admits the files, no manifest lookup involved
+    // …but partition pruning is registry-free: the read's own file
+    // index admits the files, no manifest lookup involved
     val p = t.read().filter(col("p") === "c")
     assert(plannedFiles(p).size === 1)
     assert(p.count() === 100L)
@@ -167,30 +167,72 @@ class GraftScanPruningSpec extends SparkSpec {
         q.queryExecution.executedPlan.treeString)
   }
 
-  test("pattern-B soundness guard: pruning requires a __graft_file " +
-      "equi-join condition (r10 ADVICE canary)") {
-    import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, EqualTo, GreaterThan}
-    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-    import org.apache.spark.sql.types.StringType
-    val mapAttr = AttributeReference(MergeTable.FileKeyCol, StringType)()
-    val scanAttr = AttributeReference(MergeTable.FileKeyCol, StringType)()
-    val other = AttributeReference("other", StringType)()
-    val fm = LocalRelation(Seq(mapAttr))
-    val rule = new GraftScanPruning(spark)
-    // the shape the reader builds: EqualTo across the two sides
-    assert(rule.isFileKeyEquiJoin(Some(EqualTo(scanAttr, mapAttr)), fm))
-    assert(rule.isFileKeyEquiJoin(Some(EqualNullSafe(mapAttr, scanAttr)), fm))
-    // buried in a conjunction still qualifies
-    assert(rule.isFileKeyEquiJoin(
-      Some(And(GreaterThan(other, mapAttr), EqualTo(scanAttr, mapAttr))), fm))
-    // REJECTED: no condition at all (a cross-ish Inner join)
-    assert(!rule.isFileKeyEquiJoin(None, fm))
-    // REJECTED: non-equality on the key — rows absent from the map
-    // could still JOIN, so pruning them would drop results
-    assert(!rule.isFileKeyEquiJoin(Some(GreaterThan(scanAttr, mapAttr)), fm))
-    // REJECTED: equality between two MAP-side keys (XOR guard)
-    assert(!rule.isFileKeyEquiJoin(Some(EqualTo(mapAttr, mapAttr)), fm))
-    // REJECTED: equality on a non-key column
-    assert(!rule.isFileKeyEquiJoin(Some(EqualTo(other, mapAttr)), fm))
+  test("partition pruning drops files only on deterministic, " +
+      "partition-only conjuncts, and prunes version reads against " +
+      "their own files") {
+    val t = table("canary") // never registered: partition pruning only
+    val all = t.read().collect()
+    // a conjunct mixing a partition and a data column drops no file
+    val qm = t.read().filter(col("p") === "b" || col("id") === 5L)
+    assert(plannedFiles(qm).size === 3,
+      qm.queryExecution.optimizedPlan.treeString)
+    assert(qm.collect().toSet === all.filter(r =>
+      r.getAs[String]("p") == "b" || r.getAs[Long]("id") == 5L).toSet)
+    // a nondeterministic partition predicate prunes nothing
+    val sameP = udf((s: String) => s).asNondeterministic()
+    val qn = t.read().filter(sameP(col("p")) === "b")
+    assert(plannedFiles(qn).size === 3,
+      qn.queryExecution.optimizedPlan.treeString)
+    assert(qn.collect().toSet ===
+      all.filter(_.getAs[String]("p") == "b").toSet)
+    // a version read prunes against THAT version's files: v2 holds the
+    // a and b files; the live table has moved on (c added, b deleted)
+    t.delete(col("p") === "b")
+    val v2 = t.readVersion(2L)
+    assert(plannedFiles(v2).size === 2)
+    val qv = v2.filter(col("p") === "b")
+    assert(plannedFiles(qv).size === 1,
+      qv.queryExecution.optimizedPlan.treeString)
+    assert(qv.collect().toSet ===
+      v2.collect().filter(_.getAs[String]("p") == "b").toSet)
+    assert(qv.count() === 100L)
+  }
+
+  test("a partitioned read scans partition values as per-file constants: " +
+      "no join, no file-key column, partition filters in the scan") {
+    import java.sql.Date
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def day(i: Int) = Date.valueOf(f"2024-01-$i%02d")
+    def orders(ids: Seq[Long], d: Int): DataFrame =
+      ids.map(i => (i, i * 1.5, day(d))).toDF("id", "amount", "d").coalesce(1)
+    val t = MergeTable(spark, tmpDir("prune_shape").toString, Some("d"),
+      Seq("id"), deletionVectors = false, bloomCols = Nil)
+    t.overwrite(orders(0L until 10L, 1))
+    (2 to 5).foreach(d => t.append(orders((d * 10L) until (d * 10L + 10L), d)))
+    assert(t.liveEntries().map(_.relPath.split('/').head).distinct.size === 5)
+    val read = t.read()
+    assert(read.schema("d").dataType === org.apache.spark.sql.types.DateType)
+    val plan = read.queryExecution.executedPlan
+    assert(helper.collect(plan) { case j: BaseJoinExec => j }.isEmpty,
+      plan.treeString)
+    assert(!plan.treeString.contains(MergeTable.FileKeyCol), plan.treeString)
+    assert(read.count() === 50L)
+
+    GraftSql.register("prune_shape", t)
+    val q = spark.sql("SELECT id, d FROM graft_table('prune_shape') " +
+      "WHERE d BETWEEN DATE'2024-01-02' AND DATE'2024-01-03'")
+    assert(plannedFiles(q).size === 2, q.queryExecution.optimizedPlan.treeString)
+    assert(q.as[(Long, Date)].collect().toSet ===
+      ((20L until 30L).map((_, day(2))) ++ (30L until 40L).map((_, day(3)))).toSet)
+    val scans = helper.collect(q.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s
+    }
+    assert(scans.size === 1, q.queryExecution.executedPlan.treeString)
+    val partFilters = scans.head.metadata.getOrElse("PartitionFilters", "")
+    assert(partFilters.contains("d#") && partFilters.contains(">="),
+      s"the date predicate must be a partition filter, got $partFilters")
   }
 }

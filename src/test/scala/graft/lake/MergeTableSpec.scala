@@ -1241,5 +1241,28 @@ class MergeTableSpec extends SparkSpec {
     rt.compact()
     assert(rt.liveEntries().forall(_.rowIds.isDefined))
     same(rt, "row-tracked entries")
+    // typed partition values: a DATE partition column reads back as
+    // DATE values (hive inference types the dirs)
+    val dated = Seq(("o1", 1.0, java.sql.Date.valueOf("2024-01-01")),
+      ("o2", 2.0, java.sql.Date.valueOf("2024-01-02")))
+      .toDF("order_id", "amount", "day")
+    val dt = MergeTable(spark, tmpDir("pso_date").toString, Some("day"))
+    dt.overwrite(dated)
+    dt.append(dated.withColumn("order_id", concat(col("order_id"), lit("b"))))
+    same(dt, "DATE partition column")
+    assert(dt.read().schema("day").dataType ===
+      org.apache.spark.sql.types.DateType)
+    assert(dt.read().collect().toSet === dated.union(dated
+      .withColumn("order_id", concat(col("order_id"), lit("b"))))
+      .collect().toSet)
+    // two columns: a value needing path escaping and a hive-default null
+    val tricky = Seq(("s1", "a/b=c d", "eu", 1.0), ("s2", "plain", null, 2.0))
+      .toDF("id", "d", "r", "amt")
+    val two = MergeTable(spark, tmpDir("pso_two").toString, Seq("d", "r"),
+      Nil, deletionVectors = false, bloomCols = Nil)
+    two.overwrite(tricky)
+    same(two, "two columns, escaped value and null slot")
+    assert(two.read().select("id", "d", "r", "amt").collect().toSet ===
+      tricky.collect().toSet)
   }
 }
