@@ -7,33 +7,37 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-/** Manifest-level file skipping as an OPTIMIZER RULE (the Delta
+/** File skipping for every lake read, as an OPTIMIZER RULE (the Delta
   * `PrepareDeltaScan` shape, registered via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`): a `Filter`
-  * the optimizer has pushed down to a lake table's parquet relation
-  * (directly, or across projections) is compiled against the table's
-  * manifest — per-file min/max stats, bloom sidecars, manifest
-  * partition values ([[MergeTable.scanEntriesByCondition]], the same
-  * planner behind `scan(predicate)`) — and the relation is swapped for
-  * one over only the files that may match. Parquet footer pruning still
-  * applies WITHIN the surviving files; this rule removes the files
-  * Spark would otherwise open at all — at 100 TB the difference between
-  * touching every file of a table and the handful a point/range
-  * predicate admits.
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, which every
+  * session reading lake tables must set): a `Filter` the optimizer has
+  * pushed down to a lake table's parquet relation (directly, or across
+  * projections) is compiled against the manifest metadata of the files
+  * that relation holds — per-file min/max stats, bloom sidecars,
+  * partition values ([[MergeTable.scanEntriesByCondition]], carried by
+  * the relation's [[ManifestFileIndex]]) — and the relation is swapped
+  * for one over only the files that may match. Parquet footer pruning
+  * still applies WITHIN the surviving files; this rule removes the
+  * files Spark would otherwise open at all — at 100 TB the difference
+  * between touching every file of a table and the handful a
+  * point/range predicate admits.
   *
-  * Consumers get it for free: the `graft_table` TVF expansion,
-  * `spark.sql` over it, or a Scala-API `t.read().filter(...)` — any
-  * relation whose file set IS a registered table's live snapshot —
-  * without calling `scan()` explicitly.
+  * It is the only file-skipping path for column predicates: `scan`,
+  * `readRange`, `readPoint`, `readNotNull`, a Scala-API
+  * `read().filter(...)`, the `graft_table` TVF and `spark.sql` over it
+  * all reach it as a Filter over a read. No registration is involved,
+  * and a version read is pruned against its own (historical) files,
+  * never the live ones.
   *
-  * A second, REGISTRY-FREE step prunes by partition values, the shape
-  * of Spark's `PruneFileSourcePartitions`: every partitioned read's
+  * A second step prunes by partition values, the shape of Spark's
+  * `PruneFileSourcePartitions`: every partitioned read's
   * [[ManifestFileIndex]] carries each file's typed partition row, so
   * the deterministic conjuncts of the Filter that reference only the
   * relation's partition attributes (by ExprId) are evaluated against
-  * those rows and the index is narrowed to the files they admit. It is
-  * sound for version reads too (the index holds that read's own files),
-  * and keeps the optimized plan's file set (`inputFiles`) exact.
+  * those rows and the index is narrowed to the files they admit. Typed
+  * evaluation prunes shapes the manifest compiler's string comparison
+  * cannot (a DATE range, any cast), and it keeps the optimized plan's
+  * file set (`inputFiles`) exact.
   *
   * Safety gates of the manifest step, in match order:
   *   - the relation must be manifest-backed ([[ManifestFileIndex]] —
@@ -42,13 +46,9 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *   - every attribute the condition references must be an output of
   *     the relation ITSELF (by ExprId, not name — an alias shadowing a
   *     stats column's name can never mis-prune);
-  *   - the relation's file set must EQUAL the table's live snapshot (a
-  *     time-travel read's file set differs → untouched: pruning a
-  *     historical relation against the LIVE manifest would be wrong);
-  *   - the predicate compiles under the same keep-everything-on-
-  *     unknown-shapes discipline as `scan()` — `scan(p) ≡
-  *     read().filter(p)` is spec-pinned, and the full `Filter` stays
-  *     on top as the row-level residual either way;
+  *   - the predicate compiles under a keep-everything-on-unknown-shapes
+  *     discipline, and the full `Filter` stays on top as the row-level
+  *     residual either way;
   *   - a relation once examined is tagged and never re-examined, so
   *     the fixed-point optimizer does the manifest probe at most once
   *     per relation per query.
@@ -59,7 +59,6 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan]
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
     case f @ Filter(cond, child) =>
-      // manifest step first: it needs the relation's full (live) file set
       val byManifest = substitute(child) { rel =>
         if (rel.getTagValue(Examined).isDefined) None
         else {
@@ -126,42 +125,13 @@ class GraftScanPruning(spark: SparkSession) extends Rule[LogicalPlan]
     case _ => None
   }
 
-  /** The manifest-pruned replacement for `rel`, or None to leave it
-    * alone. */
+  /** Manifest pruning: narrow `rel` to the files whose manifest
+    * metadata may satisfy `cond`. */
   private def prunedRelation(cond: Expression,
-      rel: LogicalRelation): Option[LogicalPlan] = {
-    // no registered tables → nothing to own any relation; skip before
-    // materializing the (possibly very wide) root-path set
-    val registry = graft.sql.GraftSql.registered
-    if (registry.isEmpty) return None
+      rel: LogicalRelation): Option[LogicalPlan] =
     // alias-shadowing guard: prune only on the relation's own attrs
-    if (!cond.references.forall(rel.outputSet.contains)) return None
-    val m = rel.relation match {
-      case HadoopFsRelation(m: ManifestFileIndex, _, _, _, _, _) => m
-      case _ => return None
-    }
-    val relFiles = m.files.map(_.path.toUri.getPath).toSet
-    if (relFiles.isEmpty) return None
-    val owner = registry.iterator.map(_._2)
-      .flatMap { t =>
-        val rootPath = t.root.toAbsolutePath.normalize.toString
-        if (!relFiles.forall(_.startsWith(rootPath + "/"))) None
-        else {
-          val live = t.liveEntries()
-          val livePaths = live.map(e =>
-            t.root.resolve(e.relPath).toAbsolutePath.normalize.toString)
-            .toSet
-          // EQUALITY, not containment: a version read's set also lives
-          // under root but differs from live
-          if (livePaths == relFiles) Some((t, live)) else None
-        }
-      }.find(_ => true)
-    owner.flatMap { case (t, live) =>
-      val prunedSet = t.scanEntriesByCondition(live, cond).map(e =>
-        t.root.resolve(e.relPath).toAbsolutePath.normalize.toString).toSet
-      narrowed(rel)(_.filterFiles(f => prunedSet(f.path.toUri.getPath)))
-    }
-  }
+    if (!cond.references.subsetOf(rel.outputSet)) None
+    else narrowed(rel)(_.prunedBy(cond))
 }
 
 object GraftScanPruning {

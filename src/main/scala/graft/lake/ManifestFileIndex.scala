@@ -7,12 +7,15 @@ import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Bound
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
+import graft.lake.MergeTable.FileEntry
+
 /** One live data file as the scan sees it: its path, its exact byte
-  * length and its partition values, typed to the owning index's
-  * `partitionSchema`. Kept together so no narrowing of an index can
-  * separate a file from its partition row. */
+  * length, its partition values, typed to the owning index's
+  * `partitionSchema`, and its manifest entry (stats, bloom ref). Kept
+  * together so no narrowing of an index can separate a file from its
+  * partition row or its metadata. */
 private[lake] final case class ManifestFile(path: HPath, length: Long,
-    partition: InternalRow)
+    partition: InternalRow, entry: FileEntry)
 
 /** A [[FileIndex]] served entirely from MANIFEST metadata — the
   * Delta/Iceberg scan shape (`TahoeLogFileIndex`): the log, not the
@@ -39,11 +42,17 @@ private[lake] final case class ManifestFile(path: HPath, length: Long,
   * row and evaluates the partition filters against it, as Spark's
   * `PartitioningAwareFileIndex.prunePartitions` does — it MUST, since
   * `FileSourceStrategy` does not re-apply partition-only filters after
-  * the scan. */
+  * the scan.
+  *
+  * `compile` is the owning table's file-skipping compiler
+  * ([[MergeTable.scanEntriesByCondition]]): the entries among its first
+  * argument that may satisfy a condition over this index's relation. */
 private[lake] final class ManifestFileIndex(
     tableRoot: HPath,
     override val partitionSchema: StructType,
-    private[lake] val files: Seq[ManifestFile]) extends FileIndex {
+    private[lake] val files: Seq[ManifestFile],
+    compile: (Seq[FileEntry], Expression) => Seq[FileEntry])
+    extends FileIndex {
 
   override def rootPaths: Seq[HPath] = Seq(tableRoot)
 
@@ -80,7 +89,15 @@ private[lake] final class ManifestFileIndex(
     * pruning path narrows an index. */
   private[lake] def filterFiles(keep: ManifestFile => Boolean)
       : ManifestFileIndex =
-    new ManifestFileIndex(tableRoot, partitionSchema, files.filter(keep))
+    new ManifestFileIndex(tableRoot, partitionSchema, files.filter(keep),
+      compile)
+
+  /** This index over only the files whose manifest metadata (partition
+    * value, min/max and null counts, bloom filter) may satisfy `cond`. */
+  private[lake] def prunedBy(cond: Expression): ManifestFileIndex = {
+    val admitted = compile(files.map(_.entry), cond).map(_.relPath).toSet
+    filterFiles(f => admitted(f.entry.relPath))
+  }
 
   override def inputFiles: Array[String] =
     files.map(_.path.toString).toArray

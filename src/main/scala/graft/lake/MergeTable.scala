@@ -250,7 +250,7 @@ final class MergeTable private (
       pqCkptEntries = pqCkptEntries)
 
   /** The same table handle bound to a DIFFERENT SparkSession — the
-    * multi-session hook ([[graft.sql.GraftSql]] rebinds a registered
+    * multi-session hook (the SQL front end rebinds a registered
     * handle to the session actually executing a statement, which
     * matters in multi-session JVMs like a Spark Connect server). The
     * layout contract and log store carry over; only the session the
@@ -2354,7 +2354,7 @@ final class MergeTable private (
       }
       // scope containment: predicate may reference only partition
       // columns, and every incoming row must satisfy it
-      val refs = conditionOf(Nil, predicate)
+      val refs = conditionOf(predicate)
         .map(_.references.map(_.name).toSeq).getOrElse {
           // empty-frame analysis can fail for a declared-less empty
           // table; analyze against the incoming frame instead
@@ -4008,142 +4008,52 @@ final class MergeTable private (
     readEntries(pruned)
   }
 
-  /** Stats-based data skipping (Delta-style file pruning) on the PRIMARY
-    * stats column: the rows with it in [lo, hi], scanning ONLY live
-    * files whose recorded min/max range intersects the bound. */
+  /** [[readRange]] on the PRIMARY stats column. */
   def readRange(lo: Long, hi: Long): DataFrame = {
     val sc = statsCol.getOrElse(throw new IllegalStateException(
       s"MergeTable at $root was opened without stats columns"))
     readRange(sc, lo, hi)
   }
 
-  /** Stats-based data skipping on ANY stats'd column — files without
-    * recorded stats for `c` are scanned (safe fallback: pre-stats
-    * history, columns added by schema evolution), while files the stats
-    * PROVE irrelevant are skipped: a recorded range disjoint from
-    * [lo, hi], or a recorded nullCount saying the file is all-null in
-    * `c` (BETWEEN is never true of NULL — Delta's nullCount skipping). */
+  /** The rows with `c` (long-cast, the stats contract) in [lo, hi].
+    * Files whose min/max range is disjoint from the bound, or whose
+    * nullCount proves them all-null in `c`, are skipped; files without
+    * stats for `c` are scanned. */
   def readRange(c: String, lo: Long, hi: Long): DataFrame = {
     require(statsCols.contains(c),
       s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
         s"— not $c; reopen with it in statsCols")
-    readEntries(rangeEntries(c, lo, hi))
-      .filter(col(c).cast("long").between(lo, hi))
+    read().filter(col(c).cast("long").between(lo, hi))
   }
 
-  /** [[readRange]] for a STRING stats column (r15, Delta's truncated
-    * string min/max): the rows with `c` in [lo, hi] (code-point order —
-    * Spark's own string comparison), scanning only live files whose
-    * recorded TRUNCATED string range intersects the bound. Files
-    * without string stats for `c` are scanned (safe fallback), files
-    * whose recorded prefix-min exceeds `hi` or whose recorded upper
-    * bound undercuts `lo` are skipped — both directions sound under
-    * the truncation contract ([[MergeTable.statsTruncMax]]). */
+  /** [[readRange]] for a STRING stats column: the rows with `c` in
+    * [lo, hi] in code-point order, skipping files by their truncated
+    * string range ([[MergeTable.statsTruncMax]]). */
   def readRange(c: String, lo: String, hi: String): DataFrame = {
     require(statsCols.contains(c),
       s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
         s"— not $c; reopen with it in statsCols")
-    readEntries(rangeEntriesStr(c, lo, hi))
-      .filter(col(c).between(lo, hi))
-  }
-
-  /** Live entries surviving the [lo, hi] STRING stats prune on `c`
-    * (exposed for tests; the [[compileRangeStr]] window as a scan). */
-  private[lake] def rangeEntriesStr(c: String, lo: String,
-      hi: String): Seq[FileEntry] = {
-    val p = compileRangeStr(c, Some(lo), Some(hi))
-    latest()._2.filter(p)
+    read().filter(col(c).between(lo, hi))
   }
 
   /** Latest live file entries (exposed for tests to assert which files a
     * write rewrote vs carried over). */
   private[lake] def liveEntries(): Seq[FileEntry] = latest()._2
 
-  /** Live entries surviving the [lo, hi] stats prune on the primary
-    * stats column (exposed for tests). */
-  private[lake] def rangeEntries(lo: Long, hi: Long): Seq[FileEntry] =
-    rangeEntries(statsCol.getOrElse(""), lo, hi)
-
-  /** Live entries surviving the [lo, hi] stats prune on column `c`. */
-  private[lake] def rangeEntries(c: String, lo: Long,
-      hi: Long): Seq[FileEntry] = {
-    val (_, live) = latest()
-    live.filter { e =>
-      e.stats.get(c).forall { cs =>
-        !cs.allNull && cs.range.forall { case (mn, mx) =>
-          mx >= lo && mn <= hi
-        }
-      }
-    }
-  }
-
-  /** IS NOT NULL data skipping: the non-null rows of `c`, scanning only
-    * live files whose recorded nullCount doesn't prove them all-null
-    * (Delta's nullCount-based skipping; files without recorded counts
-    * are scanned — safe fallback). */
+  /** The non-null rows of `c`, skipping files whose nullCount proves
+    * them all-null in `c`. */
   def readNotNull(c: String): DataFrame = {
     require(statsCols.contains(c),
       s"MergeTable at $root records stats for ${statsCols.mkString(", ")} " +
         s"— not $c; reopen with it in statsCols")
-    readEntries(notNullEntries(c)).filter(col(c).isNotNull)
+    read().filter(col(c).isNotNull)
   }
 
-  /** Live entries surviving the all-null prune on column `c`. */
-  private[lake] def notNullEntries(c: String): Seq[FileEntry] = {
-    val (_, live) = latest()
-    live.filterNot(_.stats.get(c).exists(_.allNull))
-  }
-
-  /** Bloom-index point lookup: rows where `c` (under the same long-cast
-    * contract as the stats columns) equals `value`, scanning only live
-    * files whose bloom filter admits the value. Files with no bloom ref
-    * for `c` (pre-bloom history, a writer with different bloomCols) are
-    * scanned — the same safe fallback as [[readRange]]'s stats'less
-    * files. The probe is metadata-scale end to end: it reads the K
-    * probe WORDS of each sidecar (parquet pushdown on the word column —
-    * never the whole filter), and the candidate test collects
-    * O(liveFiles × K) small rows. Composes with stats: callers wanting
-    * both prunes can intersect [[pointEntries]] with [[rangeEntries]].
-    * A NULL probe is not expressible (bloom filters index values; use
-    * [[readNotNull]]'s complement for IS NULL). */
+  /** Point lookup: the rows where `c` (long-cast) equals `value`,
+    * skipping files whose bloom filter, stats or partition value rule
+    * the value out. Files with no bloom ref for `c` are scanned. */
   def readPoint(c: String, value: Long): DataFrame =
-    readEntries(pointEntries(c, value))
-      .filter(col(c).cast("long") === lit(value))
-
-  /** Live entries surviving the bloom prune of `c = value` (exposed for
-    * tests; see [[readPoint]]). */
-  private[lake] def pointEntries(c: String, value: Long): Seq[FileEntry] = {
-    val (_, live) = latest()
-    val (bloomed, unbloomed) =
-      live.partition(_.bloom.exists(_.cols.contains(c)))
-    val pass = bloomed.groupBy(e => (e.bloom.get.relDir, e.bloom.get.m))
-      .toSeq.sortBy(_._1._1)
-      .flatMap { case ((dir, m), es) =>
-        // per-word masks this probe needs set (K positions, ≤ K words)
-        val need = probePositions(value, m).groupBy(_ / 64)
-          .map { case (w, ps) =>
-            w -> ps.map(p => 1L << (p % 64).toInt).reduce(_ | _)
-          }
-        val keys = es.map(e => fileKey(e.relPath)).toSet
-        val got = spark.read.parquet(root.resolve(dir).toString)
-          .filter(col(BfCol) === c &&
-            col(BfWord).isin(need.keys.toSeq: _*))
-          .select(col(BfFile), col(BfWord), col(BfBits))
-          .collect()
-          .filter(r => keys(r.getString(0)))
-          .groupBy(_.getString(0))
-          .map { case (f, rs) =>
-            f -> rs.map(r => r.getLong(1) -> r.getLong(2)).toMap
-          }
-        es.filter { e =>
-          val words = got.getOrElse(fileKey(e.relPath), Map.empty)
-          need.forall { case (w, mask) =>
-            (words.getOrElse(w, 0L) & mask) == mask
-          }
-        }
-      }
-    unbloomed ++ pass
-  }
+    read().filter(col(c).cast("long") === lit(value))
 
   /** The [[BloomK]] bit positions `value` hashes to in an m-bit filter —
     * computed by EVALUATING the same Catalyst expressions the write
@@ -4159,51 +4069,34 @@ final class MergeTable private (
     (0 until BloomK).map(i => (h1 + i.toLong * h2) % m)
   }
 
-  // ---- unified predicate-driven scan planner ------------------------------
+  // ---- predicate-driven file skipping --------------------------------------
 
-  /** Unified predicate-driven scan (the Delta-style scan planner): ONE
-    * `Column` predicate routes through EVERY file-skipping surface this
-    * table records at once — log-level partition pruning
-    * ([[read(partitionFilter)*]]), per-file min/max range + nullCount
-    * stats on any stats'd column ([[readRange]]/[[readNotNull]]'s
-    * machinery), and bloom-index point lookups ([[readPoint]]'s, batched
-    * across IN-list values) — then applies the FULL predicate as the
-    * residual filter, so the result ALWAYS equals
-    * `read().filter(predicate)` and pruning is purely a file-skipping
-    * optimization the caller no longer has to pick by hand.
-    *
-    * Prunable shapes, walked recursively under `AND`/`OR`/`NOT`:
-    * `=`, `<=>`, `IN`, `<`, `<=`, `>`, `>=` (and `BETWEEN`, which the
-    * Column API plans as two comparisons), `IS NULL`, `IS NOT NULL`.
-    * Any unrecognized sub-predicate prunes nothing — conservative by
-    * construction. Stats and bloom comparisons happen under the same
-    * `cast("long")` contract the write side records: only INTEGRAL
-    * literals participate, and strict bounds relax to inclusive, so the
-    * toward-zero truncation of the cast (which is monotone) can never
-    * skip a file holding a matching fractional value. Partition pruning
-    * compares the literal's string rendering (string literals) or its
-    * numeric value against parseable partition strings, and skips files
-    * in the hive null partition only for `IS NOT NULL`/comparison
-    * predicates on the partition column.
-    *
-    * Scale note: the prune is metadata-only — a driver fold over the
-    * manifest plus, when a bloom'd column is probed, ONE batched sidecar
-    * read per bloom dir regardless of IN-list width (never a Spark job
-    * per value). */
-  def scan(predicate: Column): DataFrame =
-    readEntries(scanEntriesOf(latest()._2, predicate)).filter(predicate)
+  /** `read().filter(predicate)`. File skipping happens in ONE place for
+    * every read: the [[GraftScanPruning]] optimizer rule compiles the
+    * Filter pushed onto the read's relation against the manifest
+    * metadata of the files it holds ([[scanEntriesByCondition]]) — the
+    * same path SQL and a hand-written `read().filter` take, and the
+    * reason a session must set `GraftExtensions`. */
+  def scan(predicate: Column): DataFrame = read().filter(predicate)
 
-  /** [[scan]] against the historical snapshot at `version` — the same
-    * pruning surfaces (stats/bloom refs live in the manifest entries, so
-    * time travel skips files too). */
+  /** [[scan]] against the historical snapshot at `version`, pruned
+    * against that snapshot's own files. */
   def scanVersion(version: Long, predicate: Column): DataFrame =
-    readEntries(scanEntriesOf(snapshotAt(version), predicate))
-      .filter(predicate)
+    readVersion(version).filter(predicate)
 
-  /** Live entries surviving the [[scan]] prune (exposed for tests and
+  /** The live entries whose files the optimized plan of
+    * `read().filter(predicate)` reads (exposed for tests and
     * metadata-only consumers auditing what a scan would read). */
-  private[lake] def scanEntries(predicate: Column): Seq[FileEntry] =
-    scanEntriesOf(latest()._2, predicate)
+  private[lake] def scanEntries(predicate: Column): Seq[FileEntry] = {
+    val planned = read().filter(predicate).queryExecution.optimizedPlan
+      .collect {
+        case org.apache.spark.sql.execution.datasources.LogicalRelation(
+            org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+              m: ManifestFileIndex, _, _, _, _, _), _, _, _, _) =>
+          m.files.map(_.entry.relPath)
+      }.flatten.toSet
+    liveEntries().filter(e => planned(e.relPath))
+  }
 
   /** Key-set file probe at `version` — the dynamic-file-pruning analog
     * for "which files may hold any of these join keys": the same
@@ -4410,28 +4303,22 @@ final class MergeTable private (
     readEntries(live.filter(fe => admittedKeys(fileKey(fe.relPath))))
   }
 
-  /** Entries of the snapshot at `version` (test hook for
-    * [[scanVersion]] parity assertions). */
-  private[lake] def versionEntries(version: Long): Seq[FileEntry] =
-    snapshotAt(version)
-
-  private[lake] def scanEntriesOf(live: Seq[FileEntry],
-      predicate: Column): Seq[FileEntry] =
-    if (live.isEmpty) live
-    else conditionOf(live, predicate) match {
-      case Some(cond) =>
-        val (p, gp) = (compilePrune(cond, live), compileGenPrune(cond))
-        live.filter(fe => p(fe) && gp(fe))
-      case None => live
-    }
-
-  /** [[scanEntriesOf]] from an ALREADY-ANALYZED Catalyst condition —
-    * the [[GraftScanPruning]] optimizer rule's entry: the rule holds
-    * the optimizer's own (coerced, pushed-down) filter condition, so
-    * re-analyzing through a throwaway plan like [[conditionOf]] would
-    * be redundant work. Attribute names at the relation level are
-    * PHYSICAL names, which is exactly what the manifest stats/bloom
-    * keys record. */
+  /** The entries among `live` that may hold a row satisfying `cond` —
+    * the file-skipping compiler, reached only through a read's
+    * [[ManifestFileIndex]] by the [[GraftScanPruning]] rule, which
+    * hands it the optimizer's own (coerced, pushed-down) condition.
+    * Attribute names at the relation level are PHYSICAL names, which
+    * is exactly what the manifest stats/bloom keys record.
+    *
+    * Prunable shapes, walked recursively under `AND`/`OR`/`NOT`:
+    * `=`, `<=>`, `IN`, `<`, `<=`, `>`, `>=`, `IS NULL`, `IS NOT NULL`,
+    * on partition values, min/max and null-count stats, and bloom
+    * filters (ONE batched sidecar read per bloom dir for a whole
+    * IN-list). Any other shape prunes nothing. Stats and bloom
+    * comparisons follow the write side's `cast("long")` contract: only
+    * INTEGRAL literals participate, and strict bounds relax to
+    * inclusive, so the cast's toward-zero truncation can never skip a
+    * file holding a matching fractional value. */
   private[lake] def scanEntriesByCondition(live: Seq[FileEntry],
       cond: cxp.Expression): Seq[FileEntry] =
     if (live.isEmpty) live
@@ -4441,17 +4328,12 @@ final class MergeTable private (
     }
 
   /** The ANALYZED Catalyst condition of `predicate` against this
-    * table's schema — resolved through a throwaway `filter` plan (no
-    * job runs; analysis is driver-only), which also buys the analyzer's
-    * type coercion: an `IN`-list over a BIGINT column arrives as casts
-    * the planner unwraps, and a date-partition compare against a string
-    * literal keeps the string rendering partition pruning matches on.
-    * Analysis failure (or an exotic plan shape) disables pruning, never
-    * the scan. */
-  private def conditionOf(live: Seq[FileEntry],
-      predicate: Column): Option[cxp.Expression] =
+    * table's (empty) schema — resolved through a throwaway `filter`
+    * plan (no job runs; analysis is driver-only). Analysis failure
+    * yields None. */
+  private def conditionOf(predicate: Column): Option[cxp.Expression] =
     try {
-      readEntries(live).filter(predicate)
+      readEntries(Nil).filter(predicate)
         .queryExecution.analyzed.collectFirst {
           case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
             f.condition
@@ -4490,6 +4372,13 @@ final class MergeTable private (
       case Some(c) if list.forall(unwrapLit(_).isDefined) =>
         compileIn(c, list.flatMap(unwrapLit), live)
       case _ => NoPrune
+    }
+    // the optimizer's rendering of a long IN-list: internal values of
+    // the child's type
+    case cxp.InSet(a, set) => attrOf(a) match {
+      case Some(c) =>
+        compileIn(c, set.toSeq.map(cxp.Literal.create(_, a.dataType)), live)
+      case None => NoPrune
     }
     // Strict bounds relax to inclusive — see the truncation note above.
     case cxp.GreaterThan(a, b)        => compileCmpGe(a, b)
@@ -4549,6 +4438,8 @@ final class MergeTable private (
     val strs = nonNull.flatMap(litPartStr).toSet
     val allLong = nonNull.forall(l => litLongOf(l).isDefined)
     val allPart = nonNull.forall(l => litPartStr(l).isDefined)
+    val allDate =
+      nonNull.forall(_.dataType == org.apache.spark.sql.types.DateType)
     // string-literal membership engages the TRUNCATED string stats
     // (r15): a file admits iff some literal sits inside its strRange
     val strLits = nonNull.flatMap(litStrOf)
@@ -4561,6 +4452,10 @@ final class MergeTable private (
       val partOk = !partitionCols.contains(c) || !allPart ||
         nonNull.isEmpty || partValueOf(fe, c).forall { pv =>
           strs.contains(pv) ||
+            // a string partition value cast to DATE may equal a literal
+            // without its ISO rendering ("2024-1-2"): keep such a file
+            (allDate &&
+              scala.util.Try(java.time.LocalDate.parse(pv)).isFailure) ||
             (allLong && scala.util.Try(pv.trim.toLong).toOption
               .exists(p => java.util.Arrays.binarySearch(longs, p) >= 0))
         }
@@ -4585,7 +4480,7 @@ final class MergeTable private (
   }
 
   /** Range prune on `c`'s long-cast stats (plus numeric partition
-    * strings), the [[rangeEntries]] test as a closure. */
+    * strings). */
   private def compileRange(c: String, lo: Long,
       hi: Long): FileEntry => Boolean = fe => {
     val partOk = !partitionCols.contains(c) ||
@@ -4633,14 +4528,11 @@ final class MergeTable private (
   private def notNullEntryMay(c: String, fe: FileEntry): Boolean =
     !fe.stats.get(c).exists(_.allNull)
 
-  /** The attribute name a prunable comparison side resolves to, mapped
-    * to its PHYSICAL name (identity today — stats/bloom/partition
-    * columns can't be renamed, [[guardMappable]] — but future-proof).
-    * Casts unwrap: the stats contract is itself a long cast. */
+  /** The attribute name a prunable comparison side resolves to — a
+    * relation-level, hence PHYSICAL, name. Casts unwrap: the stats
+    * contract is itself a long cast. */
   private def attrOf(e: cxp.Expression): Option[String] = e match {
-    case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-      Some(physicalOf(a.name))
-    case a: cxp.AttributeReference => Some(physicalOf(a.name))
+    case a: cxp.AttributeReference => Some(a.name)
     case c: cxp.Cast               => attrOf(c.child)
     case _                         => None
   }
@@ -4687,22 +4579,24 @@ final class MergeTable private (
     case _ => None
   }
 
-  /** The literal's partition-string rendering: string literals verbatim,
-    * integral literals via their decimal form (hive renders them the
-    * same way). Everything else — fractional, date, boolean — yields
-    * None and disables partition pruning for the predicate. */
+  /** The literal's partition-string rendering, as hive writes it:
+    * string literals verbatim, integral literals in decimal, DATE
+    * literals as `yyyy-MM-dd`. Everything else — fractional,
+    * timestamp, boolean — yields None and disables partition pruning
+    * for the predicate. */
   private def litPartStr(l: cxp.Literal): Option[String] = l match {
     case cxp.Literal(null, _) => None
     case cxp.Literal(v, org.apache.spark.sql.types.StringType) =>
       Some(v.toString)
+    case cxp.Literal(d: Int, org.apache.spark.sql.types.DateType) =>
+      Some(java.time.LocalDate.ofEpochDay(d.toLong).toString)
     case _ => litLongOf(l).map(_.toString)
   }
 
   /** RelPaths among `live`'s BLOOMED files whose sidecars admit AT LEAST
-    * ONE of `values` for column `c` — the batched generalization of
-    * [[pointEntries]]'s probe: ONE hash plan (probe/filter parity with
-    * the write side's codegen'd murmur3+xxhash64) and ONE sidecar read
-    * per bloom dir regardless of value count. Files without a bloom ref
+    * ONE of `values` for column `c`: driver-evaluated probe positions
+    * (parity with the write side's murmur3+xxhash64) and ONE sidecar
+    * read per bloom dir regardless of value count. Files without a bloom ref
     * for `c` never appear here; the caller keeps them (safe fallback). */
   private def bloomAdmittedFiles(c: String, values: Seq[Long],
       live: Seq[FileEntry]): Set[String] = {
@@ -5785,10 +5679,11 @@ final class MergeTable private (
       val len: Long = fileSizeMemo
         .get(p.toAbsolutePath.normalize.toString)(Files.size(p))
       ManifestFile(new org.apache.hadoop.fs.Path(p.toUri), len,
-        rowOf(e.partitionValue))
+        rowOf(e.partitionValue), e)
     }
     val index = new ManifestFileIndex(
-      new org.apache.hadoop.fs.Path(root.toUri), partSchema, files)
+      new org.apache.hadoop.fs.Path(root.toUri), partSchema, files,
+      scanEntriesByCondition)
     val relation = org.apache.spark.sql.execution.datasources
       .HadoopFsRelation(index, partitionSchema = partSchema,
         dataSchema = schema, bucketSpec = None,

@@ -49,16 +49,16 @@ class BloomIndexSpec extends SparkSpec {
     // every key lives in exactly one file; the other must be pruned
     // (deterministic: assert over many probes, not one lucky one)
     for (v <- Seq(1L, 41L, 199L)) {
-      val es = t.pointEntries("id", v)
+      val es = t.scanEntries(col("id").cast("long") === v)
       assert(es.size === 1, s"probe $v should prune to one file")
       assert(t.readPoint("id", v).count() === 1L)
     }
     for (v <- Seq(2L, 100L, 200L)) {
-      assert(t.pointEntries("id", v).size === 1)
+      assert(t.scanEntries(col("id").cast("long") === v).size === 1)
     }
     // an absent key still prunes (both files may survive only via the
     // documented ~0.5% fp rate — with these fixed inputs, neither does)
-    assert(t.pointEntries("id", 100000L).size <= 1)
+    assert(t.scanEntries(col("id").cast("long") === 100000L).size <= 1)
   }
 
   test("files without a bloom ref fall back to scanning, never prune") {
@@ -77,7 +77,7 @@ class BloomIndexSpec extends SparkSpec {
     // odd probe: lives in the UNBLOOMED file — must still be found
     assert(t.readPoint("id", 41L).count() === 1L)
     // unbloomed file is always a candidate; bloomed file prunes
-    assert(t.pointEntries("id", 41L).size === 1)
+    assert(t.scanEntries(col("id").cast("long") === 41L).size === 1)
   }
 
   test("a probe on a column absent from a file's bloom set scans it") {
@@ -93,7 +93,7 @@ class BloomIndexSpec extends SparkSpec {
     // second commit's file must be scanned regardless of the value
     assert(t2.readPoint("aux", 30L).count() === 1L)
     assert(t2.readPoint("aux", 999L).count() === 0L)
-    val es = t2.pointEntries("aux", 999L)
+    val es = t2.scanEntries(col("aux").cast("long") === 999L)
     assert(es.forall(e => !e.bloom.exists(_.cols.contains("aux"))),
       "only the aux-less file may survive an absent-aux probe")
   }
@@ -111,7 +111,7 @@ class BloomIndexSpec extends SparkSpec {
     assert(refs.forall(_.cols === Seq("id")))
     // a plain handle still PROBES correctly (the flag gates writes only)
     assert(fresh.readPoint("id", 41L).count() === 1L)
-    assert(fresh.pointEntries("id", 41L).size <
+    assert(fresh.scanEntries(col("id").cast("long") === 41L).size <
       fresh.liveEntries().size)
   }
 
@@ -155,7 +155,7 @@ class BloomIndexSpec extends SparkSpec {
     val c = t.cloneTo(dest)
     assert(c.readPoint("id", 41L).collect().map(_.getLong(0)).toSeq
       === Seq(41L))
-    assert(c.pointEntries("id", 41L).size === 1)
+    assert(c.scanEntries(col("id").cast("long") === 41L).size === 1)
   }
 
   test("bloom'd writes reject separator characters in column names") {

@@ -7,17 +7,21 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.sql.GraftSql
 
-/** The [[GraftScanPruning]] optimizer rule: a Filter pushed onto a
-  * registered lake table's relation gets MANIFEST-level file skipping
-  * automatically — same admitted-file sets as the explicit
-  * `scan(predicate)` planner, same results as the unpruned filter, and
-  * the safety gates (version reads untouched, unknown predicate shapes
-  * keep everything) hold. */
+/** The [[GraftScanPruning]] optimizer rule: a Filter pushed onto any
+  * lake table's relation — registered or not, live or historical —
+  * gets MANIFEST-level file skipping against the files that relation
+  * holds, with the same results as the unpruned filter; unknown
+  * predicate shapes keep everything. */
 class GraftScanPruningSpec extends SparkSpec {
   import spark.implicits._
 
   private def rows(ids: Seq[Long], p: String): DataFrame =
     ids.map(i => (i, s"v$i", p)).toDF("id", "payload", "p").coalesce(1)
+
+  /** The rows [[table]] writes. */
+  private def written: DataFrame =
+    rows(0L until 100L, "a").union(rows(100L until 200L, "b"))
+      .union(rows(200L until 300L, "c"))
 
   private def table(tag: String): MergeTable = {
     val t = MergeTable(spark, tmpDir(s"prune$tag").toString, Some("p"),
@@ -88,7 +92,9 @@ class GraftScanPruningSpec extends SparkSpec {
     preds.foreach { pred =>
       val viaRule = t.read().filter(pred).collect().toSet
       val viaScan = t.scan(pred).collect().toSet
-      assert(viaRule === viaScan, s"rule and scan() disagree on $pred")
+      val expected = written.filter(pred).collect().toSet
+      assert(viaRule === expected, s"rule disagrees with the rows on $pred")
+      assert(viaScan === expected, s"scan() disagrees with the rows on $pred")
     }
     // the unprunable-shape case must NOT have dropped files
     assert(plannedFiles(t.read().filter(col("payload") === "v7")).size === 3)
@@ -111,8 +117,19 @@ class GraftScanPruningSpec extends SparkSpec {
     // answer must stay correct
     t.delete(col("id") < 100L)
     val hist = t.readVersion(v1).filter(col("id") === 50L)
+    assert(plannedFiles(hist) === plannedFiles(t.readVersion(v1)))
     assert(hist.count() === 1L, "historical row must survive")
     assert(t.read().filter(col("id") === 50L).count() === 0L)
+    // the pre-delete version holds the a, b and c files; the probe
+    // plans only a's, which is no longer live
+    val pre = t.readVersion(3L)
+    assert(plannedFiles(pre).size === 3)
+    val preHist = pre.filter(col("id") === 50L)
+    assert(plannedFiles(preHist).size === 1,
+      preHist.queryExecution.optimizedPlan.treeString)
+    assert(plannedFiles(preHist).intersect(plannedFiles(t.read())).isEmpty)
+    assert(preHist.as[(Long, String, String)].collect().toSeq ===
+      Seq((50L, "v50", "a")))
   }
 
   test("deletion-vector tables stay exact under the rule") {
@@ -132,14 +149,13 @@ class GraftScanPruningSpec extends SparkSpec {
     assert(t.read().count() === 199L)
   }
 
-  test("unregistered tables: manifest pruning off, map pruning still on") {
+  test("unregistered tables: manifest and partition pruning both on") {
     val t = table("noreg") // never registered
-    // data-column predicates need the registry (the manifest probe)
+    // data-column predicates prune against the read's own file index
     val q = t.read().filter(col("id") === 150L)
-    assert(plannedFiles(q).size === 3, "no registry entry → no stats pruning")
+    assert(plannedFiles(q).size === 1, "stats+bloom admit ONE file")
     assert(q.count() === 1L)
-    // …but partition pruning is registry-free: the read's own file
-    // index admits the files, no manifest lookup involved
+    // …and so do partition predicates
     val p = t.read().filter(col("p") === "c")
     assert(plannedFiles(p).size === 1)
     assert(p.count() === 100L)
@@ -170,13 +186,21 @@ class GraftScanPruningSpec extends SparkSpec {
   test("partition pruning drops files only on deterministic, " +
       "partition-only conjuncts, and prunes version reads against " +
       "their own files") {
-    val t = table("canary") // never registered: partition pruning only
+    val t = table("canary")
     val all = t.read().collect()
-    // a conjunct mixing a partition and a data column drops no file
-    val qm = t.read().filter(col("p") === "b" || col("id") === 5L)
+    // a conjunct mixing a partition and a data column drops no file by
+    // partition (payload has no stats, so nothing else prunes either)
+    val qm = t.read().filter(col("p") === "b" || col("payload") === "v5")
     assert(plannedFiles(qm).size === 3,
       qm.queryExecution.optimizedPlan.treeString)
     assert(qm.collect().toSet === all.filter(r =>
+      r.getAs[String]("p") == "b" || r.getAs[String]("payload") == "v5").toSet)
+    // with a stats'd data column the manifest step prunes the mixed
+    // conjunct: b by partition, a by id's range; c is skipped
+    val qs = t.read().filter(col("p") === "b" || col("id") === 5L)
+    assert(plannedFiles(qs).size === 2,
+      qs.queryExecution.optimizedPlan.treeString)
+    assert(qs.collect().toSet === all.filter(r =>
       r.getAs[String]("p") == "b" || r.getAs[Long]("id") == 5L).toSet)
     // a nondeterministic partition predicate prunes nothing
     val sameP = udf((s: String) => s).asNondeterministic()
@@ -234,5 +258,47 @@ class GraftScanPruningSpec extends SparkSpec {
     val partFilters = scans.head.metadata.getOrElse("PartitionFilters", "")
     assert(partFilters.contains("d#") && partFilters.contains(">="),
       s"the date predicate must be a partition filter, got $partFilters")
+  }
+
+  test("a long IN-list (optimized to InSet) prunes like a short one") {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    val t = table("inset")
+    // 11 values: past the optimizer's IN → InSet conversion threshold
+    val q = t.read().filter(col("id").isin((100L to 110L): _*))
+    assert(q.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .exists(_.exists(_.isInstanceOf[InSet])),
+      q.queryExecution.optimizedPlan.treeString)
+    assert(plannedFiles(q).size === 1,
+      q.queryExecution.optimizedPlan.treeString)
+    assert(q.count() === 11L)
+  }
+
+  test("a DATE partition literal prunes inside an OR with a data column") {
+    import java.sql.Date
+    def orders(ids: Seq[Long], d: String): DataFrame =
+      ids.map(i => (i, Date.valueOf(d))).toDF("id", "d").coalesce(1)
+    val t = MergeTable(spark, tmpDir("prune_date_or").toString, Some("d"),
+      Seq("id"), deletionVectors = false, bloomCols = Nil)
+    t.overwrite(orders(0L until 10L, "2024-01-01"))
+    t.append(orders(10L until 20L, "2024-01-02"))
+    t.append(orders(20L until 30L, "2024-01-03"))
+    // the optimizer folds the string into a DATE literal; the OR keeps
+    // the partition step out, so the manifest compiler must render it
+    val q = t.read().filter(col("d") === "2024-01-02" || col("id") === 5L)
+    assert(plannedFiles(q).size === 2,
+      q.queryExecution.optimizedPlan.treeString)
+    assert(q.select("id").as[Long].collect().toSet ===
+      ((10L until 20L) :+ 5L).toSet)
+    // a STRING partition value that is a date only under the cast the
+    // comparison adds ("2024-1-2") is never skipped by its rendering
+    val s = MergeTable(spark, tmpDir("prune_date_str").toString, Some("s"),
+      Seq("id"), deletionVectors = false, bloomCols = Nil)
+    s.overwrite(Seq((1L, "2024-1-2"), (2L, "2024-1-3")).toDF("id", "s"))
+    assert(s.read().schema("s").dataType ===
+      org.apache.spark.sql.types.StringType)
+    val qs = s.read().filter(col("s") === lit(Date.valueOf("2024-01-02")))
+    assert(plannedFiles(qs).size === 1,
+      qs.queryExecution.optimizedPlan.treeString)
+    assert(qs.select("id").as[Long].collect().toSeq === Seq(1L))
   }
 }

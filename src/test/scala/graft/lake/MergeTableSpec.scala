@@ -238,9 +238,10 @@ class MergeTableSpec extends SparkSpec {
       .withColumn("payload", col("k") * 2)
       .repartitionByRange(4, col("k"))
     t.overwrite(df)
-    val total = t.rangeEntries(Long.MinValue, Long.MaxValue).size
+    val total = t.scanEntries(col("k").cast("long")
+      .between(Long.MinValue, Long.MaxValue)).size
     assert(total >= 4, s"expected >=4 stats-bearing files, got $total")
-    val pruned = t.rangeEntries(10, 20)
+    val pruned = t.scanEntries(col("k").cast("long").between(10, 20))
     assert(pruned.size < total, "disjoint-range files must be skipped")
     assert(pruned.forall(_.stats.nonEmpty))
     val rows = t.readRange(10, 20).select("k").as[Long].collect().toSet
@@ -250,7 +251,8 @@ class MergeTableSpec extends SparkSpec {
     t.merge(Seq((500L, 1000L)).toDF("k", "payload"), "k")
     assert(t.readRange(400, 600).select("k").as[Long].collect().toSeq ===
       Seq(500L))
-    assert(t.rangeEntries(400, 600).forall(_.stats.nonEmpty))
+    assert(t.scanEntries(col("k").cast("long").between(400, 600))
+      .forall(_.stats.nonEmpty))
   }
 
   test("multi-column stats skip files on any stats'd column") {
@@ -264,14 +266,15 @@ class MergeTableSpec extends SparkSpec {
       .withColumn("v", lit(99) - col("k"))
       .repartitionByRange(4, col("k"))
     t.overwrite(df)
-    val total = t.rangeEntries("v", Long.MinValue, Long.MaxValue).size
+    val total = t.scanEntries(col("v").cast("long")
+      .between(Long.MinValue, Long.MaxValue)).size
     assert(total >= 4)
-    val prunedV = t.rangeEntries("v", 10, 20)
+    val prunedV = t.scanEntries(col("v").cast("long").between(10, 20))
     assert(prunedV.size < total, "files disjoint in v must be skipped")
     assert(t.readRange("v", 10, 20).select("v").as[Long].collect().toSet ===
       (10L to 20L).toSet)
     // the same table still prunes on the primary column
-    assert(t.rangeEntries("k", 10, 20).size < total)
+    assert(t.scanEntries(col("k").cast("long").between(10, 20)).size < total)
     // an un-stats'd column fails fast with the recorded list
     val e = intercept[IllegalArgumentException] {
       t.readRange("payload", 0, 1)
@@ -291,9 +294,10 @@ class MergeTableSpec extends SparkSpec {
       .drop("i")
     t.overwrite(grid)
     t.zorder(Seq("a", "b"), filesPerPartition = 4)
-    val total = t.rangeEntries("b", Long.MinValue, Long.MaxValue).size
+    val total = t.scanEntries(col("b").cast("long")
+      .between(Long.MinValue, Long.MaxValue)).size
     assert(total >= 4)
-    val prunedB = t.rangeEntries("b", 0, 3)
+    val prunedB = t.scanEntries(col("b").cast("long").between(0, 3))
     assert(prunedB.size < total,
       s"zorder must confine b-ranges per file (kept ${prunedB.size} of $total)")
     assert(t.readRange("b", 0, 3).select("b").as[Long].collect().toSet ===
@@ -316,12 +320,12 @@ class MergeTableSpec extends SparkSpec {
     val total = t.liveEntries().size
     assert(total >= 2)
     // BETWEEN is never true of NULL: the all-null file is skippable
-    assert(t.rangeEntries("k", 0, 100).size < total,
+    assert(t.scanEntries(col("k").cast("long").between(0, 100)).size < total,
       "all-null file must be pruned from a range read")
     assert(t.readRange("k", 10, 12).select("k").as[Long].collect().toSet ===
       Set(10L, 11L, 12L))
     // IS NOT NULL skipping reads only the value-bearing file
-    assert(t.notNullEntries("k").size < total)
+    assert(t.scanEntries(col("k").isNotNull).size < total)
     assert(t.readNotNull("k").count() === 50L)
     // and the skipped rows are still THERE for a plain read
     assert(t.read().count() === 100L)
@@ -684,11 +688,12 @@ class MergeTableSpec extends SparkSpec {
       ((i * 37) % 64).toLong))
     t.overwrite(rows.toDF("id", "qty", "amount"))
     t.compact(4, clusterBy = Seq(col("qty")))
-    val linearHits = t.rangeEntries(0, 15).size
+    val lowAmount = col("amount").cast("long").between(0, 15)
+    val linearHits = t.scanEntries(lowAmount).size
     assert(linearHits === 4,
       s"linear qty clustering cannot skip on amount (got $linearHits/4)")
     t.zorder(Seq("qty", "amount"), 4)
-    val zHits = t.rangeEntries(0, 15).size
+    val zHits = t.scanEntries(lowAmount).size
     assert(zHits <= 2, s"z-order must skip amount-high files (got $zHits/4)")
     // the rewrite is a reorganization, not a data change
     assert(t.read().count() === 4096)

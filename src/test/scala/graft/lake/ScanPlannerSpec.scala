@@ -5,19 +5,24 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Unified predicate-driven scan planner ([[MergeTable.scan]]): one
-  * Column predicate must compose EVERY file-skipping surface — partition
-  * pruning, min/max + nullCount stats, bloom point lookups — and always
-  * return exactly `read().filter(predicate)` (pruning is an
-  * optimization, never a semantics change). Parity cases assert the
-  * planner skips the same files the manual `readRange`/`readPoint`
-  * surfaces do; conservatism cases assert unprunable shapes degrade to
+/** Predicate-driven file skipping ([[MergeTable.scan]], i.e. a Filter
+  * over a read, pruned by [[GraftScanPruning]]): one Column predicate
+  * must compose EVERY file-skipping surface — partition pruning,
+  * min/max + nullCount stats, bloom point lookups — and always return
+  * exactly the written rows that satisfy it (pruning is an
+  * optimization, never a semantics change). Cases pin the admitted
+  * file sets; conservatism cases assert unprunable shapes degrade to
   * keep-everything, not to wrong answers. */
 class ScanPlannerSpec extends SparkSpec {
   import spark.implicits._
 
   private def rows(ids: Seq[Long], p: String): DataFrame =
     ids.map(i => (i, s"v$i", p)).toDF("id", "payload", "p").coalesce(1)
+
+  /** The rows [[table]] writes. */
+  private def written: DataFrame =
+    rows(0L until 100L, "a").union(rows(100L until 200L, "b"))
+      .union(rows(200L until 300L, "c"))
 
   /** Partitioned, stats'd, bloom'd table with three single-file commits
     * of DISJOINT id ranges: a=[0,99], b=[100,199], c=[200,299] — every
@@ -33,19 +38,26 @@ class ScanPlannerSpec extends SparkSpec {
 
   private def collected(df: DataFrame): Set[Row] = df.collect().toSet
 
-  /** The planner's ground truth: scan(pred) ≡ read().filter(pred). */
-  private def assertEquiv(t: MergeTable, pred: org.apache.spark.sql.Column)
-      : Unit =
-    assert(collected(t.scan(pred)) === collected(t.read().filter(pred)),
-      s"scan($pred) must equal read().filter(...)")
+  /** The ground truth: scan(pred) returns exactly the written rows
+    * satisfying pred. */
+  private def assertEquiv(t: MergeTable, pred: org.apache.spark.sql.Column,
+      rows: DataFrame = written): Unit = {
+    val got = t.scan(pred)
+    assert(collected(got) ===
+      collected(rows.filter(pred).select(got.columns.map(col): _*)),
+      s"scan($pred) must equal the written rows filtered by it")
+  }
+
+  /** The partitions of the files `es` — one file per partition here. */
+  private def parts(es: Seq[MergeTable.FileEntry]): Seq[String] =
+    es.flatMap(_.partitionValue)
 
   test("range predicate prunes the same files readRange does") {
     val t = table("rng")
     assert(t.liveEntries().size === 3)
     val pred = col("id").between(120L, 180L)
-    assert(t.scanEntries(pred).map(_.relPath).toSet ===
-      t.rangeEntries("id", 120L, 180L).map(_.relPath).toSet)
-    assert(t.scanEntries(pred).size === 1)
+    // only file b's [100,199] range meets [120,180]
+    assert(parts(t.scanEntries(pred)) === Seq("b"))
     assertEquiv(t, pred)
     // one-sided bounds prune too
     assert(t.scanEntries(col("id") >= 200L).size === 1)
@@ -60,11 +72,9 @@ class ScanPlannerSpec extends SparkSpec {
   test("equality predicate prunes through stats AND bloom like readPoint") {
     val t = table("eq")
     val pred = col("id") === 150L
-    val scanFiles = t.scanEntries(pred).map(_.relPath).toSet
-    val pointFiles = t.pointEntries("id", 150L).map(_.relPath).toSet
-      .intersect(t.rangeEntries("id", 150L, 150L).map(_.relPath).toSet)
-    assert(scanFiles === pointFiles)
-    assert(scanFiles.size === 1)
+    val scanFiles = t.scanEntries(pred)
+    // 150 lives in file b only: its stats and bloom both admit it
+    assert(parts(scanFiles) === Seq("b"))
     assertEquiv(t, pred)
     // absent value: stats alone prune to zero files
     assert(t.scanEntries(col("id") === 1000L).isEmpty)
@@ -110,11 +120,13 @@ class ScanPlannerSpec extends SparkSpec {
       .toDF("x", "tag").coalesce(1))
     t.merge(Seq[(java.lang.Long, String)]((7L, "v7"), (8L, "v8"))
       .toDF("x", "tag").coalesce(1), "tag")
+    val rows = Seq[(java.lang.Long, String)]((null, "n1"), (null, "n2"),
+      (7L, "v7"), (8L, "v8")).toDF("x", "tag")
     assert(t.liveEntries().size === 2)
     assert(t.scanEntries(col("x").isNotNull).size === 1)
-    assertEquiv(t, col("x").isNotNull)
+    assertEquiv(t, col("x").isNotNull, rows)
     assert(t.scanEntries(col("x").isNull).size === 1)
-    assertEquiv(t, col("x").isNull)
+    assertEquiv(t, col("x").isNull, rows)
     // comparisons imply non-null: the all-null file prunes too
     assert(t.scanEntries(col("x") >= 0L).size === 1)
   }
@@ -133,10 +145,15 @@ class ScanPlannerSpec extends SparkSpec {
   test("scanVersion prunes historical snapshots") {
     val t = table("tt")
     val v2 = t.latestVersion() - 1 // before partition c's commit
-    assert(t.scanEntriesOf(
-      t.versionEntries(v2), col("id") >= 100L).size === 1)
+    val planned = t.scanVersion(v2, col("id") >= 100L)
+      .queryExecution.optimizedPlan.collect {
+        case org.apache.spark.sql.execution.datasources.LogicalRelation(
+            h: org.apache.spark.sql.execution.datasources.HadoopFsRelation,
+            _, _, _, _) => h.location.inputFiles.toSeq
+      }.flatten
+    assert(planned.size === 1)
     assert(collected(t.scanVersion(v2, col("id") >= 100L)) ===
-      collected(t.readVersion(v2).filter(col("id") >= 100L)))
+      collected(rows(100L until 200L, "b")))
     assert(t.scanVersion(v2, col("id") >= 200L).count() === 0L,
       "partition c does not exist at v2")
   }

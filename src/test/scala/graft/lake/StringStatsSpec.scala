@@ -64,14 +64,14 @@ class StringStatsSpec extends SparkSpec {
     assert(live.forall(_.stats.get("k").exists(_.strRange.isDefined)),
       "every file must carry a string range for k")
     // the [m..p] window admits exactly one file
-    assert(t.rangeEntriesStr("k", "m", "q").size === 1)
+    assert(t.scanEntries(col("k").between("m", "q")).size === 1)
     assert(t.readRange("k", "m", "q").select("k").as[String]
       .collect().sorted.toSeq === Seq("m1", "n2", "p3"))
     // a window covering nothing admits nothing
-    assert(t.rangeEntriesStr("k", "d", "f").isEmpty)
+    assert(t.scanEntries(col("k").between("d", "f")).isEmpty)
     assert(t.readRange("k", "d", "f").count() === 0L)
     // full window admits all
-    assert(t.rangeEntriesStr("k", "a", "zz").size === 3)
+    assert(t.scanEntries(col("k").between("a", "zz")).size === 3)
   }
 
   test("scan prunes on string comparisons and IN-lists; results match " +
@@ -113,7 +113,7 @@ class StringStatsSpec extends SparkSpec {
     val live = fresh.liveEntries()
     assert(live.forall(_.stats.get("k").exists(_.strRange.isDefined)),
       "string ranges must survive the checkpoint round-trip")
-    assert(fresh.rangeEntriesStr("k", "m", "q").size === 1)
+    assert(fresh.scanEntries(col("k").between("m", "q")).size === 1)
   }
 
   test("truncated 33-char keys still prune soundly (shared-prefix " +
@@ -126,10 +126,10 @@ class StringStatsSpec extends SparkSpec {
     t.append(Seq(("zzz", 3L)).toDF("k", "n"))
     // the long-key file's range is [prefix, bumped-prefix) — a probe
     // inside the shared-prefix region must stay admitted
-    assert(t.rangeEntriesStr("k", base + "b", base + "c").size === 1)
+    assert(t.scanEntries(col("k").between(base + "b", base + "c")).size === 1)
     assert(t.readRange("k", base, base + "zzzz").count() === 2L)
     // and a disjoint window above the bumped prefix skips it
-    assert(t.rangeEntriesStr("k", "x", "y").isEmpty)
+    assert(t.scanEntries(col("k").between("x", "y")).isEmpty)
   }
 
   test("all-null and mixed-null string files: nullCount still skips, " +
@@ -143,7 +143,7 @@ class StringStatsSpec extends SparkSpec {
     val live = t.liveEntries()
     assert(live.exists(_.stats.get("k").exists(_.allNull)))
     // the all-null file is skipped by any range; the mixed file admits
-    assert(t.rangeEntriesStr("k", "a", "c").size === 1)
+    assert(t.scanEntries(col("k").between("a", "c")).size === 1)
     assert(t.readRange("k", "a", "c").count() === 1L)
   }
 }
