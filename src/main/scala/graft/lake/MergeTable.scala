@@ -2385,10 +2385,11 @@ final class MergeTable private (
   }
 
   /** S6 — MERGE upsert: source wins on key match, inserts otherwise;
-    * untouched partitions' files are carried over unchanged. On commit
-    * collision the merge recomputes against the fresh snapshot (so a
-    * concurrent writer's files are merged with, not clobbered); orphaned
-    * data dirs from lost attempts are reclaimed by [[vacuum]]. */
+    * untouched partitions' files are carried over unchanged. Runs on
+    * the shared MERGE core ([[mergeCore]]): a commit collision
+    * recomputes against the fresh snapshot (a concurrent writer's files
+    * are merged with, not clobbered), and orphaned data dirs from lost
+    * attempts are reclaimed by [[vacuum]]. */
   def merge(source: DataFrame, pk: String): Long =
     merge(source, pk, evolveSchema = false)
 
@@ -2398,59 +2399,83 @@ final class MergeTable private (
     * in the source are ADDED to the table (existing rows read NULL) and
     * columns missing from the source are kept (source rows get NULL).
     * Without it, schema drift fails fast (enforcement — the reference's
-    * actual behavior). */
+    * actual behavior), on an empty declared table too. */
   def merge(source0: DataFrame, pk: String, evolveSchema: Boolean): Long = {
     val source = withGenerated(source0)
     requireIdentityCarried(source, "MERGE")
     enforceConstraints(source, "MERGE source")
     val src = source.cache()
-    try {
-      retryingCommit("MERGE",
-      Map("key" -> pk)) { () =>
-        val (version, live) = latest()
-        if (live.isEmpty) {
-          val (_, entries) = writeData(src)
-          (CommitDelta(entries, Nil, mSchema = evolvedSchema(src)), version)
-        } else if (partitionCols.nonEmpty) {
-            // Partitions needing rewrite = those holding a matched key, plus
-            // those receiving inserts. Distinct partition *tuples* are log-
-            // scale metadata — safe to collect (cardinality-guarded); both
-            // sides discover in ONE action (mergeTouchedParts).
-            val (srcParts, matchedParts) = mergeTouchedParts(
-              src, src.select(col(pk)).distinct(), Seq(pk), live)
-            require(srcParts.size <= MaxPartitionsPerMerge,
-              s"merge touches ${srcParts.size} partitions (> " +
-                s"$MaxPartitionsPerMerge); repartition the source or " +
-                "raise the guard — partition values are driver metadata")
-            val touched = srcParts ++ matchedParts
-            val touchedFiles =
-              live.filter(e => touched.contains(e.partitionValue))
-            val remaining = readEntries(touchedFiles)
-              .join(src.select(col(pk)).distinct(), Seq(pk), "left_anti")
-            val out = remaining.unionByName(src, evolveSchema)
-            val (_, newEntries) = writeData(out)
-            // Delta entries: only the rewritten files appear in the log —
-            // untouched partitions' files are implicitly carried over.
-            (CommitDelta(newEntries, touchedFiles.map(_.relPath),
-              mSchema = evolvedSchema(out)), version)
-        } else {
-            // Unpartitioned: inherently a full-table rewrite, as in Delta
-            // without partition pruning.
-            if (live.size >= FullRewriteWarnFiles)
-              logger.warn(
-                s"MergeTable at $root: unpartitioned MERGE rewrites all " +
-                  s"${live.size} live files; declare a partition column " +
-                  "to get partition-level file skipping")
-            val remaining = readEntries(live)
-              .join(src.select(col(pk)).distinct(), Seq(pk), "left_anti")
-            val out = remaining.unionByName(src, evolveSchema)
-            val (_, newEntries) = writeData(out)
-            (CommitDelta(newEntries, live.map(_.relPath),
-              mSchema = evolvedSchema(out)), version)
-        }
-      }
-    } finally src.unpersist()
+    try upsert(Map("key" -> pk), src, src.select(col(pk)).distinct(), pk,
+      evolveSchema)
+    finally src.unpersist()
   }
+
+  /** The row step [[merge]] and [[mergeCdc]] share: the touched files
+    * minus every row whose key is in `keys`, plus `upserts`. */
+  private def upsert(params: Map[String, String], upserts: DataFrame,
+      keys: DataFrame, pk: String, evolveSchema: Boolean): Long =
+    mergeCore(params, upserts, keys, Seq(pk), evolveSchema,
+        onEmpty = upserts) { touched =>
+      readEntries(touched).join(keys, Seq(pk), "left_anti")
+        .unionByName(upserts, allowMissingColumns = evolveSchema)
+    }
+
+  /** The MERGE core behind every MERGE entry point — one optimistic
+    * commit that rewrites only the touched files:
+    *
+    *   - snapshot: the latest live files, re-read on every OCC retry;
+    *   - schema: without `evolveSchema`, `src`'s columns must be the
+    *     table's (checked from metadata, also on an empty table with a
+    *     declared schema); with it, the commit evolves the declared
+    *     schema to carry the new columns;
+    *   - touched files: on a partitioned table, the files of every
+    *     partition `src` writes into or holding a key of `keys` (ONE
+    *     action, cardinality-guarded — partition tuples are driver
+    *     metadata); on an unpartitioned table, or with `touchAll`,
+    *     every live file;
+    *   - row step: `rows(touched)` is what replaces the touched files;
+    *     an empty table gets `onEmpty`;
+    *   - commit: the written files are added, the touched ones removed.
+    *
+    * `src` is the source rows the merge may write; a merge that writes
+    * none passes an empty frame of the source's schema. */
+  private def mergeCore(params: Map[String, String], src: DataFrame,
+      keys: DataFrame, keyCols: Seq[String], evolveSchema: Boolean,
+      onEmpty: DataFrame, touchAll: Boolean = false)(
+      rows: Seq[FileEntry] => DataFrame): Long =
+    retryingCommit("MERGE", params) { () =>
+      val (version, live) = latest()
+      if (!evolveSchema && (live.nonEmpty || declaredSchema.isDefined)) {
+        val tCols = logicalSchemaOf(live).fieldNames.toSeq
+        val sCols = src.columns.toSeq
+        require(sCols.toSet == tCols.toSet,
+          s"merge: source schema {${sCols.mkString(",")}} != table schema " +
+            s"{${tCols.mkString(",")}} — pass evolveSchema to evolve")
+      }
+      val touched =
+        if (live.isEmpty || touchAll) live
+        else if (partitionCols.isEmpty) {
+          if (live.size >= FullRewriteWarnFiles)
+            logger.warn(
+              s"MergeTable at $root: unpartitioned MERGE rewrites all " +
+                s"${live.size} live files; declare a partition column " +
+                "to get partition-level file skipping")
+          live
+        } else {
+          val (srcParts, matchedParts) =
+            mergeTouchedParts(src, keys, keyCols, live)
+          require(srcParts.size <= MaxPartitionsPerMerge,
+            s"merge touches ${srcParts.size} partitions (> " +
+              s"$MaxPartitionsPerMerge); repartition the source or " +
+              "raise the guard — partition values are driver metadata")
+          val parts = srcParts ++ matchedParts
+          live.filter(e => parts.contains(e.partitionValue))
+        }
+      val out = if (live.isEmpty) onEmpty else rows(touched)
+      val (_, newEntries) = writeData(out)
+      (CommitDelta(newEntries, touched.map(_.relPath),
+        mSchema = if (evolveSchema) evolvedSchema(out) else None), version)
+    }
 
   /** When this table has a DECLARED schema and a schema-evolving write
     * introduced new columns, the SAME commit must update the log schema
@@ -2566,9 +2591,7 @@ final class MergeTable private (
   }
 
   /** MERGE with COMPOSITE keys and CONDITIONAL clauses (Delta's full
-    * `whenMatched` clause surface; the single-pk
-    * update-all/insert-all overloads above stay the untouched
-    * degenerate path the reference needs, product_etl.py:72-81):
+    * `whenMatched` clause surface):
     *
     *   - `keys` — the match condition is equality on EVERY listed
     *     column (`ON t.a = s.a AND t.b = s.b`);
@@ -2593,11 +2616,12 @@ final class MergeTable private (
     *
     * Like Delta, a merge with clauses requires the source UNIQUE on
     * `keys` (two source rows matching one target row would make the
-    * outcome order-dependent) — fails fast, same as `mergeCdc`'s
-    * sequence-tie guard. Scale shape is identical to [[merge]]: touched
-    * partitions are discovered with a semi-join on the keys, only
-    * touched files rewrite, and the clause evaluation is one
-    * equi-join — no extra shuffle over the 2-column case. */
+    * outcome order-dependent) — checked once, before anything is
+    * written, same as `mergeCdc`'s sequence-tie guard. The merge runs
+    * on the shared MERGE core ([[mergeCore]]) with its own row step:
+    * one left equi-join from the touched files to the source evaluates
+    * the clauses. A single-key unconditional update-all/insert-all
+    * merge is exactly the single-key [[merge]] and delegates to it. */
   def merge(source0: DataFrame, keys: Seq[String],
       whenMatched: Seq[MatchClause],
       insertUnmatched: Boolean = true,
@@ -2605,9 +2629,8 @@ final class MergeTable private (
       insertCondition: Option[Column] = None,
       notMatchedBySourceDelete: Option[Column] = None): Long = {
     require(keys.nonEmpty, "merge: at least one key column")
-    // exact degenerate delegation: the single-pk path stays bit-identical
     if (keys.size == 1 && insertUnmatched &&
-        whenMatched == Seq(MatchClause(None, isUpdate = true)) &&
+        whenMatched == Seq(MatchClause.update()) &&
         insertCondition.isEmpty && notMatchedBySourceDelete.isEmpty)
       return merge(source0, keys.head, evolveSchema)
     val writesRows = insertUnmatched || whenMatched.exists(_.isUpdate)
@@ -2618,119 +2641,76 @@ final class MergeTable private (
     }
     val src = source.cache()
     try {
-      retryingCommit("MERGE",
-      Map("keys" -> keys.mkString(","))) { () =>
-        val (version, live) = latest()
-        // Delta's multi-match guard: clause outcomes must not depend on
-        // which of several matching source rows is seen first.
-        val dup = src.groupBy(keys.map(col): _*).count()
-          .filter(col("count") > 1).limit(1).collect()
-        require(dup.isEmpty,
-          s"merge: multiple source rows share key ${dup.headOption
-            .map(r => keys.zipWithIndex.map { case (k, i) => s"$k=${r.get(i)}" }
-              .mkString(", "))} — clause merges require a key-unique source")
-        if (live.isEmpty) {
-          if (!insertUnmatched) (CommitDelta(Nil, Nil), version)
-          else {
-            val ins = insertCondition
-              .map(c => src.alias("s").filter(c)).getOrElse(src)
-            val (_, entries) = writeData(ins)
-            (CommitDelta(entries, Nil), version)
-          }
-        } else {
-          val srcKeys = src.select(keys.map(col): _*).distinct()
-          val touchedFiles =
-            // WHEN NOT MATCHED BY SOURCE must examine every live row —
-            // any partition may hold an unmatched target row
-            if (notMatchedBySourceDelete.isDefined) live
-            else if (partitionCols.nonEmpty) {
-              // updates/inserts can land rows in the SOURCE rows'
-              // partitions (an update may move a row across partitions);
-              // matched keys pin the target partitions that rewrite.
-              // Both sides discover in ONE action (mergeTouchedParts);
-              // a delete-only merge (writesRows=false) keeps the
-              // matched-side-only collect.
-              val (srcParts, matchedParts) =
-                if (!writesRows)
-                  (Set.empty[Option[String]], partitionTuplesOf(
-                    readEntries(live).join(srcKeys, keys, "left_semi")))
-                else mergeTouchedParts(src, srcKeys, keys, live)
-              require(srcParts.size <= MaxPartitionsPerMerge,
-                s"merge touches ${srcParts.size} partitions (> " +
-                  s"$MaxPartitionsPerMerge); repartition the source or " +
-                  "raise the guard — partition values are driver metadata")
-              val touched = srcParts ++ matchedParts
-              live.filter(e => touched.contains(e.partitionValue))
-            } else {
-              if (live.size >= FullRewriteWarnFiles)
-                logger.warn(
-                  s"MergeTable at $root: unpartitioned MERGE rewrites all " +
-                    s"${live.size} live files; declare a partition column " +
-                    "to get partition-level file skipping")
-              live
-            }
-          val tgt = readEntries(touchedFiles)
-          val tCols = tgt.columns.toSeq
-          val sCols = src.columns.toSeq
-          require(evolveSchema || sCols.toSet == tCols.toSet,
-            s"merge: source schema {${sCols.mkString(",")}} != table schema " +
-              s"{${tCols.mkString(",")}} — pass evolveSchema to evolve")
-          // LEFT join from the target: unmatched target rows ride along
-          // with a null source side and are kept by construction.
-          val marked = src.withColumn(MergeMatchCol, lit(true)).alias("s")
-          val t = tgt.alias("t")
-          val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k"))
-            .reduce(_ && _)
-          val joined = t.join(marked, keyCond, "left")
-          // first-match-wins action per row: fold the clauses RIGHT so
-          // the first clause is the outermost when()
-          val clauseAction = whenMatched.foldRight(lit(MergeKeep)) {
-            (c, els) =>
-              when(c.condition.getOrElse(lit(true)),
-                lit(if (c.isUpdate) MergeUpdate else MergeDelete))
-                .otherwise(els)
-          }
-          // unmatched target rows: kept, unless the NOT MATCHED BY
-          // SOURCE delete clause (condition over the `t` alias) fires
-          val unmatchedAction = notMatchedBySourceDelete match {
-            case Some(cond) =>
-              when(cond, lit(MergeDelete)).otherwise(lit(MergeKeep))
-            case None => lit(MergeKeep)
-          }
-          val act = when(col(s"s.$MergeMatchCol").isNotNull, clauseAction)
-            .otherwise(unmatchedAction)
-          // UPDATE takes the source's value for columns the source has;
-          // target-only columns keep their value (Delta's UPDATE SET *);
-          // with evolveSchema, source-only columns surface (NULL on
-          // kept rows).
-          val outCols =
-            tCols.map { c =>
-              if (sCols.contains(c))
-                when(act === MergeUpdate, col(s"s.$c"))
-                  .otherwise(col(s"t.$c")).as(c)
-              else col(s"t.$c").as(c)
-            } ++ (if (evolveSchema) sCols.filterNot(tCols.contains).map(c =>
-              when(act === MergeUpdate, col(s"s.$c"))
-                .otherwise(lit(null)).as(c))
-            else Nil)
-          val merged = joined.filter(act =!= MergeDelete).select(outCols: _*)
-          // matched keys necessarily live in touched partitions, so the
-          // anti-join against the TOUCHED files' keys finds exactly the
-          // table-wide unmatched source rows
-          val out =
-            if (!insertUnmatched) merged
-            else {
-              val ins0 = src.alias("s")
-                .join(tgt.select(keys.map(col): _*).distinct(),
-                  keys, "left_anti")
-              val ins = insertCondition.map(ins0.filter).getOrElse(ins0)
-              merged.unionByName(ins, allowMissingColumns = evolveSchema)
-            }
-          val (_, newEntries) = writeData(out)
-          (CommitDelta(newEntries, touchedFiles.map(_.relPath),
-            mSchema = if (evolveSchema) evolvedSchema(out) else None),
-            version)
+      // Delta's multi-match guard: clause outcomes must not depend on
+      // which of several matching source rows is seen first.
+      val dup = src.groupBy(keys.map(col): _*).count()
+        .filter(col("count") > 1).limit(1).collect()
+      require(dup.isEmpty,
+        s"merge: multiple source rows share key ${dup.headOption
+          .map(r => keys.zipWithIndex.map { case (k, i) => s"$k=${r.get(i)}" }
+            .mkString(", "))} — clause merges require a key-unique source")
+      val inserts = insertCondition.fold(src)(src.alias("s").filter(_))
+      val none = src.limit(0)
+      // updates and inserts can land rows in the SOURCE rows'
+      // partitions (an update may move a row across partitions); a
+      // delete-only merge writes no source row
+      mergeCore(Map("keys" -> keys.mkString(",")),
+          if (writesRows) src else none,
+          src.select(keys.map(col): _*).distinct(), keys, evolveSchema,
+          onEmpty = if (insertUnmatched) inserts else none,
+          // WHEN NOT MATCHED BY SOURCE must examine every live row —
+          // any partition may hold an unmatched target row
+          touchAll = notMatchedBySourceDelete.isDefined) { touched =>
+        val tgt = readEntries(touched)
+        val tCols = tgt.columns.toSeq
+        val sCols = src.columns.toSeq
+        // LEFT join from the target: unmatched target rows ride along
+        // with a null source side and are kept by construction.
+        val marked = src.withColumn(MergeMatchCol, lit(true)).alias("s")
+        val t = tgt.alias("t")
+        val keyCond = keys.map(k => col(s"t.$k") === col(s"s.$k"))
+          .reduce(_ && _)
+        val joined = t.join(marked, keyCond, "left")
+        // first-match-wins action per row: fold the clauses RIGHT so
+        // the first clause is the outermost when()
+        val clauseAction = whenMatched.foldRight(lit(MergeKeep)) {
+          (c, els) =>
+            when(c.condition.getOrElse(lit(true)),
+              lit(if (c.isUpdate) MergeUpdate else MergeDelete))
+              .otherwise(els)
         }
+        // unmatched target rows: kept, unless the NOT MATCHED BY
+        // SOURCE delete clause (condition over the `t` alias) fires
+        val unmatchedAction = notMatchedBySourceDelete match {
+          case Some(cond) =>
+            when(cond, lit(MergeDelete)).otherwise(lit(MergeKeep))
+          case None => lit(MergeKeep)
+        }
+        val act = when(col(s"s.$MergeMatchCol").isNotNull, clauseAction)
+          .otherwise(unmatchedAction)
+        // UPDATE takes the source's value for columns the source has;
+        // target-only columns keep their value (Delta's UPDATE SET *);
+        // with evolveSchema, source-only columns surface (NULL on
+        // kept rows).
+        val outCols =
+          tCols.map { c =>
+            if (sCols.contains(c))
+              when(act === MergeUpdate, col(s"s.$c"))
+                .otherwise(col(s"t.$c")).as(c)
+            else col(s"t.$c").as(c)
+          } ++ (if (evolveSchema) sCols.filterNot(tCols.contains).map(c =>
+            when(act === MergeUpdate, col(s"s.$c"))
+              .otherwise(lit(null)).as(c))
+          else Nil)
+        val merged = joined.filter(act =!= MergeDelete).select(outCols: _*)
+        // matched keys necessarily live in touched partitions, so the
+        // anti-join against the TOUCHED files' keys finds exactly the
+        // table-wide unmatched source rows
+        if (!insertUnmatched) merged
+        else merged.unionByName(
+          inserts.join(tgt.select(keys.map(col): _*).distinct(), keys,
+            "left_anti"),
+          allowMissingColumns = evolveSchema)
       }
     } finally src.unpersist()
   }
@@ -2753,11 +2733,11 @@ final class MergeTable private (
     * nondeterministic, so they fail fast). [[changes]] feeds are already
     * net-one-event-per-key and don't need it.
     *
-    * Scale shape: identical to [[merge]] — touched partitions are
-    * discovered with a semi-join (deletes and updates both match live
-    * keys; inserts contribute their own partition values), only touched
-    * files are rewritten, and the sequence collapse is one pk-shuffle
-    * aggregate. Applying a feed of absent-key deletes rewrites nothing. */
+    * After these feed checks the apply is the single-key [[merge]]'s
+    * core call with one difference: EVERY event's key (deletes
+    * included) leaves the touched files, and only inserts and
+    * post-images come back. Applying a feed of absent-key deletes
+    * rewrites nothing. */
   def mergeCdc(feed: DataFrame, pk: String,
       sequenceBy: Option[String] = None,
       keepSequence: Boolean = false): Long = {
@@ -2800,8 +2780,9 @@ final class MergeTable private (
         // SEQUENCE BY stores it too) — that's what lets a sequenced
         // apply compose with a stored-sequence late-event guard like
         // [[graft.streaming.StreamIngest.runCdcAvailableNow]]'s.
-        if (keepSequence ||
-            (latestVersion() > 0L && read().columns.contains(seq))) winners
+        if (keepSequence || (latestVersion() > 0L &&
+            logicalSchemaOf(liveEntries()).fieldNames.contains(seq)))
+          winners
         else winners.drop(seq)
       case None => events
     }
@@ -2811,41 +2792,10 @@ final class MergeTable private (
       "CDC-apply upserts")
     val src = collapsed.cache()
     try {
-      try retryingCommit("MERGE",
-      Map("key" -> pk, "feed" -> "cdc")) { () =>
-        val (version, live) = latest()
-        val upserts = src.filter(col(ChangeType) =!= "delete").drop(ChangeType)
-        val keys = src.select(col(pk)).distinct()
-        if (live.isEmpty) {
-          val (_, entries) = writeData(upserts)
-          (CommitDelta(entries, Nil), version)
-        } else if (partitionCols.nonEmpty) {
-            val (insParts, matchedParts) =
-              mergeTouchedParts(upserts, keys, Seq(pk), live)
-            require(insParts.size <= MaxPartitionsPerMerge,
-              s"mergeCdc touches ${insParts.size} partitions (> " +
-                s"$MaxPartitionsPerMerge); repartition the feed or raise " +
-                "the guard — partition values are driver metadata")
-            val touched = insParts ++ matchedParts
-            val touchedFiles =
-              live.filter(e => touched.contains(e.partitionValue))
-            val remaining = readEntries(touchedFiles)
-              .join(keys, Seq(pk), "left_anti")
-            val out = remaining.unionByName(upserts)
-            val (_, newEntries) = writeData(out)
-            (CommitDelta(newEntries, touchedFiles.map(_.relPath)), version)
-        } else {
-            if (live.size >= FullRewriteWarnFiles)
-              logger.warn(
-                s"MergeTable at $root: unpartitioned CDC apply rewrites " +
-                  s"all ${live.size} live files; declare a partition " +
-                  "column to get partition-level file skipping")
-            val remaining = readEntries(live)
-              .join(keys, Seq(pk), "left_anti")
-            val (_, newEntries) = writeData(remaining.unionByName(upserts))
-            (CommitDelta(newEntries, live.map(_.relPath)), version)
-        }
-      } catch {
+      try upsert(Map("key" -> pk, "feed" -> "cdc"),
+        src.filter(col(ChangeType) =!= "delete").drop(ChangeType),
+        src.select(col(pk)).distinct(), pk, evolveSchema = false)
+      catch {
         // The fused tie check raises inside a Spark task; unwrap the
         // job-failure layers back to the SEQUENCE BY contract's
         // IllegalArgumentException (pinned by ReplicaSpec).
@@ -3134,14 +3084,14 @@ final class MergeTable private (
       Map("hilbertBy" -> cols.mkString(",")),
       scope = ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
-      val df0 = readEntries(live)
+      val df0 = readForRewrite(live)
       val scaled = scaled16(df0, cols)
       val df = df0.withColumn(ZCol,
           expr(MergeTable.hilbertSql(scaled(0), scaled(1))))
         .repartitionByRange(filesPerPartition, col(ZCol))
         .sortWithinPartitions(col(ZCol))
         .drop(ZCol)
-      val (_, entries) = writeData(df)
+      val (_, entries) = writeData(df, allowHidden = true)
       (CommitDelta(entries, live.map(_.relPath)), version)
     }
   }
@@ -3845,8 +3795,8 @@ final class MergeTable private (
     * file's surviving rows, loudly visible in the dry run. A missing
     * bloom sidecar is pure index metadata — clearing the ref costs
     * probe pruning on that file, never rows. */
-  private def fsckPlan(): (Seq[FileEntry], Seq[FileEntry]) = {
-    val (_, live) = latest()
+  private def fsckPlan(live: Seq[FileEntry] = liveEntries())
+      : (Seq[FileEntry], Seq[FileEntry]) = {
     val gone = live.filter { e =>
       !Files.isRegularFile(root.resolve(e.relPath)) ||
         e.dv.exists(d => !Files.isDirectory(root.resolve(d.relDir)))
@@ -3893,11 +3843,12 @@ final class MergeTable private (
       // all-empty 'FSCK' commit would be a spurious version bump
       // (audit-history noise, r14 ADVICE); short-circuit to "no
       // repair needed" instead
-      val (gone, dangling) = fsckPlan()
+      val (version, live) = latest()
+      val (gone, dangling) = fsckPlan(live)
       if (gone.isEmpty && dangling.isEmpty)
         throw new FsckAlreadyClean
       (CommitDelta(dangling.map(_.copy(bloom = None)),
-        gone.map(_.relPath)), latestVersion())
+        gone.map(_.relPath)), version)
     } catch { case _: FsckAlreadyClean => 0L }
   }
 
@@ -5794,22 +5745,14 @@ final class MergeTable private (
   private def partValueOf(fe: FileEntry, c: String): Option[String] =
     partValuesOf(fe.partitionValue)(partitionCols.indexOf(c))
 
-  /** The distinct partition-value tuples of `df`, ENCODED like the
-    * manifest field — driver-side log-scale metadata (cardinality is
-    * the caller's contract). */
-  private def partitionTuplesOf(df: DataFrame): Set[Option[String]] =
-    df.select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => encodePartValues(
-        partitionCols.indices.map(i => Option(r.getString(i)))))
-      .toSet
-
   /** BOTH partition-discovery questions of a keyed merge in ONE action:
     * (source rows' distinct partition tuples, live partitions holding a
     * key of `keys`) — previously two separate collect jobs per
     * partitioned MERGE/CDC-apply commit (r15 job diet: at micro-batch
     * commit cadence each extra action costs a job plus its broadcast
-    * materializations). Tuples encode like the manifest field. */
+    * materializations). An empty `src` (a delete-only merge) folds
+    * away at planning, leaving the matched side alone. Tuples encode
+    * like the manifest field. */
   private def mergeTouchedParts(src: DataFrame, keys: DataFrame,
       keyCols: Seq[String], live: Seq[FileEntry])
       : (Set[Option[String]], Set[Option[String]]) = {

@@ -1252,9 +1252,7 @@ object GraftSql {
     Some(GraftDmlCommand(s"MERGE INTO $name", s => {
       val t = t0.withSession(s)
       val srcDf = sourceDf(s, src)
-      if (!anyClause && keys.size == 1)
-        t.merge(srcDf, keys.head, evolveSchema = evolve)
-      else if (!anyClause)
+      if (!anyClause)
         t.merge(srcDf, keys, Seq(MatchClause.update()),
           insertUnmatched = true, evolveSchema = evolve)
       else

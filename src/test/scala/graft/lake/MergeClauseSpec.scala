@@ -8,8 +8,8 @@ import graft.SparkSpec
 /** Composite-key + conditional MERGE (Delta's `whenMatched` clause
   * surface): equality on every key column, first-match-wins
   * UPDATE/DELETE clauses with conditions over the `t`/`s` aliases,
-  * optional unmatched-insert. The single-pk overload stays the
-  * untouched degenerate path (delegation is spec-pinned below). */
+  * optional unmatched-insert. A single-key unconditional clause merge
+  * delegates to the single-pk overload (spec-pinned below). */
 class MergeClauseSpec extends SparkSpec {
   import spark.implicits._
 
@@ -117,6 +117,28 @@ class MergeClauseSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       t.merge(widened, Seq("store", "sku"), Seq(MatchClause.update()))
     }
+    // the single-key MERGE and the CDC apply share the same check
+    intercept[IllegalArgumentException](t.merge(widened, "sku"))
+    intercept[IllegalArgumentException](t.mergeCdc(
+      widened.withColumn(MergeTable.ChangeType, lit("insert")), "sku"))
+    // an empty table with a declared schema enforces it on every entry
+    // point, and evolves it only when asked
+    import org.apache.spark.sql.types._
+    val d = MergeTable(spark, tmpDir("mc_ev_decl").toString, Some("p"))
+    d.declareSchema(StructType(Seq(
+      StructField("id", LongType), StructField("p", StringType))))
+    val drift = Seq((1L, "x", "e")).toDF("id", "p", "extra")
+    intercept[IllegalArgumentException](d.merge(drift, "id"))
+    intercept[IllegalArgumentException](
+      d.merge(drift, Seq("id", "p"), Seq(MatchClause.update())))
+    intercept[IllegalArgumentException](d.mergeCdc(
+      drift.withColumn(MergeTable.ChangeType, lit("insert")), "id"))
+    assert(d.declaredSchema.get.fieldNames.toSeq === Seq("id", "p"))
+    assert(d.liveEntries().isEmpty)
+    d.merge(drift, Seq("id", "p"), Seq(MatchClause.update()),
+      evolveSchema = true)
+    assert(d.read().select("extra").as[String].collect().toSeq ===
+      Seq("e"))
     t.merge(widened, Seq("store", "sku"), Seq(MatchClause.update()),
       insertUnmatched = true, evolveSchema = true)
     val r = t.read()

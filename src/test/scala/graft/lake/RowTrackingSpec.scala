@@ -100,6 +100,11 @@ class RowTrackingSpec extends SparkSpec {
     t.zorder(Seq("n"))
     assert(ids(t) === before, "zorder changed no row's identity")
 
+    // n is the fixture's only numeric column: a diagonal curve still
+    // rewrites every file
+    t.clusterHilbert(Seq("n", "n"))
+    assert(ids(t) === before, "clusterHilbert changed no row's identity")
+
     t.compactWhere(col("p") === lit("x"), filesPerPartition = 1)
     assert(ids(t) === before, "scoped optimize changed no row's identity")
 
