@@ -38,6 +38,7 @@ object Ingestion {
       val deduped = Validation.dedupByKey(conformed, Schemas.productsPk,
         Seq(col("department_id"), col("product_name")))
       val table = MergeTable(spark, tableRoot, Some(Schemas.productsPartition))
+        .withOptimizeWrite
       val v = table.merge(deduped, Schemas.productsPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally split.unpersist()
@@ -99,6 +100,7 @@ object Ingestion {
       val deduped = Validation.dedupByKey(split.valid, Schemas.ordersPk,
         Seq(col("order_timestamp")))
       val table = MergeTable(spark, tableRoot, Some(Schemas.ordersPartition))
+        .withOptimizeWrite
       val v = table.merge(deduped, Schemas.ordersPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally split.unpersist()
@@ -134,33 +136,22 @@ object Ingestion {
         .join(broadcast(productKeys), Seq("product_id"), "left_semi")
       val deduped = Validation.dedupByKey(withFk, Schemas.orderItemsPk,
         Seq(col("order_timestamp")))
-      val table = MergeTable(spark, tableRoot, Some(Schemas.orderItemsPartition))
+      val table = MergeTable(spark, tableRoot,
+        Some(Schemas.orderItemsPartition)).withOptimizeWrite
       val v = table.merge(deduped, Schemas.orderItemsPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally { split.unpersist(); scan.unpersist() }
   }
 
-  /** S8 — persistent catalog registration mirroring the reference's
-    * `CREATE DATABASE IF NOT EXISTS` + `CREATE TABLE ... USING DELTA
-    * LOCATION` (product_etl.py:88-93, orders_etl.py:98-103): an EXTERNAL
-    * parquet table over the table's single-dir snapshot, visible to any
-    * session sharing the catalog (`spark.newSession`), surviving the
-    * DataFrame that created it. Re-running refreshes the location — the
-    * analog of the reference's crawler refresh
-    * (lambda/start_glue_crawler_lakehouse/lambda_function.py:9-16). */
+  /** S8 — catalog registration, the reference's `CREATE TABLE ... USING
+    * DELTA LOCATION` (product_etl.py:88-93): a zero-copy binding of
+    * `database.name` to the table's manifest through
+    * [[graft.sql.GraftSql.register]] — no write, no DDL. `FROM
+    * database.name` in any session of the JVM reads the live snapshot;
+    * a session-catalog table of that name still wins. With
+    * `spark.graft.catalog.dir` set, the persisted-catalog contract guard
+    * applies: re-binding the name to a different layout is refused. */
   def register(spark: SparkSession, table: MergeTable, name: String,
-      database: String = "graft"): Unit = {
-    val dir = table.snapshotDir().toUri.toString
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
-    spark.sql(s"DROP TABLE IF EXISTS `$database`.`$name`")
-    spark.sql(
-      s"CREATE TABLE `$database`.`$name` USING PARQUET LOCATION '$dir'")
-    if (table.partitionCol.isDefined)
-      spark.sql(s"MSCK REPAIR TABLE `$database`.`$name`")
-  }
-
-  /** Session-scoped registration (temp view over the manifest-exact read) —
-    * the lightweight variant when no cross-session catalog is needed. */
-  def registerView(spark: SparkSession, table: MergeTable, name: String): Unit =
-    table.read().createOrReplaceTempView(name)
+      database: String = "graft"): Unit =
+    graft.sql.GraftSql.register(s"$database.$name", table.withSession(spark))
 }

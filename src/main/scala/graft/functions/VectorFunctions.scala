@@ -89,14 +89,16 @@ object VectorFunctions {
   * DELETE / OPTIMIZE / RESTORE / VACUUM / DESCRIBE HISTORY against
   * [[graft.sql.GraftSql.register]]ed tables) AND the
   * `graft_table(name[, version|timestamp])` table-valued function
-  * (SQL-side snapshot + time-travel reads) into ANY session at build
+  * (SQL-side snapshot + time-travel reads) AND name reads of
+  * registered tables (`FROM t`, `FROM db.t`,
+  * [[graft.sql.GraftRelationResolution]]) into ANY session at build
   * time — the registration path for sessions this library does not
   * construct (spark-submit jobs, notebooks, Spark Connect servers). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
     ext.injectOptimizerRule(s => new graft.lake.GraftScanPruning(s))
-    ext.injectResolutionRule(s => new graft.sql.GraftRelationResolution(s))
+    ext.injectHintResolutionRule(s => new graft.sql.GraftRelationResolution(s))
     ext.injectTableFunction((
       FunctionIdentifier("graft_table"),
       new ExpressionInfo(graft.sql.GraftSql.getClass.getName, "graft_table"),

@@ -124,10 +124,15 @@ final class MergeTable private (
 
   /** The same handle with OPTIMIZED WRITES on (Delta's
     * `delta.autoOptimize.optimizeWrite`): every [[writeData]] of a
-    * PARTITIONED table first shuffles rows to co-locate each partition
-    * in one task, so a commit writes ~ONE file per touched partition
-    * instead of (tasks × partitions) small files. The trade is one
-    * extra hash exchange per write — the right default for streaming /
+    * PARTITIONED table first REBALANCES rows by their partition values
+    * (Spark's `rebalance` hint, the `RebalancePartitions` shape), so a
+    * commit writes ~ONE file per touched partition instead of
+    * (tasks × partitions) small files. Under adaptive execution a
+    * partition larger than `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * is split across several tasks (several files) instead of running
+    * as one task, and small partitions are coalesced; without it the
+    * rebalance is a plain hash exchange. The trade is one extra
+    * exchange per write — the right default for streaming /
     * frequent-merge ingest where the small-files debt otherwise grows
     * per commit and must be paid back by compact(). Unpartitioned
     * tables are unchanged ([[compactSmall]] is their remedy). */
@@ -1906,10 +1911,11 @@ final class MergeTable private (
     val commitDir = s"commit-${UUID.randomUUID().toString.take(12)}"
     val target = root.resolve(commitDir)
     if (partitionCols.nonEmpty) {
-      // optimizeWrite: co-locate each hive partition in one task so
-      // the commit adds ~one file per partition, not tasks×partitions
+      // optimizeWrite: rebalance rows onto their hive partition so the
+      // commit adds ~one file per partition, not tasks×partitions; AQE
+      // splits a skewed partition by advisory size
       val out =
-        if (optimizeWrite) df.repartition(partitionCols.map(col): _*)
+        if (optimizeWrite) df.hint("rebalance", partitionCols.map(col): _*)
         else df
       out.write.partitionBy(partitionCols: _*).mode("overwrite")
         .parquet(target.toString)
@@ -2414,7 +2420,7 @@ final class MergeTable private (
     * minus every row whose key is in `keys`, plus `upserts`. */
   private def upsert(params: Map[String, String], upserts: DataFrame,
       keys: DataFrame, pk: String, evolveSchema: Boolean): Long =
-    mergeCore(params, upserts, keys, Seq(pk), evolveSchema,
+    mergeCore(params, Some(upserts), keys, Seq(pk), evolveSchema,
         onEmpty = upserts) { touched =>
       readEntries(touched).join(keys, Seq(pk), "left_anti")
         .unionByName(upserts, allowMissingColumns = evolveSchema)
@@ -2427,7 +2433,8 @@ final class MergeTable private (
     *   - schema: without `evolveSchema`, `src`'s columns must be the
     *     table's (checked from metadata, also on an empty table with a
     *     declared schema); with it, the commit evolves the declared
-    *     schema to carry the new columns;
+    *     schema to carry the new columns; a merge that writes no source
+    *     row only needs `keyCols` in the table;
     *   - touched files: on a partitioned table, the files of every
     *     partition `src` writes into or holding a key of `keys` (ONE
     *     action, cardinality-guarded — partition tuples are driver
@@ -2438,8 +2445,8 @@ final class MergeTable private (
     *   - commit: the written files are added, the touched ones removed.
     *
     * `src` is the source rows the merge may write; a merge that writes
-    * none passes an empty frame of the source's schema. */
-  private def mergeCore(params: Map[String, String], src: DataFrame,
+    * none passes None. */
+  private def mergeCore(params: Map[String, String], src: Option[DataFrame],
       keys: DataFrame, keyCols: Seq[String], evolveSchema: Boolean,
       onEmpty: DataFrame, touchAll: Boolean = false)(
       rows: Seq[FileEntry] => DataFrame): Long =
@@ -2447,10 +2454,14 @@ final class MergeTable private (
       val (version, live) = latest()
       if (!evolveSchema && (live.nonEmpty || declaredSchema.isDefined)) {
         val tCols = logicalSchemaOf(live).fieldNames.toSeq
-        val sCols = src.columns.toSeq
-        require(sCols.toSet == tCols.toSet,
-          s"merge: source schema {${sCols.mkString(",")}} != table schema " +
-            s"{${tCols.mkString(",")}} — pass evolveSchema to evolve")
+        src match {
+          case Some(s) => require(s.columns.toSet == tCols.toSet,
+            s"merge: source schema {${s.columns.mkString(",")}} != table " +
+              s"schema {${tCols.mkString(",")}} — pass evolveSchema to evolve")
+          case None => require(keyCols.forall(tCols.contains),
+            s"merge: key columns {${keyCols.mkString(",")}} not all in " +
+              s"table schema {${tCols.mkString(",")}}")
+        }
       }
       val touched =
         if (live.isEmpty || touchAll) live
@@ -2602,7 +2613,8 @@ final class MergeTable private (
     *     reference both sides through the `t` (target) and `s`
     *     (source) aliases — `col("s.qty") > col("t.qty")`;
     *   - `insertUnmatched` — unmatched source rows insert (`WHEN NOT
-    *     MATCHED THEN INSERT *`); off for delete-only merges.
+    *     MATCHED THEN INSERT *`); off for delete-only merges, whose
+    *     source needs only the `keys` columns.
     *     `insertCondition` makes the insert conditional (`WHEN NOT
     *     MATCHED AND <p> THEN INSERT` — `p` over the source row);
     *   - `notMatchedBySourceDelete` — Delta's `WHEN NOT MATCHED BY
@@ -2629,6 +2641,9 @@ final class MergeTable private (
       insertCondition: Option[Column] = None,
       notMatchedBySourceDelete: Option[Column] = None): Long = {
     require(keys.nonEmpty, "merge: at least one key column")
+    require(keys.forall(source0.columns.contains),
+      s"merge: key columns {${keys.mkString(",")}} not all in source " +
+        s"schema {${source0.columns.mkString(",")}}")
     if (keys.size == 1 && insertUnmatched &&
         whenMatched == Seq(MatchClause.update()) &&
         insertCondition.isEmpty && notMatchedBySourceDelete.isEmpty)
@@ -2655,7 +2670,7 @@ final class MergeTable private (
       // partitions (an update may move a row across partitions); a
       // delete-only merge writes no source row
       mergeCore(Map("keys" -> keys.mkString(",")),
-          if (writesRows) src else none,
+          if (writesRows) Some(src) else None,
           src.select(keys.map(col): _*).distinct(), keys, evolveSchema,
           onEmpty = if (insertUnmatched) inserts else none,
           // WHEN NOT MATCHED BY SOURCE must examine every live row —
@@ -3048,8 +3063,19 @@ final class MergeTable private (
 
   /** Min-max scale `cols` to 16-bit integers as SQL fragments (shared
     * by [[zorder]] and [[clusterHilbert]]); one 1-row min/max
-    * aggregate. */
+    * aggregate. Each column must cast to DOUBLE row by row: numeric,
+    * boolean, timestamp or all-null. */
   private def scaled16(df0: DataFrame, cols: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.types.{BooleanType, NullType, NumericType,
+      TimestampType}
+    cols.foreach { c =>
+      val dt = df0.select(col(c)).schema.head.dataType
+      require(dt match {
+        case _: NumericType | BooleanType | TimestampType | NullType => true
+        case _ => false
+      }, s"cannot cluster on column '$c' of type ${dt.sql}: clustering " +
+        "scales a numeric, boolean or timestamp column")
+    }
     val mm = df0
       .select(cols.flatMap(c => Seq(
         min(col(c).cast("double")), max(col(c).cast("double")))): _*)
@@ -5750,20 +5776,19 @@ final class MergeTable private (
     * key of `keys`) — previously two separate collect jobs per
     * partitioned MERGE/CDC-apply commit (r15 job diet: at micro-batch
     * commit cadence each extra action costs a job plus its broadcast
-    * materializations). An empty `src` (a delete-only merge) folds
-    * away at planning, leaving the matched side alone. Tuples encode
-    * like the manifest field. */
-  private def mergeTouchedParts(src: DataFrame, keys: DataFrame,
+    * materializations). With no `src` (a delete-only merge) only the
+    * matched side runs. Tuples encode like the manifest field. */
+  private def mergeTouchedParts(src: Option[DataFrame], keys: DataFrame,
       keyCols: Seq[String], live: Seq[FileEntry])
       : (Set[Option[String]], Set[Option[String]]) = {
     val tag = "__graft_src_side"
     def tuples(df: DataFrame, fromSrc: Boolean): DataFrame =
       df.select(partitionCols.map(c => col(c).cast("string")) :+
         lit(fromSrc).as(tag): _*)
-    val rows = labeled("touchedParts")(tuples(src, fromSrc = true)
-      .unionByName(tuples(
-        readEntries(live).join(keys, keyCols, "left_semi"),
-        fromSrc = false))
+    val matched = tuples(
+      readEntries(live).join(keys, keyCols, "left_semi"), fromSrc = false)
+    val rows = labeled("touchedParts")(src
+      .fold(matched)(tuples(_, fromSrc = true).unionByName(matched))
       .distinct().collect())
     def side(fromSrc: Boolean): Set[Option[String]] = rows.iterator
       .filter(_.getBoolean(partitionCols.size) == fromSrc)

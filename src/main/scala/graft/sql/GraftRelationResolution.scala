@@ -1,42 +1,58 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.{StringType, TimestampType}
 
-/** BARE-NAME reads of registered graft tables: `SELECT ... FROM t`
-  * resolves like `FROM graft_table('t')` — the shape an analyst coming
-  * from Athena types (reference `README.md:98`), with zero TVF
-  * syntax. An analyzer RESOLUTION rule, injected via
+/** Name reads of registered graft tables: `SELECT ... FROM t` and
+  * `SELECT ... FROM db.t` resolve like `FROM graft_table('t')` /
+  * `FROM graft_table('db.t')` — the shape an analyst coming from
+  * Athena types (reference `README.md:98`), with zero TVF syntax. An
+  * analyzer HINT-batch rule, injected via
   * [[graft.functions.GraftExtensions]]:
   *
-  *   - it only ever matches a STILL-UNRESOLVED single-part relation,
-  *     so the session catalog wins by construction — Spark's own
-  *     `ResolveRelations` runs earlier in the same fixed-point batch,
-  *     and a temp view or catalog table named `t` has already replaced
-  *     the node before this rule sees it (precedence parity with how
-  *     Delta defers to the metastore);
+  *   - it runs BEFORE the Resolution batch, because a two-part name
+  *     whose first part is a data source short name (`graft` is
+  *     [[graft.streaming.GraftSinkProvider]]'s) is taken there as
+  *     SQL-on-file and fails before any resolution rule could see it;
+  *   - the session catalog still wins: a relation is substituted only
+  *     when no temp view and no catalog table or view has its name
+  *     (precedence parity with how Delta defers to the metastore);
   *   - the substituted plan IS [[GraftSql.tableFunction]]'s — the same
   *     logical plan the Scala API and the TVF build, so predicate
   *     pushdown, partition pruning, and the
   *     [[graft.lake.GraftScanPruning]] manifest file-skipping rule all
   *     apply untouched;
-  *   - the plan is wrapped in a `SubqueryAlias` carrying the bare name
-  *     so qualified references (`t.col`) resolve;
-  *   - streaming relations and multi-part names (`db.t`) are left
-  *     alone — the registry is a flat namespace.
+  *   - the plan is wrapped in a `SubqueryAlias` carrying the name so
+  *     qualified references (`t.col`, `db.t.col`) resolve;
+  *   - streaming relations and names of three or more parts are left
+  *     alone.
   */
 class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  private def registeredName(plan: LogicalPlan): Option[String] = plan match {
-    case u: UnresolvedRelation
-        if !u.isStreaming && u.multipartIdentifier.size == 1 &&
-          GraftSql.table(u.multipartIdentifier.head).isDefined =>
-      Some(u.multipartIdentifier.head)
-    case _ => None
+  /** The name parts of a relation this rule substitutes. */
+  private object Registered {
+    def unapply(plan: LogicalPlan): Option[Seq[String]] = plan match {
+      case u: UnresolvedRelation
+          if !u.isStreaming && u.multipartIdentifier.size <= 2 &&
+            GraftSql.table(u.multipartIdentifier.mkString(".")).isDefined &&
+            !inSessionCatalog(u.multipartIdentifier) =>
+        Some(u.multipartIdentifier)
+      case _ => None
+    }
+  }
+
+  private def inSessionCatalog(parts: Seq[String]): Boolean = {
+    val catalog = spark.sessionState.catalog
+    catalog.isTempView(parts) || (parts match {
+      case Seq(t)     => catalog.tableExists(TableIdentifier(t))
+      case Seq(db, t) => catalog.databaseExists(db) &&
+        catalog.tableExists(TableIdentifier(t, Some(db)))
+    })
   }
 
   // TOP-DOWN: RelationTimeTravel must match BEFORE its child
@@ -44,14 +60,12 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
   // strip the version clause's anchor first)
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperatorsDown {
-      // SQL time travel on a bare name (Delta's `VERSION AS OF` /
-      // `TIMESTAMP AS OF` clause syntax, which Spark's parser wraps in
+      // SQL time travel (Delta's `VERSION AS OF` / `TIMESTAMP AS OF`
+      // clause syntax, which Spark's parser wraps in
       // RelationTimeTravel): route to readVersion / readAsOf — the
       // same snapshot reads the Scala API and the 2-arg TVF build.
-      case RelationTimeTravel(rel, ts, ver)
-          if registeredName(rel).isDefined =>
-        val name = registeredName(rel).get
-        val t = GraftSql.table(name).get.withSession(spark)
+      case RelationTimeTravel(Registered(parts), ts, ver) =>
+        val t = GraftSql.table(parts.mkString(".")).get.withSession(spark)
         val df = (ver, ts) match {
           case (Some(v), _) => t.readVersion(v.toLong)
           case (_, Some(e)) if e.foldable =>
@@ -68,10 +82,9 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           case _ => t.read()
         }
-        SubqueryAlias(name, df.queryExecution.logical)
-      case u: UnresolvedRelation if registeredName(u).isDefined =>
-        val name = u.multipartIdentifier.head
-        SubqueryAlias(name,
-          GraftSql.tableFunction(Seq(Literal(name))))
+        SubqueryAlias(parts, df.queryExecution.logical)
+      case Registered(parts) =>
+        SubqueryAlias(parts,
+          GraftSql.tableFunction(Seq(Literal(parts.mkString(".")))))
     }
 }

@@ -38,4 +38,63 @@ class CatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM graft.orders_cat2")
       .head().getLong(0) === 2L)
   }
+
+  private def bytesUnder(root: String): Long =
+    scala.util.Using.resource(java.nio.file.Files.walk(
+        java.nio.file.Paths.get(root))) { st =>
+      import scala.jdk.CollectionConverters._
+      st.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(java.nio.file.Files.size).sum
+    }
+
+  test("register after a merge that left partitions untouched adds no " +
+      "commit and no bytes") {
+    val root = tmpDir("cat").toString
+    val t = MergeTable(spark, root, Some("date"))
+    t.overwrite(Seq(("o1", "2024-01-01", 10.0), ("o2", "2024-01-02", 20.0))
+      .toDF("order_id", "date", "amount"))
+    // touches only 2024-01-03: the live files now span two commit dirs
+    t.merge(Seq(("o3", "2024-01-03", 30.0)).toDF("order_id", "date", "amount"),
+      "order_id")
+    val (v, bytes) = (t.latestVersion(), bytesUnder(root))
+    Ingestion.register(spark, t, "orders_cat3")
+    assert(t.latestVersion() === v)
+    assert(bytesUnder(root) === bytes)
+    assert(spark.sql("SELECT count(*) FROM graft.orders_cat3")
+      .head().getLong(0) === 3L)
+  }
+
+  test("FROM graft.<name> VERSION AS OF n reads that version") {
+    val t = MergeTable(spark, tmpDir("cat").toString, Some("date"))
+    val v1 = t.overwrite(
+      Seq(("o1", "2024-01-01", 10.0)).toDF("order_id", "date", "amount"))
+    Ingestion.register(spark, t, "orders_cat4")
+    t.merge(Seq(("o2", "2024-01-02", 20.0)).toDF("order_id", "date", "amount"),
+      "order_id")
+    assert(spark.sql(
+      s"SELECT order_id FROM graft.orders_cat4 VERSION AS OF $v1")
+      .as[String].collect().toSeq === Seq("o1"))
+    assert(spark.sql("SELECT count(*) FROM graft.orders_cat4")
+      .head().getLong(0) === 2L)
+  }
+
+  test("a session-catalog table with the same qualified name wins") {
+    val t = MergeTable(spark, tmpDir("cat").toString, Some("date"))
+    t.overwrite(Seq(("o1", "2024-01-01", 10.0), ("o2", "2024-01-02", 20.0))
+      .toDF("order_id", "date", "amount"))
+    val loc = tmpDir("cat_prec").resolve("data")
+    Seq(("c1", "2024-01-01", 1.0)).toDF("order_id", "date", "amount")
+      .write.parquet(loc.toString)
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft")
+    spark.sql(
+      s"CREATE TABLE graft.orders_prec USING PARQUET LOCATION '${loc.toUri}'")
+    try {
+      Ingestion.register(spark, t, "orders_prec")
+      assert(spark.sql("SELECT order_id FROM graft.orders_prec")
+        .as[String].collect().toSeq === Seq("c1"))
+    } finally spark.sql("DROP TABLE IF EXISTS graft.orders_prec")
+    // with the catalog table gone, the name reads the registered table
+    assert(spark.sql("SELECT count(*) FROM graft.orders_prec")
+      .head().getLong(0) === 2L)
+  }
 }

@@ -115,4 +115,48 @@ class IngestionSpec extends SparkSpec {
     assert(byId === Map("p1" -> "apple", "p2" -> "milk-renamed",
       "p9" -> "bread"))
   }
+
+  test("each job's MERGE adds at most one file per touched partition") {
+    val (dir, productsT, ordersT, itemsT) = setup()
+    def run(): Unit = {
+      Ingestion.productsJob(spark, s"$dir/raw/products", productsT,
+        s"$dir/quarantine/products")
+      Ingestion.ordersJob(spark, s"$dir/raw/orders", ordersT,
+        s"$dir/quarantine/orders")
+      Ingestion.orderItemsJob(spark, s"$dir/raw/order_items", ordersT,
+        productsT, itemsT, s"$dir/quarantine/order_items")
+    }
+    run()
+    // a second landing: corrections and new rows in partitions that
+    // already hold files, so each MERGE rewrites old rows beside new
+    write(dir.resolve("raw/products/products.csv"),
+      "product_id,department_id,department,product_name",
+      "p1,1,produce,green-apple",
+      "p4,2,dairy,yogurt",
+      "p5,1,produce,pear")
+    write(dir.resolve("raw/orders/sheet1.csv"),
+      "order_num,order_id,user_id,order_timestamp,total_amount",
+      "1,o1,u1,2024-01-01 10:00:00,55.0",
+      "5,o4,u2,2024-01-02 13:00:00,12.0",
+      "6,o5,u3,2024-01-01 14:00:00,8.0")
+    write(dir.resolve("raw/order_items/sheet1.csv"),
+      "id,order_id,user_id,days_since_prior_order,product_id,add_to_cart_order,reordered,order_timestamp",
+      "i1,o1,u1,,p1,3,false,2024-01-01 10:00:00",
+      "i6,o4,u2,2,p4,1,false,2024-01-02 13:00:00",
+      "i7,o5,u3,1,p5,1,true,2024-01-01 14:00:00")
+    val tables = Seq(productsT -> "department", ordersT -> "date",
+      itemsT -> "date")
+    def live() = tables.map { case (root, pc) =>
+      MergeTable(spark, root, Some(pc)).read().inputFiles.toSet }
+    val before = live()
+    run()
+    for (((root, _), (was, now)) <- tables.zip(before.zip(live()))) {
+      val added = now -- was
+      assert(added.nonEmpty, root)
+      // the partition dir is the file's parent: `date=2024-01-01/part-…`
+      val perPart = added.toSeq.groupBy(_.split('/').init.last)
+        .view.mapValues(_.size).toMap
+      assert(perPart.values.forall(_ == 1), s"$root: $perPart")
+    }
+  }
 }

@@ -83,4 +83,17 @@ class HilbertSpec extends SparkSpec {
     intercept[IllegalArgumentException] { t.clusterHilbert(Seq("a")) }
     intercept[IllegalArgumentException] { t.clusterHilbert(Seq("a", "b", "c")) }
   }
+
+  test("zorder and clusterHilbert name a string column they cannot scale") {
+    val t = MergeTable(spark, tmpDir("hil-s").toString, None)
+    val v = t.overwrite(Seq((1L, "x1"), (2L, "y2")).toDF("a", "s"))
+    for (run <- Seq[MergeTable => Long](_.zorder(Seq("a", "s")),
+        _.clusterHilbert(Seq("a", "s")))) {
+      val e = intercept[IllegalArgumentException](run(t))
+      assert(e.getClass === classOf[IllegalArgumentException])
+      assert(e.getMessage.contains("'s'") && e.getMessage.contains("STRING"),
+        e.getMessage)
+    }
+    assert(t.latestVersion() === v)
+  }
 }

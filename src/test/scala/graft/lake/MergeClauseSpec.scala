@@ -76,6 +76,23 @@ class MergeClauseSpec extends SparkSpec {
     assert(!t.liveEntries().exists(_.partitionValue.contains("s9")))
   }
 
+  test("delete-only merge takes a key-only source") {
+    val t = fresh("delkeys")
+    t.merge(Seq(("s1", "b"), ("s2", "c"), ("s9", "z")).toDF("store", "sku"),
+      Seq("store", "sku"), Seq(MatchClause.delete()),
+      insertUnmatched = false)
+    assert(state(t) === Set(("s1", "a", 5L, 1.0), ("s2", "a", 7L, 3.0)))
+    // the keys must still exist on both sides
+    intercept[IllegalArgumentException] {
+      t.merge(Seq("a").toDF("sku"), Seq("store", "sku"),
+        Seq(MatchClause.delete()), insertUnmatched = false)
+    }
+    intercept[IllegalArgumentException] {
+      t.merge(Seq(("s1", "a")).toDF("store", "code"), Seq("store", "code"),
+        Seq(MatchClause.delete()), insertUnmatched = false)
+    }
+  }
+
   test("matched row satisfying NO clause is kept; unmatched source inserts") {
     val t = fresh("keep")
     t.merge(inv(("s1", "a", 4L, 9.9), ("s3", "d", 3L, 3.0)),

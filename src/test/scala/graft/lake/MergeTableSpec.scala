@@ -984,6 +984,29 @@ class MergeTableSpec extends SparkSpec {
       .select("amount").as[Double].head() === 999.0)
   }
 
+  test("withOptimizeWrite: a partition above the advisory size splits " +
+      "across files; small partitions stay one file each") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    // the skewed day arrives from 8 input tasks, the two small days from
+    // one, so a split of the skewed partition never splits a small one
+    val big = spark.range(0, 40000, 1, 8).select(
+      concat(lit("b"), col("id").cast("string")).as("order_id"),
+      lit("2024-01-01").as("date"), (col("id") * 1.5).as("amount"))
+    val small = Seq(("s1", "2024-01-02", 1.0), ("s2", "2024-01-03", 2.0))
+      .toDF("order_id", "date", "amount").coalesce(1)
+    val t = MergeTable(spark, tmpDir("ow_skew").toString, Some("date"))
+      .withOptimizeWrite
+    spark.conf.set(key, "64k")
+    try t.overwrite(big.unionByName(small))
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val files = t.liveEntries().groupBy(_.partitionValue)
+      .view.mapValues(_.size).toMap
+    assert(files(Some("2024-01-01")) > 1, files)
+    assert(files(Some("2024-01-02")) === 1 && files(Some("2024-01-03")) === 1)
+    assert(t.read().count() === 40002L)
+  }
+
   test("vacuumDryRun lists exactly what vacuum would reap and deletes " +
       "nothing; restoreAsOf routes through versionAsOf") {
     val root = tmpDir("vdr").toString

@@ -568,7 +568,7 @@ class GraftSqlSpec extends SparkSpec {
       "SELECT l.label FROM t_bare b JOIN bare_labels l USING (order_id)")
       .as[String].collect().toSeq === Seq("alpha"))
     // a temp view with the same name SHADOWS the graft table (catalog
-    // precedence — ResolveRelations runs before our resolution rule)
+    // precedence — the resolution rule defers to the session catalog)
     Seq(("shadow", "x", 0.0)).toDF("order_id", "date", "amount")
       .createOrReplaceTempView("t_bare")
     assert(contents(spark.sql("SELECT * FROM t_bare"))
