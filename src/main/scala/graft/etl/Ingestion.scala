@@ -150,7 +150,14 @@ object Ingestion {
     * database.name` in any session of the JVM reads the live snapshot;
     * a session-catalog table of that name still wins. With
     * `spark.graft.catalog.dir` set, the persisted-catalog contract guard
-    * applies: re-binding the name to a different layout is refused. */
+    * applies: re-binding the name to a different layout is refused.
+    * No metastore table is created, so `database.name` is visible only
+    * to sessions that load [[graft.functions.GraftExtensions]], in a JVM
+    * that registered the name or that sets `spark.graft.catalog.dir`;
+    * plain Spark sessions, other engines sharing the metastore and
+    * `SHOW TABLES IN database` do not see it. Such log-blind readers
+    * read the table through
+    * [[graft.lake.MergeTable.generateSymlinkManifest]] instead. */
   def register(spark: SparkSession, table: MergeTable, name: String,
       database: String = "graft"): Unit =
     graft.sql.GraftSql.register(s"$database.$name", table.withSession(spark))

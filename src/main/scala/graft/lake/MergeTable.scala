@@ -123,8 +123,9 @@ final class MergeTable private (
       ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
 
   /** The same handle with OPTIMIZED WRITES on (Delta's
-    * `delta.autoOptimize.optimizeWrite`): every [[writeData]] of a
-    * PARTITIONED table first REBALANCES rows by their partition values
+    * `delta.autoOptimize.optimizeWrite`): every ingest write (append,
+    * overwrite, merge, update, delete) of a PARTITIONED table first
+    * REBALANCES rows by their partition values
     * (Spark's `rebalance` hint, the `RebalancePartitions` shape), so a
     * commit writes ~ONE file per touched partition instead of
     * (tasks × partitions) small files. Under adaptive execution a
@@ -134,8 +135,12 @@ final class MergeTable private (
     * rebalance is a plain hash exchange. The trade is one extra
     * exchange per write — the right default for streaming /
     * frequent-merge ingest where the small-files debt otherwise grows
-    * per commit and must be paid back by compact(). Unpartitioned
-    * tables are unchanged ([[compactSmall]] is their remedy). */
+    * per commit and must be paid back by compact(). The OPTIMIZE
+    * family ([[compact]], [[compactSmall]], [[zorder]],
+    * [[clusterHilbert]], [[compactWhere]], [[purgeVectors]]) is not
+    * rebalanced: it writes the file layout and sizes it chose itself.
+    * Unpartitioned tables are unchanged ([[compactSmall]] is their
+    * remedy). */
   def withOptimizeWrite: MergeTable =
     new MergeTable(spark, root, partitionCols, statsCols,
       deletionVectors, bloomCols, logStore, optimizeWrite = true,
@@ -1897,14 +1902,20 @@ final class MergeTable private (
 
   /** Write `df` into a fresh commit dir; return its new file entries.
     * The frame arrives LOGICAL (all internal flows are logical);
-    * files are written PHYSICAL so a rename never rewrites data. */
+    * files are written PHYSICAL so a rename never rewrites data.
+    * `rewrite` marks the OPTIMIZE family (compactions, clustering,
+    * vector purge): its frame may carry the hidden row-tracking columns,
+    * and it already has the file layout its caller chose, so the
+    * optimized-write rebalance is skipped — a rebalance would override
+    * `filesPerPartition`, bin and clustering layouts, and under adaptive
+    * execution split a bin below its target size. */
   private def writeData(dfIn: DataFrame,
-      allowHidden: Boolean = false): (String, Seq[FileEntry]) =
-    labeled("writeData")(writeDataImpl(dfIn, allowHidden))
+      rewrite: Boolean = false): (String, Seq[FileEntry]) =
+    labeled("writeData")(writeDataImpl(dfIn, rewrite))
 
   private def writeDataImpl(dfIn: DataFrame,
-      allowHidden: Boolean): (String, Seq[FileEntry]) = {
-    require(allowHidden || !dfIn.columns.exists(HiddenCols.contains),
+      rewrite: Boolean): (String, Seq[FileEntry]) = {
+    require(rewrite || !dfIn.columns.exists(HiddenCols.contains),
       s"MergeTable at $root: column names ${HiddenCols.mkString("/")} " +
         "are reserved for row tracking")
     val df = toPhysical(dfIn)
@@ -1915,7 +1926,8 @@ final class MergeTable private (
       // commit adds ~one file per partition, not tasks×partitions; AQE
       // splits a skewed partition by advisory size
       val out =
-        if (optimizeWrite) df.hint("rebalance", partitionCols.map(col): _*)
+        if (optimizeWrite && !rewrite)
+          df.hint("rebalance", partitionCols.map(col): _*)
         else df
       out.write.partitionBy(partitionCols: _*).mode("overwrite")
         .parquet(target.toString)
@@ -2852,7 +2864,7 @@ final class MergeTable private (
           df0.repartitionByRange(filesPerPartition, clusterBy: _*)
             .sortWithinPartitions(clusterBy: _*)
         else df0.repartition(filesPerPartition)
-      val (_, entries) = writeData(df, allowHidden = true)
+      val (_, entries) = writeData(df, rewrite = true)
       (CommitDelta(entries, live.map(_.relPath)), version)
     }
 
@@ -2923,7 +2935,7 @@ final class MergeTable private (
           .join(binDf, Seq(FileKeyCol))
           .repartition(bins.length, col(BinCol))
           .drop(BinCol, FileKeyCol)
-        val (_, entries) = writeData(packed, allowHidden = true)
+        val (_, entries) = writeData(packed, rewrite = true)
         (CommitDelta(entries, touched.map(_.relPath)), version)
       }
     }
@@ -2953,7 +2965,7 @@ final class MergeTable private (
       scope = ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
       val df = clusterZ(readForRewrite(live), cols, filesPerPartition)
-      val (_, entries) = writeData(df, allowHidden = true)
+      val (_, entries) = writeData(df, rewrite = true)
       (CommitDelta(entries, live.map(_.relPath)), version)
     }
   }
@@ -3014,7 +3026,7 @@ final class MergeTable private (
           val df =
             if (zorderCols.nonEmpty) clusterZ(df0, zorderCols, parts)
             else df0.repartition(parts, partitionCols.map(col): _*)
-          val (_, entries) = writeData(df, allowHidden = true)
+          val (_, entries) = writeData(df, rewrite = true)
           (CommitDelta(entries, selected.map(_.relPath)), version)
         }
       }
@@ -3117,7 +3129,7 @@ final class MergeTable private (
         .repartitionByRange(filesPerPartition, col(ZCol))
         .sortWithinPartitions(col(ZCol))
         .drop(ZCol)
-      val (_, entries) = writeData(df, allowHidden = true)
+      val (_, entries) = writeData(df, rewrite = true)
       (CommitDelta(entries, live.map(_.relPath)), version)
     }
   }
@@ -3240,7 +3252,7 @@ final class MergeTable private (
     if (vectored.isEmpty) (CommitDelta(Nil, Nil), version)
     else {
       val (_, entries) =
-        writeData(readForRewrite(vectored), allowHidden = true)
+        writeData(readForRewrite(vectored), rewrite = true)
       (CommitDelta(entries, vectored.map(_.relPath)), version)
     }
   }

@@ -2,11 +2,12 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, AsOfVersion,
+  RelationTimeTravel, TimeTravelSpec, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation,
+  Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{StringType, TimestampType}
 
 /** Name reads of registered graft tables: `SELECT ... FROM t` and
   * `SELECT ... FROM db.t` resolve like `FROM graft_table('t')` /
@@ -55,6 +56,21 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
     })
   }
 
+  /** `e` analyzed on its own. The hint batch runs before function and
+    * time-zone resolution, so a `TIMESTAMP AS OF` expression such as
+    * `CAST('…' AS TIMESTAMP)` or `to_timestamp('…')` is still unresolved
+    * here; [[TimeTravelSpec.create]] then evaluates it exactly as
+    * Spark's own time travel does (session time zone, constant,
+    * deterministic — anything else is an analysis error). */
+  private def analyzed(e: Expression): Expression =
+    spark.sessionState.executePlan(
+        Project(Seq(Alias(e, "as_of")()), OneRowRelation()))
+      .analyzed match {
+      case Project(Seq(Alias(r, _)), _) => r
+      case p => throw new IllegalStateException(
+        s"graft time travel: unexpected analyzed shape $p")
+    }
+
   // TOP-DOWN: RelationTimeTravel must match BEFORE its child
   // UnresolvedRelation is rewritten to the live read (bottom-up would
   // strip the version clause's anchor first)
@@ -66,21 +82,14 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       // same snapshot reads the Scala API and the 2-arg TVF build.
       case RelationTimeTravel(Registered(parts), ts, ver) =>
         val t = GraftSql.table(parts.mkString(".")).get.withSession(spark)
-        val df = (ver, ts) match {
-          case (Some(v), _) => t.readVersion(v.toLong)
-          case (_, Some(e)) if e.foldable =>
-            (e.eval(), e.dataType) match {
-              case (micros: java.lang.Long, TimestampType) =>
-                t.readAsOf(java.time.Instant.EPOCH
-                  .plusNanos(micros * 1000L))
-              case (s, StringType) =>
-                t.readAsOf(java.sql.Timestamp
-                  .valueOf(String.valueOf(s).replace("T", " ")).toInstant)
-              case (v, dt) => throw new IllegalArgumentException(
-                s"graft time travel: unsupported TIMESTAMP AS OF " +
-                  s"literal $v of type $dt")
-            }
-          case _ => t.read()
+        val df = TimeTravelSpec.create(ts.map(analyzed), ver,
+            spark.sessionState.conf.sessionLocalTimeZone) match {
+          case Some(AsOfVersion(v)) => t.readVersion(v.toLong)
+          case Some(AsOfTimestamp(micros)) =>
+            t.readAsOf(java.time.Instant.EPOCH.plusNanos(micros * 1000L))
+          case spec => throw new IllegalArgumentException(
+            s"graft time travel: unsupported clause $spec on " +
+              parts.mkString("."))
         }
         SubqueryAlias(parts, df.queryExecution.logical)
       case Registered(parts) =>

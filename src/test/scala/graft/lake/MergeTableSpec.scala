@@ -1007,6 +1007,37 @@ class MergeTableSpec extends SparkSpec {
     assert(t.read().count() === 40002L)
   }
 
+  test("withOptimizeWrite: OPTIMIZE keeps its own layout under a small " +
+      "advisory size; a second compactSmall commits an empty delta") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prior = spark.conf.getOption(key)
+    val t = MergeTable(spark, tmpDir("ow_opt").toString, Some("date"))
+      .withOptimizeWrite
+    def wave(w: Int) = spark.range(0, 10000, 1, 2).select(
+      concat(lit(s"w${w}_"), col("id").cast("string")).as("order_id"),
+      lit("d1").as("date"), (col("id") * 1.5 + w).as("amount"))
+    val target = 64L << 20
+    spark.conf.set(key, "64k")
+    try {
+      (1 to 4).foreach(w => t.append(wave(w)))
+      assert(t.liveEntries().size >= 4)
+      // every file is under the target and they all combine: one bin,
+      // written as ONE file (a rebalance would split it by advisory size)
+      t.compactSmall(target)
+      assert(t.liveEntries().size === 1)
+      val (v, files) = (t.latestVersion(), t.liveEntries().toSet)
+      t.compactSmall(target)
+      assert(t.liveEntries().toSet === files, "no repack of its own output")
+      assert(t.history().filter(col("version") > v)
+        .filter(col("n_added") + col("n_removed") > 0).count() === 0L)
+      // compact(filesPerPartition = 1) gives one file per partition
+      t.append(wave(5))
+      t.compact()
+      assert(t.liveEntries().size === 1)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(t.read().count() === 50000L)
+  }
+
   test("vacuumDryRun lists exactly what vacuum would reap and deletes " +
       "nothing; restoreAsOf routes through versionAsOf") {
     val root = tmpDir("vdr").toString

@@ -640,6 +640,7 @@ class GraftSqlSpec extends SparkSpec {
     val t = MergeTable(spark, tmpDir("sql_tt").toString, Some("date"))
     t.overwrite(orders(("o1", "2024-01-01", 10.0)))
     val v1 = t.latestVersion()
+    Thread.sleep(20) // the next commit's stamp must be a later millisecond
     t.merge(orders(("o2", "2024-01-02", 20.0)), "order_id")
     GraftSql.register("t_tt", t)
     assert(contents(spark.sql(s"SELECT * FROM t_tt VERSION AS OF $v1"))
@@ -649,6 +650,23 @@ class GraftSqlSpec extends SparkSpec {
     // a version beyond history fails loudly, not silently-latest
     intercept[Exception](
       spark.sql("SELECT * FROM t_tt VERSION AS OF 99").collect())
+    // TIMESTAMP AS OF v1's commit stamp (rendered in the session time
+    // zone) as a string, a CAST and a function, bare and qualified: the
+    // hint-batch rule sees the latter two unresolved
+    GraftSql.register("graft.t_tt", t)
+    val ts = t.history().filter(col("version") === v1)
+      .select(date_format(col("committed_at"), "yyyy-MM-dd HH:mm:ss.SSS"))
+      .as[String].head()
+    for (name <- Seq("t_tt", "graft.t_tt");
+         e <- Seq(s"'$ts'", s"CAST('$ts' AS TIMESTAMP)",
+           s"to_timestamp('$ts')"))
+      assert(contents(spark.sql(s"SELECT * FROM $name TIMESTAMP AS OF $e"))
+        === contents(t.readVersion(v1)), s"$name TIMESTAMP AS OF $e")
+    // an expression that is not a constant fails; it never reads live
+    for (name <- Seq("t_tt", "graft.t_tt"))
+      intercept[Exception](spark.sql(
+        s"SELECT * FROM $name TIMESTAMP AS OF rand()").collect())
+    GraftSql.unregister("graft.t_tt")
   }
 
   test("MERGE WITH SCHEMA EVOLUTION routes evolveSchema=true") {
