@@ -7,7 +7,8 @@ gate-query counts FROM ARTIFACTS so SURVEY/README never hand-copy them
 
 - ScalaTest: parses target/test-reports/*.xml (written by `sbt test`)
 - gate queries, current source: <verify_out_dir>/oracle_sql.json when
-  given (written by graft.Verify / graft.tools.VerifyOne)
+  given (written by graft.Verify <sfDir> <outDir>; a run given a third
+  argument, a comma-separated query list, lists only those queries)
 - gate queries, last driver round: the newest CORRECTNESS_r*.json
 """
 import glob

@@ -23,6 +23,13 @@ object Ingestion {
   final case class JobResult(tableVersion: Long, validRows: Long,
       rejectedRows: Long)
 
+  /** The layout of every ingestion target, decided here once: one
+    * partition column and optimized writes (one file per touched
+    * partition per commit). */
+  private def target(spark: SparkSession, root: String,
+      partition: String): MergeTable =
+    MergeTable(spark, root, Some(partition)).withOptimizeWrite
+
   /** products: CSV → validate all-4-required → quarantine → dedup →
     * audit column → MERGE on product_id, partitioned by department
     * (ref: product_etl.py:42-93). */
@@ -37,9 +44,8 @@ object Ingestion {
         .withColumn("ingestion_timestamp", current_timestamp())
       val deduped = Validation.dedupByKey(conformed, Schemas.productsPk,
         Seq(col("department_id"), col("product_name")))
-      val table = MergeTable(spark, tableRoot, Some(Schemas.productsPartition))
-        .withOptimizeWrite
-      val v = table.merge(deduped, Schemas.productsPk)
+      val v = target(spark, tableRoot, Schemas.productsPartition)
+        .merge(deduped, Schemas.productsPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally split.unpersist()
   }
@@ -99,9 +105,8 @@ object Ingestion {
       Validation.writeQuarantine(split.rejected, quarantinePath)
       val deduped = Validation.dedupByKey(split.valid, Schemas.ordersPk,
         Seq(col("order_timestamp")))
-      val table = MergeTable(spark, tableRoot, Some(Schemas.ordersPartition))
-        .withOptimizeWrite
-      val v = table.merge(deduped, Schemas.ordersPk)
+      val v = target(spark, tableRoot, Schemas.ordersPartition)
+        .merge(deduped, Schemas.ordersPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally split.unpersist()
   }
@@ -136,9 +141,8 @@ object Ingestion {
         .join(broadcast(productKeys), Seq("product_id"), "left_semi")
       val deduped = Validation.dedupByKey(withFk, Schemas.orderItemsPk,
         Seq(col("order_timestamp")))
-      val table = MergeTable(spark, tableRoot,
-        Some(Schemas.orderItemsPartition)).withOptimizeWrite
-      val v = table.merge(deduped, Schemas.orderItemsPk)
+      val v = target(spark, tableRoot, Schemas.orderItemsPartition)
+        .merge(deduped, Schemas.orderItemsPk)
       JobResult(v, deduped.count(), split.rejected.count())
     } finally { split.unpersist(); scan.unpersist() }
   }
@@ -147,8 +151,12 @@ object Ingestion {
     * DELTA LOCATION` (product_etl.py:88-93): a zero-copy binding of
     * `database.name` to the table's manifest through
     * [[graft.sql.GraftSql.register]] — no write, no DDL. `FROM
-    * database.name` in any session of the JVM reads the live snapshot;
-    * a session-catalog table of that name still wins. With
+    * database.name` in any session of the JVM reads the live snapshot,
+    * and SQL `UPDATE` / `DELETE` / `INSERT INTO` / `MERGE INTO` on the
+    * name write it; a session-catalog table of that name still wins.
+    * The binding carries the jobs' layout — optimized writes on, so
+    * SQL DML writes one file per touched partition, as the jobs do,
+    * whatever handle the caller passes. With
     * `spark.graft.catalog.dir` set, the persisted-catalog contract guard
     * applies: re-binding the name to a different layout is refused.
     * No metastore table is created, so `database.name` is visible only
@@ -157,8 +165,13 @@ object Ingestion {
     * plain Spark sessions, other engines sharing the metastore and
     * `SHOW TABLES IN database` do not see it. Such log-blind readers
     * read the table through
-    * [[graft.lake.MergeTable.generateSymlinkManifest]] instead. */
+    * [[graft.lake.MergeTable.generateSymlinkManifest]] instead. A
+    * Hive-catalog session (`spark.sql.catalogImplementation=hive`, the
+    * spark-shell default) drops the injected name-read rule: there
+    * `FROM database.name` fails while the DML statements still run, so
+    * read through `graft_table('database.name')`. */
   def register(spark: SparkSession, table: MergeTable, name: String,
       database: String = "graft"): Unit =
-    graft.sql.GraftSql.register(s"$database.$name", table.withSession(spark))
+    graft.sql.GraftSql.register(s"$database.$name",
+      table.withOptimizeWrite.withSession(spark))
 }

@@ -85,18 +85,23 @@ object VectorFunctions {
   * spark.sql.extensions=graft.functions.GraftExtensions` injects ALL of
   * this library's native functions (`dot_f`, `simhash16`, and
   * `minhash_sig` bound to the canonical [[HashFamily]]) AND the lake
-  * DML parser ([[graft.sql.GraftSqlParser]]: MERGE INTO / UPDATE /
-  * DELETE / OPTIMIZE / RESTORE / VACUUM / DESCRIBE HISTORY against
-  * [[graft.sql.GraftSql.register]]ed tables) AND the
+  * SQL parser ([[graft.sql.GraftSqlParser]], built with the session:
+  * Spark's own UPDATE / DELETE / INSERT INTO, plus the graft grammar —
+  * MERGE INTO / INSERT OVERWRITE / OPTIMIZE / RESTORE / VACUUM /
+  * DESCRIBE HISTORY … — on [[graft.sql.GraftSql.register]]ed tables,
+  * named `t` or `db.t`) AND the
   * `graft_table(name[, version|timestamp])` table-valued function
   * (SQL-side snapshot + time-travel reads) AND name reads of
   * registered tables (`FROM t`, `FROM db.t`,
   * [[graft.sql.GraftRelationResolution]]) into ANY session at build
   * time — the registration path for sessions this library does not
-  * construct (spark-submit jobs, notebooks, Spark Connect servers). */
+  * construct (spark-submit jobs, notebooks, Spark Connect servers).
+  * A Hive-catalog session drops injected hint-resolution rules, so
+  * there name reads fail while the parser's statements still run;
+  * read through `graft_table('<db>.<name>')` in such a session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
+    ext.injectParser((s, delegate) => new graft.sql.GraftSqlParser(s, delegate))
     ext.injectOptimizerRule(s => new graft.lake.GraftScanPruning(s))
     ext.injectHintResolutionRule(s => new graft.sql.GraftRelationResolution(s))
     ext.injectTableFunction((

@@ -1,13 +1,14 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.analysis.{AsOfTimestamp, AsOfVersion,
   RelationTimeTravel, TimeTravelSpec, UnresolvedRelation}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation,
   Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
+
+import graft.lake.MergeTable
 
 /** Name reads of registered graft tables: `SELECT ... FROM t` and
   * `SELECT ... FROM db.t` resolve like `FROM graft_table('t')` /
@@ -20,14 +21,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     whose first part is a data source short name (`graft` is
   *     [[graft.streaming.GraftSinkProvider]]'s) is taken there as
   *     SQL-on-file and fails before any resolution rule could see it;
-  *   - the session catalog still wins: a relation is substituted only
-  *     when no temp view and no catalog table or view has its name
-  *     (precedence parity with how Delta defers to the metastore);
-  *   - the substituted plan IS [[GraftSql.tableFunction]]'s — the same
-  *     logical plan the Scala API and the TVF build, so predicate
-  *     pushdown, partition pruning, and the
-  *     [[graft.lake.GraftScanPruning]] manifest file-skipping rule all
-  *     apply untouched;
+  *   - names resolve through [[GraftSql.resolve]], the resolver DML
+  *     uses too, so the session catalog still wins: a relation is
+  *     substituted only when no temp view and no catalog table or view
+  *     has its name (precedence parity with how Delta defers to the
+  *     metastore);
+  *   - the substituted plan IS the table's `read()` plan — the one the
+  *     Scala API and `graft_table` build, so predicate pushdown,
+  *     partition pruning, and the [[graft.lake.GraftScanPruning]]
+  *     manifest file-skipping rule all apply untouched;
   *   - the plan is wrapped in a `SubqueryAlias` carrying the name so
   *     qualified references (`t.col`, `db.t.col`) resolve;
   *   - streaming relations and names of three or more parts are left
@@ -35,25 +37,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** The name parts of a relation this rule substitutes. */
+  /** The name parts and handle of a relation this rule substitutes. */
   private object Registered {
-    def unapply(plan: LogicalPlan): Option[Seq[String]] = plan match {
-      case u: UnresolvedRelation
-          if !u.isStreaming && u.multipartIdentifier.size <= 2 &&
-            GraftSql.table(u.multipartIdentifier.mkString(".")).isDefined &&
-            !inSessionCatalog(u.multipartIdentifier) =>
-        Some(u.multipartIdentifier)
-      case _ => None
-    }
-  }
-
-  private def inSessionCatalog(parts: Seq[String]): Boolean = {
-    val catalog = spark.sessionState.catalog
-    catalog.isTempView(parts) || (parts match {
-      case Seq(t)     => catalog.tableExists(TableIdentifier(t))
-      case Seq(db, t) => catalog.databaseExists(db) &&
-        catalog.tableExists(TableIdentifier(t, Some(db)))
-    })
+    def unapply(plan: LogicalPlan): Option[(Seq[String], MergeTable)] =
+      plan match {
+        case u: UnresolvedRelation if !u.isStreaming =>
+          GraftSql.resolve(spark, u.multipartIdentifier)
+            .map(u.multipartIdentifier -> _)
+        case _ => None
+      }
   }
 
   /** `e` analyzed on its own. The hint batch runs before function and
@@ -80,8 +72,8 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
       // clause syntax, which Spark's parser wraps in
       // RelationTimeTravel): route to readVersion / readAsOf — the
       // same snapshot reads the Scala API and the 2-arg TVF build.
-      case RelationTimeTravel(Registered(parts), ts, ver) =>
-        val t = GraftSql.table(parts.mkString(".")).get.withSession(spark)
+      case RelationTimeTravel(Registered(parts, t0), ts, ver) =>
+        val t = t0.withSession(spark)
         val df = TimeTravelSpec.create(ts.map(analyzed), ver,
             spark.sessionState.conf.sessionLocalTimeZone) match {
           case Some(AsOfVersion(v)) => t.readVersion(v.toLong)
@@ -92,8 +84,7 @@ class GraftRelationResolution(spark: SparkSession) extends Rule[LogicalPlan] {
               parts.mkString("."))
         }
         SubqueryAlias(parts, df.queryExecution.logical)
-      case Registered(parts) =>
-        SubqueryAlias(parts,
-          GraftSql.tableFunction(Seq(Literal(parts.mkString(".")))))
+      case Registered(parts, t) =>
+        SubqueryAlias(parts, t.read().queryExecution.logical)
     }
 }

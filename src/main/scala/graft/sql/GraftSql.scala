@@ -4,53 +4,70 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression}
-import org.apache.spark.sql.catalyst.parser.{ParseException, ParserInterface}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
+  UnresolvedRelation}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  Expression, Literal}
+import org.apache.spark.sql.catalyst.parser.{CatalystSqlParser, ParseException,
+  ParserInterface}
+import org.apache.spark.sql.catalyst.plans.logical.{Assignment, CreateTable,
+  DeleteFromTable, InsertIntoStatement, LogicalPlan, SubqueryAlias, UpdateTable}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.functions.{expr, lit}
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.graftshim.GraftStreamShim
+import org.apache.spark.sql.graftshim.GraftStreamShim.column
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 import graft.lake.{MatchClause, MergeTable}
 
 /** SQL front-end for the lake DML surface (the reference's consumers
-  * speak SQL — Athena over the Glue catalog, README.md:98 — while the
-  * MergeTable lifecycle was Scala-only until round 10). A thin parser
-  * injected via [[graft.functions.GraftExtensions]] (the X27
-  * machinery) intercepts the statements below against REGISTERED graft
-  * tables and routes them to the existing MergeTable calls; every
-  * other statement — including MERGE/UPDATE/DELETE on non-graft
-  * tables — delegates untouched to Spark's parser:
+  * speak SQL — Athena over the Glue catalog, README.md:98). A parser
+  * injected via [[graft.functions.GraftExtensions]] routes statements
+  * on REGISTERED graft tables to the existing MergeTable calls; every
+  * other statement — including DML on non-graft tables — runs as
+  * Spark's parser reads it.
+  *
+  * Spark's own grammar on graft names ([[dml]]):
+  *
+  *   UPDATE <name> SET c = e[, ...] [WHERE p]   → [[MergeTable.update]]
+  *   DELETE FROM <name> [WHERE p]               → [[MergeTable.delete]]
+  *   INSERT INTO <name> [(a, b, ...)] <query>   → [[MergeTable.append]]
+  *
+  * The graft grammar, hand-parsed ([[parse]]) because Spark's parser
+  * does not take it — MERGE's key dialect (`ON k` with no WHEN is
+  * MERGE_WITHOUT_WHEN, a bare `THEN UPDATE` a syntax error), INSERT
+  * OVERWRITE's `WHERE` (a syntax error), and the lake operations:
   *
   *   MERGE INTO <name> USING <view|(subquery)>
   *     ON <pk> | ON (a, b[, ...])
   *     [WHEN MATCHED [AND p] THEN UPDATE|DELETE]*
+  *     [WHEN NOT MATCHED [AND p] THEN INSERT]
+  *     [WHEN NOT MATCHED BY SOURCE [AND p] THEN DELETE]
   *     [WITH SCHEMA EVOLUTION]                  → [[MergeTable.merge]]
-  *   UPDATE <name> SET c = e[, ...] [WHERE p]   → [[MergeTable.update]]
-  *   DELETE FROM <name> [WHERE p]               → [[MergeTable.delete]]
-  *   INSERT INTO <name> [(a, b, ...)] <query>   → [[MergeTable.append]]
   *   INSERT OVERWRITE <name> [WHERE <partition pred>] <query>
   *     → [[MergeTable.overwrite]] / [[MergeTable.overwriteWhere]]
   *       (Delta's replaceWhere: atomic partition-scoped replacement)
   *   OPTIMIZE <name> [WHERE <partition pred>]
   *     [ZORDER BY (c[, ...])]    → compact / zorder / compactWhere
   *   RESTORE <name> TO VERSION AS OF <v>        → [[MergeTable.restore]]
+  *   RESTORE <name> TO TIMESTAMP AS OF 'ts'     → [[MergeTable.restoreAsOf]]
   *   VACUUM <name> [RETAIN n HOURS] [DRY RUN]   → [[MergeTable.vacuum]]
   *   FSCK REPAIR TABLE <name> [DRY RUN]         → [[MergeTable.fsck]]
-  *   RESTORE <name> TO TIMESTAMP AS OF 'ts'     → [[MergeTable.restoreAsOf]]
   *   COPY INTO <name> FROM '<path>'
   *     [FILEFORMAT = PARQUET|CSV] [PATTERN = '<glob>']
   *                                         → [[MergeTable.copyInto]]
   *   GENERATE symlink_format_manifest
   *     FOR TABLE <name>              → [[MergeTable.generateSymlinkManifest]]
   *   REORG [TABLE] <name> APPLY (PURGE)   → [[MergeTable.purgeVectors]]
-  *   DESCRIBE DETAIL <name>               → [[MergeTable.detail]]
+  *   DESCRIBE HISTORY | DETAIL <name>     → [[MergeTable.history]] / detail
+  *   SHOW PARTITIONS <name>               → [[MergeTable.partitions]]
   *   SHOW GRAFT TABLES                    → the registry as rows
   *   CLONE GRAFT TABLE <name> TO '<path>' [AS <new>]
   *                                        → [[MergeTable.cloneTo]]
-  *   CREATE GRAFT TABLE <name> [(<col type, ...>)] AT '<path>'
+  *   REGISTER GRAFT TABLE <name> AT '<path>' [<clauses>]
+  *   CREATE GRAFT TABLE <name> [(<col type [DEFAULT e], ...>)] AT '<path>'
   *     [<REGISTER clauses>] [AS <query>]    → declared-schema create / CTAS
-  *   DROP GRAFT TABLE <name>                → unregister (data untouched)
+  *   DROP | UNREGISTER GRAFT TABLE <name>   → unregister (data untouched)
   *   CONVERT TO GRAFT TABLE <name> AT '<path>' [PARTITIONED BY (c)]
   *                             → adopt a plain parquet dir in place
   *   ANALYZE TABLE <name> COMPUTE STATISTICS
@@ -64,6 +81,13 @@ import graft.lake.{MatchClause, MergeTable}
   *     | ADD IDENTITY COLUMN c [START WITH s] [STEP k]
   *     | DROP IDENTITY COLUMN c
   *   REGISTER ... GENERATED (c AS expr)   → [[MergeTable.addGeneratedColumn]]
+  *
+  * A `<name>` is `t` or `db.t`, resolved by [[resolve]] for both
+  * grammars and for reads: a temp view or session-catalog table of
+  * that name wins. Column lists (CREATE, ADD COLUMN) are read by
+  * Spark's own column-definition grammar. Spark's `INSERT INTO …
+  * REPLACE WHERE`, `BY NAME`, `PARTITION (…)` specs and `EXPLAIN` of
+  * graft DML are not supported.
   *
   * Tables are REGISTERED handles, not paths: a MergeTable's layout
   * contract (partition column, stats/bloom sidecar columns, deletion
@@ -290,65 +314,182 @@ object GraftSql {
     * enter it on first [[table]] lookup). */
   def registered: Seq[(String, MergeTable)] = tables.toSeq
 
-  // ---- the statement grammar ----------------------------------------------
+  // ---- name resolution ----------------------------------------------------
+
+  /** The registered table that `parts` (`t` or `db.t`) denotes in `s`:
+    * None when the name has more than two parts, is not registered, or a
+    * temp view or session-catalog table of that name exists — the
+    * session catalog wins, as it does over Delta's path tables. Every
+    * statement that acts on an existing table and every name read
+    * ([[GraftRelationResolution]]) resolves through here, so a name
+    * means the same object whether a statement reads or writes it. */
+  private[sql] def resolve(s: SparkSession,
+      parts: Seq[String]): Option[MergeTable] =
+    if (parts.size > 2) None
+    else table(parts.mkString(".")).filterNot(_ => inSessionCatalog(s, parts))
+
+  private def inSessionCatalog(s: SparkSession, parts: Seq[String]): Boolean = {
+    val catalog = s.sessionState.catalog
+    catalog.isTempView(parts) || (parts match {
+      case Seq(t)     => catalog.tableExists(TableIdentifier(t))
+      case Seq(db, t) => catalog.databaseExists(db) &&
+        catalog.tableExists(TableIdentifier(t, Some(db)))
+    })
+  }
+
+  // ---- Spark's DML on graft names -----------------------------------------
+
+  /** Spark's parsed UPDATE / DELETE / INSERT INTO whose target resolves
+    * to a registered graft table, as the graft command that runs it;
+    * any other plan unchanged. Built at parse time, not in an analyzer
+    * rule: a Hive-catalog session drops injected hint rules but keeps
+    * the injected parser. */
+  private[sql] def dml(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
+    object Target {
+      def unapply(p: LogicalPlan): Option[(String, MergeTable)] = p match {
+        case u: UnresolvedRelation => resolve(spark, u.multipartIdentifier)
+          .map(u.multipartIdentifier.mkString(".") -> _)
+        case SubqueryAlias(_, Target(name, _)) =>
+          throw new IllegalArgumentException(
+            s"$name is a graft table: DML on it takes no table alias")
+        case _ => None
+      }
+    }
+    plan match {
+      case UpdateTable(Target(name, t0), assignments, cond) =>
+        val sets = assignments.map {
+          case Assignment(UnresolvedAttribute(c), e) =>
+            c.mkString(".") -> column(e)
+          case a => throw new IllegalArgumentException(
+            s"UPDATE $name: unsupported SET target ${a.key.sql}")
+        }.toMap
+        GraftDmlCommand(s"UPDATE $name", s => t0.withSession(s)
+          .update(column(cond.getOrElse(Literal.TrueLiteral)), sets))
+      case DeleteFromTable(Target(name, t0), cond) =>
+        GraftDmlCommand(s"DELETE FROM $name", s =>
+          t0.withSession(s).delete(column(cond)))
+      case i @ InsertIntoStatement(Target(name, t0), _, cols, query, _, _, _) =>
+        require(!i.overwrite && !i.byName && i.partitionSpec.isEmpty,
+          s"INSERT INTO $name: a graft table takes no PARTITION spec, BY " +
+            "NAME or INSERT OVERWRITE TABLE — use INSERT OVERWRITE " +
+            s"$name [WHERE <partition pred>] <query>")
+        insertInto(name, t0, cols, query)
+      case p => p
+    }
+  }
+
+  /** INSERT INTO <name> [(a, b, ...)] <query> → [[MergeTable.append]].
+    * Without a column list the query maps BY POSITION onto the table
+    * schema, identity columns omittable (Delta's GENERATED BY DEFAULT);
+    * with one, it maps onto the LISTED columns and every omitted column
+    * fills in — its declared DEFAULT or NULL for plain columns,
+    * engine-populated for generated and identity ones. */
+  private def insertInto(name: String, t0: MergeTable, cols: Seq[String],
+      query: LogicalPlan): LogicalPlan =
+    GraftDmlCommand(s"INSERT INTO $name", s => {
+      val t = t0.withSession(s)
+      val df = GraftStreamShim.ofRows(s, query)
+      val all = t.read().schema.fields.toSeq
+      val idCols = t.identityColumns.keySet
+      val label = s"INSERT INTO $name"
+      if (cols.isEmpty) t.append(alignTo(label, df, all, idCols))
+      else {
+        val byName = all.map(f => f.name -> f).toMap
+        val bad = cols.filterNot(byName.contains)
+        require(bad.isEmpty,
+          s"INSERT INTO $name: unknown column(s) ${bad.mkString(", ")}")
+        require(cols.distinct.length == cols.length,
+          s"INSERT INTO $name: duplicate column in list")
+        require(df.columns.length == cols.length,
+          s"INSERT INTO $name: query produces " +
+            s"${df.columns.length} columns, list names ${cols.length}")
+        // omitted generated / identity columns stay ABSENT so their
+        // populators run (a null would fail the generated invariant)
+        val engine = t.generatedColumns.keySet ++ idCols
+        val dflts = t.columnDefaults
+        val listed = alignTo(label, df, cols.map(byName), Set.empty)
+        t.append(all.filterNot(f => cols.contains(f.name) ||
+            engine.contains(f.name))
+          .foldLeft(listed)((d, f) => d.withColumn(f.name,
+            dflts.get(f.name).map(expr).getOrElse(lit(null))
+              .cast(f.dataType))))
+      }
+    })
+
+  /** `df`'s columns mapped BY POSITION onto `fields`, with
+    * store-assignment casts (Spark INSERT semantics: a VALUES literal
+    * arrives as DECIMAL and coerces to the table's type; under ANSI an
+    * uncastable value fails the statement). A query may leave out the
+    * engine-populated `omittable` fields; the write fills them in. The
+    * one alignment INSERT INTO, INSERT OVERWRITE and CTAS onto a
+    * declared schema share. */
+  private def alignTo(label: String, df: DataFrame, fields: Seq[StructField],
+      omittable: Set[String]): DataFrame = {
+    val target =
+      if (df.columns.length == fields.length) fields
+      else fields.filterNot(f => omittable.contains(f.name))
+    require(df.columns.length == target.length,
+      s"$label: query produces ${df.columns.length} columns, table has " +
+        s"${fields.length}" + (if (target.length == fields.length) ""
+          else s" (${target.length} without the engine-populated " +
+            s"column(s) ${omittable.mkString(", ")})"))
+    df.toDF(target.map(_.name): _*).select(target.map(f =>
+      col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
+  }
+
+  // ---- the graft-only statement grammar -----------------------------------
 
   // Statement HEADS are matched by regex; clause BOUNDARIES inside a
-  // statement (SET/WHERE, USING/ON, WHEN/THEN) are located with the
-  // quote- and paren-aware [[indexOfTop]] scan — a bare-keyword regex
-  // split mis-splits on a string literal containing ' WHERE ' (r10
-  // ADVICE finding).
+  // statement (WHERE, ZORDER, USING/ON, WHEN/THEN, AS) are located with
+  // the quote- and paren-aware [[scanTop]] — a bare-keyword regex split
+  // mis-splits on a string literal containing ' WHERE '.
+  /** A table name: `t` or `db.t`. */
+  private val Name = """([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)?)"""
   private val MergeHeadRe =
-    """(?is)^\s*MERGE\s+INTO\s+([A-Za-z_][\w]*)\s+USING\s+(.+)$""".r
-  private val UpdateHeadRe =
-    """(?is)^\s*UPDATE\s+([A-Za-z_][\w]*)\s+SET\s+(.+)$""".r
-  private val DeleteHeadRe =
-    """(?is)^\s*DELETE\s+FROM\s+([A-Za-z_][\w]*)\s*(.*)$""".r
-  private val InsertHeadRe =
-    """(?is)^\s*INSERT\s+INTO\s+([A-Za-z_][\w]*)\s+(.+)$""".r
+    raw"""(?is)^\s*MERGE\s+INTO\s+$Name\s+USING\s+(.+)$$""".r
   private val InsertOverwriteRe =
-    """(?is)^\s*INSERT\s+OVERWRITE\s+([A-Za-z_][\w]*)\s+(.+)$""".r
+    raw"""(?is)^\s*INSERT\s+OVERWRITE\s+$Name\s+(.+)$$""".r
   private val OptimizeRe =
-    """(?is)^\s*OPTIMIZE\s+([A-Za-z_][\w]*)\s*(.*?)\s*;?\s*$""".r
+    raw"""(?is)^\s*OPTIMIZE\s+$Name\s*(.*?)\s*;?\s*$$""".r
   private val ZorderTailRe = """(?is)^ZORDER\s+BY\s*\((.*)\)\s*$""".r
   private val RestoreRe =
-    """(?is)^\s*RESTORE\s+([A-Za-z_][\w]*)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*$""".r
+    raw"""(?is)^\s*RESTORE\s+$Name\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*$$""".r
   private val RestoreTsRe =
-    """(?is)^\s*RESTORE\s+([A-Za-z_][\w]*)\s+TO\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*$""".r
+    raw"""(?is)^\s*RESTORE\s+$Name\s+TO\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*$$""".r
   private val FsckRe =
-    """(?is)^\s*FSCK\s+REPAIR\s+TABLE\s+([A-Za-z_][\w]*)(\s+DRY\s+RUN)?\s*$""".r
-
+    raw"""(?is)^\s*FSCK\s+REPAIR\s+TABLE\s+$Name(\s+DRY\s+RUN)?\s*$$""".r
   private val VacuumRe =
-    """(?is)^\s*VACUUM\s+([A-Za-z_][\w]*)(?:\s+RETAIN\s+(\d+)\s+HOURS?)?(\s+DRY\s+RUN)?\s*$""".r
+    raw"""(?is)^\s*VACUUM\s+$Name(?:\s+RETAIN\s+(\d+)\s+HOURS?)?(\s+DRY\s+RUN)?\s*$$""".r
   private val CopyIntoRe =
-    """(?is)^\s*COPY\s+INTO\s+([A-Za-z_][\w]*)\s+FROM\s+'([^']+)'(?:\s+FILEFORMAT\s*=\s*([A-Za-z]+))?(?:\s+PATTERN\s*=\s*'([^']+)')?\s*;?\s*$""".r
+    raw"""(?is)^\s*COPY\s+INTO\s+$Name\s+FROM\s+'([^']+)'(?:\s+FILEFORMAT\s*=\s*([A-Za-z]+))?(?:\s+PATTERN\s*=\s*'([^']+)')?\s*;?\s*$$""".r
   private val GenerateRe =
-    """(?is)^\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*GENERATE\s+symlink_format_manifest\s+FOR\s+TABLE\s+$Name\s*;?\s*$$""".r
   private val ReorgRe =
-    """(?is)^\s*REORG\s+(?:TABLE\s+)?([A-Za-z_][\w]*)\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$""".r
+    raw"""(?is)^\s*REORG\s+(?:TABLE\s+)?$Name\s+APPLY\s*\(\s*PURGE\s*\)\s*;?\s*$$""".r
   private val IdentRe = """(?s)^\s*([A-Za-z_][\w]*)\s*(.*)$""".r
   private val MatchedHeadRe = """(?is)^\s*MATCHED\b(.*)$""".r
   private val EvolveRe = """(?is)^\s*WITH\s+SCHEMA\s+EVOLUTION\s*$""".r
   private val HistoryRe =
-    """(?is)^\s*DESCRIBE\s+HISTORY\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*DESCRIBE\s+HISTORY\s+$Name\s*;?\s*$$""".r
   private val DetailRe =
-    """(?is)^\s*DESCRIBE\s+DETAIL\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*DESCRIBE\s+DETAIL\s+$Name\s*;?\s*$$""".r
   private val ShowPartsRe =
-    """(?is)^\s*SHOW\s+PARTITIONS\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*SHOW\s+PARTITIONS\s+$Name\s*;?\s*$$""".r
   private val GenItemRe = """(?is)^\s*([A-Za-z_][\w]*)\s+AS\s+(.+?)\s*$""".r
   private val RegisterRe =
-    """(?is)^\s*REGISTER\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s+AT\s+'([^']+)'(.*?)\s*;?\s*$""".r
+    raw"""(?is)^\s*REGISTER\s+GRAFT\s+TABLE\s+$Name\s+AT\s+'([^']+)'(.*?)\s*;?\s*$$""".r
   private val CreateRe =
-    """(?is)^\s*CREATE\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s+(.+?)\s*;?\s*$""".r
+    raw"""(?is)^\s*CREATE\s+GRAFT\s+TABLE\s+$Name\s+(.+?)\s*;?\s*$$""".r
   private val CreateTailRe =
     """(?is)^AT\s+'([^']+)'(.*)$""".r
   private val DropTableRe =
-    """(?is)^\s*DROP\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*DROP\s+GRAFT\s+TABLE\s+$Name\s*;?\s*$$""".r
   private val ConvertRe =
-    """(?is)^\s*CONVERT\s+TO\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s+AT\s+'([^']+)'(.*?)\s*;?\s*$""".r
+    raw"""(?is)^\s*CONVERT\s+TO\s+GRAFT\s+TABLE\s+$Name\s+AT\s+'([^']+)'(.*?)\s*;?\s*$$""".r
   private val AnalyzeRe =
-    """(?is)^\s*ANALYZE\s+TABLE\s+([A-Za-z_][\w]*)\s+COMPUTE\s+STATISTICS\s*;?\s*$""".r
+    raw"""(?is)^\s*ANALYZE\s+TABLE\s+$Name\s+COMPUTE\s+STATISTICS\s*;?\s*$$""".r
   private val AlterRe =
-    """(?is)^\s*ALTER\s+TABLE\s+([A-Za-z_][\w]*)\s+(.+?)\s*;?\s*$""".r
+    raw"""(?is)^\s*ALTER\s+TABLE\s+$Name\s+(.+?)\s*;?\s*$$""".r
   private val AlterAddConRe =
     """(?is)^ADD\s+CONSTRAINT\s+([A-Za-z_][\w]*)\s+CHECK\s*\(.*\)$""".r
   private val AlterDropConRe =
@@ -365,16 +506,15 @@ object GraftSql {
     """(?is)^ADD\s+IDENTITY\s+COLUMN\s+([A-Za-z_][\w]*)(?:\s+START\s+WITH\s+(-?\d+))?(?:\s+STEP\s+(-?\d+))?$""".r
   private val AlterDropIdRe =
     """(?is)^DROP\s+IDENTITY\s+COLUMN\s+([A-Za-z_][\w]*)$""".r
-  private val AlterAddColumnRe =
-    """(?is)^ADD\s+COLUMN\s+([A-Za-z_][\w]*)\s+(.+)$""".r
+  private val AlterAddColumnRe = """(?is)^ADD\s+COLUMN\s+(.+)$""".r
   private val AlterColTypeRe =
     """(?is)^ALTER\s+COLUMN\s+([A-Za-z_][\w]*)\s+TYPE\s+(.+)$""".r
   private val ShowTablesRe =
     """(?is)^\s*SHOW\s+GRAFT\s+TABLES\s*;?\s*$""".r
   private val CloneRe =
-    """(?is)^\s*CLONE\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s+TO\s+'([^']+)'(?:\s+AS\s+([A-Za-z_][\w]*))?\s*;?\s*$""".r
+    raw"""(?is)^\s*CLONE\s+GRAFT\s+TABLE\s+$Name\s+TO\s+'([^']+)'(?:\s+AS\s+$Name)?\s*;?\s*$$""".r
   private val UnregisterRe =
-    """(?is)^\s*UNREGISTER\s+GRAFT\s+TABLE\s+([A-Za-z_][\w]*)\s*;?\s*$""".r
+    raw"""(?is)^\s*UNREGISTER\s+GRAFT\s+TABLE\s+$Name\s*;?\s*$$""".r
   private val PartByRe = """(?is)PARTITIONED\s+BY\s*\(([^)]*)\)""".r
   private val StatsRe = """(?is)STATS\s*\(([^)]*)\)""".r
   private val BloomRe = """(?is)BLOOM\s*\(([^)]*)\)""".r
@@ -383,36 +523,71 @@ object GraftSql {
   private val AcRe =
     """(?is)WITH\s+AUTO\s+COMPACT(?:\s*\(\s*(\d+)\s*(?:,\s*(\d+)\s*)?\))?""".r
 
-  /** Split `s` on commas at paren/quote depth zero — SET clauses carry
-    * commas inside function calls (`SET a = round(x, 2), b = y`). */
-  private[sql] def splitTop(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
+  /** The one quote- and paren-aware scan of the hand grammar: `at(i,
+    * depth)` sees every index of `s` outside a '…', "…" or `…` literal
+    * (a backslash escapes the next character inside the first two, so
+    * `\'` does not close a string) with the paren depth before it. The
+    * first index where `at` holds is the result; -1 when none does. */
+  private def scanTop(s: String)(at: (Int, Int) => Boolean): Int = {
     var depth = 0
     var quote: Char = 0
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      // backslash-escaped chars inside '/" literals stay literal (the
-      // scanner must not let \' close the string); backticked
-      // identifiers have no escape convention
       if (quote != 0) {
-        cur += c
-        if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          i += 1; cur += s.charAt(i)
-        } else if (c == quote) quote = 0
-      }
+        if (c == '\\' && quote != '`') i += 1
+        else if (c == quote) quote = 0
+      } else if (at(i, depth)) return i
       else c match {
-        case '\'' | '"' | '`' => quote = c; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth -= 1; cur += c
-        case ',' if depth == 0 => out += cur.result(); cur.clear()
-        case _ => cur += c
+        case '\'' | '"' | '`' => quote = c
+        case '('              => depth += 1
+        case ')'              => depth -= 1
+        case _                => ()
       }
       i += 1
     }
-    if (cur.nonEmpty) out += cur.result()
-    out.result().map(_.trim).filter(_.nonEmpty)
+    -1
+  }
+
+  /** Split `s` on commas at paren depth zero, outside literals:
+    * `a, round(x, 2)` → `a`, `round(x, 2)`. */
+  private def splitTop(s: String): Seq[String] = {
+    var cuts = Vector(-1)
+    scanTop(s) { (i, d) =>
+      if (d == 0 && s.charAt(i) == ',') cuts :+= i
+      false
+    }
+    (cuts :+ s.length).sliding(2).map(c => s.substring(c(0) + 1, c(1)).trim)
+      .filter(_.nonEmpty).toSeq
+  }
+
+  /** A LEADING paren group: "(body) rest" → ("body", "rest"); the body
+    * may nest parens and literals, which a regex group cannot express. */
+  private def groupAt(s: String): (String, String) = {
+    require(s.startsWith("("), s"expected a parenthesized group: $s")
+    val close = scanTop(s)((i, d) => d == 1 && s.charAt(i) == ')')
+    require(close > 0, s"unbalanced parentheses: $s")
+    (s.substring(1, close), s.substring(close + 1))
+  }
+
+  /** The paren group right after top-level keyword `kw`:
+    * `GENERATED (day AS to_date(ts))` → `day AS to_date(ts)`. */
+  private def groupAfter(s: String, kw: String): Option[String] = {
+    val i = indexOfTop(s, kw)
+    val rest = if (i < 0) "" else s.substring(i + kw.length).trim
+    if (rest.startsWith("(")) Some(groupAt(rest)._1) else None
+  }
+
+  /** Index of the first occurrence of keyword `kw` in `s`, at or after
+    * `from`, at paren depth zero outside literals, as a WHOLE word
+    * (case-insensitive); -1 when absent: `OPTIMIZE t WHERE d = 'x
+    * ZORDER y' ZORDER BY (a)` locates the SECOND `ZORDER`. */
+  private def indexOfTop(s: String, kw: String, from: Int = 0): Int = {
+    def identAt(j: Int) = j >= 0 && j < s.length &&
+      (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')
+    scanTop(s)((i, d) => i >= from && d == 0 &&
+      s.regionMatches(true, i, kw, 0, kw.length) &&
+      !identAt(i - 1) && !identAt(i + kw.length))
   }
 
   /** `'yyyy-MM-dd[ HH:mm:ss]'` or ISO-instant timestamp literal →
@@ -427,37 +602,6 @@ object GraftSql {
       java.time.LocalDateTime.parse(norm)
         .toInstant(java.time.ZoneOffset.UTC)
     }
-  }
-
-  /** The balanced-paren group right after top-level keyword `kw`:
-    * `GENERATED (day AS to_date(ts))` → `day AS to_date(ts)` — the
-    * content may nest parens/quotes, which a regex group cannot
-    * express. */
-  /** Extract a LEADING paren-balanced group: "(body) rest" →
-    * ("body", "rest"). Quote-aware like [[groupAfter]]. */
-  private[sql] def groupAt(s: String): (String, String) = {
-    require(s.startsWith("("), s"expected a parenthesized group: $s")
-    var depth = 0
-    var quote: Char = 0
-    var j = 0
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && j + 1 < s.length) j += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0)
-            return (s.substring(1, j), s.substring(j + 1))
-        case _ => ()
-      }
-      j += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced parentheses: $s")
   }
 
   /** Build a MergeTable from the REGISTER/CREATE clause tail
@@ -507,178 +651,22 @@ object GraftSql {
     t
   }
 
-  /** Parse a CREATE column list that may carry per-column DEFAULTs:
-    * `(a INT, b STRING DEFAULT 'x', ...)` — StructType.fromDDL rejects
-    * the DEFAULT clause, so split per column and record defaults in
-    * field metadata through [[MergeTable.defaultField]]. The scan
-    * tracks ANGLE BRACKETS as well as parens/quotes: complex types
-    * (`MAP<STRING, INT>`, `STRUCT<default: INT>`) carry commas — and
-    * even the word DEFAULT — inside `<...>`, which must not split a
-    * column or start a default clause. */
-  private def schemaFromDdl(t: MergeTable, ddl: String): StructType = {
-    // '<' opens a type-generic bracket only right after a generic type
-    // name (MAP< / ARRAY< / STRUCT<); anywhere else — a comparison in a
-    // DEFAULT expression like `a INT DEFAULT (1>0)` — '<'/'>' are plain
-    // operators, and counting them as brackets would corrupt the depth
-    // and mis-split subsequent columns (r12 advice finding). '>' only
-    // ever closes what a generic '<' opened.
-    def genericOpen(s: String, i: Int): Boolean = {
-      var j = i - 1
-      while (j >= 0 && s.charAt(j).isWhitespace) j -= 1
-      val end = j + 1
-      while (j >= 0 &&
-        (s.charAt(j).isLetterOrDigit || s.charAt(j) == '_')) j -= 1
-      val w = s.substring(j + 1, end).toUpperCase
-      if (w != "MAP" && w != "ARRAY" && w != "STRUCT") return false
-      // ... and the bracket must OPEN a type (next token starts like an
-      // identifier — letter, '_' as in STRUCT<_c0 INT>, or a backquoted
-      // field name STRUCT<`my f` INT>): a DEFAULT comparing an
-      // identifier literally named map/array/struct against a number —
-      // `DEFAULT (map < 5)` — is an operator, not a generic. (Defaults
-      // are constant-validated, so an identifier-leading right side in
-      // that position is not a reachable ambiguity.)
-      var k = i + 1
-      while (k < s.length && s.charAt(k).isWhitespace) k += 1
-      k < s.length && {
-        val c = s.charAt(k)
-        c.isLetter || c == '_' || c == '`'
+  /** A column-definition list (`a INT, b MAP<STRING, INT> DEFAULT
+    * map(), ...`) read by Spark's own CREATE TABLE grammar: each
+    * column's name, type and DEFAULT expression as written. */
+  private def columnDefs(
+      list: String): Seq[(String, DataType, Option[String])] =
+    CatalystSqlParser.parsePlan(
+        s"CREATE TABLE __graft ($list) USING parquet") match {
+      case c: CreateTable => c.columns.map { d =>
+        require(d.generationExpression.isEmpty && d.identityColumnSpec.isEmpty,
+          s"column ${d.name}: declare generated and identity columns with " +
+            "GENERATED (c AS expr) / ALTER TABLE ... ADD IDENTITY COLUMN")
+        (d.name, d.dataType, d.defaultValue.map(_.originalSQL))
       }
+      case _ => throw new IllegalArgumentException(
+        s"malformed column list: $list")
     }
-    def splitCols(x: String): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var depth = 0
-      var angle = 0
-      var quote: Char = 0
-      var i = 0
-      while (i < x.length) {
-        val c = x.charAt(i)
-        if (quote != 0) {
-          cur += c
-          if (c == '\\' && quote != '`' && i + 1 < x.length) {
-            i += 1; cur += x.charAt(i)
-          } else if (c == quote) quote = 0
-        } else c match {
-          case '\'' | '"' | '`'  => quote = c; cur += c
-          case '('               => depth += 1; cur += c
-          case ')'               => depth -= 1; cur += c
-          case '<' if genericOpen(x, i) => angle += 1; cur += c
-          case '>' if angle > 0  => angle -= 1; cur += c
-          case ',' if depth == 0 && angle == 0 =>
-            out += cur.result(); cur.clear()
-          case _                 => cur += c
-        }
-        i += 1
-      }
-      if (cur.nonEmpty) out += cur.result()
-      out.result().map(_.trim).filter(_.nonEmpty)
-    }
-    def defaultAtTop(item: String): Int = {
-      var depth = 0
-      var angle = 0
-      var quote: Char = 0
-      var i = 0
-      def identChar(c: Char) = c.isLetterOrDigit || c == '_'
-      while (i < item.length) {
-        val c = item.charAt(i)
-        if (quote != 0) {
-          if (c == '\\' && quote != '`' && i + 1 < item.length) i += 1
-          else if (c == quote) quote = 0
-        } else c match {
-          case '\'' | '"' | '`' => quote = c
-          case '('              => depth += 1
-          case ')'              => depth -= 1
-          case '<' if genericOpen(item, i) => angle += 1
-          case '>' if angle > 0 => angle -= 1
-          case _ =>
-            if (depth == 0 && angle == 0 &&
-                item.regionMatches(true, i, "DEFAULT", 0, 7) &&
-                (i == 0 || !identChar(item.charAt(i - 1))) &&
-                (i + 7 >= item.length || !identChar(item.charAt(i + 7))))
-              return i
-        }
-        i += 1
-      }
-      -1
-    }
-    val fields = splitCols(ddl).map { item =>
-      val di = defaultAtTop(item)
-      val (decl, dflt) =
-        if (di < 0) (item.trim, None)
-        else (item.substring(0, di).trim,
-          Some(item.substring(di + "DEFAULT".length).trim))
-      val single = StructType.fromDDL(decl)
-      require(single.fields.length == 1,
-        s"CREATE GRAFT TABLE: malformed column declaration '$item'")
-      val f = single.fields.head
-      t.defaultField(f.name, f.dataType, dflt)
-    }
-    StructType(fields)
-  }
-
-  private[sql] def groupAfter(s: String, kw: String): Option[String] = {
-    val i = indexOfTop(s, kw)
-    if (i < 0) return None
-    val open = s.indexOf('(', i + kw.length)
-    if (open < 0 ||
-        !s.substring(i + kw.length, open).forall(_.isWhitespace))
-      return None
-    var depth = 0
-    var quote: Char = 0
-    var j = open
-    while (j < s.length) {
-      val c = s.charAt(j)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && j + 1 < s.length) j += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return Some(s.substring(open + 1, j))
-        case _ => ()
-      }
-      j += 1
-    }
-    None
-  }
-
-  /** Index of the first occurrence of keyword `kw` in `s` at paren
-    * depth zero, outside string literals, as a WHOLE word
-    * (case-insensitive; bounded by non-identifier chars on both sides).
-    * -1 when absent. The same quote/paren discipline as [[splitTop]],
-    * applied to keyword boundaries: `UPDATE t SET note = 'a WHERE b'
-    * WHERE pk = 1` locates the SECOND `WHERE`. */
-  private[sql] def indexOfTop(s: String, kw: String, from: Int = 0): Int = {
-    val n = s.length
-    val kl = kw.length
-    def identChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        if (c == '\\' && quote != '`' && i + 1 < n) i += 1
-        else if (c == quote) quote = 0
-      }
-      else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '('              => depth += 1
-        case ')'              => depth -= 1
-        case _ =>
-          if (i >= from && depth == 0 &&
-              s.regionMatches(true, i, kw, 0, kl) &&
-              (i == 0 || !identChar(s.charAt(i - 1))) &&
-              (i + kl >= n || !identChar(s.charAt(i + kl))))
-            return i
-      }
-      i += 1
-    }
-    -1
-  }
 
   /** Strip one trailing top-level `;`. A trailing semicolon of a valid
     * (quote-balanced) statement is top-level by construction; a
@@ -686,14 +674,6 @@ object GraftSql {
     * the regex can't touch it. */
   private def stripSemi(s: String): String =
     s.replaceAll("""(?s)\s*;\s*$""", "")
-
-  /** One `name = expression` SET assignment: split on the FIRST
-    * top-level '=' (the expression side may itself contain '='). */
-  private def assignment(s: String): (String, String) = {
-    val i = s.indexOf('=')
-    require(i > 0, s"malformed SET assignment: '$s'")
-    (s.take(i).trim, s.drop(i + 1).trim)
-  }
 
   /** The MERGE source: `(subquery)` → run it; bare identifier → the
     * session's resolved table/view. */
@@ -704,52 +684,23 @@ object GraftSql {
     else spark.table(t)
   }
 
-  /** Parse `sqlText` as a graft DML statement against a registered
-    * table. None = not ours (delegate to Spark); Some = an eager
-    * command returning the committed version. A statement that LOOKS
-    * like graft DML but names an unregistered table also delegates —
-    * Spark's own MERGE/UPDATE/DELETE handle catalog tables. */
-  def parse(sqlText: String): Option[LogicalPlan] = stripSemi(sqlText) match {
+  /** Parse `sqlText` as a statement of the graft-only grammar. None =
+    * not ours: Spark's parser takes it, and [[dml]] routes its UPDATE /
+    * DELETE / INSERT INTO on a graft name. A statement whose table name
+    * does not [[resolve]] to a registered graft table also delegates —
+    * Spark's own MERGE, OPTIMIZE, ALTER … handle catalog tables. */
+  private[sql] def parse(spark: SparkSession,
+      sqlText: String): Option[LogicalPlan] = {
+    def existing(name: String) = resolve(spark, name.split('.').toSeq)
+    stripSemi(sqlText) match {
     case MergeHeadRe(name, rest) =>
-      table(name).flatMap(t => parseMerge(name, t, rest))
-    case UpdateHeadRe(name, body) =>
-      table(name).map { t0 =>
-        val wIdx = indexOfTop(body, "WHERE")
-        val (setPart, wherePart) =
-          if (wIdx < 0) (body, None)
-          else (body.substring(0, wIdx), Some(body.substring(wIdx + 5)))
-        val sets = splitTop(setPart).map(assignment)
-          .map { case (c, e) => c -> expr(e) }.toMap
-        GraftDmlCommand(s"UPDATE $name", s =>
-          t0.withSession(s).update(wherePart.map(expr)
-            .getOrElse(org.apache.spark.sql.functions.lit(true)), sets))
-      }
-    case DeleteHeadRe(name, rest) =>
-      table(name).flatMap { t0 =>
-        val r = rest.trim
-        // empty → delete-all; `WHERE <p>` → predicate; anything else is
-        // not our DELETE shape — delegate untouched
-        val where: Option[Option[String]] =
-          if (r.isEmpty) Some(None)
-          else if (indexOfTop(r, "WHERE") == 0) Some(Some(r.substring(5)))
-          else None
-        where.map(w =>
-          GraftDmlCommand(s"DELETE FROM $name", s =>
-            t0.withSession(s).delete(w.map(expr)
-              .getOrElse(org.apache.spark.sql.functions.lit(true)))))
-      }
-    // INSERT INTO <name> [(a, b, ...)] <query> — appends the query's
-    // rows as a new commit ([[MergeTable.append]]). Without a column
-    // list, columns map BY POSITION to the table schema (Spark/Delta
-    // INSERT semantics); WITH one, the query maps positionally onto
-    // the LISTED columns and every omitted column fills in — NULL for
-    // plain columns, engine-populated for generated and identity ones.
+      existing(name).flatMap(t => parseMerge(name, t, rest))
     // INSERT OVERWRITE <name> [WHERE <partition pred>] <query> —
     // without WHERE a full overwrite; with WHERE Delta's replaceWhere
     // (atomic partition-scoped replacement). The predicate ends where
     // the top-level SELECT/VALUES begins.
     case InsertOverwriteRe(name, rest0) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         val rest = stripSemi(rest0).trim
         val (pred, queryStr) =
           if (indexOfTop(rest, "WHERE") == 0) {
@@ -770,112 +721,22 @@ object GraftSql {
             if (indexOfTop(queryStr, "VALUES") == 0)
               s"SELECT * FROM ($queryStr)"
             else queryStr)
-          val idCols = t.identityColumns.keySet
           // an EMPTY table without a declared schema has nothing to
           // align onto — the first overwrite defines the schema
-          val allOpt = scala.util.Try(t.read().schema.fields.toSeq)
-            .toOption
-          val aligned = allOpt match {
-            case None => df
-            case Some(all) =>
-              val fields =
-                if (df.columns.length == all.length) all
-                else if (idCols.nonEmpty &&
-                    df.columns.length == all.length - idCols.size)
-                  all.filterNot(f => idCols.contains(f.name))
-                else throw new IllegalArgumentException(
-                  s"INSERT OVERWRITE $name: query produces " +
-                    s"${df.columns.length} columns, table has " +
-                    s"${all.length}")
-              df.toDF(fields.map(_.name): _*)
-                .select(fields.map(f =>
-                  expr(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
-          }
+          val aligned = scala.util.Try(t.read().schema.fields.toSeq)
+            .toOption.fold(df)(alignTo(s"INSERT OVERWRITE $name", df, _,
+              t.identityColumns.keySet))
           pred match {
             case Some(px) => t.overwriteWhere(aligned, expr(px))
             case None     => t.overwrite(aligned)
           }
         })
       }
-    case InsertHeadRe(name, rest0) =>
-      table(name).map { t0 =>
-        // a leading balanced paren group followed by VALUES/SELECT is
-        // a column list; "INSERT INTO t (SELECT ...)" keeps being a
-        // parenthesized query (nothing follows the group)
-        val (colList, rest) =
-          if (rest0.trim.startsWith("(")) {
-            val (body, after) = groupAt(rest0.trim)
-            val a = after.trim
-            if (indexOfTop(a, "VALUES") == 0 || indexOfTop(a, "SELECT") == 0)
-              (Some(splitTop(body).map(_.trim).filter(_.nonEmpty)), a)
-            else (None, rest0)
-          } else (None, rest0)
-        GraftDmlCommand(s"INSERT INTO $name", s => {
-          val t = t0.withSession(s)
-          val df = s.sql(rest)
-          val schema = t.read().schema
-          val genCols = t.generatedColumns.keySet
-          val idCols = t.identityColumns.keySet
-          val all = schema.fields.toSeq
-          val aligned = colList match {
-            case Some(cols) =>
-              val known = all.map(_.name).toSet
-              val bad = cols.filterNot(known.contains)
-              require(bad.isEmpty,
-                s"INSERT INTO $name: unknown column(s) ${bad.mkString(", ")}")
-              require(cols.distinct.length == cols.length,
-                s"INSERT INTO $name: duplicate column in list")
-              require(df.columns.length == cols.length,
-                s"INSERT INTO $name: query produces " +
-                  s"${df.columns.length} columns, list names ${cols.length}")
-              val byName = all.map(f => f.name -> f).toMap
-              val base = df.toDF(cols: _*)
-                .select(cols.map(c => expr(s"`$c`")
-                  .cast(byName(c).dataType).as(c)): _*)
-              // omitted plain columns take their declared DEFAULT when
-              // one exists, else NULL; omitted generated / identity
-              // columns stay ABSENT so their populators run (a null
-              // would fail the generated invariant)
-              val dflts = t.columnDefaults
-              all.filterNot(f => cols.contains(f.name) ||
-                  genCols.contains(f.name) || idCols.contains(f.name))
-                .foldLeft(base)((d, f) =>
-                  d.withColumn(f.name, dflts.get(f.name)
-                    .map(x => expr(x).cast(f.dataType))
-                    .getOrElse(lit(null).cast(f.dataType))))
-            case None =>
-              // identity columns may be OMITTED (Delta INSERT
-              // semantics for GENERATED BY DEFAULT): an arity matching
-              // the non-identity fields maps positionally onto them
-              // and the append populates the rest
-              val fields =
-                if (df.columns.length == all.length) all
-                else if (idCols.nonEmpty &&
-                    df.columns.length == all.length - idCols.size)
-                  all.filterNot(f => idCols.contains(f.name))
-                else throw new IllegalArgumentException(
-                  s"INSERT INTO $name: query produces " +
-                    s"${df.columns.length} columns, table has " +
-                    s"${all.length}" +
-                    (if (idCols.isEmpty) ""
-                     else s" (${all.length - idCols.size} without the " +
-                       s"identity column(s) ${idCols.mkString(", ")})"))
-              // store-assignment casts, Spark INSERT semantics: a
-              // VALUES literal arrives as DECIMAL and must coerce to
-              // the table's type; under ANSI, an uncastable value
-              // fails the statement
-              df.toDF(fields.map(_.name): _*)
-                .select(fields.map(f =>
-                  expr(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
-          }
-          t.append(aligned)
-        })
-      }
     // OPTIMIZE <name> [WHERE <partition pred>] [ZORDER BY (c[, ...])]
     // — the WHERE/ZORDER boundary found by the quote-aware scan (a
     // string literal inside the predicate may contain either keyword).
     case OptimizeRe(name, tail) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         val zIdx = indexOfTop(tail, "ZORDER")
         val (head, zPart) =
           if (zIdx >= 0) (tail.substring(0, zIdx).trim,
@@ -883,7 +744,7 @@ object GraftSql {
           else (tail.trim, "")
         val zCols: Seq[String] = zPart match {
           case ""                => Nil
-          case ZorderTailRe(cs)  => splitTop(cs).map(_.trim)
+          case ZorderTailRe(cs)  => splitTop(cs)
           case other => throw new IllegalArgumentException(
             s"OPTIMIZE $name: expected ZORDER BY (cols), got: $other")
         }
@@ -902,12 +763,12 @@ object GraftSql {
         })
       }
     case RestoreRe(name, v) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"RESTORE $name", s =>
           t0.withSession(s).restore(v.toLong))
       }
     case RestoreTsRe(name, ts) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"RESTORE $name", s =>
           t0.withSession(s).restoreAsOf(parseTs(ts)))
       }
@@ -915,7 +776,7 @@ object GraftSql {
       // Delta's FSCK REPAIR TABLE: drop live entries whose backing
       // storage is gone (see MergeTable.fsck's availability-over-
       // completeness contract; DRY RUN lists what a repair would drop)
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         if (dryRun != null)
           GraftPathListCommand(s"FSCK REPAIR TABLE $name DRY RUN",
             s => t0.withSession(s).fsckDryRun())
@@ -923,7 +784,7 @@ object GraftSql {
           s => t0.withSession(s).fsck())
       }
     case VacuumRe(name, hours, dryRun) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         val retainMs = Option(hours).map(_.toLong * 3600000L)
           .getOrElse(MergeTable.DefaultVacuumRetainMs)
         if (dryRun != null)
@@ -936,14 +797,14 @@ object GraftSql {
         })
       }
     case CopyIntoRe(name, src, fmt, pattern) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"COPY INTO $name", s =>
           t0.withSession(s).copyInto(src,
             Option(fmt).map(_.toLowerCase).getOrElse("parquet"),
             Option(pattern)))
       }
     case GenerateRe(name) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"GENERATE symlink_format_manifest FOR TABLE $name",
           s => {
             val t = t0.withSession(s)
@@ -952,19 +813,19 @@ object GraftSql {
           })
       }
     case ReorgRe(name) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"REORG TABLE $name APPLY (PURGE)", s =>
           t0.withSession(s).purgeVectors())
       }
     case HistoryRe(name) =>
-      table(name).map(t => GraftHistoryCommand(name, t))
+      existing(name).map(t => GraftHistoryCommand(name, t))
     case DetailRe(name) =>
-      table(name).map(t => GraftDetailCommand(name, t))
+      existing(name).map(t => GraftDetailCommand(name, t))
     // SHOW PARTITIONS over a registered graft name reads the MANIFEST
     // (one row per live partition tuple); unregistered names delegate
     // to Spark's own SHOW PARTITIONS
     case ShowPartsRe(name) =>
-      table(name).map(t => GraftPartitionsCommand(name, t))
+      existing(name).map(t => GraftPartitionsCommand(name, t))
     // SQL-only registration path, so a consumer needs zero Scala:
     //   REGISTER GRAFT TABLE t AT '/path' [PARTITIONED BY (c)]
     //     [STATS (c1, c2)] [BLOOM (c1)] [WITH DELETION VECTORS]
@@ -1006,37 +867,23 @@ object GraftSql {
           Some(GraftDmlCommand(s"CREATE GRAFT TABLE $name", s => {
             val t = buildAndRegister(name, path, tail, s,
               verb = "CREATE", requireFresh = true)
-            schemaDdl.foreach(ddl => t.declareSchema(schemaFromDdl(t, ddl)))
+            schemaDdl.foreach(ddl => t.declareSchema(StructType(
+              columnDefs(ddl).map { case (c, tpe, d) =>
+                t.defaultField(c, tpe, d) })))
             query.foreach { q =>
               val df = s.sql(q)
-              val seed = t.declaredSchema match {
-                // align the query positionally onto the declared
-                // schema (INSERT semantics, store-assignment casts).
+              t.overwrite(t.declaredSchema match {
                 // declareSchema expanded the declared schema with
                 // ENGINE-POPULATED columns (GENERATED rules, identity)
                 // — the query may produce all of them, or just the
-                // user columns (overwrite fills the rest).
-                case Some(d) =>
-                  val engine = t.generatedColumns.keySet ++
-                    t.identityColumns.keySet
-                  val target =
-                    if (df.columns.length == d.length) d.fields.toSeq
-                    else d.fields.toSeq
-                      .filterNot(f => engine.contains(f.name))
-                  require(df.columns.length == target.length,
-                    s"CREATE GRAFT TABLE $name: query produces " +
-                      s"${df.columns.length} columns, declared " +
-                      s"schema has ${d.length} (${target.length} " +
-                      "user-populated)")
-                  df.toDF(target.map(_.name): _*)
-                    .select(target.map(f =>
-                      expr(s"`${f.name}`").cast(f.dataType)
-                        .as(f.name)): _*)
+                // user columns (overwrite fills the rest)
+                case Some(d) => alignTo(s"CREATE GRAFT TABLE $name", df,
+                  d.fields.toSeq,
+                  t.generatedColumns.keySet ++ t.identityColumns.keySet)
                 case None =>
                   t.declareSchema(df.schema) // CTAS: schema from query
                   df
-              }
-              t.overwrite(seed)
+              })
             }
             t.latestVersion()
           }))
@@ -1064,7 +911,7 @@ object GraftSql {
     // retrofit manifest file stats (collectStats); any other ANALYZE
     // (unregistered names, column variants) delegates to Spark's own.
     case AnalyzeRe(name) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"ANALYZE TABLE $name", s =>
           t0.withSession(s).collectStats())
       }
@@ -1072,11 +919,10 @@ object GraftSql {
     // does not exist in Spark's catalog, so delegation could only
     // produce a misleading not-found error); an unsupported action on
     // a registered name fails loudly with OUR message.
-    case AlterRe(name, action) if table(name).isDefined =>
-      val t0 = table(name).get
+    case AlterRe(name, action) => existing(name).map { t0 =>
       def cmd(label: String, body: MergeTable => Long) =
-        Some(GraftDmlCommand(s"ALTER TABLE $name $label",
-          s => body(t0.withSession(s))))
+        GraftDmlCommand(s"ALTER TABLE $name $label",
+          s => body(t0.withSession(s)))
       action match {
         case AlterAddConRe(cn) =>
           val pred = groupAfter(action, "CHECK").getOrElse(
@@ -1102,18 +948,14 @@ object GraftSql {
         case AlterDropIdRe(c) => cmd(s"DROP IDENTITY COLUMN $c",
           _.dropIdentityColumn(c))
         case AlterColTypeRe(c, tpe) => cmd(s"ALTER COLUMN $c TYPE",
-          _.alterColumnType(c,
-            org.apache.spark.sql.types.DataType.fromDDL(tpe.trim)))
-        case AlterAddColumnRe(c, tpe0) =>
-          // optional trailing DEFAULT <expr> (quote-aware boundary)
-          val di = indexOfTop(tpe0, "DEFAULT")
-          val (tpe, dflt) =
-            if (di < 0) (tpe0.trim, None)
-            else (tpe0.substring(0, di).trim,
-              Some(tpe0.substring(di + "DEFAULT".length).trim))
-          cmd(s"ADD COLUMN $c",
-            _.addColumn(c,
-              org.apache.spark.sql.types.DataType.fromDDL(tpe), dflt))
+          _.alterColumnType(c, DataType.fromDDL(tpe.trim)))
+        // ADD COLUMN c <type> [DEFAULT <expr>]: one column definition
+        case AlterAddColumnRe(defn) => columnDefs(defn) match {
+          case Seq((c, tpe, dflt)) =>
+            cmd(s"ADD COLUMN $c", _.addColumn(c, tpe, dflt))
+          case _ => throw new IllegalArgumentException(
+            s"ALTER TABLE $name: ADD COLUMN takes one column, got: $defn")
+        }
         case other => throw new IllegalArgumentException(
           s"ALTER TABLE $name (a registered graft table): unsupported " +
             s"action '$other' — supported: ADD/DROP CONSTRAINT, " +
@@ -1121,10 +963,11 @@ object GraftSql {
             "ADD/DROP GENERATED COLUMN, " +
             "ADD/DROP IDENTITY COLUMN")
       }
+    }
     case ShowTablesRe() =>
       Some(GraftShowTablesCommand())
     case CloneRe(name, dest, asName) =>
-      table(name).map { t0 =>
+      existing(name).map { t0 =>
         GraftDmlCommand(s"CLONE GRAFT TABLE $name", s => {
           val c = t0.withSession(s).cloneTo(dest)
           Option(asName).foreach(n => register(n, c))
@@ -1138,6 +981,7 @@ object GraftSql {
         if (had) 1L else 0L
       }))
     case _ => None
+    }
   }
 
   private val KeyListRe = """(?s)^\s*\(([^)]*)\)\s*(.*)$""".r
@@ -1496,15 +1340,18 @@ case class GraftDmlCommand(label: String, body: SparkSession => Long)
   override def simpleString(maxFields: Int): String = s"GraftDml($label)"
 }
 
-/** The injected parser: graft DML against registered tables is ours;
-  * EVERYTHING else — including standard SQL and Spark's own
-  * MERGE/UPDATE/DELETE on catalog tables — goes to the delegate
-  * verbatim. Injected by [[graft.functions.GraftExtensions]]
+/** The injected parser: the graft grammar on registered tables is
+  * ours; everything else goes to the delegate, and Spark's UPDATE /
+  * DELETE / INSERT INTO plans whose target is a registered table become
+  * graft commands ([[GraftSql.dml]]). Injected by
+  * [[graft.functions.GraftExtensions]]
   * (`spark.sql.extensions=graft.functions.GraftExtensions`). */
-class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
+class GraftSqlParser(spark: SparkSession, delegate: ParserInterface)
+    extends ParserInterface {
   @throws[ParseException]
   override def parsePlan(sqlText: String): LogicalPlan =
-    GraftSql.parse(sqlText).getOrElse(delegate.parsePlan(sqlText))
+    GraftSql.parse(spark, sqlText)
+      .getOrElse(GraftSql.dml(spark, delegate.parsePlan(sqlText)))
   override def parseExpression(sqlText: String): Expression =
     delegate.parseExpression(sqlText)
   override def parseTableIdentifier(sqlText: String): TableIdentifier =

@@ -6,10 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.types.StructType
 
-/** The ONE `private[sql]` bridge the graft streaming source needs —
-  * isolated in its own `org.apache.spark.sql` subpackage (the same
-  * technique Delta's `org.apache.spark.sql.delta` uses; everything
-  * else in this library sticks to public API).
+/** The `private[sql]` bridges graft needs — isolated in their own
+  * `org.apache.spark.sql` subpackage (the same technique Delta's
+  * `org.apache.spark.sql.delta` uses; everything else in this library
+  * sticks to public API).
   *
   * A V1 `Source.getBatch` must return a DataFrame whose logical plan
   * is tagged `isStreaming = true` (`MicroBatchExecution` asserts it:
@@ -76,4 +76,12 @@ object GraftStreamShim {
       : DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[ClassicSession], plan)
+
+  /** A Column over a parsed, unresolved expression —
+    * `ExpressionUtils.column` is `private[sql]`. The SQL front end
+    * ([[graft.sql.GraftSql]]) hands Spark-parsed UPDATE SET values and
+    * UPDATE / DELETE conditions to the lake calls this way. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
 }

@@ -92,9 +92,43 @@ class CatalogSpec extends SparkSpec {
       Ingestion.register(spark, t, "orders_prec")
       assert(spark.sql("SELECT order_id FROM graft.orders_prec")
         .as[String].collect().toSeq === Seq("c1"))
+      // DML on the name reaches Spark's catalog table too (a v1 parquet
+      // table takes no DELETE), never the graft table
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("DELETE FROM graft.orders_prec WHERE order_id = 'o1'"))
     } finally spark.sql("DROP TABLE IF EXISTS graft.orders_prec")
     // with the catalog table gone, the name reads the registered table
     assert(spark.sql("SELECT count(*) FROM graft.orders_prec")
       .head().getLong(0) === 2L)
+  }
+
+  test("SQL on graft.<name>: DML, MERGE, OPTIMIZE and DESCRIBE HISTORY " +
+      "reach the registered table with the jobs' optimized writes") {
+    val t = MergeTable(spark, tmpDir("cat").toString, Some("date"))
+    // four input tasks: the partition lands as several files
+    t.overwrite((1 to 8).map(i => (s"o$i", "2024-01-01", i.toDouble))
+      .toDF("order_id", "date", "amount").repartition(4))
+    Ingestion.register(spark, t, "orders_sql")
+    assert(graft.sql.GraftSql.table("graft.orders_sql").get.optimizeWrite)
+    val v = t.latestVersion()
+    spark.sql("UPDATE graft.orders_sql SET amount = amount + 1 " +
+      "WHERE date = '2024-01-01'")
+    def lastAdded() = spark.sql("DESCRIBE HISTORY graft.orders_sql")
+      .orderBy($"version".desc).select("version", "n_added")
+      .as[(Long, Long)].head()
+    assert(lastAdded() === ((v + 1, 1L)), "one file for the partition")
+    assert(spark.sql("SELECT sum(amount) FROM graft.orders_sql")
+      .head().getDouble(0) === 44.0)
+    spark.sql("DELETE FROM graft.orders_sql WHERE order_id = 'o8'")
+    spark.sql("INSERT INTO graft.orders_sql VALUES ('o9', 9.0, '2024-01-02')")
+    Seq(("o1", "2024-01-01", 0.5)).toDF("order_id", "date", "amount")
+      .createOrReplaceTempView("orders_sql_src")
+    spark.sql("MERGE INTO graft.orders_sql USING orders_sql_src ON order_id")
+    spark.sql("OPTIMIZE graft.orders_sql")
+    assert(spark.sql("SELECT order_id, amount FROM graft.orders_sql")
+      .as[(String, Double)].collect().toMap ===
+      ((2 to 7).map(i => s"o$i" -> (i + 1.0)).toMap +
+        ("o1" -> 0.5) + ("o9" -> 9.0)))
+    assert(lastAdded()._1 === t.latestVersion())
   }
 }

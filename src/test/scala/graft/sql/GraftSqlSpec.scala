@@ -180,6 +180,14 @@ class GraftSqlSpec extends SparkSpec {
       spark.sql("DELETE FROM not_registered WHERE x = 1").collect()
     }
     assert(!e.isInstanceOf[scala.MatchError])
+    // a temp view named like a registered table receives the DELETE
+    // (Spark refuses DML on a view); the graft table is untouched
+    val (viaSql, _) = freshPair("dlg")
+    orders(("v1", "2024-01-01", 1.0)).createOrReplaceTempView("t_dlg")
+    try intercept[Exception](
+      spark.sql("DELETE FROM t_dlg WHERE order_id = 'o1'").collect())
+    finally spark.catalog.dropTempView("t_dlg")
+    assert(contents(viaSql.read()).map(_._1) === Set("o1", "o2"))
   }
 
   test("graft_table TVF: SQL snapshot and time-travel reads == API reads") {
