@@ -25,22 +25,29 @@ import org.apache.spark.sql.types.{ByteType, DateType, IntegerType, LongType, Sh
   * (Delta's "partition pruning from generation expressions",
   * `delta.generatedColumn` docs): when the PARTITION column is
   * generated from a source column by a [[formOf recognized]] shape, a
-  * predicate on the SOURCE column transfers to the partition value —
-  * `ts >= T` prunes `date = to_date(ts)` partitions below `to_date(T)`
-  * — so the natural query (filter on the event time) gets
-  * partition-level file skipping without ever mentioning the partition
-  * column. Reference anchor: the derived partition date the reference
-  * computes on ingest (SURVEY P4) is exactly this shape, done by hand.
+  * predicate on the SOURCE column is rewritten into a predicate on the
+  * partition column (the shape of Delta's `OptimizeGeneratedColumn`) —
+  * `ts >= T` becomes `date >= to_date(T)` for `date = to_date(ts)` —
+  * which the file-skipping compiler evaluates on each file's typed
+  * partition row like any other partition predicate. So the natural
+  * query (filter on the event time) gets partition-level file skipping
+  * without ever mentioning the partition column. Reference anchor: the
+  * derived partition date the reference computes on ingest (SURVEY P4)
+  * is exactly this shape, done by hand.
   *
-  * Transfer soundness tiers:
-  *  - EQUALITY (`src = v`, `src IN (...)`) transfers for every
-  *    recognized shape — recognition implies determinism, and
-  *    `src = v ⟹ G(src) = G(v)`;
+  * Rewrite soundness tiers (`G(v)` is computed on the driver and cast to
+  * the partition column's type from its partition-string rendering,
+  * exactly as the partition rows are):
+  *  - EQUALITY (`src = v`, `src IN (...)`) becomes `pc = G(v)` /
+  *    `pc IN (G(v)...)` for every recognized shape — recognition implies
+  *    determinism, and `src = v ⟹ G(src) = G(v)`;
   *  - RANGES transfer only for shapes marked MONOTONIC (non-decreasing:
   *    `x ≤ y ⟹ G(x) ≤ G(y)`), by `src ≥ L ⟹ G(src) ≥ G(L)` — strict
-  *    bounds relax to inclusive, same as the stats prune;
-  *  - anything unrecognized transfers NOTHING (keep-everything), never
-  *    a wrong prune.
+  *    bounds relax to inclusive — and only when the cast into the
+  *    partition type keeps `G`'s order (same type, integral into
+  *    integral, or a [[GenForm.castsInOrder]] rendering);
+  *  - anything else becomes `true` (keep-everything), never a wrong
+  *    prune.
   *
   * Timezone note: date-of-timestamp shapes evaluate in the SESSION
   * timezone on both the write and the prune side; like Delta, a reader
@@ -67,9 +74,12 @@ private[lake] object GeneratedColumns {
   }
 
   /** A recognized generation shape: the single source column the
-    * expression reads, and whether the expression is monotonic
-    * non-decreasing in it. */
-  final case class GenForm(src: String, monotonic: Boolean)
+    * expression reads, whether the expression is monotonic
+    * non-decreasing in it, and whether its string outputs are
+    * fixed-width chronological renderings, whose order survives a cast
+    * to whatever type the partition column reads as. */
+  final case class GenForm(src: String, monotonic: Boolean,
+      castsInOrder: Boolean = false)
 
   /** `date_format` patterns whose output ORDER is chronological under
     * plain string comparison — the only ones ranges may transfer
@@ -117,8 +127,11 @@ private[lake] object GeneratedColumns {
                 "quarter" | "dayofweek" | "weekofyear", Seq(a)) =>
             attr(a).map(GenForm(_, monotonic = false))
           case ("date_format", Seq(a, fmt)) =>
-            strLit(fmt).flatMap(p => attr(a).map(GenForm(_,
-              monotonic = ChronologicalFormats.contains(p))))
+            strLit(fmt).flatMap { p =>
+              val chrono = ChronologicalFormats.contains(p)
+              attr(a).map(GenForm(_, monotonic = chrono,
+                castsInOrder = chrono))
+            }
           // prefix from position 1 (or 0 — Spark treats it as 1):
           // lexicographic order is preserved by prefixing
           case ("substring" | "substr", Seq(a, pos, _)) =>
@@ -134,19 +147,9 @@ private[lake] object GeneratedColumns {
       // `src div k` (truncating toward zero) with k > 0: also monotonic
       // non-decreasing over the integers
       case IntegralDivide(a, k, _) =>
-        for { src <- attrOf1(a); kk <- intLitOf1(k) if kk > 0 }
+        for { src <- attr(a); kk <- intLit(k) if kk > 0 }
           yield GenForm(src, monotonic = true)
       case _ => None
     }
-  }
-
-  private def attrOf1(x: Expression): Option[String] = x match {
-    case a: UnresolvedAttribute if a.nameParts.length == 1 => Some(a.name)
-    case _ => None
-  }
-  private def intLitOf1(x: Expression): Option[Long] = x match {
-    case Literal(v: Int, IntegerType)  => Some(v.toLong)
-    case Literal(v: Long, LongType)    => Some(v)
-    case _                             => None
   }
 }

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Literal, Predicate, RuntimeReplaceable}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
@@ -38,20 +38,24 @@ private[lake] final case class ManifestFile(path: HPath, length: Long,
   * Partition values come from the manifest too, as in Delta's
   * `TahoeFileIndex`: each [[ManifestFile]] carries one typed row of
   * `partitionSchema`, and the scan appends those values to the file's
-  * rows as per-file constants. [[listFiles]] groups the files by that
-  * row and evaluates the partition filters against it, as Spark's
-  * `PartitioningAwareFileIndex.prunePartitions` does — it MUST, since
-  * `FileSourceStrategy` does not re-apply partition-only filters after
-  * the scan.
+  * rows as per-file constants. [[partitionPredicate]] is the one test
+  * of a predicate against those rows, for every path that skips files
+  * by partition: [[listFiles]] (which groups the files by row and MUST
+  * apply the partition filters, as Spark's
+  * `PartitioningAwareFileIndex.prunePartitions` does, since
+  * `FileSourceStrategy` does not re-apply them after the scan), the
+  * file-skipping compiler, OPTIMIZE WHERE / replaceWhere and the key
+  * probes.
   *
   * `compile` is the owning table's file-skipping compiler
-  * ([[MergeTable.scanEntriesByCondition]]): the entries among its first
-  * argument that may satisfy a condition over this index's relation. */
+  * ([[MergeTable.scanEntriesByCondition]]): the files of an index (each
+  * an entry plus its typed row) that may satisfy a condition over the
+  * index's relation. */
 private[lake] final class ManifestFileIndex(
     tableRoot: HPath,
     override val partitionSchema: StructType,
     private[lake] val files: Seq[ManifestFile],
-    compile: (Seq[FileEntry], Expression) => Seq[FileEntry])
+    compile: (ManifestFileIndex, Expression) => Seq[ManifestFile])
     extends FileIndex {
 
   override def rootPaths: Seq[HPath] = Seq(tableRoot)
@@ -71,33 +75,40 @@ private[lake] final class ManifestFileIndex(
   }
 
   /** The conjunction of `filters` — predicates over partition columns
-    * only, referenced by name — as a test on a partition row. */
-  private[lake] def partitionPredicate(
-      filters: Seq[Expression]): InternalRow => Boolean =
+    * only, referenced by name — as a test on a partition row. A NULL
+    * result rejects the row, as SQL WHERE does. An evaluation error (an
+    * ANSI cast failure) throws, as Spark's own partition pruning does,
+    * unless `admitErrors`: a test that may only over-admit (the
+    * file-skipping compiler) then keeps the row. A column this index
+    * types no row for (an all-null partition column) reads NULL. */
+  private[lake] def partitionPredicate(filters: Seq[Expression],
+      admitErrors: Boolean = false): InternalRow => Boolean =
     filters.reduceOption(And) match {
       case None => _ => true
       case Some(cond) =>
         val bound = Predicate.createInterpreted(cond.transform {
+          // analyzed (unoptimized) conditions may hold wrappers whose
+          // own eval throws; the optimizer would swap in the same tree
+          case r: RuntimeReplaceable => r.replacement
           case a: AttributeReference =>
             val i = partitionSchema.fieldNames.indexOf(a.name)
-            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+            if (i < 0) Literal(null, a.dataType)
+            else BoundReference(i, partitionSchema(i).dataType,
+              nullable = true)
         })
-        bound.eval
+        if (!admitErrors) bound.eval
+        else row =>
+          try bound.eval(row)
+          catch { case scala.util.control.NonFatal(_) => true }
     }
 
-  /** This index over only the files `keep` admits: the one way any
-    * pruning path narrows an index. */
-  private[lake] def filterFiles(keep: ManifestFile => Boolean)
-      : ManifestFileIndex =
-    new ManifestFileIndex(tableRoot, partitionSchema, files.filter(keep),
-      compile)
-
   /** This index over only the files whose manifest metadata (partition
-    * value, min/max and null counts, bloom filter) may satisfy `cond`. */
-  private[lake] def prunedBy(cond: Expression): ManifestFileIndex = {
-    val admitted = compile(files.map(_.entry), cond).map(_.relPath).toSet
-    filterFiles(f => admitted(f.entry.relPath))
-  }
+    * row, min/max and null counts, bloom filter) may satisfy `cond`:
+    * the one way the scan path narrows an index, so a file never parts
+    * from its partition row. */
+  private[lake] def prunedBy(cond: Expression): ManifestFileIndex =
+    new ManifestFileIndex(tableRoot, partitionSchema, compile(this, cond),
+      compile)
 
   override def inputFiles: Array[String] =
     files.map(_.path.toString).toArray

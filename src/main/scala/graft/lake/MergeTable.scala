@@ -1997,7 +1997,8 @@ final class MergeTable private (
           s"${bloomCols.filterNot(dataSchema.fieldNames.contains)
             .mkString(", ")} not present in the data files (bloom " +
           "columns must be data columns, not the partition column)")
-      val scan = manifestScan(entries, MergeTable.allNullable(bloomFields))
+      val scan = manifestScan(indexOf(entries, Nil),
+        MergeTable.allNullable(bloomFields))
         .withColumn(BfFile,
           fileTagExpr(col("_metadata.file_path")))
       val hashed = bloomCols.map { c =>
@@ -2328,12 +2329,12 @@ final class MergeTable private (
     * never a mix; untouched partitions' files are carried over
     * unchanged (the day-backfill primitive at any table size: cost is
     * O(new data) + O(selected partitions' metadata)). The predicate
-    * must reference ONLY partition columns (the same driver-side
-    * distinct-tuple evaluation as OPTIMIZE WHERE), and EVERY incoming
-    * row must satisfy it — a row that would land outside the replaced
-    * scope fails the statement (Delta validates replaceWhere the same
-    * way), so the operation can never silently leak rows into
-    * partitions it did not clear. */
+    * must reference ONLY partition columns (the removed files are the
+    * ones whose typed partition row satisfies it, the same test as
+    * OPTIMIZE WHERE), and EVERY incoming row must satisfy it — a row
+    * that would land outside the replaced scope fails the statement
+    * (Delta validates replaceWhere the same way), so the operation can
+    * never silently leak rows into partitions it did not clear. */
   def overwriteWhere(df0: DataFrame, predicate: Column): Long = {
     require(partitionCols.nonEmpty,
       s"MergeTable at $root: replaceWhere requires a partitioned table")
@@ -2372,16 +2373,11 @@ final class MergeTable private (
       }
       // scope containment: predicate may reference only partition
       // columns, and every incoming row must satisfy it
-      val refs = conditionOf(predicate)
-        .map(_.references.map(_.name).toSeq).getOrElse {
-          // empty-frame analysis can fail for a declared-less empty
-          // table; analyze against the incoming frame instead
-          df.filter(predicate).queryExecution.analyzed.collectFirst {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-              f.condition.references.map(_.name).toSeq
-          }.getOrElse(Nil)
-        }
-      require(refs.nonEmpty && refs.forall(partitionCols.contains),
+      val index = indexOf(live)
+      val cond = partitionCondition(predicate,
+        if (live.isEmpty) df.schema else index.partitionSchema)
+        .toOption.filter(_.references.nonEmpty)
+      require(cond.isDefined,
         s"replaceWhere predicate must reference only the partition " +
           s"column(s) ${partitionCols.mkString(", ")}, got: $predicate")
       val leak = df.filter(not(coalesce(predicate, lit(false))))
@@ -2390,12 +2386,7 @@ final class MergeTable private (
         s"replaceWhere: row ${leak.headOption.getOrElse("")} does not " +
           s"satisfy ($predicate) — rows may not land outside the " +
           "replaced scope")
-      val removed =
-        if (live.isEmpty) Nil
-        else {
-          val passing = selectedPartitions(live, predicate)
-          live.filter(e => passing.contains(e.partitionValue))
-        }
+      val removed = filesWhere(index, cond.get)
       val (_, entries) = writeData(df)
       (CommitDelta(entries, removed.map(_.relPath), txns = idTxns),
         version)
@@ -2998,12 +2989,13 @@ final class MergeTable private (
     * bytes under the incremental log).
     *
     * The predicate must reference ONLY the partition column (Delta's
-    * own `OPTIMIZE ... WHERE` rule) — it is evaluated driver-side over
-    * the DISTINCT partition values (log metadata, one tiny local job),
-    * never against row data, with the value cast to the same
-    * hive-inferred type every read attaches, so selection semantics
-    * match `read(partitionFilter)` exactly. A predicate selecting
-    * nothing (or an empty table) publishes an empty delta. */
+    * own `OPTIMIZE ... WHERE` rule) — it is evaluated on the driver
+    * against each file's typed partition row (log metadata, no job),
+    * never against row data, by the same test a read's file index
+    * applies ([[ManifestFileIndex.partitionPredicate]]), so selection
+    * semantics match `read().filter(partitionFilter)` exactly. A
+    * predicate selecting nothing (or an empty table) publishes an empty
+    * delta. */
   def compactWhere(predicate: Column, filesPerPartition: Int = 1,
       zorderCols: Seq[String] = Nil): Long = {
     require(partitionCols.nonEmpty,
@@ -3017,11 +3009,17 @@ final class MergeTable private (
       val (version, live) = latest()
       if (live.isEmpty) (CommitDelta(Nil, Nil), version)
       else {
-        val passing = selectedPartitions(live, predicate)
-        val selected = live.filter(e => passing.contains(e.partitionValue))
+        val index = indexOf(live)
+        val selected = filesWhere(index,
+          partitionCondition(predicate, index.partitionSchema).fold(
+            msg => throw new IllegalArgumentException(
+              s"OPTIMIZE WHERE predicate must reference only the " +
+                s"partition column(s) ${partitionCols.mkString(", ")}: " +
+                msg), identity))
         if (selected.isEmpty) (CommitDelta(Nil, Nil), version)
         else {
-          val parts = math.max(1, passing.size * filesPerPartition)
+          val parts = math.max(1,
+            selected.map(_.partitionValue).distinct.size * filesPerPartition)
           val df0 = readForRewrite(selected)
           val df =
             if (zorderCols.nonEmpty) clusterZ(df0, zorderCols, parts)
@@ -3033,44 +3031,33 @@ final class MergeTable private (
     }
   }
 
-  /** The partition tuples of `live` (encoded, as in the manifest)
-    * selected by `predicate` — evaluated over the DISTINCT tuples
-    * (numPartitions-scale metadata), each column cast to the read
-    * schema's partition type, so the test agrees with what a reader of
-    * the partition columns would see. NULL predicate results keep the
-    * partition UNSELECTED (SQL WHERE semantics). */
-  private def selectedPartitions(live: Seq[FileEntry],
-      predicate: Column): Set[Option[String]] = {
-    val tuples = live.map(_.partitionValue).distinct
-    val schema = logicalSchemaOf(live)
-    val pcTypes = partitionCols.map(c => schema(c).dataType)
-    val evalSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("__graft_pv",
-        org.apache.spark.sql.types.StringType) +:
-        partitionCols.map(c => org.apache.spark.sql.types.StructField(
-          "__graft_raw_" + c, org.apache.spark.sql.types.StringType)))
-    val rows = tuples.map(pv => org.apache.spark.sql.Row.fromSeq(
-      pv.orNull +: partValuesOf(pv).map(_.orNull)))
-    import scala.jdk.CollectionConverters._
-    // The evaluation frame carries the PARTITION COLUMNS ONLY, so the
-    // only-partition-predicates rule enforces itself: any other column
-    // reference fails analysis (rethrown with a targeted message).
-    val frame = partitionCols.zip(pcTypes).foldLeft(
-      spark.createDataFrame(rows.asJava, evalSchema)) {
-        case (d, (c, t)) => d.withColumn(c, col("__graft_raw_" + c).cast(t))
-      }
-    val passed =
-      try frame.filter(predicate)
-        .select("__graft_pv")
-        .collect().map(r => Option(r.getString(0)))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"OPTIMIZE WHERE predicate must reference only the " +
-              s"partition column(s) ${partitionCols.mkString(", ")}: " +
-              e.getMessage)
-      }
-    passed.toSet
+  /** `predicate` analyzed over the partition columns alone, typed as
+    * `typed` types them (NullType where it has no field): Left with the
+    * analyzer's message when it reads any other column. */
+  private def partitionCondition(predicate: Column,
+      typed: org.apache.spark.sql.types.StructType)
+      : Either[String, cxp.Expression] = {
+    import org.apache.spark.sql.types.{NullType, StructField, StructType}
+    val frame = spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(partitionCols.map(c => typed.find(_.name == c)
+        .getOrElse(StructField(c, NullType)))))
+    try Right(frame.filter(predicate).queryExecution.analyzed.collectFirst {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition
+    }.get)
+    catch {
+      case e: org.apache.spark.sql.AnalysisException => Left(e.getMessage)
+    }
+  }
+
+  /** The entries of `index` whose typed partition row satisfies `cond`,
+    * a condition over partition columns (NULL selects nothing, SQL
+    * WHERE semantics). */
+  private def filesWhere(index: ManifestFileIndex,
+      cond: cxp.Expression): Seq[FileEntry] = {
+    val admits = index.partitionPredicate(Seq(cond))
+    index.files.collect { case f if admits(f.partition) => f.entry }
   }
 
   /** Min-max scale `cols` to 16-bit integers as SQL fragments (shared
@@ -3588,136 +3575,94 @@ final class MergeTable private (
       else d.withColumn(c, expr(g))
     }
 
-  /** Derived partition pruning for a GENERATED partition column: when
-    * `partitionCol = G(src)` for a [[GeneratedColumns.formOf recognized]]
-    * `G`, transfer predicates on `src` to partition-value tests.
-    * Equality transfers for any recognized (deterministic) shape;
-    * ranges only for monotonic ones; everything else keeps the file.
-    * AND/OR recurse; unknown shapes compile to keep-everything, so
-    * this is always a may-match SUPERSET — same contract as
-    * [[compilePrune]], with which it composes conjunctively. */
-  private def compileGenPrune(cond: cxp.Expression): FileEntry => Boolean = {
-    if (partitionCols.isEmpty) return NoPrune // nothing to transfer onto
-    // one transfer rule per GENERATED partition column; their prunes
-    // compose conjunctively (each is an independent may-match superset)
-    val rules = partitionCols.flatMap { pc =>
-      for {
-        g <- generatedColumns.get(pc)
-        f <- GeneratedColumns.formOf(spark, g)
-      } yield (pc, g, f)
-    }
-    if (rules.isEmpty) NoPrune
-    else rules.map { case (pc, g, form) =>
-      compileGenPruneWith(cond, g, form, fe => partValueOf(fe, pc))
-    }.reduce((a, b) => fe => a(fe) && b(fe))
-  }
+  /** Derived partition pruning for GENERATED partition columns (the
+    * shape of Delta's `OptimizeGeneratedColumn`): for each partition
+    * column `pc = G(src)` of a [[GeneratedColumns.formOf recognized]]
+    * shape that `partSchema` types, `cond` rewritten into a predicate on
+    * `pc` that every row satisfying `cond` also satisfies. The compiler
+    * evaluates it on the typed partition rows like any other partition
+    * predicate. Equality and IN transfer for any recognized
+    * (deterministic) shape; ranges only for monotonic ones, with strict
+    * bounds relaxed to inclusive; And/Or rewrite both sides; any other
+    * shape becomes `true`. */
+  private def generatedPartitionFilters(cond: cxp.Expression,
+      partSchema: org.apache.spark.sql.types.StructType)
+      : Seq[cxp.Expression] =
+    for {
+      f <- partSchema.fields.toSeq
+      g <- generatedColumns.get(f.name)
+      form <- GeneratedColumns.formOf(spark, g)
+    } yield transferToPartition(cond, g, form,
+      cxp.AttributeReference(f.name, f.dataType)())
 
-  private def compileGenPruneWith(e: cxp.Expression, g: String,
+  private def transferToPartition(e: cxp.Expression, g: String,
       form: GeneratedColumns.GenForm,
-      pvOf: FileEntry => Option[String]): FileEntry => Boolean = {
-    def rec(x: cxp.Expression) = compileGenPruneWith(x, g, form, pvOf)
-    /** The resolved, foldable literal side's EXTERNAL value (analyzed
-      * conditions fold casts the analyzer inserted). Only engages when
-      * the OTHER side is the bare source attribute (comparison in the
-      * source column's own domain). */
-    def srcAndLit(a: cxp.Expression, b: cxp.Expression)
-        : Option[(Any, org.apache.spark.sql.types.DataType)] =
-      (a, b) match {
-        case (ar: cxp.AttributeReference, l)
-            if ar.name == form.src && l.references.isEmpty =>
-          try {
-            // analyzed-but-unoptimized literals may sit under
-            // RuntimeReplaceable wrappers (to_timestamp, to_date...)
-            // which report non-foldable and whose own eval throws —
-            // judge foldability and evaluate on the REPLACEMENT tree
-            val ev = l.transform {
-              case r: cxp.RuntimeReplaceable => r.replacement
+      pc: cxp.AttributeReference): cxp.Expression = {
+    import org.apache.spark.sql.types._
+    def rec(x: cxp.Expression) = transferToPartition(x, g, form, pc)
+    val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    /** `G(b)` when `a` is the source attribute and `b` folds to a
+      * non-null value, cast to the partition type from its
+      * partition-string rendering exactly as the partition rows are;
+      * paired with `G`'s own type. */
+    def genLit(a: cxp.Expression, b: cxp.Expression)
+        : Option[(cxp.Literal, DataType)] = (a, b) match {
+      case (ar: cxp.AttributeReference, l)
+          if ar.name == form.src && l.references.isEmpty =>
+        try {
+          // analyzed-but-unoptimized literals may sit under
+          // RuntimeReplaceable wrappers (to_timestamp, to_date...)
+          // which report non-foldable and whose own eval throws —
+          // judge foldability and evaluate on the REPLACEMENT tree
+          val ev = l.transform {
+            case r: cxp.RuntimeReplaceable => r.replacement
+          }
+          Some(ev).filter(_.foldable).flatMap(x => Option(x.eval(null)))
+            .flatMap(v => evalGen(g, form.src, ar.dataType,
+              org.apache.spark.sql.catalyst.CatalystTypeConverters
+                .convertToScala(v, ev.dataType)))
+            .flatMap { gv =>
+              val gl = cxp.Literal.create(gv)
+              Option(cxp.Cast(cxp.Cast(gl, StringType, tz), pc.dataType, tz)
+                .eval()).map(v => (cxp.Literal(v, pc.dataType), gl.dataType))
             }
-            if (!ev.foldable) None
-            else Option(ev.eval(null)).map(v =>
-              (org.apache.spark.sql.catalyst.CatalystTypeConverters
-                .convertToScala(v, ev.dataType), ar.dataType))
-          } catch { case scala.util.control.NonFatal(_) => None }
-        case _ => None
-      }
-    def bound(a: cxp.Expression, b: cxp.Expression): Option[String] =
-      srcAndLit(a, b).flatMap { case (v, t) => evalGen(g, form.src, t, v) }
-        .flatMap(renderPartValue(_))
+        } catch { case scala.util.control.NonFatal(_) => None }
+      case _ => None
+    }
+    /** Matching rows satisfy `x >= y`, either side the source attribute.
+      * A bound keeps its order in the partition type only when `G`
+      * yields that type, an integral one into an integral one, or a
+      * [[GeneratedColumns.GenForm.castsInOrder]] string. */
+    def ge(x: cxp.Expression, y: cxp.Expression): cxp.Expression = {
+      def bound(a: cxp.Expression, b: cxp.Expression) =
+        genLit(a, b).collect { case (l, t) if t == pc.dataType ||
+            form.castsInOrder && t == StringType ||
+            integral(t) && integral(pc.dataType) => l }
+      bound(x, y).map(cxp.GreaterThanOrEqual(pc, _))
+        .orElse(bound(y, x).map(cxp.LessThanOrEqual(pc, _)))
+        .getOrElse(cxp.Literal.TrueLiteral)
+    }
+    def in(bounds: Seq[Option[(cxp.Literal, DataType)]]): cxp.Expression =
+      if (bounds.isEmpty || bounds.exists(_.isEmpty)) cxp.Literal.TrueLiteral
+      else cxp.In(pc, bounds.flatten.map(_._1))
     e match {
-      case cxp.And(l, r) =>
-        val (cl, cr) = (rec(l), rec(r)); fe => cl(fe) && cr(fe)
-      case cxp.Or(l, r) =>
-        val (cl, cr) = (rec(l), rec(r)); fe => cl(fe) || cr(fe)
-      case cxp.EqualTo(a, b) =>
-        genEq(Seq(bound(a, b).orElse(bound(b, a))), pvOf)
-      case cxp.In(a, list) =>
-        genEq(list.map(l => bound(a, l)), pvOf)
+      case cxp.And(l, r)     => cxp.And(rec(l), rec(r))
+      case cxp.Or(l, r)      => cxp.Or(rec(l), rec(r))
+      case cxp.EqualTo(a, b) => in(Seq(genLit(a, b).orElse(genLit(b, a))))
+      case cxp.In(a, list)   => in(list.map(genLit(a, _)))
+      // post-optimization IN rendering: values are internal; rebuild
+      // literals of the attribute's type
       case cxp.InSet(a, set) =>
-        // post-optimization IN rendering: values are internal; rebuild
-        // literals of the attribute's type
-        a match {
-          case ar: cxp.AttributeReference if ar.name == form.src =>
-            genEq(set.toSeq.map(v =>
-              bound(ar, cxp.Literal.create(v, ar.dataType))), pvOf)
-          case _ => NoPrune
-        }
-      // matching rows of `range(x, y)` satisfy x >= y (strict bounds
-      // relax to inclusive). Either side may be the attribute:
-      // `attr >= lit` is a lower bound, `lit >= attr` an upper one.
-      // Ranges transfer ONLY through monotonic shapes — `month(ts)`
-      // cycles, so `ts >= T` says nothing about the month partition.
-      case _ if !form.monotonic => NoPrune
-      case cxp.GreaterThan(a, b)        => genRange(bound, a, b, pvOf)
-      case cxp.GreaterThanOrEqual(a, b) => genRange(bound, a, b, pvOf)
-      case cxp.LessThan(a, b)           => genRange(bound, b, a, pvOf)
-      case cxp.LessThanOrEqual(a, b)    => genRange(bound, b, a, pvOf)
-      case _ => NoPrune
+        in(set.toSeq.map(v => genLit(a, cxp.Literal.create(v, a.dataType))))
+      // `month(ts)` cycles, so `ts >= T` says nothing about the month
+      case _ if !form.monotonic          => cxp.Literal.TrueLiteral
+      case cxp.GreaterThan(a, b)        => ge(a, b)
+      case cxp.GreaterThanOrEqual(a, b) => ge(a, b)
+      case cxp.LessThan(a, b)           => ge(b, a)
+      case cxp.LessThanOrEqual(a, b)    => ge(b, a)
+      case _                            => cxp.Literal.TrueLiteral
     }
-  }
-
-  /** Equality transfer: a file may match iff its partition value equals
-    * SOME transferred bound. Engages only when EVERY disjunct
-    * transferred (a partially-transferred IN must not prune on the
-    * transferred subset alone). A null-partition file holds only
-    * rows whose source is null, which no non-null equality matches. */
-  private def genEq(bounds: Seq[Option[String]],
-      pvOf: FileEntry => Option[String]): FileEntry => Boolean =
-    if (bounds.isEmpty || bounds.exists(_.isEmpty)) NoPrune
-    else {
-      val vals = bounds.flatten.toSet
-      fe => pvOf(fe).exists(vals.contains)
-    }
-
-  /** Orient `x >= y` around whichever side is the source attribute:
-    * `attr >= lit` keeps partition values >= the transferred bound,
-    * `lit >= attr` the mirror; neither side matching keeps all. */
-  private def genRange(
-      bound: (cxp.Expression, cxp.Expression) => Option[String],
-      x: cxp.Expression, y: cxp.Expression,
-      pvOf: FileEntry => Option[String]): FileEntry => Boolean =
-    bound(x, y) match {
-      case Some(_) => genGe(bound(x, y), low = true, pvOf)
-      case None    => genGe(bound(y, x), low = false, pvOf)
-    }
-
-  /** Range transfer (monotonic shapes only): `src >= L` keeps files
-    * with partition value >= `G(L)` (`low = true`); `src <= H` the
-    * mirror. Comparison domain: numeric when both sides parse as
-    * longs, else raw string (ISO dates and prefixes order
-    * lexicographically). Null-partition files hold only null-source
-    * rows, which satisfy no range predicate. */
-  private def genGe(bound: Option[String], low: Boolean,
-      pvOf: FileEntry => Option[String])
-      : FileEntry => Boolean = bound match {
-    case None => NoPrune
-    case Some(b) =>
-      val bNum = scala.util.Try(b.trim.toLong).toOption
-      fe => pvOf(fe).exists { pv =>
-        (bNum, scala.util.Try(pv.trim.toLong).toOption) match {
-          case (Some(bn), Some(pn)) => if (low) pn >= bn else pn <= bn
-          case _ => if (low) pv >= b else pv <= b
-        }
-      }
   }
 
   /** Evaluate the generation expression on ONE value of the source
@@ -3734,20 +3679,6 @@ final class MergeTable private (
           org.apache.spark.sql.types.StructField(src, t, nullable = true))))
       Option(df.select(expr(g)).head().get(0))
     } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Render a generated value in the partition-string domain, matching
-    * hive dir rendering: dates ISO, integrals decimal, strings
-    * verbatim; anything else disables the transfer. */
-  private def renderPartValue(v: Any): Option[String] = v match {
-    case d: java.sql.Date       => Some(d.toString)
-    case d: java.time.LocalDate => Some(d.toString)
-    case s: String              => Some(s)
-    case n: Byte                => Some(n.toString)
-    case n: Short               => Some(n.toString)
-    case n: Int                 => Some(n.toString)
-    case n: Long                => Some(n.toString)
-    case _                      => None
-  }
 
   /** [[fileKey]]s of live files holding at least one `predicate` match.
     * The key is captured at the scan stage by [[readEntries]]
@@ -4095,14 +4026,59 @@ final class MergeTable private (
     * (tens of thousands of literals) costs more in per-action
     * re-analysis/re-optimization of every downstream plan than the
     * file-skipping saves — a key list is driver METADATA, and this
-    * keeps it there. Rows of admitted files are returned UNFILTERED;
+    * keeps it there. On a partition column the keys are an `InSet` on
+    * each file's typed partition row; on a data column they prune by
+    * stats and bloom. Rows of admitted files are returned UNFILTERED;
     * the caller owns the row-level residual (typically a semi-join
     * against the key relation, which AQE broadcasts at Δ-scale). */
   private[lake] def probeKeysVersion(version: Long, c: String,
       values: Seq[Any]): DataFrame = {
-    val live = snapshotAt(version)
+    val index = indexOf(snapshotAt(version))
+    val phys = physicalOf(c)
     val lits = values.map(v => cxp.Literal(v))
-    readEntries(live.filter(compileIn(physicalOf(c), lits, live)))
+    val keys = lits.filter(_.value != null) // NULL matches nothing
+    val cond = index.partitionSchema.find(_.name == phys) match {
+      // both sides cast (TRY) to the type SQL `=` compares them in; a
+      // partition value that cannot be cast admits its file, keys that
+      // cannot be compared or cast (or no key at all) admit every file
+      case Some(f) =>
+        val pc = cxp.AttributeReference(phys, f.dataType)()
+        val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+        def tryCast(e: cxp.Expression,
+            t: org.apache.spark.sql.types.DataType) =
+          if (e.dataType == t) e else cxp.Cast(e, t, tz, cxp.EvalMode.TRY)
+        keys.map(_.dataType).distinct match {
+          case Seq(kt) => keyCmpType(f.dataType, kt)
+            .map(t => (t, keys.map(tryCast(_, t).eval())))
+            .collect { case (t, ks) if !ks.contains(null) =>
+              val p = tryCast(pc, t)
+              cxp.And(cxp.IsNotNull(pc),
+                cxp.Or(cxp.IsNull(p), cxp.InSet(p, ks.toSet)))
+            }.getOrElse(cxp.Literal.TrueLiteral)
+          case _ => cxp.Literal.TrueLiteral
+        }
+      case None => cxp.In(cxp.AttributeReference(phys,
+        org.apache.spark.sql.types.NullType)(), lits)
+    }
+    val admits = compilePrune(cond, index, index.files.map(_.entry))
+    readEntries(index.files.collect { case f if admits(f) => f.entry })
+  }
+
+  /** The type SQL `=` compares a partition value of type `p` and a key
+    * of type `k` in: a string side takes the other side's type, two
+    * numerics compare as the partition's. None when they cannot be
+    * compared. */
+  private def keyCmpType(p: org.apache.spark.sql.types.DataType,
+      k: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types.{NumericType, StringType}
+    (p, k) match {
+      case _ if p == k                      => Some(p)
+      case (StringType, _)                  => Some(k)
+      case (_, StringType)                  => Some(p)
+      case (_: NumericType, _: NumericType) => Some(p)
+      case _                                => None
+    }
   }
 
   /** [[probeKeysVersion]] against the current head — the public
@@ -4111,8 +4087,10 @@ final class MergeTable private (
     * `values`, a SUPERSET of the matching rows — the caller MUST apply
     * its own row-level residual (a join/semi-join on the key relation;
     * that keeps the value list out of the executed plan — see
-    * [[probeKeysVersion]]). Tables without stats/bloom/partitioning on
-    * `c` degrade to the full read, never to a miss. */
+    * [[probeKeysVersion]]). A partition column admits the files whose
+    * typed partition value equals some key under SQL `=`; tables
+    * without stats/bloom/partitioning on `c` degrade to the full read,
+    * never to a miss. */
   def probeKeys(c: String, values: Seq[Any]): DataFrame =
     probeKeysVersion(latestVersion(), c, values)
 
@@ -4127,12 +4105,14 @@ final class MergeTable private (
     *
     * Stages, each a Spark job over the key relation:
     *
-    *   1. partition + min/max-range admission — the key relation inner-
-    *      joins the BROADCAST manifest-metadata frame (#files rows) on
-    *      the per-file admission predicate; the distinct admitted file
-    *      keys (metadata-scale) come back to the driver. The pair work
-    *      is O(|keys| × #files) but fully distributed — the shape of
-    *      dynamic file pruning;
+    *   1. partition + min/max-range admission — the key relation
+    *      inner-joins the BROADCAST manifest-metadata frame (#files
+    *      rows) on the per-file admission predicate; the distinct
+    *      admitted file keys (metadata-scale) come back to the driver.
+    *      The pair work is O(|keys| × #files) but fully distributed —
+    *      the shape of dynamic file pruning. A file is admitted by
+    *      partition when the key equals its typed partition value under
+    *      SQL `=`, or when the two cannot be compared;
     *   2. bloom refinement, per sidecar (dir, m) group of admitted
     *      still-bloomed files: the key relation's [[BloomK]] probe
     *      positions (computed with the SAME Catalyst hash expressions
@@ -4145,58 +4125,72 @@ final class MergeTable private (
     *      sound superset), mirroring the literal path's product cap.
     *
     * The stats/bloom surfaces run under the write side's long-cast
-    * contract, so `keys`' FIRST column must be integral; any other
-    * type degrades to the full read (never a miss), exactly like a
-    * table with no metadata on `c`. Rows of admitted files return
-    * UNFILTERED — the caller owns the row-level residual (typically an
-    * equi-/semi-join against the key relation, which AQE broadcasts at
-    * Δ-scale). Admission parity with the literal overload is pinned by
-    * DedupIncrSpec. */
+    * contract, so `keys`' FIRST column must be integral — or a string,
+    * admitted by the truncated string stats ([[ColStat.strRange]]) and
+    * never by the bloom; any other type degrades to the full read
+    * (never a miss), exactly like a table with no metadata on `c`. Rows
+    * of admitted files return UNFILTERED — the caller owns the
+    * row-level residual (typically an equi-/semi-join against the key
+    * relation, which AQE broadcasts at Δ-scale). Admission parity with
+    * the literal overload is pinned by DedupIncrSpec. */
   def probeKeys(c: String, keys: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
     val live = latest()._2
     val phys = physicalOf(c)
-    if (live.isEmpty) return readEntries(live)
-    keys.schema.head.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      // STRING keys (r15): partition + truncated-string-stats admission
-      // in the same distributed join shape; the bloom surface stays
-      // long-cast and bows out (admit — sound superset)
-      case StringType => return probeKeysStrRel(phys, keys, live)
-      case _          => return readEntries(live)
+    // integral keys compare long-cast (the stats/bloom contract); STRING
+    // keys (r15) against the truncated string stats, without the bloom
+    val kt: DataType = keys.schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => LongType
+      case StringType => StringType
+      case _          => NullType
     }
-    val k = keys.select(col(keys.columns.head).cast("long").as("__k"))
+    if (live.isEmpty || kt == NullType) return readEntries(live)
+    val k = keys.select(col(keys.columns.head).cast(kt).as("__k"))
       .filter(col("__k").isNotNull).distinct()
-    val isPart = partitionCols.contains(phys)
     // manifest → metadata frame: one row per live file with the
-    // admission inputs (partition long, stats range, null discipline)
-    val metaRows = live.map { fe =>
-      val pv = if (isPart) partValueOf(fe, phys) else None
-      val st = fe.stats.get(phys)
-      (fileKey(fe.relPath),
-        !isPart || pv.isEmpty,                                // p_missing
-        pv.flatMap(s => scala.util.Try(s.trim.toLong).toOption), // p_long
-        st.isEmpty,                                           // stats_none
-        st.exists(_.allNull),                                 // all_null
-        st.exists(_.range.isEmpty),                           // range_none
-        st.flatMap(_.range).map(_._1),                        // mn
-        st.flatMap(_.range).map(_._2))                        // mx
+    // admission inputs (typed partition value, null discipline, stats
+    // range — absent stats admit, an absent max is open)
+    val index = indexOf(live)
+    val pf = Some(index.partitionSchema.fieldNames.indexOf(phys))
+      .filter(_ >= 0).map(i => (i, index.partitionSchema(i).dataType))
+    def st(fe: FileEntry) = fe.stats.get(phys)
+    def range(fe: FileEntry): Option[(Any, Option[Any])] =
+      if (kt == LongType) st(fe).flatMap(_.range).map(r => (r._1, Some(r._2)))
+      else st(fe).flatMap(_.strRange)
+    val metaSchema = StructType(Seq(StructField("fkey", StringType),
+      StructField("p_val", pf.fold[DataType](NullType)(_._2)),
+      StructField("all_null", BooleanType),
+      StructField("mn", kt), StructField("mx", kt)))
+    val metaRows = index.files.map { f =>
+      val fe = f.entry
+      org.apache.spark.sql.Row(fileKey(fe.relPath),
+        pf.fold[Any](null) { case (i, t) =>
+          org.apache.spark.sql.catalyst.CatalystTypeConverters
+            .convertToScala(f.partition.get(i, t), t)
+        },
+        st(fe).exists(_.allNull),
+        range(fe).map(_._1).orNull, range(fe).flatMap(_._2).orNull)
     }
-    val session = spark
-    import session.implicits._
-    val fm = metaRows.toDF("fkey", "p_missing", "p_long",
-      "stats_none", "all_null", "range_none", "mn", "mx")
-    val admitCond =
-      (col("p_missing") || col("p_long") === col("__k")) &&
-        (col("stats_none") || (!col("all_null") &&
-          (col("range_none") ||
-            (col("mn") <= col("__k") && col("__k") <= col("mx")))))
-    val admittedKeys = k.join(broadcast(fm), admitCond, "inner")
+    // partition admission: the key equals the typed partition value
+    // under SQL `=`, or either side cannot be compared or cast in the
+    // type `=` compares them in; the NULL partition holds no match
+    val partOk = pf.flatMap { case (_, pt) =>
+      keyCmpType(pt, kt).map { t =>
+        val p = if (t == pt) col("p_val") else col("p_val").try_cast(t)
+        val kk = if (t == kt) col("__k") else col("__k").try_cast(t)
+        col("p_val").isNotNull && (p.isNull || kk.isNull || p === kk)
+      }
+    }.getOrElse(lit(true))
+    val statsOk = !col("all_null") && (col("mn").isNull ||
+      (col("mn") <= col("__k") &&
+        (col("mx").isNull || col("__k") <= col("mx"))))
+    val admittedKeys = k.join(broadcast(spark.createDataFrame(
+        metaRows.asJava, metaSchema)), partOk && statsOk, "inner")
       .select("fkey").distinct()
       .collect().map(_.getString(0)).toSet
     val admitted = live.filter(fe => admittedKeys(fileKey(fe.relPath)))
-    val (bloomed, plain) =
-      admitted.partition(_.bloom.exists(_.cols.contains(phys)))
+    val (bloomed, plain) = admitted.partition(fe =>
+      kt == LongType && fe.bloom.exists(_.cols.contains(phys)))
     if (bloomed.isEmpty) return readEntries(admitted)
     val groups = bloomed.groupBy(e => (e.bloom.get.relDir, e.bloom.get.m))
       .toSeq.sortBy(_._1._1)
@@ -4228,6 +4222,8 @@ final class MergeTable private (
               expr("shiftleft(cast(1 as bigint), cast(p % 64 as int))")
                 .as("mask"))
         }.reduce(_ unionByName _)
+        val session = spark
+        import session.implicits._
         val fkm = refine.flatMap { case ((_, m), es) =>
           es.map(e => (fileKey(e.relPath), m.toLong))
         }.toDF("__fk", "__fm")
@@ -4250,111 +4246,78 @@ final class MergeTable private (
     readEntries(plain ++ bloomed.filter(e => admitted2(fileKey(e.relPath))))
   }
 
-  /** The relation-valued probe's STRING path: one distributed join of
-    * the (distinct, non-null) key relation against the broadcast
-    * manifest-metadata frame, admitting a file when the key matches
-    * its partition value (exact) or sits inside its truncated string
-    * range ([[ColStat.strRange]] — Spark's string comparison IS the
-    * code-point order the truncation bounds are valid in). Files
-    * without metadata on `phys` admit (degrade to read, never to a
-    * miss); the long-cast bloom surface never engages for strings. */
-  private def probeKeysStrRel(phys: String, keys: DataFrame,
-      live: Seq[FileEntry]): DataFrame = {
-    val k = keys.select(col(keys.columns.head).cast("string").as("__k"))
-      .filter(col("__k").isNotNull).distinct()
-    val isPart = partitionCols.contains(phys)
-    val metaRows = live.map { fe =>
-      val pv = if (isPart) partValueOf(fe, phys) else None
-      val st = fe.stats.get(phys)
-      (fileKey(fe.relPath),
-        !isPart || pv.isEmpty,                                // p_missing
-        pv.orNull,                                            // p_str
-        st.isEmpty,                                           // stats_none
-        st.exists(_.allNull),                                 // all_null
-        st.exists(_.strRange.isEmpty),                        // range_none
-        st.flatMap(_.strRange).map(_._1).orNull,              // mn
-        st.flatMap(_.strRange).flatMap(_._2).orNull,          // mx
-        st.flatMap(_.strRange).exists(_._2.isEmpty))          // mx_open
-    }
-    val session = spark
-    import session.implicits._
-    val fm = metaRows.toDF("fkey", "p_missing", "p_str", "stats_none",
-      "all_null", "range_none", "mn", "mx", "mx_open")
-    val admitCond =
-      (col("p_missing") || col("p_str") === col("__k")) &&
-        (col("stats_none") || (!col("all_null") &&
-          (col("range_none") ||
-            (col("mn") <= col("__k") &&
-              (col("mx_open") || col("__k") <= col("mx"))))))
-    val admittedKeys = k.join(broadcast(fm), admitCond, "inner")
-      .select("fkey").distinct()
-      .collect().map(_.getString(0)).toSet
-    readEntries(live.filter(fe => admittedKeys(fileKey(fe.relPath))))
-  }
-
-  /** The entries among `live` that may hold a row satisfying `cond` —
-    * the file-skipping compiler, reached only through a read's
-    * [[ManifestFileIndex]] by the [[GraftScanPruning]] rule, which
-    * hands it the optimizer's own (coerced, pushed-down) condition.
-    * Attribute names at the relation level are PHYSICAL names, which
-    * is exactly what the manifest stats/bloom keys record.
+  /** The files of `index` that may hold a row satisfying `cond` — the
+    * file-skipping compiler, reached through a read's
+    * [[ManifestFileIndex]] by the [[GraftScanPruning]] rule (which hands
+    * it the optimizer's own coerced, pushed-down condition) and by the
+    * key probes. Attribute names at the relation level are PHYSICAL
+    * names, which is exactly what the manifest stats/bloom keys record.
     *
-    * Prunable shapes, walked recursively under `AND`/`OR`/`NOT`:
-    * `=`, `<=>`, `IN`, `<`, `<=`, `>`, `>=`, `IS NULL`, `IS NOT NULL`,
-    * on partition values, min/max and null-count stats, and bloom
-    * filters (ONE batched sidecar read per bloom dir for a whole
-    * IN-list). Any other shape prunes nothing. Stats and bloom
-    * comparisons follow the write side's `cast("long")` contract: only
-    * INTEGRAL literals participate, and strict bounds relax to
-    * inclusive, so the cast's toward-zero truncation can never skip a
-    * file holding a matching fractional value. */
-  private[lake] def scanEntriesByCondition(live: Seq[FileEntry],
-      cond: cxp.Expression): Seq[FileEntry] =
-    if (live.isEmpty) live
-    else {
-      val (p, gp) = (compilePrune(cond, live), compileGenPrune(cond))
-      live.filter(fe => p(fe) && gp(fe))
-    }
-
-  /** The ANALYZED Catalyst condition of `predicate` against this
-    * table's (empty) schema — resolved through a throwaway `filter`
-    * plan (no job runs; analysis is driver-only). Analysis failure
-    * yields None. */
-  private def conditionOf(predicate: Column): Option[cxp.Expression] =
-    try {
-      readEntries(Nil).filter(predicate)
-        .queryExecution.analyzed.collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    * Every maximal deterministic, subquery-free subtree that reads only
+    * partition columns is evaluated on each file's typed partition row
+    * by [[ManifestFileIndex.partitionPredicate]]: a NULL result skips
+    * the file, an evaluation error keeps it. So is the rewrite of
+    * `cond` onto GENERATED partition columns
+    * ([[generatedPartitionFilters]]). The rest is walked under
+    * `AND`/`OR`/`NOT`: `=`, `<=>`, `IN`, `<`, `<=`, `>`, `>=`,
+    * `IS NULL`, `IS NOT NULL` on data columns prune by min/max and
+    * null-count stats and bloom filters (ONE batched sidecar read per
+    * bloom dir for a whole IN-list). Any other shape prunes nothing.
+    * Stats and bloom comparisons follow the write side's `cast("long")`
+    * contract: only INTEGRAL literals participate, and strict bounds
+    * relax to inclusive, so the cast's toward-zero truncation can never
+    * skip a file holding a matching fractional value. */
+  private[lake] def scanEntriesByCondition(index: ManifestFileIndex,
+      cond: cxp.Expression): Seq[ManifestFile] = {
+    val full = (cond +: generatedPartitionFilters(cond,
+      index.partitionSchema)).reduce(cxp.And)
+    index.files.filter(compilePrune(full, index, index.files.map(_.entry)))
+  }
 
   /** Keep-everything: the compilation of any predicate shape the
     * planner can't reason about. */
   private val NoPrune: FileEntry => Boolean = _ => true
 
   /** Compile a Catalyst predicate into a per-file may-match test over
-    * manifest metadata. Compilation happens ONCE per scan (literal
-    * extraction, IN-list sorting, lazy batched bloom probes are shared
-    * across all files); the returned closure is a pure driver-side
-    * check. Unknown shapes compile to keep-everything. */
-  private def compilePrune(e: cxp.Expression,
-      live: Seq[FileEntry]): FileEntry => Boolean = e match {
+    * `index`'s partition rows and manifest metadata. Compilation
+    * happens ONCE per scan (literal extraction, IN-list sorting, lazy
+    * batched bloom probes are shared across all files); the returned
+    * closure is a pure driver-side check. */
+  private def compilePrune(e: cxp.Expression, index: ManifestFileIndex,
+      live: Seq[FileEntry]): ManifestFile => Boolean = e match {
+    case _ if e.deterministic && e.references.nonEmpty &&
+        e.references.forall(a =>
+          index.partitionSchema.fieldNames.contains(a.name)) &&
+        !cxp.SubqueryExpression.hasSubquery(e) =>
+      val admits = index.partitionPredicate(Seq(e), admitErrors = true)
+      f => admits(f.partition)
     case cxp.And(l, r) =>
-      val (cl, cr) = (compilePrune(l, live), compilePrune(r, live))
-      fe => cl(fe) && cr(fe)
+      val (cl, cr) = (compilePrune(l, index, live),
+        compilePrune(r, index, live))
+      f => cl(f) && cr(f)
     case cxp.Or(l, r) =>
-      val (cl, cr) = (compilePrune(l, live), compilePrune(r, live))
-      fe => cl(fe) || cr(fe)
+      val (cl, cr) = (compilePrune(l, index, live),
+        compilePrune(r, index, live))
+      f => cl(f) || cr(f)
+    case _ =>
+      val admits = compileData(e, live)
+      f => admits(f.entry)
+  }
+
+  /** The stats and bloom surfaces: a per-entry may-match test for one
+    * comparison on a data column. Unknown shapes compile to
+    * keep-everything. */
+  private def compileData(e: cxp.Expression,
+      live: Seq[FileEntry]): FileEntry => Boolean = e match {
     case cxp.Not(inner) => inner match {
-      case cxp.IsNull(a)    => compilePrune(cxp.IsNotNull(a), live)
-      case cxp.IsNotNull(a) => compilePrune(cxp.IsNull(a), live)
+      case cxp.IsNull(a)    => compileData(cxp.IsNotNull(a), live)
+      case cxp.IsNotNull(a) => compileData(cxp.IsNull(a), live)
       case _                => NoPrune
     }
     case cxp.EqualTo(a, b) => compileEqLike(a, b, live)
     case cxp.EqualNullSafe(a, b) => (unwrapLit(a), unwrapLit(b)) match {
-      case (Some(cxp.Literal(null, _)), _) => compilePrune(cxp.IsNull(b), live)
-      case (_, Some(cxp.Literal(null, _))) => compilePrune(cxp.IsNull(a), live)
+      case (Some(cxp.Literal(null, _)), _) => compileData(cxp.IsNull(b), live)
+      case (_, Some(cxp.Literal(null, _))) => compileData(cxp.IsNull(a), live)
       case _                               => compileEqLike(a, b, live)
     }
     case cxp.In(a, list) => attrOf(a) match {
@@ -4375,19 +4338,22 @@ final class MergeTable private (
     case cxp.LessThan(a, b)           => compileCmpGe(b, a)
     case cxp.LessThanOrEqual(a, b)    => compileCmpGe(b, a)
     case cxp.IsNotNull(a) => attrOf(a) match {
-      case Some(c) => fe =>
-        notNullEntryMay(c, fe) &&
-          (!partitionCols.contains(c) || partValueOf(fe, c).isDefined)
+      case Some(c) => fe => !fe.stats.get(c).exists(_.allNull)
       case None => NoPrune
     }
     case cxp.IsNull(a) => attrOf(a) match {
       case Some(c) => fe =>
-        fe.stats.get(c).forall(cs => cs.nullsRows.forall(_._1 > 0)) &&
-          (!partitionCols.contains(c) || partValueOf(fe, c).isEmpty)
+        fe.stats.get(c).forall(cs => cs.nullsRows.forall(_._1 > 0))
       case None => NoPrune
     }
     case _ => NoPrune
   }
+
+  /** `a = b` as a one-literal IN-list on the attribute side. */
+  private def compileEqLike(a: cxp.Expression, b: cxp.Expression,
+      live: Seq[FileEntry]): FileEntry => Boolean =
+    compileData(if (attrOf(a).isDefined) cxp.In(a, Seq(b))
+      else cxp.In(b, Seq(a)), live)
 
   /** `a cmp b` normalized so the MATCHING rows have `a >= b`: prunes when
     * one side is an attribute and the other an integral literal — or,
@@ -4405,30 +4371,17 @@ final class MergeTable private (
         }
     }
 
-  private def compileEqLike(a: cxp.Expression, b: cxp.Expression,
-      live: Seq[FileEntry]): FileEntry => Boolean =
-    (attrOf(a), unwrapLit(b), attrOf(b), unwrapLit(a)) match {
-      case (Some(c), Some(l), _, _) => compileIn(c, Seq(l), live)
-      case (_, _, Some(c), Some(l)) => compileIn(c, Seq(l), live)
-      case _                        => NoPrune
-    }
-
-  /** Membership prune: file may match `c IN (lits)` iff some literal
-    * survives the partition check AND the stats range admits some
-    * literal AND (for bloom'd files) the batched sidecar probe admits
-    * some literal. Each surface only engages when EVERY non-null
-    * literal is expressible in its comparison domain — a partially
-    * convertible IN-list (e.g. `IN (5, 5.5)`) must not prune on the
-    * convertible subset alone. */
+  /** Membership prune: file may match `c IN (lits)` iff the stats range
+    * admits some literal AND (for bloom'd files) the batched sidecar
+    * probe admits some literal. Each surface only engages when EVERY
+    * non-null literal is expressible in its comparison domain — a
+    * partially convertible IN-list (e.g. `IN (5, 5.5)`) must not prune
+    * on the convertible subset alone. */
   private def compileIn(c: String, lits: Seq[cxp.Literal],
       live: Seq[FileEntry]): FileEntry => Boolean = {
     val nonNull = lits.filter(_.value != null) // NULL in an IN-list matches nothing
     val longs = nonNull.flatMap(litLongOf).distinct.sorted.toArray
-    val strs = nonNull.flatMap(litPartStr).toSet
     val allLong = nonNull.forall(l => litLongOf(l).isDefined)
-    val allPart = nonNull.forall(l => litPartStr(l).isDefined)
-    val allDate =
-      nonNull.forall(_.dataType == org.apache.spark.sql.types.DateType)
     // string-literal membership engages the TRUNCATED string stats
     // (r15): a file admits iff some literal sits inside its strRange
     val strLits = nonNull.flatMap(litStrOf)
@@ -4438,16 +4391,6 @@ final class MergeTable private (
     lazy val bloomPass: Set[String] =
       bloomAdmittedFiles(c, longs.toSeq, live)
     fe => {
-      val partOk = !partitionCols.contains(c) || !allPart ||
-        nonNull.isEmpty || partValueOf(fe, c).forall { pv =>
-          strs.contains(pv) ||
-            // a string partition value cast to DATE may equal a literal
-            // without its ISO rendering ("2024-1-2"): keep such a file
-            (allDate &&
-              scala.util.Try(java.time.LocalDate.parse(pv)).isFailure) ||
-            (allLong && scala.util.Try(pv.trim.toLong).toOption
-              .exists(p => java.util.Arrays.binarySearch(longs, p) >= 0))
-        }
       val statsOk = !allLong || longs.isEmpty ||
         fe.stats.get(c).forall { cs =>
           !cs.allNull && cs.range.forall { case (mn, mx) =>
@@ -4464,48 +4407,37 @@ final class MergeTable private (
         }
       val bloomOk = !allLong || longs.isEmpty ||
         !fe.bloom.exists(_.cols.contains(c)) || bloomPass(fe.relPath)
-      partOk && statsOk && statsOkStr && bloomOk
+      statsOk && statsOkStr && bloomOk
     }
   }
 
-  /** Range prune on `c`'s long-cast stats (plus numeric partition
-    * strings). */
+  /** Range prune on `c`'s long-cast stats. */
   private def compileRange(c: String, lo: Long,
-      hi: Long): FileEntry => Boolean = fe => {
-    val partOk = !partitionCols.contains(c) ||
-      partValueOf(fe, c).forall(pv =>
-        scala.util.Try(pv.trim.toLong).toOption
-          .forall(p => p >= lo && p <= hi))
-    partOk && fe.stats.get(c).forall { cs =>
+      hi: Long): FileEntry => Boolean = fe =>
+    fe.stats.get(c).forall { cs =>
       !cs.allNull && cs.range.forall { case (mn, mx) =>
         mx >= lo && mn <= hi
       }
     }
-  }
 
   /** Range prune on `c`'s TRUNCATED string stats ([[ColStat.strRange]])
-    * plus exact string partition values — the string analog of
-    * [[compileRange]] for the matching window [lo, hi] (either side
-    * open). Sound by the truncation bounds: the recorded min is a
-    * PREFIX of the true minimum (<= it in code-point order), the
-    * recorded max is >= the true maximum (exact when short, bumped
-    * prefix when truncated, absent when unbumpable — which disengages
-    * the lo test). All comparisons code-point ([[MergeTable.cpCompare]]
-    * — java's UTF-16 char order must never decide a skip). */
+    * — the string analog of [[compileRange]] for the matching window
+    * [lo, hi] (either side open). Sound by the truncation bounds: the
+    * recorded min is a PREFIX of the true minimum (<= it in code-point
+    * order), the recorded max is >= the true maximum (exact when short,
+    * bumped prefix when truncated, absent when unbumpable — which
+    * disengages the lo test). All comparisons code-point
+    * ([[MergeTable.cpCompare]] — java's UTF-16 char order must never
+    * decide a skip). */
   private def compileRangeStr(c: String, lo: Option[String],
-      hi: Option[String]): FileEntry => Boolean = fe => {
-    val partOk = !partitionCols.contains(c) ||
-      partValueOf(fe, c).forall(pv =>
-        lo.forall(l => MergeTable.cpCompare(pv, l) >= 0) &&
-          hi.forall(h => MergeTable.cpCompare(pv, h) <= 0))
-    partOk && fe.stats.get(c).forall { cs =>
+      hi: Option[String]): FileEntry => Boolean = fe =>
+    fe.stats.get(c).forall { cs =>
       !cs.allNull && cs.strRange.forall { case (mn, mxOpt) =>
         hi.forall(h => MergeTable.cpCompare(mn, h) <= 0) &&
           lo.forall(l =>
             mxOpt.forall(mx => MergeTable.cpCompare(mx, l) >= 0))
       }
     }
-  }
 
   /** First index in sorted `xs` with value >= `target` (xs.length when
     * none). */
@@ -4513,9 +4445,6 @@ final class MergeTable private (
     val i = java.util.Arrays.binarySearch(xs, target)
     if (i >= 0) i else -(i + 1)
   }
-
-  private def notNullEntryMay(c: String, fe: FileEntry): Boolean =
-    !fe.stats.get(c).exists(_.allNull)
 
   /** The attribute name a prunable comparison side resolves to — a
     * relation-level, hence PHYSICAL, name. Casts unwrap: the stats
@@ -4566,20 +4495,6 @@ final class MergeTable private (
     case cxp.Literal(v, org.apache.spark.sql.types.StringType) =>
       Some(v.toString)
     case _ => None
-  }
-
-  /** The literal's partition-string rendering, as hive writes it:
-    * string literals verbatim, integral literals in decimal, DATE
-    * literals as `yyyy-MM-dd`. Everything else — fractional,
-    * timestamp, boolean — yields None and disables partition pruning
-    * for the predicate. */
-  private def litPartStr(l: cxp.Literal): Option[String] = l match {
-    case cxp.Literal(null, _) => None
-    case cxp.Literal(v, org.apache.spark.sql.types.StringType) =>
-      Some(v.toString)
-    case cxp.Literal(d: Int, org.apache.spark.sql.types.DateType) =>
-      Some(java.time.LocalDate.ofEpochDay(d.toLong).toString)
-    case _ => litLongOf(l).map(_.toString)
   }
 
   /** RelPaths among `live`'s BLOOMED files whose sidecars admit AT LEAST
@@ -5010,8 +4925,10 @@ final class MergeTable private (
         !Using.resource(Files.list(destPath))(_.findFirst().isPresent)),
       s"clone destination $dest is not an empty directory")
     val (srcV, live) = latest()
+    // the clone carries the handle's whole layout contract
     val clone = new MergeTable(spark, destPath, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore)
+      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
+      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
     Files.createDirectories(destPath)
     // Deletion-vector refs are root-relative paths exactly like data
     // relPaths — rebase both through the common filesystem.
@@ -5371,14 +5288,6 @@ final class MergeTable private (
     mroot
   }
 
-  /** Drop the materialized row-tracking columns wherever a
-    * footer-derived schema could surface them — they are engine state,
-    * never data ([[MergeTable.RidCol]]). Declared-schema reads never
-    * see them (the explicit scan schema omits them). */
-  private def dropHidden(df: DataFrame): DataFrame =
-    if (df.columns.exists(HiddenCols.contains)) df.drop(HiddenCols.toSeq: _*)
-    else df
-
   /** THE file reader: every read of the table's data files — current,
     * time travel, row tracking, and the MERGE/DELETE/OPTIMIZE rewrite
     * scans — is built here, as ONE manifest-backed scan of all
@@ -5437,12 +5346,12 @@ final class MergeTable private (
       logger.warn(s"MergeTable at $root: live files span $dirs commit " +
         "dirs; run compact() to coalesce small files")
     val (dataFields, partFields) = readFields(declared, entries)
-    val (nullParts, typedParts) = partFields.partition(_.dataType == NullType)
+    val nullParts = partFields.filter(_.dataType == NullType)
     val vectored = entries.exists(_.dv.isDefined)
     val withPos = vectored || rowIds || keep.contains(PosCol)
     val withKey = withPos || keep.contains(FileKeyCol)
-    val scan = manifestScan(entries, StructType(dataFields ++ idFields),
-      StructType(typedParts))
+    val scan = manifestScan(indexOf(entries, partFields),
+      StructType(dataFields ++ idFields))
     val keyed =
       if (!withKey) scan
       else scan.withColumn(FileKeyCol, fileTagExpr(col("_metadata.file_path")))
@@ -5643,18 +5552,39 @@ final class MergeTable private (
     * DataFrameReader resolves every path on the DRIVER (glob check +
     * file status, measured ~0.8 ms each — 16 s per read at 20k live
     * files, warm or cold); a [[ManifestFileIndex]] hands the scan
-    * pre-built statuses straight from log metadata, with exact
-    * lengths served by a JVM-wide memo over the immutable committed
-    * files (one `stat` per file on a cold driver, none warm). Each
-    * file's manifest partition value is cast once per distinct value
-    * to the `partSchema` types (a null slot stays null); the relation
-    * outputs `schema` then `partSchema`. */
-  private def manifestScan(entries: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType,
-      partSchema: org.apache.spark.sql.types.StructType =
-        org.apache.spark.sql.types.StructType(Nil)): DataFrame = {
+    * pre-built statuses straight from log metadata. The relation
+    * outputs `schema` then the index's partition schema. */
+  private def manifestScan(index: ManifestFileIndex,
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val relation = org.apache.spark.sql.execution.datasources
+      .HadoopFsRelation(index, partitionSchema = index.partitionSchema,
+        dataSchema = schema, bucketSpec = None,
+        fileFormat = new org.apache.spark.sql.execution.datasources
+          .parquet.ParquetFileFormat,
+        options = Map.empty)(
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    org.apache.spark.sql.graftshim.GraftStreamShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.LogicalRelation(
+        relation,
+        org.apache.spark.sql.catalyst.types.DataTypeUtils
+          .toAttributes(relation.schema),
+        None, isStreaming = false, None))
+  }
+
+  /** The [[ManifestFileIndex]] a read of `entries` plans over, built
+    * from metadata alone (no scan plan): each file's exact length,
+    * served by a JVM-wide memo over the immutable committed files (one
+    * `stat` per file on a cold driver, none warm), and its typed
+    * partition row — the manifest partition value cast once per
+    * distinct value to `partFields`' types (a null slot stays null; an
+    * all-null, NullType column gets no field). */
+  private def indexOf(entries: Seq[FileEntry],
+      partFields: Seq[org.apache.spark.sql.types.StructField])
+      : ManifestFileIndex = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+    val partSchema = org.apache.spark.sql.types.StructType(
+      partFields.filter(_.dataType != org.apache.spark.sql.types.NullType))
     val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
     val rowOf = entries.map(_.partitionValue).distinct.map { pv =>
       val vals = partValuesOf(pv)
@@ -5670,23 +5600,14 @@ final class MergeTable private (
       ManifestFile(new org.apache.hadoop.fs.Path(p.toUri), len,
         rowOf(e.partitionValue), e)
     }
-    val index = new ManifestFileIndex(
-      new org.apache.hadoop.fs.Path(root.toUri), partSchema, files,
-      scanEntriesByCondition)
-    val relation = org.apache.spark.sql.execution.datasources
-      .HadoopFsRelation(index, partitionSchema = partSchema,
-        dataSchema = schema, bucketSpec = None,
-        fileFormat = new org.apache.spark.sql.execution.datasources
-          .parquet.ParquetFileFormat,
-        options = Map.empty)(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    org.apache.spark.sql.graftshim.GraftStreamShim.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(
-        relation,
-        org.apache.spark.sql.catalyst.types.DataTypeUtils
-          .toAttributes(relation.schema),
-        None, isStreaming = false, None))
+    new ManifestFileIndex(new org.apache.hadoop.fs.Path(root.toUri),
+      partSchema, files, scanEntriesByCondition)
   }
+
+  /** The index a current-schema read of `entries` plans over. */
+  private def indexOf(entries: Seq[FileEntry]): ManifestFileIndex =
+    indexOf(entries,
+      if (entries.isEmpty) Nil else readFields(declaredSchema, entries)._2)
 
   /** Hive-layout read of the files of ONE commit dir; basePath restores
     * the partition column with inferred type. */
@@ -5777,11 +5698,6 @@ final class MergeTable private (
           if (t == HiveDefaultPartition) None
           else Some(unescapePathValue(t)))
     }
-
-  /** The decoded value of partition column `c` for an entry. Caller
-    * guarantees `c` is a partition column. */
-  private def partValueOf(fe: FileEntry, c: String): Option[String] =
-    partValuesOf(fe.partitionValue)(partitionCols.indexOf(c))
 
   /** BOTH partition-discovery questions of a keyed merge in ONE action:
     * (source rows' distinct partition tuples, live partitions holding a
@@ -6396,8 +6312,8 @@ object MergeTable {
   def apply(spark: SparkSession, root: String,
       partitionCol: Option[String] = None,
       statsCol: Option[String] = None): MergeTable =
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq,
-      statsCol.toSeq, logStore = LogStore.forConf(spark))
+    apply(spark, root, partitionCol.toSeq, statsCol.toSeq,
+      deletionVectors = false, bloomCols = Nil)
 
   /** As above with MULTIPLE stats columns (Delta's first-N-columns
     * stats contract, made explicit): every listed long-castable column
@@ -6407,8 +6323,8 @@ object MergeTable {
   def apply(spark: SparkSession, root: String,
       partitionCol: Option[String],
       statsCols: Seq[String]): MergeTable =
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq, statsCols,
-      logStore = LogStore.forConf(spark))
+    apply(spark, root, partitionCol.toSeq, statsCols,
+      deletionVectors = false, bloomCols = Nil)
 
   /** As above with DELETION VECTORS enabled (Delta's
     * `delta.enableDeletionVectors` table feature): [[MergeTable.delete]]
@@ -6442,15 +6358,9 @@ object MergeTable {
       partitionCol: Option[String],
       statsCols: Seq[String],
       deletionVectors: Boolean,
-      bloomCols: Seq[String]): MergeTable = {
-    require(!statsCols.exists(_.startsWith(DvTok)),
-      s"stats column names may not start with '$DvTok' (manifest token prefix)")
-    require(!bloomCols.exists(c => c.exists(",+\t:".contains(_))),
-      "bloom column names may not contain ',', '+', ':' or tab " +
-        "(manifest token separators)")
-    new MergeTable(spark, Paths.get(root), partitionCol.toSeq, statsCols,
-      deletionVectors, bloomCols, logStore = LogStore.forConf(spark))
-  }
+      bloomCols: Seq[String]): MergeTable =
+    apply(spark, root, partitionCol.toSeq, statsCols, deletionVectors,
+      bloomCols)
 
   /** Open a table partitioned on MULTIPLE columns (Delta's
     * `partitionBy(a, b, ...)`): the layout nests one hive level per
@@ -6458,7 +6368,8 @@ object MergeTable {
     * value tuple per file, and every partition-aware path — pruning
     * (manifest stats and partition values), OPTIMIZE WHERE, MERGE's
     * touched-partition probe, generated-column derivation — operates
-    * per column. */
+    * per column. Every other overload opens through this one, so all
+    * run the same input checks. */
   def apply(spark: SparkSession, root: String,
       partitionCols: Seq[String],
       statsCols: Seq[String],

@@ -301,4 +301,42 @@ class GraftScanPruningSpec extends SparkSpec {
       qs.queryExecution.optimizedPlan.treeString)
     assert(qs.select("id").as[Long].collect().toSeq === Seq(1L))
   }
+
+  test("partition predicates are evaluated on typed partition rows: a " +
+      "cast of a DOUBLE partition, and both key probes, keep its rows") {
+    val t = MergeTable(spark, tmpDir("prune_double").toString, Some("s"),
+      Seq("id"), deletionVectors = false, bloomCols = Nil)
+    t.overwrite(Seq((1L, 5.0), (2L, 7.0)).toDF("id", "s"))
+    assert(t.read().schema("s").dataType ===
+      org.apache.spark.sql.types.DoubleType)
+    val q = t.read().filter(col("s").cast("int") === 5)
+    assert(q.select("id").as[Long].collect().toSeq === Seq(1L),
+      q.queryExecution.optimizedPlan.treeString)
+    assert(plannedFiles(q).size === 1,
+      q.queryExecution.optimizedPlan.treeString)
+    // both probe overloads admit a SUPERSET of the key's rows
+    val lit = t.probeKeys("s", Seq(5))
+    assert(lit.select("id").as[Long].collect().toSeq === Seq(1L))
+    val rel = t.probeKeys("s", Seq(5).toDF("k"))
+    assert(rel.select("id").as[Long].collect().toSeq === Seq(1L))
+  }
+
+  test("a DATE range on the partition prunes inside an OR with a data " +
+      "column") {
+    import java.sql.Date
+    def orders(ids: Seq[Long], d: String): DataFrame =
+      ids.map(i => (i, Date.valueOf(d))).toDF("id", "d").coalesce(1)
+    val t = MergeTable(spark, tmpDir("prune_date_range").toString,
+      Some("d"), Seq("id"), deletionVectors = false, bloomCols = Nil)
+    t.overwrite(orders(0L until 10L, "2024-01-01"))
+    (2 to 4).foreach(d =>
+      t.append(orders((d * 10L) until (d * 10L + 10L), s"2024-01-0$d")))
+    assert(plannedFiles(t.read()).size === 4)
+    val q = t.read().filter(
+      col("d") > lit(Date.valueOf("2024-01-02")) || col("id") === 99L)
+    assert(plannedFiles(q).size === 2,
+      q.queryExecution.optimizedPlan.treeString)
+    assert(q.select("id").as[Long].collect().toSet ===
+      (30L until 50L).toSet)
+  }
 }

@@ -1324,4 +1324,16 @@ class MergeTableSpec extends SparkSpec {
     assert(two.read().select("id", "d", "r", "amt").collect().toSet ===
       tricky.collect().toSet)
   }
+
+  test("every apply overload runs the same input checks") {
+    val root = tmpDir("apply_checks").toString
+    // a stats name carrying the manifest's deletion-vector token
+    val opens: Seq[() => MergeTable] = Seq(
+      () => MergeTable(spark, root, None, Some("dv=x")),
+      () => MergeTable(spark, root, None, Seq("dv=x")),
+      () => MergeTable(spark, root, None, Seq("dv=x"), deletionVectors = true),
+      () => MergeTable(spark, root, None, Seq("dv=x"), false, Nil),
+      () => MergeTable(spark, root, Seq("p"), Seq("dv=x"), false, Nil))
+    opens.foreach(open => intercept[IllegalArgumentException](open()))
+  }
 }

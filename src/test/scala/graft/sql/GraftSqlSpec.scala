@@ -427,6 +427,19 @@ class GraftSqlSpec extends SparkSpec {
     assert(contents(c.read()).map(_._1) === Set("o2"))
     assert(contents(viaSql.read()).map(_._1) === Set("o1", "o2"))
     spark.sql("UNREGISTER GRAFT TABLE t_showclone_c")
+    // the clone carries the source handle's whole layout contract
+    val laid = viaSql.withOptimizeWrite.withAutoCompact(1L << 20, 3)
+      .withCheckpointRetention(5, 1000L)
+      .withParquetCheckpointThreshold(7L).withChecksumVerification
+    GraftSql.register("t_showclone_lay", laid)
+    val dest2 = tmpDir("clone_dst").toString + "/c2"
+    spark.sql(
+      s"CLONE GRAFT TABLE t_showclone_lay TO '$dest2' AS t_showclone_lc")
+    def layout(t: MergeTable): List[String] = GraftSql.contractOf(t)
+      .linesIterator.filterNot(_.startsWith("path=")).toList
+    assert(layout(GraftSql.table("t_showclone_lc").get) === layout(laid))
+    spark.sql("UNREGISTER GRAFT TABLE t_showclone_lc")
+    spark.sql("UNREGISTER GRAFT TABLE t_showclone_lay")
   }
 
   test("string literals containing keywords parse (quote-aware grammar)") {
