@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{Sources, Validation}
@@ -16,12 +16,41 @@ import graft.model.Schemas
   *
   * Unlike the reference, validation/quarantine is written for ALL three
   * datasets (the reference silently discards invalid orders/order_items
-  * rows — orders_etl.py:60-62; README.md:108 claims otherwise; SURVEY §1.1).
+  * rows — orders_etl.py:60-62; README.md:108 claims otherwise; SURVEY §1.1),
+  * malformed CSV lines included (rejected as "Malformed record" with the
+  * raw line).
+  *
+  * A job's counts cost no Spark job of their own: `validRows` is the
+  * `numSourceRows` its MERGE recorded in the commit it just made
+  * (counted inside the MERGE's own actions), and `rejectedRows` is
+  * counted as the quarantine write consumes the rejects
+  * ([[graft.ingest.Validation.writeQuarantine]]). Nothing runs between
+  * the MERGE commit and the [[JobResult]].
   */
 object Ingestion {
 
   final case class JobResult(tableVersion: Long, validRows: Long,
       rejectedRows: Long)
+
+  /** MERGE `deduped` into `table` on `pk`: the result with the source-row
+    * count the commit recorded. */
+  private def mergeInto(table: MergeTable, deduped: DataFrame, pk: String,
+      rejected: Long): JobResult = {
+    val v = table.merge(deduped, pk)
+    JobResult(v, table.operationMetrics(v)("numSourceRows"), rejected)
+  }
+
+  /** Write `rejected` to the quarantine at `path` under the
+    * `graft:quarantine:<table>` job label; how many rows it wrote. */
+  private def quarantine(spark: SparkSession, rejected: DataFrame,
+      path: String, tableRoot: String): Long = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(
+      s"graft:quarantine:${java.nio.file.Paths.get(tableRoot).getFileName}")
+    try Validation.writeQuarantine(rejected, path)
+    finally sc.setJobDescription(prev)
+  }
 
   /** The layout of every ingestion target, decided here once: one
     * partition column and optimized writes (one file per touched
@@ -38,29 +67,28 @@ object Ingestion {
     val raw = Sources.csv(spark, rawPath, Schemas.productsRaw)
     val split = Validation.requireNotNull(raw, Schemas.productsRequired)
     try {
-      Validation.writeQuarantine(split.rejected, quarantinePath)
+      val rejected = quarantine(spark, split.rejected, quarantinePath,
+        tableRoot)
       val conformed = split.valid
         .withColumn("department_id", col("department_id").cast("int"))
         .withColumn("ingestion_timestamp", current_timestamp())
       val deduped = Validation.dedupByKey(conformed, Schemas.productsPk,
         Seq(col("department_id"), col("product_name")))
-      val v = target(spark, tableRoot, Schemas.productsPartition)
-        .merge(deduped, Schemas.productsPk)
-      JobResult(v, deduped.count(), split.rejected.count())
+      mergeInto(target(spark, tableRoot, Schemas.productsPartition),
+        deduped, Schemas.productsPk, rejected)
     } finally split.unpersist()
   }
 
   /** orders: multi-file permissive CSV (≙ the reference's Excel sheets) →
-    * required-field + value rules → conform/derive date → dedup → MERGE on
-    * order_id, partitioned by date (ref: orders_etl.py:41-103). Includes the
-    * DOC-ONLY `total_amount > 0` and timestamp-range rules for real
+    * well-formed + required-field + value rules → conform/derive date →
+    * dedup → MERGE on order_id, partitioned by date (ref:
+    * orders_etl.py:41-103). Includes the DOC-ONLY `total_amount > 0` and
+    * timestamp-range rules for real
     * (docs/full_implementation_guide.md:142-143). */
   def ordersJob(spark: SparkSession, rawDir: String, tableRoot: String,
-      quarantinePath: String): JobResult = {
-    val scan = Sources.csvPermissive(spark, rawDir, Schemas.ordersRaw)
-    try runOrders(spark, scan.good, tableRoot, quarantinePath)
-    finally scan.unpersist()
-  }
+      quarantinePath: String): JobResult =
+    runOrders(spark, Sources.csvWithCorrupt(spark, rawDir, Schemas.ordersRaw),
+      tableRoot, quarantinePath)
 
   /** orders from a REAL `.xlsx` workbook — the reference's actual input
     * format (`orders_etl.py:41-64`): [[graft.ingest.Excel.readXlsx]]
@@ -85,14 +113,16 @@ object Ingestion {
   /** Shared orders chain: conform → rules/quarantine → dedup → MERGE
     * (ref: orders_etl.py:57-96; `total_amount > 0` and timestamp-range
     * rules are the DOC-ONLY claims of
-    * docs/full_implementation_guide.md:142-143, implemented for real). */
+    * docs/full_implementation_guide.md:142-143, implemented for real).
+    * A `raw` from a permissive scan carries [[Sources.CorruptCol]]; its
+    * malformed rows are rejected first. */
   private def runOrders(spark: SparkSession, raw: DataFrame,
       tableRoot: String, quarantinePath: String): JobResult = {
     val conformed = raw
       .withColumn("order_timestamp", col("order_timestamp").cast("timestamp"))
       .withColumn("date", to_date(col("order_timestamp")))
       .withColumn("ingestion_timestamp", current_timestamp())
-    val split = Validation.withRules(conformed, Seq(
+    val split = Validation.withRules(conformed, wellFormed(raw) ++ Seq(
       Schemas.ordersRequired.map(col(_).isNotNull).reduce(_ && _) ->
         "Missing required fields",
       (col("order_timestamp") >= lit("1990-01-01").cast("timestamp") &&
@@ -102,30 +132,39 @@ object Ingestion {
         "total_amount must be positive",
     ))
     try {
-      Validation.writeQuarantine(split.rejected, quarantinePath)
-      val deduped = Validation.dedupByKey(split.valid, Schemas.ordersPk,
+      val rejected = quarantine(spark, split.rejected, quarantinePath,
+        tableRoot)
+      val deduped = Validation.dedupByKey(
+        split.valid.drop(Sources.CorruptCol), Schemas.ordersPk,
         Seq(col("order_timestamp")))
-      val v = target(spark, tableRoot, Schemas.ordersPartition)
-        .merge(deduped, Schemas.ordersPk)
-      JobResult(v, deduped.count(), split.rejected.count())
+      mergeInto(target(spark, tableRoot, Schemas.ordersPartition), deduped,
+        Schemas.ordersPk, rejected)
     } finally split.unpersist()
   }
 
-  /** order_items: permissive CSV scan → required fields → conform →
-    * FK-integrity left-semi joins against orders + products → dedup →
-    * derived order_item_total (DOC-ONLY, guide:153) → MERGE on id,
-    * partitioned by date (ref: order_items_etl.py:44-130). */
+  /** The malformed-record rule when `raw` comes from a permissive scan. */
+  private def wellFormed(raw: DataFrame): Seq[(Column, String)] =
+    if (raw.columns.contains(Sources.CorruptCol)) Seq(Validation.wellFormed)
+    else Nil
+
+  /** order_items: permissive CSV scan → well-formed + required fields →
+    * conform → FK-integrity left-semi joins against orders + products →
+    * dedup → MERGE on id, partitioned by date (ref:
+    * order_items_etl.py:44-130). */
   def orderItemsJob(spark: SparkSession, rawDir: String,
       ordersTableRoot: String, productsTableRoot: String, tableRoot: String,
       quarantinePath: String): JobResult = {
-    val scan = Sources.csvPermissive(spark, rawDir, Schemas.orderItemsRaw)
-    val conformed = scan.good
+    val raw = Sources.csvWithCorrupt(spark, rawDir, Schemas.orderItemsRaw)
+    val conformed = raw
       .withColumn("order_timestamp", col("order_timestamp").cast("timestamp"))
       .withColumn("date", to_date(col("order_timestamp")))
       .withColumn("ingestion_timestamp", current_timestamp())
-    val split = Validation.requireNotNull(conformed, Schemas.orderItemsRequired)
+    val split = Validation.withRules(conformed, Seq(Validation.wellFormed,
+      Schemas.orderItemsRequired.map(col(_).isNotNull).reduce(_ && _) ->
+        "Missing required fields"))
     try {
-      Validation.writeQuarantine(split.rejected, quarantinePath)
+      val rejected = quarantine(spark, split.rejected, quarantinePath,
+        tableRoot)
 
       // FK key sets — column-pruned before the join; broadcast-size dimension
       // key sets never shuffle the fact side (ref: order_items_etl.py:45-56).
@@ -136,15 +175,14 @@ object Ingestion {
         Some(Schemas.productsPartition)).read()
         .select(col(Schemas.productsPk).as("product_id")).distinct()
 
-      val withFk = split.valid
+      val withFk = split.valid.drop(Sources.CorruptCol)
         .join(orderKeys, Seq("order_id"), "left_semi")
         .join(broadcast(productKeys), Seq("product_id"), "left_semi")
       val deduped = Validation.dedupByKey(withFk, Schemas.orderItemsPk,
         Seq(col("order_timestamp")))
-      val v = target(spark, tableRoot, Schemas.orderItemsPartition)
-        .merge(deduped, Schemas.orderItemsPk)
-      JobResult(v, deduped.count(), split.rejected.count())
-    } finally { split.unpersist(); scan.unpersist() }
+      mergeInto(target(spark, tableRoot, Schemas.orderItemsPartition),
+        deduped, Schemas.orderItemsPk, rejected)
+    } finally split.unpersist()
   }
 
   /** S8 — catalog registration, the reference's `CREATE TABLE ... USING

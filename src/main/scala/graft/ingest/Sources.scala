@@ -39,21 +39,31 @@ object Sources {
 
   def csvPermissive(spark: SparkSession, dir: String,
       schema: StructType): PermissiveScan = {
-    val withCorrupt = schema.add("_corrupt_record", "string")
-    val raw = spark.read
+    // one scan serves both branches (ref re-scans; SURVEY §3.2)
+    val raw = csvWithCorrupt(spark, dir, schema).cache()
+    val good = raw.filter(raw(CorruptCol).isNull).drop(CorruptCol)
+    val bad = raw.filter(raw(CorruptCol).isNotNull).select(CorruptCol)
+    PermissiveScan(good, bad, raw)
+  }
+
+  /** The uncached PERMISSIVE scan behind [[csvPermissive]]: `schema`
+    * plus [[CorruptCol]], which holds the raw line of a malformed row
+    * (its typed fields read NULL) and is NULL otherwise. Spark refuses
+    * a query that reads ONLY the corrupt column straight from the
+    * file, so consume it through a cache that also reads the others
+    * (as [[graft.ingest.Validation.withRules]] does). */
+  def csvWithCorrupt(spark: SparkSession, dir: String,
+      schema: StructType): DataFrame =
+    spark.read
       .format("csv")
       .option("header", "true")
       .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .schema(withCorrupt)
+      .option("columnNameOfCorruptRecord", CorruptCol)
+      .schema(schema.add(CorruptCol, "string"))
       .load(dir)
-      .cache() // one scan serves both branches (ref re-scans; SURVEY §3.2)
-    val good = raw.filter(raw("_corrupt_record").isNull)
-      .drop("_corrupt_record")
-    val bad = raw.filter(raw("_corrupt_record").isNotNull)
-      .select("_corrupt_record")
-    PermissiveScan(good, bad, raw)
-  }
+
+  /** The column a permissive scan puts a malformed row's raw line in. */
+  val CorruptCol = "_corrupt_record"
 
   /** S4 — parquet table scan (replaces Delta scan,
     * ref: order_items_etl.py:45,53-55). */

@@ -65,8 +65,6 @@ object Validation {
       .drop("__rn")
   }
 
-  /** S7 — quarantine sink for rejected rows
-    * (ref: product_etl.py:64-70 — CSV, header, overwrite). */
   /** DLT-style expectations report: evaluate every named rule in ONE
     * pass over the data — each rule becomes a conditional-sum aggregate
     * (map-side combinable, no per-rule scan, no shuffle beyond the
@@ -96,7 +94,29 @@ object Validation {
             .otherwise(col("e.n_rows")).cast("double"), 6).as("fail_frac"))
   }
 
-  def writeQuarantine(rejected: DataFrame, path: String): Unit =
-    if (!rejected.isEmpty)
-      rejected.write.mode("overwrite").option("header", "true").csv(path)
+  /** The quarantine column holding a malformed row's raw line. */
+  val RawRecordCol = "raw_record"
+
+  /** The first rule of a split over a permissive scan
+    * ([[Sources.csvWithCorrupt]]): a malformed row is rejected with its
+    * raw line, which the quarantine keeps as [[RawRecordCol]]. */
+  val wellFormed: (Column, String) =
+    col(Sources.CorruptCol).isNull -> "Malformed record"
+
+  /** S7 — quarantine sink for rejected rows (ref: product_etl.py:64-70 —
+    * CSV, header, overwrite); returns how many it wrote. The rows are
+    * counted as the write consumes them
+    * ([[graft.lake.MergeTable.countedRows]]), so the count runs no job;
+    * with no rejected row (the `isEmpty` probe) nothing is written and
+    * the count is 0. A malformed row's raw line is written as
+    * [[RawRecordCol]]: a CSV reader takes a `_corrupt_record` header
+    * column for its own corrupt-record slot and misaligns the rest. */
+  def writeQuarantine(rejected: DataFrame, path: String): Long =
+    if (rejected.isEmpty) 0L
+    else {
+      val (counted, rows) = graft.lake.MergeTable.countedRows(
+        rejected.withColumnRenamed(Sources.CorruptCol, RawRecordCol))
+      counted.write.mode("overwrite").option("header", "true").csv(path)
+      rows()
+    }
 }

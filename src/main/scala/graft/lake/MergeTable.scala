@@ -10,6 +10,7 @@ import scala.util.Using
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{expressions => cxp}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftStreamShim
 
 /** Lakehouse-lite: a partitioned parquet table with ACID-ish versioned
   * commits and join-based MERGE upsert.
@@ -1111,7 +1112,10 @@ final class MergeTable private (
     // THIS reader accepts 2- and 4-field headers, but a pre-feature
     // binary cannot read 4-field logs — a mixed-version deployment
     // would need Delta's protocol/readerVersion gate before extending
-    // the header again (r12 advice note).
+    // the header again (r12 advice note). OPERATION METRICS (Delta's
+    // operationMetrics) are an optional fifth field, `k=<long>` lines,
+    // b64 — a 4-field reader never looks past field four, so adding it
+    // needs no gate.
     val header =
       if (op.isEmpty) s"S\t$stamp"
       else {
@@ -1122,8 +1126,13 @@ final class MergeTable private (
           .map { case (k, x) =>
             s"$k=" + b64.encodeToString(x.getBytes("UTF-8"))
           }.mkString("\n")
+        val metrics =
+          if (delta.metrics.isEmpty) ""
+          else "\t" + b64.encodeToString(delta.metrics.toSeq.sortBy(_._1)
+            .map { case (k, n) => s"$k=$n" }.mkString("\n")
+            .getBytes("UTF-8"))
         s"S\t$stamp\t" + b64.encodeToString(op.getBytes("UTF-8")) +
-          "\t" + b64.encodeToString(kv.getBytes("UTF-8"))
+          "\t" + b64.encodeToString(kv.getBytes("UTF-8")) + metrics
       }
     if (logStore.putIfAbsent(logDir.resolve(f"$v%020d.txt"),
         header + "\n" + deltaBody(delta))) {
@@ -1148,33 +1157,42 @@ final class MergeTable private (
   private def commitTsOf(v: Long): Option[Long] =
     headerOf(v).map(_._1)
 
+  /** The operation metrics version `v`'s commit recorded (Delta's
+    * `operationMetrics`: a MERGE's `numSourceRows`) — empty for a
+    * commit that recorded none, a pre-feature or a vacuum-pruned one.
+    * One first-line read of the delta; no data file is touched. */
+  def operationMetrics(v: Long): Map[String, Long] =
+    headerOf(v).map(_._3).getOrElse(Map.empty)
+
   /** One buffered first-line read serving BOTH header consumers (the
     * in-commit timestamp and the operation metadata) — [[history]]
     * would otherwise open every delta file twice for the same line. */
   private def headerOf(v: Long)
-      : Option[(Long, Option[(String, Map[String, String])])] = {
+      : Option[(Long, Option[(String, Map[String, String])],
+          Map[String, Long])] = {
     val p = logDir.resolve(f"$v%020d.txt")
     if (!Files.exists(p)) return None
     val first = Using.resource(Files.newBufferedReader(p))(_.readLine())
     if (first == null || !first.startsWith("S\t"))
-      return Some((Files.getLastModifiedTime(p).toMillis, None))
+      return Some((Files.getLastModifiedTime(p).toMillis, None, Map.empty))
     val fields = first.split('\t')
     val stamp = fields(1).toLong
     // an empty params token leaves a trailing tab split() drops —
     // accept the 3-field form
-    if (fields.length < 3) return Some((stamp, None))
+    if (fields.length < 3) return Some((stamp, None, Map.empty))
     val dec = java.util.Base64.getDecoder
+    def lines(i: Int): Seq[(String, String)] =
+      if (fields.length <= i) Nil
+      else new String(dec.decode(fields(i)), "UTF-8").split('\n').toSeq
+        .filter(_.contains('=')).map { line =>
+          val j = line.indexOf('=')
+          line.substring(0, j) -> line.substring(j + 1)
+        }
     val op = new String(dec.decode(fields(2)), "UTF-8")
-    val kv =
-      if (fields.length < 4) ""
-      else new String(dec.decode(fields(3)), "UTF-8")
-    val params = kv.split('\n').filter(_.contains('='))
-      .map { line =>
-        val i = line.indexOf('=')
-        line.substring(0, i) ->
-          new String(dec.decode(line.substring(i + 1)), "UTF-8")
-      }.toMap
-    Some((stamp, Some((op, params))))
+    val params = lines(3).map { case (k, x) =>
+      k -> new String(dec.decode(x), "UTF-8") }.toMap
+    Some((stamp, Some((op, params)),
+      lines(4).map { case (k, n) => k -> n.toLong }.toMap))
   }
 
   /** Operation label for the constraint channel's three rule kinds:
@@ -1952,18 +1970,21 @@ final class MergeTable private (
           FileEntry(rel, encodePartValues(vals))
         }.toSeq
     }
-    // Seed the dir-schema memo with the WRITTEN schema, recursively
-    // nullable-ized — exactly what footer inference returns for files
-    // this writer just produced (probed: read-back differs from the
-    // written schema ONLY in nullability, at every nesting level). The
-    // first read of the fresh commit dir then skips its footer-
-    // inference Spark job (r15 job diet: 15-20 such jobs per lifecycle
-    // query, one per commit). Partitioned dirs still infer: hive
-    // partition-TYPE inference unions the listed VALUE strings, which
-    // the written frame does not determine.
-    if (partitionCols.isEmpty && entries.nonEmpty)
-      dirSchemaMemo.get(dirSchemaKey(commitDir, entries))(
-        MergeTable.allNullable(writtenSchema))
+    // Seed the data-schema memo with the WRITTEN data fields,
+    // recursively nullable-ized — exactly what footer inference returns
+    // for files this writer just produced (probed: read-back differs
+    // from the written schema ONLY in nullability, at every nesting
+    // level), keyed on the file [[dirSchema]] reads first; then resolve
+    // the fresh dir, whose partition fields come from the dir names. Its
+    // first read then reads no footer (r15 job diet: 15-20 footer-
+    // inference jobs per lifecycle query, one per commit).
+    if (entries.nonEmpty) {
+      dataSchemaMemo.get(entries.map(e => root.resolve(e.relPath)
+          .toAbsolutePath.normalize.toString).min)(
+        MergeTable.allNullable(org.apache.spark.sql.types.StructType(
+          writtenSchema.filterNot(f => partitionCols.contains(f.name)))))
+      dirSchema(commitDir, entries)
+    }
     (commitDir, withBlooms(withStats(target, entries), writtenSchema))
   }
 
@@ -2414,17 +2435,20 @@ final class MergeTable private (
     requireIdentityCarried(source, "MERGE")
     enforceConstraints(source, "MERGE source")
     val src = source.cache()
-    try upsert(Map("key" -> pk), src, src.select(col(pk)).distinct(), pk,
-      evolveSchema)
-    finally src.unpersist()
+    try {
+      val (upserts, sourceRows) = MergeTable.countedRows(src)
+      upsert(Map("key" -> pk), upserts, src.select(col(pk)).distinct(), pk,
+        evolveSchema, sourceRows)
+    } finally src.unpersist()
   }
 
   /** The row step [[merge]] and [[mergeCdc]] share: the touched files
     * minus every row whose key is in `keys`, plus `upserts`. */
   private def upsert(params: Map[String, String], upserts: DataFrame,
-      keys: DataFrame, pk: String, evolveSchema: Boolean): Long =
+      keys: DataFrame, pk: String, evolveSchema: Boolean,
+      sourceRows: () => Long): Long =
     mergeCore(params, Some(upserts), keys, Seq(pk), evolveSchema,
-        onEmpty = upserts) { touched =>
+        onEmpty = upserts, sourceRows = sourceRows) { touched =>
       readEntries(touched).join(keys, Seq(pk), "left_anti")
         .unionByName(upserts, allowMissingColumns = evolveSchema)
     }
@@ -2445,13 +2469,19 @@ final class MergeTable private (
     *     every live file;
     *   - row step: `rows(touched)` is what replaces the touched files;
     *     an empty table gets `onEmpty`;
-    *   - commit: the written files are added, the touched ones removed.
+    *   - commit: the written files are added, the touched ones removed;
+    *     the header records `numSourceRows` from `sourceRows`, a
+    *     [[MergeTable.countedRows]] count the caller's source carries,
+    *     read once the first action that reads the whole source has
+    *     returned (the touched-partition collect on a partitioned
+    *     table, else the write), so counting runs no job of its own.
     *
     * `src` is the source rows the merge may write; a merge that writes
     * none passes None. */
   private def mergeCore(params: Map[String, String], src: Option[DataFrame],
       keys: DataFrame, keyCols: Seq[String], evolveSchema: Boolean,
-      onEmpty: DataFrame, touchAll: Boolean = false)(
+      onEmpty: DataFrame, sourceRows: () => Long,
+      touchAll: Boolean = false)(
       rows: Seq[FileEntry] => DataFrame): Long =
     retryingCommit("MERGE", params) { () =>
       val (version, live) = latest()
@@ -2483,12 +2513,14 @@ final class MergeTable private (
               s"$MaxPartitionsPerMerge); repartition the source or " +
               "raise the guard — partition values are driver metadata")
           val parts = srcParts ++ matchedParts
+          sourceRows() // the collect read every source row
           live.filter(e => parts.contains(e.partitionValue))
         }
       val out = if (live.isEmpty) onEmpty else rows(touched)
       val (_, newEntries) = writeData(out)
       (CommitDelta(newEntries, touched.map(_.relPath),
-        mSchema = if (evolveSchema) evolvedSchema(out) else None), version)
+        mSchema = if (evolveSchema) evolvedSchema(out) else None,
+        metrics = Map("numSourceRows" -> sourceRows())), version)
     }
 
   /** When this table has a DECLARED schema and a schema-evolving write
@@ -2660,8 +2692,10 @@ final class MergeTable private (
     val src = source.cache()
     try {
       // Delta's multi-match guard: clause outcomes must not depend on
-      // which of several matching source rows is seen first.
-      val dup = src.groupBy(keys.map(col): _*).count()
+      // which of several matching source rows is seen first. Its
+      // aggregate reads every source row, so it also counts them.
+      val (counted, sourceRows) = MergeTable.countedRows(src)
+      val dup = counted.groupBy(keys.map(col): _*).count()
         .filter(col("count") > 1).limit(1).collect()
       require(dup.isEmpty,
         s"merge: multiple source rows share key ${dup.headOption
@@ -2675,7 +2709,7 @@ final class MergeTable private (
       mergeCore(Map("keys" -> keys.mkString(",")),
           if (writesRows) Some(src) else None,
           src.select(keys.map(col): _*).distinct(), keys, evolveSchema,
-          onEmpty = if (insertUnmatched) inserts else none,
+          onEmpty = if (insertUnmatched) inserts else none, sourceRows,
           // WHEN NOT MATCHED BY SOURCE must examine every live row —
           // any partition may hold an unmatched target row
           touchAll = notMatchedBySourceDelete.isDefined) { touched =>
@@ -2810,9 +2844,12 @@ final class MergeTable private (
       "CDC-apply upserts")
     val src = collapsed.cache()
     try {
+      // counted below the delete filter: numSourceRows is every event
+      val (events, sourceRows) = MergeTable.countedRows(src)
       try upsert(Map("key" -> pk, "feed" -> "cdc"),
-        src.filter(col(ChangeType) =!= "delete").drop(ChangeType),
-        src.select(col(pk)).distinct(), pk, evolveSchema = false)
+        events.filter(col(ChangeType) =!= "delete").drop(ChangeType),
+        src.select(col(pk)).distinct(), pk, evolveSchema = false,
+        sourceRows)
       catch {
         // The fused tie check raises inside a Spark task; unwrap the
         // job-failure layers back to the SEQUENCE BY contract's
@@ -4980,7 +5017,9 @@ final class MergeTable private (
 
   /** DESCRIBE HISTORY parity: one row per commit — version, commit
     * time (the same in-commit-stamp clock [[readAsOf]] trusts), files
-    * added/removed, and whether a checkpoint exists at that version.
+    * added/removed, whether a checkpoint exists at that version, and
+    * the operation metrics the commit recorded (`k=v; …`, null when
+    * none — a MERGE records `numSourceRows`).
     * Reads only the log directory (metadata-scale; never data files),
     * newest first. Vacuumed-away versions are listed only if their
     * delta survives. */
@@ -5002,11 +5041,14 @@ final class MergeTable private (
             .map { case (k, x) => s"$k=$x" }.mkString("; ")).orNull,
           actions.count(_.isInstanceOf[Add]).toLong,
           actions.count(_.isInstanceOf[Remove]).toLong,
-          Files.exists(logDir.resolve(f"$v%020d$CkptSuffix"))))
+          Files.exists(logDir.resolve(f"$v%020d$CkptSuffix")),
+          hdr.map(_._3).filter(_.nonEmpty).map(_.toSeq.sortBy(_._1)
+            .map { case (k, n) => s"$k=$n" }.mkString("; ")).orNull))
       }
     }
     rows.toDF("version", "committed_at", "operation",
-      "operation_parameters", "n_added", "n_removed", "has_checkpoint")
+      "operation_parameters", "n_added", "n_removed", "has_checkpoint",
+      "operation_metrics")
   }
 
   /** Time travel by timestamp (Delta's `timestampAsOf`; the reference's
@@ -5373,11 +5415,14 @@ final class MergeTable private (
     * the declared schema or the per-commit-dir footer union; one field
     * per partition column (its declared type, else the hive-inferred
     * one), or none when some partition column has no field (a declared
-    * schema without it, a layout not hive-partitioned by it). A dir
-    * whose every file sits in the hive default (null) partition infers
-    * NullType for a partition column — prefer a dir with a real
-    * inferred type; all-null reads as a null literal. Partition fields
-    * come back bare (nullable, no metadata), the shape the scan
+    * schema without it, a layout not hive-partitioned by it). Dirs infer
+    * from their own live values, so they can disagree (a MERGE that
+    * leaves an old dir only small values narrows it to INT beside a
+    * LONG dir): the type is the widest, as Spark's inference widens
+    * across the values of one read. A dir whose every file sits in the
+    * hive default (null) partition infers NullType for a partition
+    * column and is skipped; all-null reads as a null literal. Partition
+    * fields come back bare (nullable, no metadata), the shape the scan
     * yields. Groups by commitDirOf (not the first path component) so a
     * clone's rebased "../source/commit-x" entries resolve per SOURCE
     * commit dir. */
@@ -5401,8 +5446,10 @@ final class MergeTable private (
           },
           partitionCols.flatMap { pc =>
             val fs = dirSchemas.flatMap(_.fields.find(_.name == pc))
-            fs.find(_.dataType != org.apache.spark.sql.types.NullType)
-              .orElse(fs.headOption)
+            fs.headOption.map(_.copy(dataType = fs.map(_.dataType)
+              .filter(_ != org.apache.spark.sql.types.NullType)
+              .reduceOption(MergeTable.widerPartitionType)
+              .getOrElse(fs.head.dataType)))
           })
     }
     (dataFields,
@@ -5563,7 +5610,7 @@ final class MergeTable private (
           .parquet.ParquetFileFormat,
         options = Map.empty)(
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    org.apache.spark.sql.graftshim.GraftStreamShim.ofRows(spark,
+    GraftStreamShim.ofRows(spark,
       org.apache.spark.sql.execution.datasources.LogicalRelation(
         relation,
         org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -5609,35 +5656,49 @@ final class MergeTable private (
     indexOf(entries,
       if (entries.isEmpty) Nil else readFields(declaredSchema, entries)._2)
 
-  /** Hive-layout read of the files of ONE commit dir; basePath restores
-    * the partition column with inferred type. */
-  private def hiveRead(dir: String, es: Seq[FileEntry]): DataFrame =
-    spark.read
-      .option("basePath", root.resolve(dir).toString)
-      .parquet(es.map(e => root.resolve(e.relPath).toString): _*)
-
-  /** MEMOIZED per-commit-dir schema resolution for the multi-dir read.
-    * Each [[hiveRead]]`.schema` costs a driver-side file listing plus
-    * footer reads (~80 ms) and [[readFields]] runs one per live
-    * commit dir PER READ — a 100-commit streaming-append table measured
-    * 7.6 s cold and 9.4 s WARM for every `read()` from exactly this
-    * (r13). Commit dirs are immutable (a commit
-    * writes a fresh dir; vacuum removes whole dirs), so the resolution
-    * is a pure function of (dir, live subset) — the subset is part of
-    * the key because hive partition-TYPE inference unions the VALUE
-    * strings of precisely the listed files. JVM-wide on purpose:
-    * queries open fresh handles per call, and the dirs' immutability
-    * makes cross-handle reuse exact. */
-  private def dirSchema(dir: String,
-      es: Seq[FileEntry]): org.apache.spark.sql.types.StructType =
-    dirSchemaMemo.get(dirSchemaKey(dir, es))(hiveRead(dir, es).schema)
-
-  /** The [[dirSchemaMemo]] key for commit dir `dir` read through the
-    * live subset `es` — shared by the read-side resolution and the
-    * write-side seed so they can never drift. */
-  private def dirSchemaKey(dir: String, es: Seq[FileEntry]): String =
-    root.resolve(dir).toAbsolutePath.normalize.toString + "|" +
-      es.map(_.relPath).sorted.mkString(",")
+  /** MEMOIZED per-commit-dir schema resolution for the multi-dir read:
+    * exactly what a hive-layout read of `es` under the dir
+    * (`spark.read.option("basePath", dir).parquet(files).schema`)
+    * resolves, built on the driver with NO Spark job. [[readFields]]
+    * runs one per live commit dir PER READ, and that read's schema
+    * costs a file listing plus a footer-merge Spark job (~80 ms; a
+    * 100-commit streaming-append table measured 7.6 s cold for every
+    * `read()` from exactly this, r13), so:
+    *
+    *   - data fields: the footer schema of the subset's first file in
+    *     path order — the one file Spark's non-merging inference reads
+    *     — nullable, memoized per file ([[dataSchemaMemo]]; the
+    *     [[writeData]] seed makes a fresh commit's first read free);
+    *   - partition fields: Spark's own hive partition inference over
+    *     the subset's partition dirs ([[GraftStreamShim.hiveSchema]]),
+    *     from the names alone.
+    *
+    * Commit dirs are immutable (a commit writes a fresh dir; vacuum
+    * removes whole dirs), so the result is a pure function of (dir,
+    * live subset, the inference settings): the subset is in the key
+    * because partition-TYPE inference unions the VALUE strings of
+    * precisely the listed files, and the type-inference flag and
+    * session time zone because the inference reads them. JVM-wide on
+    * purpose: queries open fresh handles per call, and the key makes
+    * cross-handle and cross-session reuse exact. */
+  private[lake] def dirSchema(dir: String,
+      es: Seq[FileEntry]): org.apache.spark.sql.types.StructType = {
+    val conf = spark.sessionState.conf
+    val key = root.resolve(dir).toAbsolutePath.normalize.toString + "|" +
+      es.map(_.relPath).sorted.mkString(",") + "|" +
+      conf.partitionColumnTypeInferenceEnabled + "|" +
+      conf.sessionLocalTimeZone
+    dirSchemaMemo.get(key) {
+      val files = es.map(e => root.resolve(e.relPath).toAbsolutePath
+        .normalize)
+      val first = files.map(_.toString).min
+      val data = dataSchemaMemo.get(first)(MergeTable.allNullable(
+        GraftStreamShim.parquetDataSchema(spark, first)))
+      GraftStreamShim.hiveSchema(spark, data,
+        files.map(_.getParent.toString).distinct,
+        root.resolve(dir).toAbsolutePath.normalize.toString)
+    }
+  }
 
   /** Empty frame with the table's PHYSICAL schema under `declared`.
     * Stays physical on purpose: [[readEntries]] presents it for an
@@ -5911,6 +5972,22 @@ object MergeTable {
     }
   }
 
+  /** Two partition types widened as Spark's partition inference widens
+    * the values of one read (`PartitioningUtils`): LONG or DOUBLE
+    * meeting a type that cannot hold both exactly, and any pair without
+    * a wider type, become STRING. */
+  private def widerPartitionType(a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    (a, b) match {
+      case (DoubleType, _: DecimalType) | (_: DecimalType, DoubleType) |
+           (DoubleType, LongType) | (LongType, DoubleType) => StringType
+      case _ => org.apache.spark.sql.catalyst.analysis.TypeCoercion
+        .findWiderTypeForTwo(a, b).getOrElse(StringType)
+    }
+  }
+
   private[lake] def allNullable(st: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType =
     allNullable(st: org.apache.spark.sql.types.DataType)
@@ -6004,13 +6081,38 @@ object MergeTable {
   private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
   private val MaxCommitRetries = 5
 
-  /** See [[MergeTable.dirSchema]] — (dir + live subset) → resolved
-    * footer/hive schema, exact by commit-dir immutability. LRU-bounded
+  /** `df` counted in-plan, as Delta's `IncrementMetric` counts: the
+    * frame to consume in place of `df`, whose rows tick an accumulator
+    * as an action reads them, and the count — the accumulator's value
+    * at the FIRST call, so call it once the first action that reads the
+    * frame whole has returned (later actions over the frame tick it
+    * again; accumulator updates are merged before an action returns).
+    * Counting adds no job. A partial action, like `isEmpty` or a
+    * `limit`, must not run over the frame before that. */
+  private[graft] def countedRows(df: DataFrame): (DataFrame, () => Long) = {
+    val rows = df.sparkSession.sparkContext.longAccumulator("graft:rows")
+    val tick = udf(() => { rows.add(1L); true }).asNondeterministic()
+    lazy val first: Long = rows.value
+    (df.filter(tick()), () => first)
+  }
+
+  /** See [[MergeTable.dirSchema]] — (dir + live subset + the session's
+    * partition-type-inference flag and time zone) → resolved
+    * footer/hive schema, exact by commit-dir immutability; the settings
+    * in the key keep one JVM-wide memo sound across sessions. LRU-bounded
     * ([[LruMemo]]): overflow evicts only the least-recently-used dir,
     * so resolution cost stays monotonic past 65k dirs (the r13 bound
     * cleared the WHOLE memo at overflow). Package-visible so specs can
     * pin hit-rate survival across an overflow. */
   private[lake] val dirSchemaMemo =
+    new LruMemo[String, org.apache.spark.sql.types.StructType](65536)
+
+  /** Absolute data-file path → its nullable footer data schema, the
+    * data half of [[MergeTable.dirSchema]]: exact by file
+    * immutability, and independent of the live subset and of the
+    * partition-inference settings, so a MERGE that shrinks an old
+    * commit dir's subset re-resolves only its partition fields. */
+  private[lake] val dataSchemaMemo =
     new LruMemo[String, org.apache.spark.sql.types.StructType](65536)
 
   /** Absolute committed-file path → exact byte length, for the
@@ -6200,7 +6302,8 @@ object MergeTable {
       txns: Seq[(String, Long)] = Nil,
       mSchema: Option[String] = None,
       protocol: Option[(Set[String], Set[String])] = None,
-      rowIdHwm: Option[Long] = None)
+      rowIdHwm: Option[Long] = None,
+      metrics: Map[String, Long] = Map.empty)
 
   /** The Hilbert xy2d fold as one SQL expression over 16-bit inputs
     * `xSql`/`ySql`: a codegen'd `aggregate` HOF over the bit levels

@@ -1193,7 +1193,8 @@ object GraftSql {
 }
 
 /** `DESCRIBE HISTORY <name>` — the commit log as a result set
-  * (version, committed_at, files added/removed, checkpoint marker).
+  * (version, committed_at, operation and parameters, files
+  * added/removed, checkpoint marker, operation metrics).
   * Metadata-scale by construction: [[MergeTable.history]] reads only
   * the log directory, never data files, so collecting it to the
   * driver is a few rows per commit. */
@@ -1223,7 +1224,9 @@ object GraftHistoryCommand {
       org.apache.spark.sql.types.StringType, nullable = true),
     StructField("n_added", LongType, nullable = false),
     StructField("n_removed", LongType, nullable = false),
-    StructField("has_checkpoint", BooleanType, nullable = false)))
+    StructField("has_checkpoint", BooleanType, nullable = false),
+    StructField("operation_metrics",
+      org.apache.spark.sql.types.StringType, nullable = true)))
 }
 
 /** `SHOW PARTITIONS` over the manifest — output columns depend on

@@ -84,4 +84,51 @@ object GraftStreamShim {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The data schema Spark's (non-merging) parquet schema inference
+    * reads from `file`: the Spark schema its writer embedded, else the
+    * converted parquet schema, under the session's parquet settings —
+    * one footer read on the driver, where inference would run a
+    * footer-merge Spark job. Not yet nullable-ized (the file relation
+    * does that). */
+  def parquetDataSchema(spark: SparkSession, file: String): StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val path = new org.apache.hadoop.fs.Path(file)
+    val conf = spark.sessionState.newHadoopConf()
+    val footer = scala.util.Using.resource(
+      ParquetFileReader.open(HadoopInputFile.fromPath(path, conf)))(
+      _.getFooter)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The schema a hive-layout read of files in `leafDirs` under
+    * `basePath` resolves over `dataSchema` — the data fields, then the
+    * partition fields Spark's own partition discovery
+    * (`PartitioningUtils.parsePartitions`) infers from the dir names,
+    * merged as the file relation merges them — computed on the driver
+    * from the names alone: no listing, no Spark job (the discovery is
+    * `private[datasources]`, so [[PartitionDiscovery]] calls it from
+    * Java). Reads the
+    * session's type-inference flag and time zone (the settings a
+    * caller's memo must key on) and its case-sensitivity and
+    * partition-validation settings. */
+  def hiveSchema(spark: SparkSession, dataSchema: StructType,
+      leafDirs: Seq[String], basePath: String): StructType = {
+    import org.apache.spark.sql.execution.datasources.PartitioningUtils
+    val conf = spark.sessionState.conf
+    val fs = new org.apache.hadoop.fs.Path(basePath)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def qualified(p: String) = fs.makeQualified(new org.apache.hadoop.fs.Path(p))
+    val parts = PartitionDiscovery.partitionColumns(
+      leafDirs.map(qualified), conf.partitionColumnTypeInferenceEnabled,
+      Set(qualified(basePath)), conf.caseSensitiveAnalysis,
+      conf.validatePartitionColumns, conf.sessionLocalTimeZone,
+      conf.ignoreInvalidPartitionPaths)
+    PartitioningUtils.mergeDataAndPartitionSchema(dataSchema, parts,
+      conf.caseSensitiveAnalysis)._1
+  }
 }

@@ -159,4 +159,83 @@ class IngestionSpec extends SparkSpec {
       assert(perPart.values.forall(_ == 1), s"$root: $perPart")
     }
   }
+
+  test("malformed CSV rows are quarantined with their raw line and counted") {
+    val (dir, productsT, ordersT, itemsT) = setup()
+    val badOrder = "7,o7,u4,2024-01-03 09:00:00,not-a-number"
+    val badItem = "i9,o1,u1,x,p1,one,false,2024-01-01 10:00:00"
+    write(dir.resolve("raw/orders/sheet2.csv"),
+      "order_num,order_id,user_id,order_timestamp,total_amount", badOrder)
+    write(dir.resolve("raw/order_items/sheet2.csv"),
+      "id,order_id,user_id,days_since_prior_order,product_id,add_to_cart_order,reordered,order_timestamp",
+      badItem)
+    Ingestion.productsJob(spark, s"$dir/raw/products", productsT,
+      s"$dir/quarantine/products")
+    val or = Ingestion.ordersJob(spark, s"$dir/raw/orders", ordersT,
+      s"$dir/quarantine/orders")
+    assert(or.validRows === 2 && or.rejectedRows === 3)
+    val ir = Ingestion.orderItemsJob(spark, s"$dir/raw/order_items",
+      ordersT, productsT, itemsT, s"$dir/quarantine/order_items")
+    assert(ir.validRows === 2 && ir.rejectedRows === 2)
+    for ((ds, line) <- Seq("orders" -> badOrder, "order_items" -> badItem)) {
+      val q = spark.read.option("header", "true")
+        .csv(s"$dir/quarantine/$ds")
+      assert(q.filter($"rejection_reason" === "Malformed record")
+        .select("raw_record").as[String].collect().toSeq === Seq(line))
+    }
+    assert(MergeTable(spark, ordersT, Some("date")).read()
+      .filter($"order_id" === "o7").isEmpty)
+    assert(MergeTable(spark, itemsT, Some("date")).read()
+      .filter($"id" === "i9").isEmpty)
+  }
+
+  test("counts are exact under a CHECK constraint and with no rejects") {
+    val (dir, productsT, _, _) = setup()
+    Ingestion.productsJob(spark, s"$dir/raw/products", productsT,
+      s"$dir/quarantine/p0")
+    // the constraint probe is a limit action over the MERGE source;
+    // it must not be what fills validRows
+    MergeTable(spark, productsT, Some("department"))
+      .addConstraint("dept_positive", "department_id > 0")
+    write(dir.resolve("raw/products/products.csv"),
+      "product_id,department_id,department,product_name",
+      "p1,1,produce,apple",
+      "p4,2,dairy,yogurt",
+      "p4,2,dairy,yogurt-dup",
+      "p5,3,bakery,bread",
+      "p6,,bakery,bagel")
+    val r1 = Ingestion.productsJob(spark, s"$dir/raw/products", productsT,
+      s"$dir/quarantine/p1")
+    assert((r1.validRows, r1.rejectedRows) === ((3L, 1L)))
+    write(dir.resolve("raw/products/products.csv"),
+      "product_id,department_id,department,product_name",
+      "p7,1,produce,pear",
+      "p8,2,dairy,cream")
+    val r2 = Ingestion.productsJob(spark, s"$dir/raw/products", productsT,
+      s"$dir/quarantine/p2")
+    assert((r2.validRows, r2.rejectedRows) === ((2L, 0L)))
+    assert(!Files.exists(dir.resolve("quarantine/p2")))
+    assert(MergeTable(spark, productsT, Some("department")).read().count()
+      === 6L)
+  }
+
+  test("no Spark job starts between a job's MERGE commit and its return") {
+    val (dir, productsT, ordersT, itemsT) = setup()
+    def check(root: String, pc: String)(
+        job: => Ingestion.JobResult): Unit = {
+      val (r, jobs) = graft.JobCensus.jobsOf(spark)(job)
+      val committedAt = MergeTable(spark, root, Some(pc)).history()
+        .filter($"version" === r.tableVersion)
+        .select("committed_at").as[java.sql.Timestamp].head().getTime
+      val late = jobs.filter(_.time > committedAt)
+      assert(jobs.nonEmpty && late.isEmpty, s"$root: $late")
+    }
+    check(productsT, "department")(Ingestion.productsJob(spark,
+      s"$dir/raw/products", productsT, s"$dir/quarantine/products"))
+    check(ordersT, "date")(Ingestion.ordersJob(spark, s"$dir/raw/orders",
+      ordersT, s"$dir/quarantine/orders"))
+    check(itemsT, "date")(Ingestion.orderItemsJob(spark,
+      s"$dir/raw/order_items", ordersT, productsT, itemsT,
+      s"$dir/quarantine/order_items"))
+  }
 }

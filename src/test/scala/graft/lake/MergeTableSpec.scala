@@ -1336,4 +1336,88 @@ class MergeTableSpec extends SparkSpec {
       () => MergeTable(spark, root, Seq("p"), Seq("dv=x"), false, Nil))
     opens.foreach(open => intercept[IllegalArgumentException](open()))
   }
+
+  test("every MERGE records numSourceRows equal to an independent count") {
+    val base = Seq(("a", "p1", 1.0), ("b", "p2", 2.0)).toDF("k", "p", "v")
+    val src = Seq(("a", "p1", 5.0), ("c", "p3", 3.0), ("d", "p1", 4.0))
+      .toDF("k", "p", "v")
+    val feed = Seq(("a", "p1", 6.0, "update_postimage"),
+      ("b", "p2", 0.0, "delete"), ("e", "p2", 7.0, "insert"),
+      ("zz", "p9", 0.0, "delete")).toDF("k", "p", "v", MergeTable.ChangeType)
+    val merges: Seq[(String, DataFrame, MergeTable => Long)] = Seq(
+      ("merge(pk)", src, _.merge(src, "k")),
+      ("clause", src, _.merge(src, Seq("k"),
+        Seq(MatchClause.update(col("s.v") > col("t.v"))))),
+      ("delete-only", src, _.merge(src, Seq("k"),
+        Seq(MatchClause.delete()), insertUnmatched = false)),
+      ("delete-only, key-only source", src.select("k"),
+        _.merge(src.select("k"), Seq("k"), Seq(MatchClause.delete()),
+          insertUnmatched = false)),
+      ("not-matched-by-source", src, _.merge(src, Seq("k"),
+        Seq(MatchClause.update()), notMatchedBySourceDelete = Some(lit(true)))),
+      ("mergeCdc", feed, _.mergeCdc(feed, "k")))
+    // (a key-only source cannot MERGE into an empty partitioned table:
+    // its empty write has no partition column)
+    for (part <- Seq(Some("p"), None); empty <- Seq(true, false);
+         (name, source, run) <- merges
+         if !(empty && part.isDefined && name.contains("key-only"))) {
+      val t = MergeTable(spark, tmpDir("nsr").toString, part)
+      if (!empty) t.overwrite(base)
+      val v = run(t)
+      assert(t.operationMetrics(v) === Map("numSourceRows" -> source.count()),
+        s"$name, partition $part, empty $empty")
+      val h = t.history().filter($"version" === v)
+        .select("operation", "operation_metrics").as[(String, String)].head()
+      assert(h === (("MERGE", s"numSourceRows=${source.count()}")))
+    }
+  }
+
+  test("partitioned commit-dir schemas resolve on the driver, as a hive " +
+      "read of the live subset does") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val root = tmpDir("dirsch")
+    val t = MergeTable(spark, root.toString, Some("p"))
+    // one commit dir over p=1 and p=3000000000: the dir infers LONG
+    t.overwrite(Seq(("a", 1L, 10L), ("b", 3000000000L, 20L))
+      .toDF("k", "p", "n"))
+    // the MERGE rewrites p=3000000000 into a new dir; the old dir's live
+    // subset keeps p=1 alone, which infers the narrower INT
+    t.merge(Seq(("b", 3000000000L, 21L)).toDF("k", "p", "n"), "k")
+    def hiveSchema(s: SparkSession, dir: String, es: Seq[MergeTable.FileEntry]) =
+      s.read.option("basePath", root.resolve(dir).toString)
+        .parquet(es.map(e => root.resolve(e.relPath).toString): _*).schema
+    def byDir(tt: MergeTable) = tt.liveEntries()
+      .groupBy(e => e.relPath.takeWhile(_ != '/'))
+    // building read() resolves the shrunk dir cold, with no Spark job
+    val (_, jobs) = graft.JobCensus.jobsOf(spark)(t.read())
+    assert(jobs.isEmpty, jobs)
+    val dirs = byDir(t)
+    assert(dirs.size === 2)
+    for ((dir, es) <- dirs)
+      assert(t.dirSchema(dir, es) === hiveSchema(spark, dir, es), dir)
+    assert(dirs.values.map(es => t.dirSchema(es.head.relPath
+      .takeWhile(_ != '/'), es)("p").dataType).toSet ===
+      Set(IntegerType, LongType))
+    // a session with partition-type inference off, and one in another
+    // time zone, each resolve for themselves: the memo keys on both
+    val noInfer = spark.newSession()
+    noInfer.conf.set(
+      "spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    val otherTz = spark.newSession()
+    otherTz.conf.set("spark.sql.session.timeZone", "America/New_York")
+    for (s <- Seq(noInfer, otherTz)) {
+      val ts = t.withSession(s)
+      val misses = MergeTable.dirSchemaMemo.misses
+      for ((dir, es) <- dirs)
+        assert(ts.dirSchema(dir, es) === hiveSchema(s, dir, es), dir)
+      assert(MergeTable.dirSchemaMemo.misses === misses + 2)
+    }
+    assert(t.withSession(noInfer).read().schema("p").dataType === StringType)
+    // across dirs the table reads the widest type, whichever dir sorts
+    // first (the INT dir first used to fail the read's partition cast)
+    assert(t.read().schema("p").dataType === LongType)
+    assert(t.read().orderBy("k").select("k", "p", "n").as[(String, Long, Long)]
+      .collect().toSeq === Seq(("a", 1L, 10L), ("b", 3000000000L, 21L)))
+  }
 }

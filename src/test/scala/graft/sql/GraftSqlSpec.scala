@@ -253,7 +253,7 @@ class GraftSqlSpec extends SparkSpec {
     val viaSql = spark.sql("DESCRIBE HISTORY t_hist")
     assert(viaSql.columns.toSeq ===
       Seq("version", "committed_at", "operation", "operation_parameters",
-        "n_added", "n_removed", "has_checkpoint"))
+        "n_added", "n_removed", "has_checkpoint", "operation_metrics"))
     assert(viaSql.select("version", "operation", "n_added")
       .as[(Long, String, Long)].collect().toSeq ===
       t.history().select("version", "operation", "n_added")
@@ -261,6 +261,10 @@ class GraftSqlSpec extends SparkSpec {
     assert(viaSql.select("operation").as[String].collect().toSet ===
       Set("WRITE", "MERGE"))
     assert(viaSql.count() === 2L)
+    // the MERGE records its source-row count; the WRITE records none
+    assert(viaSql.select("operation", "operation_metrics")
+      .as[(String, String)].collect().toMap ===
+      Map("WRITE" -> null, "MERGE" -> "numSourceRows=1"))
   }
 
   test("REGISTER/UNREGISTER GRAFT TABLE: a zero-Scala SQL-only path") {
