@@ -159,11 +159,11 @@ final class MergeTable private (
     * compaction itself pays O(small-file bytes) and rewrites nothing
     * right-sized, and its change feed is empty (logical content
     * unchanged), so CDF subscribers never see it. Structurally
-    * loop-free: the trigger fires only when bin-packing would REDUCE
-    * the partition's file count (>= minFiles small files of which the
-    * two smallest combine under the target), and the pass rewrites
-    * only multi-file bins — so every compaction strictly shrinks the
-    * file count and the trigger cannot re-fire on its own output. */
+    * loop-free: the trigger is [[compactSmall]]'s own file selection,
+    * which keeps only multi-file bins, so it fires only when the pass
+    * would REDUCE some partition's file count — every compaction
+    * strictly shrinks it and the trigger cannot re-fire on its own
+    * output. */
   def withAutoCompact(targetBytes: Long = 32L << 20,
       minFiles: Int = 4): MergeTable = {
     require(targetBytes > 0 && minFiles >= 2,
@@ -1886,30 +1886,14 @@ final class MergeTable private (
     override def initialValue: Boolean = false
   }
 
-  /** [[withAutoCompact]]'s post-commit hook: ONE file-size metadata
-    * pass decides whether any partition qualifies; only then does the
-    * [[compactSmall]] commit run (the pre-check exists so a healthy
-    * table never pays an empty follow-on commit per write). */
+  /** [[withAutoCompact]]'s post-commit hook: [[compactSmall]]'s own
+    * file selection ([[smallFileBins]], driver metadata only) decides
+    * whether any bin would be rewritten; only then does the
+    * [[compactSmall]] commit run (so a healthy table never pays an empty
+    * follow-on commit per write). */
   private def maybeAutoCompact(): Unit = {
     val (target, minFiles) = autoCompact.get
-    val (_, live) = latest()
-    // a file a concurrent compaction+vacuum removed between latest()
-    // and the probe reads as "not small" (the stale snapshot's commit
-    // attempt would lose the race anyway — no reason to throw here)
-    def sizeOf(e: FileEntry): Long =
-      try Files.size(root.resolve(e.relPath))
-      catch { case _: java.io.IOException => Long.MaxValue }
-    // needy iff compactSmall would actually REDUCE the file count:
-    // >= minFiles small files AND the two smallest combine under the
-    // target (which guarantees first-fit-decreasing packs a multi-file
-    // bin — see compactSmall). Without the combinability test, a
-    // partition of e.g. 30MB+10MB files under a 32MB target would
-    // re-trigger a futile identical repack on EVERY subsequent commit.
-    val needy = live.groupBy(_.partitionValue).valuesIterator.exists { es =>
-      val small = es.map(sizeOf).filter(_ < target).sorted
-      small.size >= minFiles && small.take(2).sum <= target
-    }
-    if (needy) {
+    if (smallFileBins(latest()._2, target, minFiles).nonEmpty) {
       inAutoCompact.set(true)
       try compactSmall(target, minFiles)
       finally inAutoCompact.set(false)
@@ -2468,7 +2452,7 @@ final class MergeTable private (
     *     metadata); on an unpartitioned table, or with `touchAll`,
     *     every live file;
     *   - row step: `rows(touched)` is what replaces the touched files;
-    *     an empty table gets `onEmpty`;
+    *     an empty table gets `onEmpty`, or no write when `src` is None;
     *   - commit: the written files are added, the touched ones removed;
     *     the header records `numSourceRows` from `sourceRows`, a
     *     [[MergeTable.countedRows]] count the caller's source carries,
@@ -2516,10 +2500,13 @@ final class MergeTable private (
           sourceRows() // the collect read every source row
           live.filter(e => parts.contains(e.partitionValue))
         }
-      val out = if (live.isEmpty) onEmpty else rows(touched)
-      val (_, newEntries) = writeData(out)
+      // a merge that writes no source row has nothing to write into an
+      // empty table (and its source may hold the key columns alone)
+      val out =
+        if (live.isEmpty) src.map(_ => onEmpty) else Some(rows(touched))
+      val newEntries = out.fold(Seq.empty[FileEntry])(writeData(_)._2)
       (CommitDelta(newEntries, touched.map(_.relPath),
-        mSchema = if (evolveSchema) evolvedSchema(out) else None,
+        mSchema = if (evolveSchema) out.flatMap(evolvedSchema) else None,
         metrics = Map("numSourceRows" -> sourceRows())), version)
     }
 
@@ -2878,95 +2865,116 @@ final class MergeTable private (
     None
   }
 
-  /** DOC-ONLY OPTIMIZE implemented for real (README.md:119): rewrite live
-    * files into `filesPerPartition` files, optionally range-clustered on
-    * `clusterBy` (LINEAR clustering — locality on the leading column
-    * only; for multi-dimensional locality see [[zorder]]). */
-  def compact(filesPerPartition: Int = 1, clusterBy: Seq[Column] = Nil): Long =
-    retryingCommit("OPTIMIZE",
-        scope = ReadScope.RemovedFiles) { () =>
+  /** How an OPTIMIZE verb arranges the rows it rewrites into write
+    * tasks, and so into files. */
+  private type Layout = DataFrame => DataFrame
+
+  /** The OPTIMIZE family's one executor: every file-rewrite verb is a
+    * (file selection, layout) pair over it, as Delta's OPTIMIZE is one
+    * command whose WHERE and ZORDER BY clauses pick the files and the
+    * layout. One optimistic commit under [[ReadScope.RemovedFiles]]:
+    * `plan` takes the latest live files to the ones to rewrite and the
+    * layout their rows are written in; the selected files are read
+    * row-id-preserving (on a row-tracked snapshot each row's absolute
+    * id/version rides along as the materialized columns), laid out,
+    * written as ONE rewrite commit dir (no optimized-write rebalance —
+    * the layout is the verb's) and swapped for the written files.
+    * Logical content is unchanged, so the change feed across the commit
+    * is empty. An empty selection, a never-written table's included,
+    * commits an empty delta. A `keyed` read carries the file key
+    * ([[MergeTable.FileKeyCol]]) captured at the scan, for a layout
+    * that routes rows by the file they came from. */
+  private def rewriteFiles(op: String, params: Map[String, String] = Map.empty,
+      keyed: Boolean = false)(plan: Seq[FileEntry] => (Seq[FileEntry], Layout)): Long =
+    retryingCommit(op, params, ReadScope.RemovedFiles) { () =>
       val (version, live) = latest()
-      val df0 = readForRewrite(live)
-      val df =
-        if (clusterBy.nonEmpty)
-          df0.repartitionByRange(filesPerPartition, clusterBy: _*)
-            .sortWithinPartitions(clusterBy: _*)
-        else df0.repartition(filesPerPartition)
-      val (_, entries) = writeData(df, rewrite = true)
-      (CommitDelta(entries, live.map(_.relPath)), version)
+      val (selected, layout) = plan(live)
+      if (selected.isEmpty) (CommitDelta(Nil, Nil), version)
+      else {
+        val rows = readEntries(selected,
+          keep = if (keyed) Seq(FileKeyCol) else Nil,
+          rowIds = selected.forall(_.rowIds.isDefined))
+        val (_, written) = writeData(layout(rows), rewrite = true)
+        (CommitDelta(written, selected.map(_.relPath)), version)
+      }
     }
 
+  /** DOC-ONLY OPTIMIZE implemented for real (README.md:119): rewrite
+    * every live file in the [[spread]] layout — `filesPerPartition`
+    * files, optionally range-clustered on `clusterBy` (LINEAR
+    * clustering — locality on the leading column only; for
+    * multi-dimensional locality see [[zorder]]). */
+  def compact(filesPerPartition: Int = 1, clusterBy: Seq[Column] = Nil): Long =
+    rewriteFiles("OPTIMIZE")(live =>
+      (live, spread(filesPerPartition, clusterBy)))
+
+  /** [[compact]]'s layout: `n` write tasks, round-robin, or
+    * range-partitioned and sorted on `clusterBy`. Each task writes one
+    * file per hive partition it holds rows of, so a partition gets at
+    * most `n` files, whatever else the rewrite covers. */
+  private def spread(n: Int, clusterBy: Seq[Column] = Nil): Layout = df =>
+    if (clusterBy.isEmpty) df.repartition(n)
+    else df.repartitionByRange(n, clusterBy: _*)
+      .sortWithinPartitions(clusterBy: _*)
+
   /** Delta-parity `OPTIMIZE` (bin-packing flavor): coalesce only the
-    * UNDER-SIZED live files. Within each partition, files below
-    * `targetBytes` are bin-packed (first-fit-decreasing over numFiles-
-    * scale driver metadata — the same contract as DELETE's touched-file
-    * discovery) and rewritten as ~`targetBytes` files; every right-sized
-    * file is carried over UNTOUCHED, and with the incremental commit log
-    * an untouched file costs zero commit bytes.
+    * UNDER-SIZED live files, the [[smallFileBins]] selection, one
+    * writer task per bin; every right-sized file is carried over
+    * UNTOUCHED, and with the incremental commit log an untouched file
+    * costs zero commit bytes.
     *
     * This is the maintenance job a streaming-ingest table actually runs:
     * [[compact]] rewrites the WHOLE table per call (O(table) IO — fine
     * for re-clustering, unrunnable as routine upkeep at 100 TB), while
     * this pays O(small-file bytes) no matter how large the table has
-    * grown. Bin ids are hash-distributed to writer tasks, so a hash
-    * collision can only MERGE two bins into one larger output file,
-    * never split one. Logical content is unchanged — the change feed
-    * across a compaction commit is empty. A partition with fewer than
-    * two under-sized files is left alone, as is any small file no
-    * other small file fits next to (rewriting a single-file bin would
-    * emit the same under-sized file again — churn, and a repack loop
-    * under [[withAutoCompact]]); if nothing qualifies, the commit is
-    * an empty delta. */
+    * grown. Rows find their bin by the file key captured at the scan
+    * (the key read after the shuffle would be empty); bin ids are
+    * hash-distributed to writer tasks, so a hash collision can only
+    * MERGE two bins into one larger output file, never split one. */
   def compactSmall(targetBytes: Long,
       minFilesPerPartition: Int = 2): Long = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     require(minFilesPerPartition >= 2,
       s"minFilesPerPartition must be >= 2: $minFilesPerPartition")
-    retryingCommit("OPTIMIZE",
+    rewriteFiles("OPTIMIZE",
       Map("binPack" -> targetBytes.toString, "trigger" -> (if (inAutoCompact.get) "auto" else "manual")),
-      scope = ReadScope.RemovedFiles) { () =>
-      val (version, live) = latest()
-      val small = live
-        .map(e => (e, Files.size(root.resolve(e.relPath))))
-        .filter(_._2 < targetBytes)
-        .groupBy(_._1.partitionValue)
-        .filter(_._2.size >= minFilesPerPartition)
-      // Pack, then rewrite ONLY multi-file bins: a single-file bin
-      // (a small file nothing else fits next to) would be rewritten
-      // into an identical under-sized file — pure churn, and under
-      // withAutoCompact a commit-triggered infinite repack loop (e.g.
-      // 30MB+10MB files, 32MB target: FFD packs them into the same two
-      // under-sized files forever). Every rewritten bin merges >= 2
-      // files, so the commit strictly reduces the file count.
-      val bins = mutable.ArrayBuffer.empty[Seq[FileEntry]]
-      small.values.foreach { group =>
-        val fill = mutable.ArrayBuffer.empty[Long]
-        val members = mutable.ArrayBuffer.empty[mutable.ArrayBuffer[FileEntry]]
-        group.sortBy(-_._2).foreach { case (e, sz) =>
-          val i = fill.indexWhere(_ + sz <= targetBytes)
-          if (i >= 0) { fill(i) += sz; members(i) += e }
-          else { fill += sz; members += mutable.ArrayBuffer(e) }
-        }
-        bins ++= members.filter(_.size >= 2).map(_.toSeq)
-      }
-      if (bins.isEmpty) (CommitDelta(Nil, Nil), version)
-      else {
-        val binOf = bins.zipWithIndex.flatMap { case (es, i) =>
-          es.map(e => fileKey(e.relPath) -> i)
-        }.toSeq
-        val touched = bins.flatten.toSeq
-        import spark.implicits._
-        val binDf = broadcast(binOf.toDF(FileKeyCol, BinCol))
-        val src = readEntries(touched, keep = Seq(FileKeyCol),
-          rowIds = touched.forall(_.rowIds.isDefined))
-        val packed = src
-          .join(binDf, Seq(FileKeyCol))
-          .repartition(bins.length, col(BinCol))
-          .drop(BinCol, FileKeyCol)
-        val (_, entries) = writeData(packed, rewrite = true)
-        (CommitDelta(entries, touched.map(_.relPath)), version)
-      }
+      keyed = true) { live =>
+      val bins = smallFileBins(live, targetBytes, minFilesPerPartition)
+      val binOf = for ((es, i) <- bins.zipWithIndex; e <- es)
+        yield (fileKey(e.relPath), i)
+      (bins.flatten, _.join(broadcast(spark.createDataFrame(binOf)
+          .toDF(FileKeyCol, BinCol)), Seq(FileKeyCol))
+        .repartition(bins.length, col(BinCol)).drop(BinCol, FileKeyCol))
     }
+  }
+
+  /** [[compactSmall]]'s file selection, which [[maybeAutoCompact]]'s
+    * trigger runs as-is: in each partition with at least `minFiles`
+    * live files under `targetBytes`, those files bin-packed
+    * first-fit-decreasing under the target; only the multi-file bins
+    * come back. A single-file bin (a small file nothing else fits next
+    * to) would be rewritten into the same under-sized file — churn, and
+    * under [[withAutoCompact]] a commit-triggered repack loop (30MB+10MB
+    * files under a 32MB target pack into the same two files forever) —
+    * so every rewrite strictly reduces the file count. Driver metadata
+    * only, one size probe per file; a file a concurrent compaction and
+    * vacuum already removed reads as not small (the stale snapshot's
+    * commit would lose the race anyway). */
+  private def smallFileBins(live: Seq[FileEntry], targetBytes: Long,
+      minFiles: Int): Seq[Seq[FileEntry]] = {
+    def sizeOf(e: FileEntry): Long =
+      try Files.size(root.resolve(e.relPath))
+      catch { case _: java.io.IOException => Long.MaxValue }
+    live.map(e => (e, sizeOf(e))).filter(_._2 < targetBytes)
+      .groupBy(_._1.partitionValue).values.filter(_.size >= minFiles).toSeq
+      .flatMap { group =>
+        group.sortBy(-_._2).foldLeft(Vector.empty[(Long, Vector[FileEntry])]) {
+          case (bins, (e, sz)) => bins.indexWhere(_._1 + sz <= targetBytes) match {
+            case -1 => bins :+ ((sz, Vector(e)))
+            case i  => bins.updated(i, (bins(i)._1 + sz, bins(i)._2 :+ e))
+          }
+        }.map(_._2).filter(_.size >= 2)
+      }
   }
 
   /** The reference's DOC-ONLY "Z-ordering" claim (README.md:119,
@@ -2988,42 +2996,39 @@ final class MergeTable private (
   def zorder(cols: Seq[String], filesPerPartition: Int = 1): Long = {
     require(cols.nonEmpty && cols.size <= 3,
       s"zorder takes 1-3 columns (16 bits each, long-width Z), got $cols")
-    retryingCommit("OPTIMIZE",
-      Map("zOrderBy" -> cols.mkString(",")),
-      scope = ReadScope.RemovedFiles) { () =>
-      val (version, live) = latest()
-      val df = clusterZ(readForRewrite(live), cols, filesPerPartition)
-      val (_, entries) = writeData(df, rewrite = true)
-      (CommitDelta(entries, live.map(_.relPath)), version)
-    }
+    rewriteFiles("OPTIMIZE", Map("zOrderBy" -> cols.mkString(",")))(live =>
+      (live, zLayout(cols, filesPerPartition)))
   }
 
-  /** Z-cluster `df0` on `cols` into `numParts` range partitions
-    * (shared by [[zorder]] and the scoped [[compactWhere]]): min-max
-    * scale each column to 16 bits, interleave the bits into the
-    * Z-value, range-repartition and sort by it. */
-  private def clusterZ(df0: DataFrame, cols: Seq[String],
-      numParts: Int): DataFrame = {
-    val scaled = scaled16(df0, cols)
-    val z = (0 until 16).flatMap(j => scaled.indices.map(k =>
-      s"(((${scaled(k)} >> $j) & 1) << ${j * cols.size + k})"))
-      .mkString(" + ")
-    df0.withColumn(ZCol, expr(z))
-      .repartitionByRange(numParts, col(ZCol))
-      .sortWithinPartitions(col(ZCol))
-      .drop(ZCol)
-  }
+  /** [[zorder]]'s layout: the [[curve]] whose key interleaves the bits
+    * of the scaled columns. */
+  private def zLayout(cols: Seq[String], n: Int): Layout =
+    curve(n, cols)(s => (0 until 16).flatMap(j => s.indices.map(k =>
+      s"(((${s(k)} >> $j) & 1) << ${j * s.size + k})")).mkString(" + "))
 
-  /** Delta-parity `OPTIMIZE ... WHERE`: [[compact]] (or, with
-    * `zorderCols`, [[zorder]]) scoped to the partitions a predicate on
-    * the PARTITION column selects — the maintenance shape a 100 TB
-    * table actually runs. [[compact]] rewrites the WHOLE table
-    * (O(table) IO — unrunnable as routine upkeep once the table has
-    * grown), while a streaming-ingest table only ever fragments its
-    * RECENT partitions; scoping the rewrite to `date >= '...'` pays
+  /** The space-filling-curve layout of [[zorder]] and [[clusterHilbert]]:
+    * `key` of `cols`, each min-max scaled to 16 bits ([[scaled16]]),
+    * added as a column, laid out by [[spread]] (range-partitioned into
+    * `n` tasks, sorted within each) and dropped. */
+  private def curve(n: Int, cols: Seq[String])(key: Seq[String] => String)
+      : Layout = df =>
+    spread(n, Seq(col(ZCol)))(
+      df.withColumn(ZCol, expr(key(scaled16(df, cols))))).drop(ZCol)
+
+  /** Delta-parity `OPTIMIZE ... WHERE`: OPTIMIZE over the partitions a
+    * predicate on the PARTITION column selects — the files are those
+    * [[filesWhere]] admits, laid out exactly as an unscoped OPTIMIZE
+    * lays them out ([[compact]]'s [[spread]], or with `zorderCols`
+    * [[zorder]]'s curve), so each selected partition gets the files
+    * `filesPerPartition` gives it there. This is the maintenance shape
+    * a 100 TB table actually runs: [[compact]] rewrites the WHOLE table
+    * (O(table) IO), while a streaming-ingest table only ever fragments
+    * its RECENT partitions; scoping the rewrite to `date >= '...'` pays
     * O(selected partitions) no matter the table size, and every
     * unselected partition's files carry over untouched (zero commit
-    * bytes under the incremental log).
+    * bytes under the incremental log). Like [[compact]], the rewrite
+    * runs `filesPerPartition` write tasks however many partitions the
+    * scope spans.
     *
     * The predicate must reference ONLY the partition column (Delta's
     * own `OPTIMIZE ... WHERE` rule) — it is evaluated on the driver
@@ -3040,31 +3045,17 @@ final class MergeTable private (
     require(zorderCols.size <= 3,
       s"zorder takes 1-3 columns (16 bits each, long-width Z), got " +
         zorderCols)
-    retryingCommit("OPTIMIZE",
-      Map("predicate" -> predicate.toString) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(","))),
-      scope = ReadScope.RemovedFiles) { () =>
-      val (version, live) = latest()
-      if (live.isEmpty) (CommitDelta(Nil, Nil), version)
-      else {
-        val index = indexOf(live)
-        val selected = filesWhere(index,
-          partitionCondition(predicate, index.partitionSchema).fold(
-            msg => throw new IllegalArgumentException(
-              s"OPTIMIZE WHERE predicate must reference only the " +
-                s"partition column(s) ${partitionCols.mkString(", ")}: " +
-                msg), identity))
-        if (selected.isEmpty) (CommitDelta(Nil, Nil), version)
-        else {
-          val parts = math.max(1,
-            selected.map(_.partitionValue).distinct.size * filesPerPartition)
-          val df0 = readForRewrite(selected)
-          val df =
-            if (zorderCols.nonEmpty) clusterZ(df0, zorderCols, parts)
-            else df0.repartition(parts, partitionCols.map(col): _*)
-          val (_, entries) = writeData(df, rewrite = true)
-          (CommitDelta(entries, selected.map(_.relPath)), version)
-        }
-      }
+    rewriteFiles("OPTIMIZE",
+      Map("predicate" -> predicate.toString) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(",")))) { live =>
+      val index = indexOf(live)
+      (filesWhere(index,
+        partitionCondition(predicate, index.partitionSchema).fold(
+          msg => throw new IllegalArgumentException(
+            s"OPTIMIZE WHERE predicate must reference only the " +
+              s"partition column(s) ${partitionCols.mkString(", ")}: " +
+              msg), identity)),
+        if (zorderCols.isEmpty) spread(filesPerPartition)
+        else zLayout(zorderCols, filesPerPartition))
     }
   }
 
@@ -3097,8 +3088,8 @@ final class MergeTable private (
     index.files.collect { case f if admits(f.partition) => f.entry }
   }
 
-  /** Min-max scale `cols` to 16-bit integers as SQL fragments (shared
-    * by [[zorder]] and [[clusterHilbert]]); one 1-row min/max
+  /** Min-max scale `cols` to 16-bit integers as SQL fragments (the
+    * inputs of [[curve]]'s key); one 1-row min/max
     * aggregate. Each column must cast to DOUBLE row by row: numeric,
     * boolean, timestamp or all-null. */
   private def scaled16(df0: DataFrame, cols: Seq[String]): Seq[String] = {
@@ -3117,8 +3108,8 @@ final class MergeTable private (
         min(col(c).cast("double")), max(col(c).cast("double")))): _*)
       .head()
     cols.indices.map { i =>
-      val (mn, mx) =
-        if (mm.isNullAt(2 * i) || mm.isNullAt(2 * i + 1)) (0.0, 1.0)
+      // min and max are null together: on an all-null column
+      val (mn, mx) = if (mm.isNullAt(2 * i)) (0.0, 1.0)
         else (mm.getDouble(2 * i), mm.getDouble(2 * i + 1))
       val span = if (mx > mn) mx - mn else 1.0
       s"CAST(((CAST(${cols(i)} AS DOUBLE) - $mn) / $span) * 65535 AS BIGINT)"
@@ -3142,20 +3133,8 @@ final class MergeTable private (
   def clusterHilbert(cols: Seq[String], filesPerPartition: Int = 1): Long = {
     require(cols.size == 2,
       s"clusterHilbert takes exactly 2 columns (16-bit Hilbert), got $cols")
-    retryingCommit("OPTIMIZE",
-      Map("hilbertBy" -> cols.mkString(",")),
-      scope = ReadScope.RemovedFiles) { () =>
-      val (version, live) = latest()
-      val df0 = readForRewrite(live)
-      val scaled = scaled16(df0, cols)
-      val df = df0.withColumn(ZCol,
-          expr(MergeTable.hilbertSql(scaled(0), scaled(1))))
-        .repartitionByRange(filesPerPartition, col(ZCol))
-        .sortWithinPartitions(col(ZCol))
-        .drop(ZCol)
-      val (_, entries) = writeData(df, rewrite = true)
-      (CommitDelta(entries, live.map(_.relPath)), version)
-    }
+    rewriteFiles("OPTIMIZE", Map("hilbertBy" -> cols.mkString(",")))(live => (
+      live, curve(filesPerPartition, cols)(s => MergeTable.hilbertSql(s(0), s(1)))))
   }
 
   /** Delta-parity DELETE: drop rows where `predicate` is TRUE (null-
@@ -3269,17 +3248,8 @@ final class MergeTable private (
     * leaving every vector-free file untouched — the maintenance step
     * that caps read-side anti-join debt without [[compact]]'s full-table
     * rewrite. [[vacuum]] then reaps the orphaned vector dirs. */
-  def purgeVectors(): Long = retryingCommit("PURGE",
-      scope = ReadScope.RemovedFiles) { () =>
-    val (version, live) = latest()
-    val vectored = live.filter(_.dv.isDefined)
-    if (vectored.isEmpty) (CommitDelta(Nil, Nil), version)
-    else {
-      val (_, entries) =
-        writeData(readForRewrite(vectored), rewrite = true)
-      (CommitDelta(entries, vectored.map(_.relPath)), version)
-    }
-  }
+  def purgeVectors(): Long =
+    rewriteFiles("PURGE")(live => (live.filter(_.dv.isDefined), df => df))
 
   /** Delta-parity UPDATE: for rows where `predicate` is TRUE, replace
     * each column in `set` with its expression (null-predicate rows stay
@@ -3306,22 +3276,9 @@ final class MergeTable private (
           case None => (CommitDelta(Nil, Nil), version)
           case Some((touched, adds, gone)) =>
             // The new vector isn't committed yet, so this read still
-            // sees the matched rows; rewrite exactly them. Staging under
-            // temp names keeps SQL UPDATE's old-row semantics (`SET
-            // a = b, b = a` swaps) — no SET leaks into another's input.
-            val base = readEntries(touched)
-            set.keys.foreach(c => require(base.columns.contains(c),
-              s"SET column $c does not exist in the table"))
-            val matched = base.filter(coalesce(predicate, lit(false)))
-            val staged = set.foldLeft(matched) { case (df, (c, v)) =>
-              df.withColumn(s"__graft_set_$c", v)
-            }
-            val updated = staged.select(base.columns.map(c =>
-              if (set.contains(c)) col(s"__graft_set_$c").as(c)
-              else col(c)): _*)
-            val recomputed = recomputeGenerated(updated, set.keySet)
-            enforceConstraints(recomputed, "UPDATE")
-            val (_, newEntries) = writeData(recomputed)
+            // sees the matched rows; rewrite exactly them.
+            val (_, newEntries) = writeData(applySet(readEntries(touched)
+              .filter(coalesce(predicate, lit(false))), set, None))
             (CommitDelta(adds ++ newEntries, gone.map(_.relPath)), version)
         }
       } else {
@@ -3329,27 +3286,34 @@ final class MergeTable private (
         if (hit.isEmpty) (CommitDelta(Nil, Nil), version)
         else {
           val touched = live.filter(e => hit(fileKey(e.relPath)))
-          val base = readEntries(touched)
-          set.keys.foreach(c => require(base.columns.contains(c),
-            s"SET column $c does not exist in the table"))
-          // SQL UPDATE semantics: EVERY SET expression evaluates against
-          // the OLD row (so `SET a = b, b = a` swaps). Stage new values
-          // under temp names first — a sequential withColumn chain would
-          // leak one SET's result into the next one's inputs.
-          val staged = set.foldLeft(base) { case (df, (c, v)) =>
-            df.withColumn(s"__graft_set_$c",
-              when(coalesce(predicate, lit(false)), v).otherwise(col(c)))
-          }
-          val updated = staged.select(base.columns.map(c =>
-            if (set.contains(c)) col(s"__graft_set_$c").as(c)
-            else col(c)): _*)
-          val recomputed = recomputeGenerated(updated, set.keySet)
-          enforceConstraints(recomputed, "UPDATE")
-          val (_, newEntries) = writeData(recomputed)
+          val (_, newEntries) = writeData(applySet(readEntries(touched), set,
+            Some(coalesce(predicate, lit(false)))))
           (CommitDelta(newEntries, touched.map(_.relPath)), version)
         }
       }
     }
+  }
+
+  /** UPDATE's SET step over `rows`: each column in `set` takes its
+    * expression (on the rows `where` holds for, when given), then
+    * generated columns recompute and CHECK constraints are enforced.
+    * SQL UPDATE semantics: EVERY SET expression evaluates against the
+    * OLD row (so `SET a = b, b = a` swaps) — new values are staged
+    * under temp names first, since a sequential withColumn chain would
+    * leak one SET's result into the next one's inputs. */
+  private def applySet(rows: DataFrame, set: Map[String, Column],
+      where: Option[Column]): DataFrame = {
+    set.keys.foreach(c => require(rows.columns.contains(c),
+      s"SET column $c does not exist in the table"))
+    val staged = set.foldLeft(rows) { case (df, (c, v)) =>
+      df.withColumn(s"__graft_set_$c",
+        where.fold(v)(w => when(w, v).otherwise(col(c))))
+    }
+    val updated = recomputeGenerated(staged.select(rows.columns.map(c =>
+      if (set.contains(c)) col(s"__graft_set_$c").as(c) else col(c)): _*),
+      set.keySet)
+    enforceConstraints(updated, "UPDATE")
+    updated
   }
 
   // ---- CHECK constraints --------------------------------------------------
@@ -5514,14 +5478,6 @@ final class MergeTable private (
         rowIds = true)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
-
-  /** Rewrite-side read for the OPTIMIZE family: on a row-tracked
-    * snapshot, carry each row's absolute id/version as the MATERIALIZED
-    * physical columns so [[writeData]] persists them through the
-    * rewrite; otherwise the plain logical read. */
-  private def readForRewrite(entries: Seq[FileEntry]): DataFrame =
-    readEntries(entries,
-      rowIds = entries.nonEmpty && entries.forall(_.rowIds.isDefined))
 
   /** The PHYSICAL schema of a plain [[readEntries]] of `entries`,
     * computed from (memoized) metadata alone — no throwaway scan plan

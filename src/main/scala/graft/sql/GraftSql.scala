@@ -49,6 +49,8 @@ import graft.lake.{MatchClause, MergeTable}
   *       (Delta's replaceWhere: atomic partition-scoped replacement)
   *   OPTIMIZE <name> [WHERE <partition pred>]
   *     [ZORDER BY (c[, ...])]    → compact / zorder / compactWhere
+  *       (a WHERE scope is OPTIMIZE over the partitions it selects,
+  *       laid out as the unscoped statement lays them out)
   *   RESTORE <name> TO VERSION AS OF <v>        → [[MergeTable.restore]]
   *   RESTORE <name> TO TIMESTAMP AS OF 'ts'     → [[MergeTable.restoreAsOf]]
   *   VACUUM <name> [RETAIN n HOURS] [DRY RUN]   → [[MergeTable.vacuum]]

@@ -1213,6 +1213,79 @@ class MergeTableSpec extends SparkSpec {
     assert(t.liveEntries().map(_.relPath).toSet.intersect(files) === files)
   }
 
+  test("compactWhere lays out each selected partition exactly as an " +
+      "unscoped OPTIMIZE does") {
+    // 64 rows over two dates, written 8-way: several files in each date
+    def fragmented(name: String): MergeTable = {
+      val t = MergeTable(spark, tmpDir(name).toString, Some("date"))
+      t.overwrite((1 to 64).map(i => (s"o$i",
+          if (i % 2 == 0) "2024-01-01" else "2024-01-02", i.toDouble))
+        .toDF("order_id", "date", "amount").repartition(8))
+      t
+    }
+    def filesIn(t: MergeTable): Map[Option[String], Int] =
+      t.liveEntries().groupBy(_.partitionValue).view.mapValues(_.size).toMap
+    // a two-date scope, Z-ordered one file per partition: one each
+    val both = fragmented("cw_both")
+    assert(filesIn(both).values.forall(_ > 1))
+    val want = contents(both.read())
+    both.compactWhere(col("date").isin("2024-01-01", "2024-01-02"),
+      filesPerPartition = 1, zorderCols = Seq("amount"))
+    assert(filesIn(both) ===
+      Map(Some("2024-01-01") -> 1, Some("2024-01-02") -> 1))
+    assert(contents(both.read()) === want)
+    // a one-date scope at three files per partition: three, as compact(3)
+    // lays out the same date
+    val one = fragmented("cw_one")
+    def d2Files = one.liveEntries()
+      .filter(_.partitionValue.contains("2024-01-02")).map(_.relPath).toSet
+    val d2Before = d2Files
+    one.compactWhere(col("date") === "2024-01-01", filesPerPartition = 3)
+    assert(filesIn(one)(Some("2024-01-01")) === 3)
+    assert(d2Files === d2Before)
+    assert(contents(one.read()) === want)
+    val whole = fragmented("cw_whole")
+    whole.compact(3)
+    assert(filesIn(whole)(Some("2024-01-01")) === 3)
+  }
+
+  test("every OPTIMIZE verb commits an empty delta when it selects " +
+      "nothing, on a never-written table too") {
+    val rows = Seq(("o1", "d1", 1.0, 10L), ("o2", "d2", 2.0, 20L))
+      .toDF("order_id", "date", "amount", "qty")
+    val never = MergeTable(spark, tmpDir("es_never").toString, Some("date"))
+    val emptied = MergeTable(spark, tmpDir("es_emptied").toString, Some("date"))
+    emptied.overwrite(rows)
+    emptied.delete(lit(true))
+    assert(emptied.liveEntries().isEmpty)
+    val written = MergeTable(spark, tmpDir("es_written").toString, Some("date"))
+    written.overwrite(rows)
+    // (verb, its DESCRIBE HISTORY operation and parameters, whether it
+    // selects nothing from `written` as well)
+    val verbs: Seq[(MergeTable => Long, (String, String), Boolean)] = Seq(
+      (_.compact(), ("OPTIMIZE", ""), false),
+      (_.zorder(Seq("amount")), ("OPTIMIZE", "zOrderBy=amount"), false),
+      (_.clusterHilbert(Seq("amount", "qty")),
+        ("OPTIMIZE", "hilbertBy=amount,qty"), false),
+      (_.compactSmall(targetBytes = 1L),
+        ("OPTIMIZE", "binPack=1; trigger=manual"), true),
+      (_.compactWhere(col("date") === "none"),
+        ("OPTIMIZE", "predicate==(date, 'none')"), true),
+      (_.purgeVectors(), ("PURGE", ""), true))
+    for ((run, op, selective) <- verbs;
+         (what, t) <- Seq("never-written" -> never, "emptied" -> emptied) ++
+           (if (selective) Seq("written" -> written) else Nil)) {
+      val (v, files) = (t.latestVersion(), t.liveEntries().toSet)
+      val committed = run(t)
+      assert(committed === v + 1, s"$op, $what")
+      assert(t.liveEntries().toSet === files, s"$op, $what")
+      assert(t.history().filter($"version" === committed)
+        .select("operation", "operation_parameters", "n_added", "n_removed")
+        .as[(String, String, Long, Long)].head() === ((op._1, op._2, 0L, 0L)),
+        s"$op, $what")
+    }
+  }
+
   test("compactWhere with zorderCols Z-clusters inside the scope only") {
     val root = tmpDir("mt").toString
     val t = MergeTable(spark, root, Some("date"), statsCols = Seq("amount"))
@@ -1356,11 +1429,8 @@ class MergeTableSpec extends SparkSpec {
       ("not-matched-by-source", src, _.merge(src, Seq("k"),
         Seq(MatchClause.update()), notMatchedBySourceDelete = Some(lit(true)))),
       ("mergeCdc", feed, _.mergeCdc(feed, "k")))
-    // (a key-only source cannot MERGE into an empty partitioned table:
-    // its empty write has no partition column)
     for (part <- Seq(Some("p"), None); empty <- Seq(true, false);
-         (name, source, run) <- merges
-         if !(empty && part.isDefined && name.contains("key-only"))) {
+         (name, source, run) <- merges) {
       val t = MergeTable(spark, tmpDir("nsr").toString, part)
       if (!empty) t.overwrite(base)
       val v = run(t)
@@ -1369,6 +1439,15 @@ class MergeTableSpec extends SparkSpec {
       val h = t.history().filter($"version" === v)
         .select("operation", "operation_metrics").as[(String, String)].head()
       assert(h === (("MERGE", s"numSourceRows=${source.count()}")))
+      if (empty && name.contains("key-only")) {
+        // nothing to delete wrote nothing: full rows append as into a
+        // fresh table
+        assert(t.liveEntries().isEmpty, s"$name, partition $part")
+        t.append(base)
+        assert(t.read().select("k", "p", "v").as[(String, String, Double)]
+          .collect().toSet === base.as[(String, String, Double)].collect()
+          .toSet, s"$name, partition $part")
+      }
     }
   }
 
