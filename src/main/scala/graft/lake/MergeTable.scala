@@ -9,6 +9,7 @@ import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{expressions => cxp}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftStreamShim
 
@@ -69,35 +70,21 @@ import org.apache.spark.sql.graftshim.GraftStreamShim
   *    path layout), so a long streaming-ingest history degrades file
   *    count — fixable by compact() — but never plan size.
   */
-final class MergeTable private (
-    val spark: SparkSession,
-    val root: Path,
-    val partitionCols: Seq[String],
-    val statsCols: Seq[String],
-    val deletionVectors: Boolean = false,
-    val bloomCols: Seq[String] = Nil,
-    val logStore: LogStore = LogStore.Posix,
-    val optimizeWrite: Boolean = false,
-    val autoCompact: Option[(Long, Int)] = None,
-    val ckptRetention: (Int, Long) = MergeTable.DefaultCkptRetention,
-    val rowTracking: Boolean = false,
-    val verifyOnRead: Boolean = false,
-    val pqCkptEntries: Long = MergeTable.DefaultPqCkptEntries) {
+final class MergeTable private (val spark: SparkSession, val root: Path,
+    val logStore: LogStore, private[graft] val layout: TableLayout) {
 
   import MergeTable._
 
-  // Bloom columns must be DATA columns: partitionBy strips partition
-  // columns from the data files, so a bloom over one would scan
-  // all-NULL values, silently write an empty sidecar slice, and later
-  // probes would prune files that DO hold matching rows — bloom false
-  // negatives, i.e. wrong results. Fail at construction, not mid-query
-  // (r15 advice: withBlooms' writtenSchema check passed for partition
-  // columns because df.schema still carries them pre-strip).
-  require(bloomCols.intersect(partitionCols).isEmpty,
-    s"MergeTable at $root: bloom column(s) " +
-      s"${bloomCols.intersect(partitionCols).mkString(", ")} are " +
-      "partition column(s) — bloom columns must be data columns " +
-      "(partition pruning already covers the partition column)")
+  def partitionCols: Seq[String] = layout.partitionCols
+  def statsCols: Seq[String] = layout.statsCols
+  def deletionVectors: Boolean = layout.deletionVectors
+  def bloomCols: Seq[String] = layout.bloomCols
+  def optimizeWrite: Boolean = layout.optimizeWrite
+  def autoCompact: Option[(Long, Int)] = layout.autoCompact
+  def ckptRetention: (Int, Long) = layout.ckptRetention
+  def rowTracking: Boolean = layout.rowTracking
+  def verifyOnRead: Boolean = layout.verifyOnRead
+  def pqCkptEntries: Long = layout.pqCkptEntries
 
   /** The primary (first) partition column — compatibility accessor for
     * single-column callers; multi-column layouts use
@@ -114,14 +101,16 @@ final class MergeTable private (
 
   private def logDir: Path = root.resolve(LogDir)
 
+  /** The same table handle under layout `l`. */
+  private def relaid(l: TableLayout): MergeTable =
+    MergeTable(spark, root, logStore, l)
+
   /** The same table handle publishing commits through `ls` instead of
     * the default POSIX hard-link store — the object-store deployment
     * hook (see [[LogStore]]). Reads are unaffected; only the atomic
     * create-if-absent publish goes through the seam. */
   def withLogStore(ls: LogStore): MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, ls, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
+    MergeTable(spark, root, ls, layout)
 
   /** The same handle with OPTIMIZED WRITES on (Delta's
     * `delta.autoOptimize.optimizeWrite`): every ingest write (append,
@@ -143,10 +132,7 @@ final class MergeTable private (
     * Unpartitioned tables are unchanged ([[compactSmall]] is their
     * remedy). */
   def withOptimizeWrite: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite = true,
-      autoCompact, ckptRetention, rowTracking, verifyOnRead,
-      pqCkptEntries)
+    relaid(layout.copy(optimizeWrite = true))
 
   /** The same handle with AUTO COMPACTION on (Delta's
     * `delta.autoOptimize.autoCompact`): after any commit, if some
@@ -163,17 +149,10 @@ final class MergeTable private (
     * which keeps only multi-file bins, so it fires only when the pass
     * would REDUCE some partition's file count — every compaction
     * strictly shrinks it and the trigger cannot re-fire on its own
-    * output. */
+    * output. Needs `targetBytes > 0` and `minFiles >= 2`. */
   def withAutoCompact(targetBytes: Long = 32L << 20,
-      minFiles: Int = 4): MergeTable = {
-    require(targetBytes > 0 && minFiles >= 2,
-      s"withAutoCompact: need targetBytes > 0 and minFiles >= 2, got " +
-        s"($targetBytes, $minFiles)")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite,
-      Some((targetBytes, minFiles)), ckptRetention, rowTracking,
-      verifyOnRead, pqCkptEntries)
-  }
+      minFiles: Int = 4): MergeTable =
+    relaid(layout.copy(autoCompact = Some((targetBytes, minFiles))))
 
   /** The same handle with a NON-DEFAULT checkpoint retention (r13
     * verdict #2 — automatic log retention): every checkpoint PUBLISH
@@ -189,30 +168,21 @@ final class MergeTable private (
     * empty v0 by folding deltas. What the window buys is fold SPEED
     * near pruned versions and in-flight-reader grace: a reader that
     * listed a checkpoint gets `retainMs` to open it (the same
-    * discipline as vacuum's data-file window). */
+    * discipline as vacuum's data-file window). Needs `keep >= 1` and
+    * `retainMs >= 0`. */
   def withCheckpointRetention(keep: Int = DefaultCkptRetention._1,
-      retainMs: Long = DefaultCkptRetention._2): MergeTable = {
-    require(keep >= 1 && retainMs >= 0L,
-      s"withCheckpointRetention: need keep >= 1 and retainMs >= 0, " +
-        s"got ($keep, $retainMs)")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      (keep, retainMs), rowTracking, verifyOnRead, pqCkptEntries)
-  }
+      retainMs: Long = DefaultCkptRetention._2): MergeTable =
+    relaid(layout.copy(ckptRetention = (keep, retainMs)))
 
   /** The same handle with a NON-DEFAULT parquet-checkpoint threshold
     * (see [[MergeTable.DefaultPqCkptEntries]]): checkpoints of
     * snapshots holding at least `entries` live files write their file
     * entries as a typed parquet dir (loaded by a distributed scan)
     * instead of O(live) text lines. Lower it in tests to exercise the
-    * format; raise it (or Long.MaxValue) to pin the text path. */
-  def withParquetCheckpointThreshold(entries: Long): MergeTable = {
-    require(entries >= 1L,
-      s"withParquetCheckpointThreshold: need entries >= 1, got $entries")
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries = entries)
-  }
+    * format; raise it (or Long.MaxValue) to pin the text path. Needs
+    * `entries >= 1`. */
+  def withParquetCheckpointThreshold(entries: Long): MergeTable =
+    relaid(layout.copy(pqCkptEntries = entries))
 
   /** The same handle with ROW TRACKING on (Delta's row-ID table
     * feature): every data commit allots each new file a contiguous
@@ -236,10 +206,7 @@ final class MergeTable private (
     * feature (materialized columns + the W action change what the log
     * and footers mean). */
   def withRowTracking: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking = true, verifyOnRead = verifyOnRead,
-      pqCkptEntries = pqCkptEntries)
+    relaid(layout.copy(rowTracking = true))
 
   /** The same handle with READ-PATH CHECKSUM VERIFICATION on: the
     * first time this handle resolves a version's snapshot, it is
@@ -255,29 +222,27 @@ final class MergeTable private (
     * whose threat model includes the LOG STORE itself (shared object
     * buckets, replicated logs). */
   def withChecksumVerification: MergeTable =
-    new MergeTable(spark, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead = true,
-      pqCkptEntries = pqCkptEntries)
+    relaid(layout.copy(verifyOnRead = true))
 
   /** The same table handle bound to a DIFFERENT SparkSession — the
     * multi-session hook (the SQL front end rebinds a registered
     * handle to the session actually executing a statement, which
     * matters in multi-session JVMs like a Spark Connect server). The
-    * layout contract and log store carry over; only the session the
+    * layout and log store carry over; only the session the
     * reads/writes run on changes. */
   def withSession(s: SparkSession): MergeTable =
-    if (s eq spark) this
-    else new MergeTable(s, root, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
+    if (s eq spark) this else MergeTable(s, root, logStore, layout)
 
   // ---- log ----------------------------------------------------------------
 
-  /** Live (version, entries) of the latest committed snapshot. */
-  private def latest(): (Long, Seq[FileEntry]) = {
+  /** Live (version, entries) of the latest committed snapshot, checked
+    * against this handle's partition columns ([[laidOutAt]]) unless
+    * `laidOut` is false — only for an operation that keeps none of the
+    * entries live. */
+  private def latest(laidOut: Boolean = true): (Long, Seq[FileEntry]) = {
     val v = latestVersion()
-    if (v == 0L) (0L, Seq.empty) else (v, snapshotAt(v))
+    if (v == 0L) (0L, Seq.empty)
+    else (v, if (laidOut) laidOutAt(v) else snapshotAt(v))
   }
 
   def latestVersion(): Long =
@@ -477,6 +442,44 @@ final class MergeTable private (
     snapMemo.synchronized(snapMemo.put(v, s)) // racing double-compute
     s                                         // is benign
   }
+
+  /** [[snapshotAt]] for an operation that reads version `v`'s files or
+    * keeps them live. It refuses, before any Spark job, a snapshot with
+    * a file whose partition directories (the `name=` chain above it in
+    * its relPath) are not this handle's [[partitionCols]]: such a
+    * handle reads those files' partition values as NULL, and the files
+    * it writes read the same way through the table's other handles.
+    * The manifest's partition token can't tell: a single-column NULL
+    * partition encodes like an unpartitioned file. Checked once per
+    * version per handle. */
+  private def laidOutAt(v: Long): Seq[FileEntry] = {
+    val entries = snapshotAt(v)
+    if (!layoutChecked.contains(v)) {
+      requireLaidOut(entries, s"version $v")
+      layoutChecked.add(v)
+    }
+    entries
+  }
+
+  /** [[laidOutAt]]'s test over `entries`, which `where` names. */
+  private def requireLaidOut(entries: Seq[FileEntry], where: String): Unit =
+    entries.foreach { e =>
+      val dirs = e.relPath.split('/').init.reverseIterator
+        .takeWhile(_.contains('='))
+        .map(d => ExternalCatalogUtils.unescapePathName(d.takeWhile(_ != '=')))
+        .toSeq.reverse
+      require(dirs.length == partitionCols.length &&
+        dirs.zip(partitionCols).forall { case (d, c) => d.equalsIgnoreCase(c) },
+        s"MergeTable at $root: partitionCols is " +
+          s"${partitionCols.mkString("[", ", ", "]")}, but $where " +
+          s"holds ${e.relPath} under partition directories " +
+          s"${dirs.mkString("[", ", ", "]")} — open the table with the " +
+          "partition columns it was written with")
+    }
+
+  /** Versions [[laidOutAt]] has passed on this handle. */
+  private val layoutChecked =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
   /** Snapshot reconstruction: newest checkpoint ≤ `v`, then fold the
     * commit deltas (ckpt, v]. Fails fast (instead of silently resolving a
@@ -2277,7 +2280,9 @@ final class MergeTable private (
   /** S5 — full overwrite (the reference's first-load path,
     * ref: orders_etl.py:93-96). Overwrite replaces the whole table, so on
     * a commit collision the same entries re-publish at the fresh version
-    * (last-full-writer-wins is the overwrite contract). */
+    * (last-full-writer-wins is the overwrite contract). It keeps no file
+    * live, so it may re-lay a table under this handle's partition
+    * columns. */
   def overwrite(df0: DataFrame): Long = {
     val df1 = withGenerated(df0)
     // a DECLARED schema is binding: overwrite replaces rows, not the
@@ -2304,7 +2309,7 @@ final class MergeTable private (
       checkDeclared(df1)
       val (_, entries) = writeData(df1)
       retryingCommit("WRITE", Map("mode" -> "Overwrite")) { () =>
-        val (version, live) = latest()
+        val (version, live) = latest(laidOut = false)
         (CommitDelta(entries, live.map(_.relPath)), version)
       }
     } else {
@@ -2317,7 +2322,7 @@ final class MergeTable private (
       // readers of the superseded version, breaking IdentityColumns'
       // unique-across-history contract.
       retryingCommit("WRITE", Map("mode" -> "Overwrite")) { () =>
-        val (version, live) = latest()
+        val (version, live) = latest(laidOut = false)
         val (df, idTxns) = withIdentity(df1, version)
         enforceConstraints(df, "overwrite")
         checkDeclared(df)
@@ -3046,7 +3051,7 @@ final class MergeTable private (
       s"zorder takes 1-3 columns (16 bits each, long-width Z), got " +
         zorderCols)
     rewriteFiles("OPTIMIZE",
-      Map("predicate" -> predicate.toString) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(",")))) { live =>
+      Map("predicate" -> predicateSql(predicate)) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(",")))) { live =>
       val index = indexOf(live)
       (filesWhere(index,
         partitionCondition(predicate, index.partitionSchema).fold(
@@ -3077,6 +3082,24 @@ final class MergeTable private (
     catch {
       case e: org.apache.spark.sql.AnalysisException => Left(e.getMessage)
     }
+  }
+
+  /** `predicate` as DESCRIBE HISTORY records it: the SQL of the
+    * condition analyzed over the table's columns, `(date = 'd1')` —
+    * Delta's form. A never-written table analyzes it over its partition
+    * columns typed as strings, a partition directory's type; a
+    * predicate that analyzes over neither records Spark's rendering of
+    * the unanalyzed column. */
+  private def predicateSql(predicate: Column): String = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val frame = scala.util.Try(read()).getOrElse(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      StructType(partitionCols.map(StructField(_, StringType)))))
+    scala.util.Try(frame.filter(predicate).queryExecution.analyzed
+      .collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+          f.condition.sql
+      }.get).getOrElse(predicate.toString)
   }
 
   /** The entries of `index` whose typed partition row satisfies `cond`,
@@ -3153,7 +3176,7 @@ final class MergeTable private (
     * vector grows to cover every physical row is dropped from the
     * manifest outright. */
   def delete(predicate: Column): Long = retryingCommit("DELETE",
-      Map("predicate" -> predicate.toString)) { () =>
+      Map("predicate" -> predicateSql(predicate))) { () =>
     val (version, live) = latest()
     if (live.isEmpty) (CommitDelta(Nil, Nil), version)
     else if (deletionVectors) {
@@ -3268,7 +3291,7 @@ final class MergeTable private (
       s"cannot update partition column(s) $partitionCols; delete + merge " +
         "instead")
     retryingCommit("UPDATE",
-      Map("predicate" -> predicate.toString, "set" -> set.keys.toSeq.sorted.mkString(","))) { () =>
+      Map("predicate" -> predicateSql(predicate), "set" -> set.keys.toSeq.sorted.mkString(","))) { () =>
       val (version, live) = latest()
       if (live.isEmpty) (CommitDelta(Nil, Nil), version)
       else if (deletionVectors) {
@@ -4034,7 +4057,7 @@ final class MergeTable private (
     * against the key relation, which AQE broadcasts at Δ-scale). */
   private[lake] def probeKeysVersion(version: Long, c: String,
       values: Seq[Any]): DataFrame = {
-    val index = indexOf(snapshotAt(version))
+    val index = indexOf(laidOutAt(version))
     val phys = physicalOf(c)
     val lits = values.map(v => cxp.Literal(v))
     val keys = lits.filter(_.value != null) // NULL matches nothing
@@ -4592,7 +4615,7 @@ final class MergeTable private (
     * CDF column sets must stay aligned across rename boundaries for
     * incremental consumers — pinned by ColumnMappingSpec.) */
   def readVersion(version: Long): DataFrame =
-    readEntries(snapshotAt(version),
+    readEntries(laidOutAt(version),
       if (version == 0L) None else schemaAt(version),
       if (version == 0L) NoMapping else mappingAt(version))
 
@@ -4620,8 +4643,8 @@ final class MergeTable private (
     * unchanged. */
   def changes(fromV: Long, toV: Long, pk: String,
       updateImages: Boolean): DataFrame = {
-    val ea = snapshotAt(fromV)
-    val eb = snapshotAt(toV)
+    val ea = laidOutAt(fromV)
+    val eb = laidOutAt(toV)
     // The file-set signature includes each file's deletion-vector ref:
     // a vectorizing DELETE changes rows while leaving every relPath in
     // place, so a path-only signature would read the partition as
@@ -4721,8 +4744,8 @@ final class MergeTable private (
   def changesByRowId(fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV,
       s"changesByRowId: fromV $fromV must be <= toV $toV")
-    val ea = snapshotAt(fromV)
-    val eb = snapshotAt(toV)
+    val ea = laidOutAt(fromV)
+    val eb = laidOutAt(toV)
     require((ea ++ eb).forall(_.rowIds.isDefined),
       s"MergeTable at $root: changesByRowId needs row tracking on " +
         "every live file of both versions (enable withRowTracking at " +
@@ -4807,7 +4830,7 @@ final class MergeTable private (
     retryingCommit("RESTORE",
       Map("version" -> version.toString)) { () =>
       val (cur, live) = latest()
-      val target = snapshotAt(version)
+      val target = laidOutAt(version)
       val targetPaths = target.map(_.relPath).toSet
       val removed = live.filterNot(e => targetPaths(e.relPath))
       // Whole-ENTRY comparison, not path comparison: a file present in
@@ -4901,6 +4924,9 @@ final class MergeTable private (
       }
       FileEntry(rel, encodePartValues(vals))
     }
+    // an unpartitioned handle must not adopt files under name= dirs:
+    // every later read of the table would refuse them
+    requireLaidOut(entries, "the converted directory")
     // one footer-only probe; hive inference types the partition columns
     val schema = spark.read
       .option("basePath", root.toString)
@@ -4926,10 +4952,8 @@ final class MergeTable private (
         !Using.resource(Files.list(destPath))(_.findFirst().isPresent)),
       s"clone destination $dest is not an empty directory")
     val (srcV, live) = latest()
-    // the clone carries the handle's whole layout contract
-    val clone = new MergeTable(spark, destPath, partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore, optimizeWrite, autoCompact,
-      ckptRetention, rowTracking, verifyOnRead, pqCkptEntries)
+    // the clone carries the handle's whole layout
+    val clone = MergeTable(spark, destPath, logStore, layout)
     Files.createDirectories(destPath)
     // Deletion-vector refs are root-relative paths exactly like data
     // relPaths — rebase both through the common filesystem.
@@ -5472,7 +5496,7 @@ final class MergeTable private (
     * `row_commit` is at most `version` by construction. As-of schema
     * and column mapping apply exactly as in [[readVersion]]. */
   def readVersionWithRowIds(version: Long): DataFrame =
-    readEntries(snapshotAt(version),
+    readEntries(laidOutAt(version),
         if (version == 0L) None else schemaAt(version),
         if (version == 0L) NoMapping else mappingAt(version),
         rowIds = true)
@@ -5981,7 +6005,7 @@ object MergeTable {
   private val DvPos = "__graft_dv_pos"
   /** Manifest token prefix for a file's deletion-vector ref:
     * `dv=<relDir>,<cardinality>`. */
-  private val DvTok = "dv="
+  private[lake] val DvTok = "dv="
   /** Broadcast the deletion-vector anti-join while the snapshot's total
     * vectored cardinality stays under this many positions (~60 MB of
     * (fileKey, long) rows); beyond it the anti-join shuffles, which is
@@ -6427,23 +6451,21 @@ object MergeTable {
     * value tuple per file, and every partition-aware path — pruning
     * (manifest stats and partition values), OPTIMIZE WHERE, MERGE's
     * touched-partition probe, generated-column derivation — operates
-    * per column. Every other overload opens through this one, so all
-    * run the same input checks. */
+    * per column. Every other public overload opens through this one;
+    * the [[TableLayout]] it builds runs the layout input checks. */
   def apply(spark: SparkSession, root: String,
       partitionCols: Seq[String],
       statsCols: Seq[String],
       deletionVectors: Boolean,
-      bloomCols: Seq[String]): MergeTable = {
-    require(partitionCols.distinct.length == partitionCols.length,
-      s"duplicate partition columns: $partitionCols")
-    require(!statsCols.exists(_.startsWith(DvTok)),
-      s"stats column names may not start with '$DvTok' (manifest token prefix)")
-    require(!bloomCols.exists(c => c.exists(",+\t:".contains(_))),
-      "bloom column names may not contain ',', '+', ':' or tab " +
-        "(manifest token separators)")
-    new MergeTable(spark, Paths.get(root), partitionCols, statsCols,
-      deletionVectors, bloomCols, logStore = LogStore.forConf(spark))
-  }
+      bloomCols: Seq[String]): MergeTable =
+    MergeTable(spark, Paths.get(root), LogStore.forConf(spark),
+      TableLayout(partitionCols, statsCols, deletionVectors, bloomCols))
+
+  /** A handle on the table at `root` under `layout`, publishing through
+    * `logStore` — every handle, its copies and clones are built here. */
+  private[graft] def apply(spark: SparkSession, root: Path,
+      logStore: LogStore, layout: TableLayout): MergeTable =
+    new MergeTable(spark, root, logStore, layout)
 
   /** The exact dir-name shape [[writeData]] produces: `commit-` + the
     * first 12 chars of a random UUID string (8 hex, '-', 3 hex). An

@@ -18,7 +18,7 @@ import org.apache.spark.sql.graftshim.GraftStreamShim
 import org.apache.spark.sql.graftshim.GraftStreamShim.column
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
-import graft.lake.{MatchClause, MergeTable}
+import graft.lake.{LogStore, MatchClause, MergeTable, TableLayout}
 
 /** SQL front-end for the lake DML surface (the reference's consumers
   * speak SQL — Athena over the Glue catalog, README.md:98). A parser
@@ -110,10 +110,9 @@ object GraftSql {
     * session the JVM holds, like Spark's own builtin function
     * registry — and, when `spark.graft.catalog.dir` names a
     * directory, backed by a PERSISTED catalog (r14 verdict #2): each
-    * registration writes the handle's full layout contract (path,
-    * partition/stats/bloom columns, deletion vectors, optimized
-    * writes, auto compact, checkpoint retention, row tracking,
-    * checksum verification, log store) as one small file there, and a
+    * registration writes the handle's layout contract (its
+    * [[graft.lake.TableLayout]], path and log store) as one small
+    * file there, and a
     * lookup that misses in memory — a restarted JVM, a fresh Spark
     * Connect server — rebuilds the handle from that contract, so DML
     * keeps working without a re-issued `REGISTER GRAFT TABLE`. A
@@ -136,70 +135,32 @@ object GraftSql {
   private def sessionFor(): Option[SparkSession] =
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
 
-  private def logStoreName(ls: graft.lake.LogStore): String = ls match {
-    case graft.lake.LogStore.Posix  => "posix"
-    case graft.lake.LogStore.Rename => "rename"
-    case graft.lake.LogStore.Memory => "memory"
-    // a custom store can't be named across a restart — record that it
-    // re-resolves from the conf at rebuild time
-    case _                          => "conf"
-  }
+  /** The log stores a catalog entry names. A custom store can't be
+    * named across a restart: it is recorded as `conf` and re-resolves
+    * from the session conf when the entry is rebuilt. */
+  private val LogStores = Seq("posix" -> LogStore.Posix,
+    "rename" -> LogStore.Rename, "memory" -> LogStore.Memory)
 
   /** The layout contract, serialized canonically (sorted k=v lines) —
     * what the persisted catalog stores and what the contradiction
-    * check compares. Everything here is HANDLE configuration a bare
-    * path cannot recover; table-log state (declared schema, generated
+    * check compares: the handle's [[TableLayout]] plus its path and
+    * log store. Everything here is HANDLE configuration a bare path
+    * cannot recover; table-log state (declared schema, generated
     * rules, constraints, protocol) deliberately stays in the log. */
-  private[sql] def contractOf(t: MergeTable): String = Seq(
-    "autoCompact=" + t.autoCompact.fold("-") {
-      case (b, f) => s"$b,$f" },
-    s"bloomCols=${t.bloomCols.mkString(",")}",
-    s"ckptRetention=${t.ckptRetention._1},${t.ckptRetention._2}",
-    s"deletionVectors=${t.deletionVectors}",
-    s"logStore=${logStoreName(t.logStore)}",
-    s"optimizeWrite=${t.optimizeWrite}",
-    s"partitionCols=${t.partitionCols.mkString(",")}",
-    s"path=${t.root.toAbsolutePath.normalize}",
-    s"pqCkptEntries=${t.pqCkptEntries}",
-    s"rowTracking=${t.rowTracking}",
-    s"statsCols=${t.statsCols.mkString(",")}",
-    s"verifyOnRead=${t.verifyOnRead}").mkString("\n")
+  private[sql] def contractOf(t: MergeTable): String =
+    (t.layout.render.linesIterator.toSeq ++ Seq(
+      "logStore=" + LogStores.collectFirst {
+        case (n, ls) if ls eq t.logStore => n }.getOrElse("conf"),
+      s"path=${t.root.toAbsolutePath.normalize}")).sorted.mkString("\n")
 
   /** Rebuild a handle from a persisted contract, bound to `s`. */
   private def buildFromContract(s: SparkSession,
       contract: String): MergeTable = {
-    val kv = contract.linesIterator.filter(_.contains('='))
-      .map { l =>
-        val i = l.indexOf('=')
-        l.take(i) -> l.drop(i + 1)
-      }.toMap
-    def cols(k: String): Seq[String] = kv.getOrElse(k, "")
-      .split(',').map(_.trim).filter(_.nonEmpty).toSeq
-    def flag(k: String): Boolean =
-      kv.get(k).exists(_.toBoolean)
-    var t = MergeTable(s, kv("path"), cols("partitionCols"),
-      cols("statsCols"), flag("deletionVectors"), cols("bloomCols"))
-    kv.get("logStore").foreach {
-      case "posix"  => t = t.withLogStore(graft.lake.LogStore.Posix)
-      case "rename" => t = t.withLogStore(graft.lake.LogStore.Rename)
-      case "memory" => t = t.withLogStore(graft.lake.LogStore.Memory)
-      case _        => () // "conf": MergeTable.apply already resolved it
-    }
-    if (flag("optimizeWrite")) t = t.withOptimizeWrite
-    kv.get("autoCompact").filter(_ != "-").foreach { ac =>
-      val Array(b, f) = ac.split(','); t = t.withAutoCompact(b.toLong, f.toInt)
-    }
-    kv.get("ckptRetention").foreach { cr =>
-      val Array(k, ms) = cr.split(',')
-      if ((k.toInt, ms.toLong) != MergeTable.DefaultCkptRetention)
-        t = t.withCheckpointRetention(k.toInt, ms.toLong)
-    }
-    if (flag("rowTracking")) t = t.withRowTracking
-    if (flag("verifyOnRead")) t = t.withChecksumVerification
-    kv.get("pqCkptEntries").map(_.toLong)
-      .filter(_ != graft.lake.MergeTable.DefaultPqCkptEntries)
-      .foreach(n => t = t.withParquetCheckpointThreshold(n))
-    t
+    val kv = TableLayout.fields(contract)
+    MergeTable(s, java.nio.file.Paths.get(kv("path")),
+      kv.get("logStore").flatMap(LogStores.toMap.get)
+        .getOrElse(LogStore.forConf(s)),
+      TableLayout.parse(contract))
   }
 
   private def catalogFile(dir: java.nio.file.Path,
@@ -210,48 +171,36 @@ object GraftSql {
     catalogDir(table.spark).foreach { dir =>
       val f = catalogFile(dir, key)
       val contract = contractOf(table)
-      val prior =
-        if (java.nio.file.Files.exists(f))
-          Some(java.nio.file.Files.readString(f))
-        else None
-      prior match {
-        case Some(p) if p != contract =>
-          throw new IllegalArgumentException(
-            s"REGISTER GRAFT TABLE $name: the persisted catalog at " +
-              s"$dir records a DIFFERENT layout contract for this " +
-              "name — registering over it could silently write " +
-              "commits that violate the table's layout. Persisted:\n" +
-              p.linesIterator.map("  " + _).mkString("\n") +
-              "\nRequested:\n" +
-              contract.linesIterator.map("  " + _).mkString("\n") +
-              s"\nDROP GRAFT TABLE $name (or UNREGISTER) first if the " +
-              "change is intentional")
-        case Some(_) => () // identical — idempotent re-register
-        case None =>
-          java.nio.file.Files.createDirectories(dir)
-          // CREATE-IF-ABSENT publish (hard link, the LogStore.Posix
-          // technique): two JVMs sharing the catalog dir may race this
-          // registration — a replace-existing move would let the last
-          // writer silently win with a CONTRADICTING layout (r15
-          // review, the exact hazard the check above refuses). The
-          // loser re-reads the winner's contract and either passes
-          // (identical) or throws the same contradiction error.
-          val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
-          java.nio.file.Files.writeString(tmp, contract)
-          try {
-            java.nio.file.Files.createLink(f, tmp)
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              val winner = java.nio.file.Files.readString(f)
-              if (winner != contract)
-                throw new IllegalArgumentException(
-                  s"REGISTER GRAFT TABLE $name: lost a concurrent " +
-                    s"registration race and the winning contract " +
-                    s"DIFFERS — persisted:\n" +
-                    winner.linesIterator.map("  " + _).mkString("\n") +
-                    "\nRequested:\n" +
-                    contract.linesIterator.map("  " + _).mkString("\n"))
-          } finally java.nio.file.Files.deleteIfExists(tmp)
+      def agree(persisted: String): Unit =
+        if (persisted != contract) throw new IllegalArgumentException(
+          s"REGISTER GRAFT TABLE $name: the persisted catalog at " +
+            s"$dir records a DIFFERENT layout contract for this " +
+            "name — registering over it could silently write " +
+            "commits that violate the table's layout. Persisted:\n" +
+            persisted.linesIterator.map("  " + _).mkString("\n") +
+            "\nRequested:\n" +
+            contract.linesIterator.map("  " + _).mkString("\n") +
+            s"\nDROP GRAFT TABLE $name (or UNREGISTER) first if the " +
+            "change is intentional")
+      // an identical contract is an idempotent re-register
+      if (java.nio.file.Files.exists(f))
+        agree(java.nio.file.Files.readString(f))
+      else {
+        java.nio.file.Files.createDirectories(dir)
+        // CREATE-IF-ABSENT publish (hard link, the LogStore.Posix
+        // technique): two JVMs sharing the catalog dir may race this
+        // registration — a replace-existing move would let the last
+        // writer silently win with a CONTRADICTING layout (r15
+        // review, the exact hazard the check above refuses). The
+        // loser re-reads the winner's contract and either passes
+        // (identical) or throws the same contradiction error.
+        val tmp = dir.resolve(s".tmp-${java.util.UUID.randomUUID()}")
+        java.nio.file.Files.writeString(tmp, contract)
+        try java.nio.file.Files.createLink(f, tmp)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            agree(java.nio.file.Files.readString(f))
+        } finally java.nio.file.Files.deleteIfExists(tmp)
       }
     }
     tables.put(key, table)
@@ -289,19 +238,23 @@ object GraftSql {
     }
   }
 
-  /** Names (and contracts) in the persisted catalog, whether or not
-    * they are loaded in memory — SHOW GRAFT TABLES unions these in. */
+  /** (name, path, layout) of every entry in the persisted catalog,
+    * whether or not it is loaded in memory — SHOW GRAFT TABLES unions
+    * these in. */
   private[sql] def persistedEntries(s: SparkSession)
-      : Seq[(String, String)] =
+      : Seq[(String, String, TableLayout)] =
     catalogDir(s).filter(java.nio.file.Files.isDirectory(_)).toSeq
       .flatMap { dir =>
         scala.util.Using.resource(java.nio.file.Files.list(dir)) { st =>
           import scala.jdk.CollectionConverters._
           st.iterator().asScala
             .filter(_.getFileName.toString.endsWith(CatalogSuffix))
-            .map(p => p.getFileName.toString.stripSuffix(CatalogSuffix) ->
-              java.nio.file.Files.readString(p))
-            .toList
+            .map { p =>
+              val contract = java.nio.file.Files.readString(p)
+              (p.getFileName.toString.stripSuffix(CatalogSuffix),
+                TableLayout.fields(contract).getOrElse("path", ""),
+                TableLayout.parse(contract))
+            }.toList
         }
       }
 
@@ -617,21 +570,18 @@ object GraftSql {
     def cols(m: Option[scala.util.matching.Regex.Match]): Seq[String] =
       m.map(_.group(1).split(',').map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Nil)
-    val partCols = cols(PartByRe.findFirstMatchIn(tail))
-    val t0 = MergeTable(s, path, partCols,
-      cols(StatsRe.findFirstMatchIn(tail)),
-      DvRe.findFirstIn(tail).isDefined,
-      cols(BloomRe.findFirstMatchIn(tail)))
-    val t1 =
-      if (OwRe.findFirstIn(tail).isDefined) t0.withOptimizeWrite else t0
-    // WITH AUTO COMPACT [(targetBytes[, minFiles])] — defaults match
-    // the Scala API's (32 MiB target, 4-file trigger)
-    val t = AcRe.findFirstMatchIn(tail) match {
-      case Some(m) => t1.withAutoCompact(
-        Option(m.group(1)).map(_.toLong).getOrElse(32L << 20),
-        Option(m.group(2)).map(_.toInt).getOrElse(4))
-      case None => t1
-    }
+    val t = MergeTable(s, java.nio.file.Paths.get(path),
+      LogStore.forConf(s), TableLayout(
+        partitionCols = cols(PartByRe.findFirstMatchIn(tail)),
+        statsCols = cols(StatsRe.findFirstMatchIn(tail)),
+        deletionVectors = DvRe.findFirstIn(tail).isDefined,
+        bloomCols = cols(BloomRe.findFirstMatchIn(tail)),
+        optimizeWrite = OwRe.findFirstIn(tail).isDefined,
+        // WITH AUTO COMPACT [(targetBytes[, minFiles])] — defaults match
+        // the Scala API's (32 MiB target, 4-file trigger)
+        autoCompact = AcRe.findFirstMatchIn(tail).map(m => (
+          Option(m.group(1)).map(_.toLong).getOrElse(32L << 20),
+          Option(m.group(2)).map(_.toInt).getOrElse(4)))))
     if (requireFresh) require(t.latestVersion() == 0L,
       s"$verb GRAFT TABLE $name: '$path' already holds table history " +
         s"(version ${t.latestVersion()}) — use REGISTER to attach")
@@ -1285,25 +1235,17 @@ case class GraftShowTablesCommand() extends LeafRunnableCommand {
     org.apache.spark.sql.catalyst.types.DataTypeUtils
       .toAttributes(GraftShowTablesCommand.Schema)
   override def run(sparkSession: SparkSession): Seq[Row] = {
+    def row(name: String, path: String, l: TableLayout) = Row(name, path,
+      if (l.partitionCols.isEmpty) null else l.partitionCols.mkString(","),
+      l.deletionVectors, l.optimizeWrite)
     val inMem = GraftSql.registered.toMap
     // persisted-but-unloaded names (a restarted JVM before any lookup)
     // surface from their catalog contracts without building handles
     val persistedOnly = GraftSql.persistedEntries(sparkSession)
-      .filterNot { case (n, _) => inMem.contains(n) }
-      .map { case (n, contract) =>
-        val kv = contract.linesIterator.filter(_.contains('='))
-          .map { l => val i = l.indexOf('=')
-            l.take(i) -> l.drop(i + 1) }.toMap
-        n -> Row(n, kv.getOrElse("path", ""),
-          kv.get("partitionCols").filter(_.nonEmpty).orNull,
-          kv.get("deletionVectors").exists(_.toBoolean),
-          kv.get("optimizeWrite").exists(_.toBoolean))
-      }
+      .collect { case (n, path, l) if !inMem.contains(n) =>
+        n -> row(n, path, l) }
     (inMem.toSeq.map { case (n, t) =>
-      n -> Row(n, t.root.toAbsolutePath.normalize.toString,
-        (if (t.partitionCols.isEmpty) null
-         else t.partitionCols.mkString(",")),
-        t.deletionVectors, t.optimizeWrite)
+      n -> row(n, t.root.toAbsolutePath.normalize.toString, t.layout)
     } ++ persistedOnly).sortBy(_._1).map(_._2)
   }
   override def simpleString(maxFields: Int): String =

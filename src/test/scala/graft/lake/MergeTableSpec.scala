@@ -1270,7 +1270,7 @@ class MergeTableSpec extends SparkSpec {
       (_.compactSmall(targetBytes = 1L),
         ("OPTIMIZE", "binPack=1; trigger=manual"), true),
       (_.compactWhere(col("date") === "none"),
-        ("OPTIMIZE", "predicate==(date, 'none')"), true),
+        ("OPTIMIZE", "predicate=(date = 'none')"), true),
       (_.purgeVectors(), ("PURGE", ""), true))
     for ((run, op, selective) <- verbs;
          (what, t) <- Seq("never-written" -> never, "emptied" -> emptied) ++
@@ -1284,6 +1284,24 @@ class MergeTableSpec extends SparkSpec {
         .as[(String, String, Long, Long)].head() === ((op._1, op._2, 0L, 0L)),
         s"$op, $what")
     }
+  }
+
+  test("DESCRIBE HISTORY records DELETE, UPDATE and OPTIMIZE WHERE " +
+      "predicates as SQL") {
+    val t = MergeTable(spark, tmpDir("mt").toString, Some("date"))
+    t.overwrite(orders(("o1", "d1", 1.0), ("o2", "d2", 2.0)))
+    val vs = Seq(
+      t.delete(col("amount") === 1),
+      t.update(col("order_id") === "o2" && col("amount") > 1.5,
+        Map("amount" -> lit(3.0))),
+      t.compactWhere(col("date") === "d2"))
+    val params = t.history().filter($"version".isin(vs: _*))
+      .orderBy("version").select("operation_parameters")
+      .as[String].collect().toSeq
+    assert(params === Seq(
+      "predicate=(amount = CAST(1 AS DOUBLE))",
+      "predicate=((order_id = 'o2') AND (amount > 1.5D)); set=amount",
+      "predicate=(date = 'd2')"))
   }
 
   test("compactWhere with zorderCols Z-clusters inside the scope only") {

@@ -112,6 +112,60 @@ class PersistedCatalogSpec extends SparkSpec {
     }
   }
 
+  test("a catalog entry in the persisted contract format rebuilds an " +
+      "equal handle") {
+    withCatalog { cat =>
+      val root = tmpDir("pcat").resolve("t6").toAbsolutePath.normalize
+      // the exact bytes a registration persists, every setting
+      // non-default — entries written by earlier builds keep loading
+      val fixture = Seq(
+        "autoCompact=1048576,3",
+        "bloomCols=id",
+        "ckptRetention=2,1000",
+        "deletionVectors=true",
+        "logStore=memory",
+        "optimizeWrite=true",
+        "partitionCols=p,q",
+        s"path=$root",
+        "pqCkptEntries=1000",
+        "rowTracking=true",
+        "statsCols=n,m",
+        "verifyOnRead=true").mkString("\n")
+      Files.createDirectories(java.nio.file.Paths.get(cat))
+      Files.writeString(java.nio.file.Paths.get(cat, "pfx.graft"), fixture)
+      GraftSql.resetInMemory()
+      val back = GraftSql.table("pfx").get
+      val want = MergeTable(spark, root.toString, Seq("p", "q"),
+          Seq("n", "m"), deletionVectors = true, bloomCols = Seq("id"))
+        .withLogStore(graft.lake.LogStore.Memory).withOptimizeWrite
+        .withAutoCompact(1048576L, 3).withCheckpointRetention(2, 1000L)
+        .withParquetCheckpointThreshold(1000L).withRowTracking
+        .withChecksumVerification
+      assert(back.layout === want.layout)
+      assert(back.root === want.root && (back.logStore eq want.logStore))
+      assert(GraftSql.contractOf(back) === fixture)
+      assert(GraftSql.contractOf(want) === fixture)
+    }
+  }
+
+  test("SHOW GRAFT TABLES shows a persisted-only name as it shows the " +
+      "loaded handle") {
+    withCatalog { _ =>
+      val dir = tmpDir("pcat")
+      spark.sql(s"REGISTER GRAFT TABLE psa AT '${dir.resolve("a")}' " +
+        "PARTITIONED BY (p, q) WITH DELETION VECTORS WITH OPTIMIZED WRITES")
+      spark.sql(s"REGISTER GRAFT TABLE psb AT '${dir.resolve("b")}' STATS (n)")
+      def shown = spark.sql("SHOW GRAFT TABLES").collect()
+        .filter(r => Set("psa", "psb")(r.getString(0))).toSeq
+      GraftSql.resetInMemory()
+      val persistedOnly = shown
+      assert(persistedOnly.size === 2)
+      GraftSql.table("psa"); GraftSql.table("psb")
+      assert(Set("psa", "psb").subsetOf(GraftSql.registered.map(_._1).toSet))
+      assert(shown === persistedOnly)
+    }
+  }
+
   test("without the conf, the registry stays in-memory-only (no " +
       "files written anywhere)") {
     val root = tmpDir("pcat").resolve("t5").toString
