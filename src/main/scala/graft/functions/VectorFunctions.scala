@@ -93,7 +93,11 @@ object VectorFunctions {
   * `graft_table(name[, version|timestamp])` table-valued function
   * (SQL-side snapshot + time-travel reads) AND name reads of
   * registered tables (`FROM t`, `FROM db.t`,
-  * [[graft.sql.GraftRelationResolution]]) into ANY session at build
+  * [[graft.sql.GraftRelationResolution]]) AND two optimizer rules —
+  * manifest file skipping for every lake read
+  * ([[graft.lake.GraftScanPruning]]) and eager aggregation of the fact
+  * side of an aggregate over a fact ⋈ broadcast-dimension join
+  * ([[graft.sql.GraftEagerAggregation]]) — into ANY session at build
   * time — the registration path for sessions this library does not
   * construct (spark-submit jobs, notebooks, Spark Connect servers).
   * A Hive-catalog session drops injected hint-resolution rules, so
@@ -103,6 +107,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectParser((s, delegate) => new graft.sql.GraftSqlParser(s, delegate))
     ext.injectOptimizerRule(s => new graft.lake.GraftScanPruning(s))
+    ext.injectOptimizerRule(_ => new graft.sql.GraftEagerAggregation)
     ext.injectHintResolutionRule(s => new graft.sql.GraftRelationResolution(s))
     ext.injectTableFunction((
       FunctionIdentifier("graft_table"),

@@ -37,6 +37,14 @@ final case class TableLayout(
 
   require(partitionCols.distinct.length == partitionCols.length,
     s"duplicate partition columns: $partitionCols")
+  // render joins a column list with ',' on one line and parse splits and
+  // trims it, so a name holding a separator or edge whitespace would
+  // come back from the persisted catalog as a different layout.
+  for ((what, cs) <- Seq("partition" -> partitionCols, "stats" -> statsCols);
+       c <- cs)
+    require(!c.exists(",\n\r".contains(_)) && c == c.trim && c.nonEmpty,
+      s"$what column name '$c' may not be empty, contain ',' or a line " +
+        "break, or start or end with whitespace (catalog separators)")
   require(!statsCols.exists(_.startsWith(MergeTable.DvTok)),
     s"stats column names may not start with '${MergeTable.DvTok}' " +
       "(manifest token prefix)")

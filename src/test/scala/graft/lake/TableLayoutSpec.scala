@@ -47,6 +47,19 @@ class TableLayoutSpec extends SparkSpec {
       .startsWith("requirement failed: withCheckpointRetention:"))
     assert(refused(TableLayout(pqCkptEntries = 0L))
       .startsWith("requirement failed: withParquetCheckpointThreshold:"))
+    // a partition or stats name that render → parse would split, trim
+    // or drop
+    for (bad <- Seq("a,b", "a\nb", "a\rb", " a", "a ", "\ta", ""))
+      for (l <- Seq(() => TableLayout(partitionCols = Seq(bad)),
+                    () => TableLayout(statsCols = Seq(bad))))
+        assert(refused(l()).contains("catalog separators"), bad)
+    assert(refused(MergeTable(spark, tmpDir("lay_c").toString, Some("a,b"))
+      .layout).contains("partition column name 'a,b'"))
+    assert(refused(MergeTable(spark, tmpDir("lay_s").toString, None,
+      Seq("n", "x y ")).layout).contains("stats column name 'x y '"))
+    // inner whitespace survives the round trip, so it stays allowed
+    val spaced = TableLayout(partitionCols = Seq("a b"), statsCols = Seq("c d"))
+    assert(TableLayout.parse(spaced.render) === spaced)
     // the builders construct through the same checks
     val t = MergeTable(spark, tmpDir("lay_b").toString)
     assert(refused(t.withAutoCompact(minFiles = 1).layout)
