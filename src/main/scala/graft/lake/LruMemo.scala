@@ -39,6 +39,14 @@ private[lake] final class LruMemo[K, V](cap: Int) {
     }
   }
 
+  /** The cached value for `k`, if any — counted neither as a hit nor
+    * as a miss (the caller decides whether it may serve it). */
+  def peek(k: K): Option[V] = Option(map.synchronized(map.get(k)))
+
+  def remove(k: K): Unit = map.synchronized(map.remove(k))
+
+  def clear(): Unit = map.synchronized(map.clear())
+
   def size: Int = map.synchronized(map.size())
   def hits: Long = hitCount.get()
   def misses: Long = missCount.get()

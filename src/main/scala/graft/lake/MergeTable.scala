@@ -3,6 +3,7 @@ package graft.lake
 import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.Using
@@ -235,15 +236,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
 
   // ---- log ----------------------------------------------------------------
 
-  /** Live (version, entries) of the latest committed snapshot, checked
+  /** The latest committed version's folded state, its entries checked
     * against this handle's partition columns ([[laidOutAt]]) unless
     * `laidOut` is false — only for an operation that keeps none of the
     * entries live. */
-  private def latest(laidOut: Boolean = true): (Long, Seq[FileEntry]) = {
-    val v = latestVersion()
-    if (v == 0L) (0L, Seq.empty)
-    else (v, if (laidOut) laidOutAt(v) else snapshotAt(v))
-  }
+  private def latest(laidOut: Boolean = true): TableState =
+    if (laidOut) laidOutAt(latestVersion()) else stateAt(latestVersion())
 
   def latestVersion(): Long =
     if (!Files.isDirectory(logDir)) 0L
@@ -364,7 +362,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
           java.util.Base64.getDecoder.decode(parts(1)), "UTF-8"))
         // Protocol: "P readerFeats writerFeats" (comma-joined feature
         // names, '-' for an empty set) — Delta's protocol action. Last
-        // one wins; [[metaAtUncached]] gates on it. A PRE-feature
+        // one wins; [[gated]] gates on it. A PRE-feature
         // binary reading a P-bearing log lands in the `other` arm
         // below — a hard fail, which is exactly the gate's contract
         // for readers that predate the gate itself.
@@ -381,69 +379,123 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       }
     }
 
-  /** Version-keyed snapshot memo. Exact for the same reason [[metaAt]]'s
-    * is: a committed version's snapshot is a pure function of the
-    * immutable published-log prefix (vacuum only makes OLD versions
-    * unreadable, never changes a readable one's content). LRU-bounded
-    * by entry count — a snapshot of a million-file table is tens of MB
-    * of driver metadata, so the memo keeps only the handful of versions
-    * a lifecycle actually alternates between (current + time-travel
-    * anchors); access-order eviction. Wins are direct: [[snapshotAt]]
-    * had ~12 call sites each re-folding checkpoint + deltas, and every
-    * commit now also derives a checksum from the same snapshot. */
-  private val snapMemo =
-    new java.util.LinkedHashMap[Long, Seq[FileEntry]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Long, Seq[FileEntry]]): Boolean =
-        size > SnapMemoMax
+  /** Version-keyed memo of folded [[MergeTable.TableState]]s. Exact: a
+    * committed version's state is a pure function of the immutable
+    * published-log prefix (vacuum only makes OLD versions unreadable,
+    * never changes a readable one's content). LRU-bounded by entry
+    * count — the state of a million-file table is tens of MB of driver
+    * metadata, so the memo keeps only the handful of versions a
+    * lifecycle actually alternates between (current + time-travel
+    * anchors). Its `misses` count the folds this handle ran. */
+  private[lake] val stateMemo = new LruMemo[Long, TableState](SnapMemoMax)
+
+  private def deltaPath(v: Long): Path = logDir.resolve(f"$v%020d.txt")
+
+  /** Version `v` of the table — its live files and its metadata —
+    * folded once from the log ([[foldState]]) and memoized. Every read
+    * and write path resolves versions here, so the READER gate
+    * ([[gated]]) and, under [[withChecksumVerification]], the sidecar
+    * check run on each newly folded state before it is served or
+    * memoized; a refused state is never memoized, so a later engine
+    * upgrade or a repaired log re-evaluates cleanly. */
+  private[lake] def stateAt(v: Long): TableState =
+    if (v == 0L) EmptyState
+    else stateMemo.peek(v) match {
+      // a memo hit is valid only while the version's OWN delta survives:
+      // vacuum prunes a strict prefix of deltas, so "delta v exists"
+      // exactly discriminates still-readable from pruned — one stat per
+      // resolution keeps the fail-fast contract across OTHER handles'
+      // vacuums (this handle's own vacuum also clears its memo) and
+      // self-heals the compute-vs-vacuum put race (a stale entry
+      // re-cached after the clear fails this check on its next hit)
+      case Some(st) if Files.exists(deltaPath(v)) => verified(st)
+      case stale =>
+        if (stale.isDefined) stateMemo.remove(v)
+        stateMemo.get(v)(verified(gated(foldState(v))))
     }
 
-  private def snapshotAt(v: Long): Seq[FileEntry] = {
-    val deltaP = logDir.resolve(f"$v%020d.txt")
-    // a memo hit is valid only while the version's OWN delta survives:
-    // vacuum prunes a strict prefix of deltas, so "delta v exists"
-    // exactly discriminates still-readable from pruned — one stat per
-    // resolution keeps the fail-fast contract across OTHER handles'
-    // vacuums (this handle's own vacuum also clears its memo) and
-    // self-heals the compute-vs-vacuum put race (a stale entry
-    // re-cached after the clear fails this check on its next hit)
-    val hit = snapMemo.synchronized(snapMemo.get(v))
-    if (hit != null && Files.exists(deltaP)) {
-      // read-path verification ([[withChecksumVerification]]): even a
-      // memo hit must not serve a version whose sidecar never passed
-      if (verifyOnRead && !crcChecked.contains(v) &&
-          compareCrc(v, hit)) crcChecked.add(v)
-      return hit
+  /** The latest version's metadata. */
+  private def headMeta: MetaState = stateAt(latestVersion()).meta
+
+  /** Fold version `v` from the log, files and metadata in one pass over
+    * each log file. The sequential-commit shape (v-1 memoized, its
+    * delta still present) applies ONE delta — O(changed files) of log
+    * IO per commit instead of a checkpoint re-anchor's O(live) parse,
+    * which is what a 10k-commit streaming ingest pays per append.
+    * Otherwise the newest checkpoint at or below `v` anchors the fold
+    * (a parquet checkpoint's entries load through one distributed
+    * scan) and the deltas above it apply in order. Fails fast, instead
+    * of resolving a partial state, when a needed delta was pruned by
+    * [[vacuum]]. */
+  private def foldState(v: Long): TableState = {
+    val prev = stateMemo.peek(v - 1).filter(_ => Files.exists(deltaPath(v - 1)))
+    val anchor = if (prev.isDefined) v - 1 else checkpointAtOrBelow(v)
+    val files = mutable.LinkedHashMap(
+      prev.fold(Seq.empty[FileEntry])(_.entries).map(e => e.relPath -> e): _*)
+    var meta = prev.fold(MetaState())(_.meta)
+    def fold(a: LogAction): Unit = a match {
+      case Add(e)    => files.update(e.relPath, e)
+      case Remove(f) => files.remove(f)
+      case PqEntries(dir, count) =>
+        pqCheckpointEntries(dir, count).foreach(e => files.update(e.relPath, e))
+      case m => meta = meta.folded(m)
     }
-    if (hit != null) snapMemo.synchronized(snapMemo.remove(v))
-    // incremental fold first: the sequential-commit shape (parent
-    // memoized, delta present) applies ONE delta — O(changed files)
-    // per commit instead of a checkpoint re-anchor's O(live) parse,
-    // which is what a 10k-commit streaming ingest pays per append
-    val prev =
-      if (v > 1L) snapMemo.synchronized(snapMemo.get(v - 1)) else null
-    val prevOk = prev != null &&
-      Files.exists(logDir.resolve(f"${v - 1}%020d.txt"))
-    val s =
-      if (prevOk && Files.exists(deltaP)) {
-        val base = mutable.LinkedHashMap(prev.map(e => e.relPath -> e): _*)
-        readLogFile(deltaP).foreach {
-          case Add(e)    => base.update(e.relPath, e)
-          case Remove(f) => base.remove(f)
-          case _         => ()
-        }
-        base.values.toSeq
-      } else snapshotAtUncached(v) // outside the lock: pure, so a
-    // verify BEFORE memoizing under [[withChecksumVerification]]: a
-    // mismatching snapshot must never enter the memo (it would serve
-    // on later hits while crcChecked still lacks the version)
-    if (verifyOnRead && !crcChecked.contains(v) &&
-        compareCrc(v, s)) crcChecked.add(v)
-    snapMemo.synchronized(snapMemo.put(v, s)) // racing double-compute
-    s                                         // is benign
+    if (prev.isEmpty && anchor > 0L)
+      readLogFile(logDir.resolve(f"$anchor%020d$CkptSuffix")).foreach(fold)
+    ((anchor + 1) to v).foreach { w =>
+      val p = deltaPath(w)
+      if (!Files.exists(p)) throw new IllegalStateException(
+        s"MergeTable at $root: version $v is unreadable — commit delta $w " +
+          "was pruned (vacuum removes pre-vacuum history)")
+      readLogFile(p).foreach(fold)
+    }
+    TableState(v, files.values.toSeq, meta)
   }
 
-  /** [[snapshotAt]] for an operation that reads version `v`'s files or
+  /** A parquet checkpoint's file entries, in fold order: one
+    * DISTRIBUTED parquet scan (one Spark job, columnar decode) — O(live)
+    * work off the driver's line parser; `idx` restores the fold order
+    * the text form preserves implicitly. */
+  private def pqCheckpointEntries(dir: String, count: Long): Seq[FileEntry] = {
+    val rows = {
+      import spark.implicits._
+      spark.read.parquet(logDir.resolve(dir).toString)
+        .as[PqEntryRow].collect()
+    }
+    if (rows.length != count) throw new IllegalStateException(
+      s"MergeTable at $root: parquet checkpoint $dir holds " +
+        s"${rows.length} entries, pointer says $count — partial " +
+        "or corrupted checkpoint dir")
+    rows.sortBy(_.idx).toSeq.map(fromPqRow)
+  }
+
+  /** READER gate (Delta's protocol action): a table version that
+    * REQUIRES a reader feature this build does not implement fails
+    * fast and loud — every read and write path resolves its version
+    * through [[stateAt]], so nothing downstream can silently mis-read
+    * feature-bearing state it does not understand. Per-VERSION on
+    * purpose: pre-upgrade versions carry no feature-bearing actions, so
+    * time travel below the upgrade stays readable. */
+  private def gated(st: TableState): TableState = {
+    val unknownR = st.meta.protocol._1 -- SupportedReaderFeatures
+    if (unknownR.nonEmpty) throw new IllegalStateException(
+      s"MergeTable at $root: version ${st.version} requires reader " +
+        s"feature(s) [${unknownR.toSeq.sorted.mkString(", ")}] this build " +
+        s"does not implement (supported: [${SupportedReaderFeatures.toSeq
+          .sorted.mkString(", ")}]) — upgrade the engine to read this table")
+    st
+  }
+
+  /** Read-path verification ([[withChecksumVerification]]): a state is
+    * checked against its sidecar until one check passes — even a memo
+    * hit must not serve a version whose sidecar never passed. */
+  private def verified(st: TableState): TableState = {
+    if (verifyOnRead && !crcChecked.contains(st.version) && compareCrc(st))
+      crcChecked.add(st.version)
+    st
+  }
+
+  /** [[stateAt]] for an operation that reads version `v`'s files or
     * keeps them live. It refuses, before any Spark job, a snapshot with
     * a file whose partition directories (the `name=` chain above it in
     * its relPath) are not this handle's [[partitionCols]]: such a
@@ -452,13 +504,13 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * The manifest's partition token can't tell: a single-column NULL
     * partition encodes like an unpartitioned file. Checked once per
     * version per handle. */
-  private def laidOutAt(v: Long): Seq[FileEntry] = {
-    val entries = snapshotAt(v)
+  private def laidOutAt(v: Long): TableState = {
+    val st = stateAt(v)
     if (!layoutChecked.contains(v)) {
-      requireLaidOut(entries, s"version $v")
+      requireLaidOut(st.entries, s"version $v")
       layoutChecked.add(v)
     }
-    entries
+    st
   }
 
   /** [[laidOutAt]]'s test over `entries`, which `where` names. */
@@ -481,152 +533,19 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   private val layoutChecked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
 
-  /** Snapshot reconstruction: newest checkpoint ≤ `v`, then fold the
-    * commit deltas (ckpt, v]. Fails fast (instead of silently resolving a
-    * partial snapshot) when a needed delta was pruned by [[vacuum]]. */
-  private def snapshotAtUncached(v: Long): Seq[FileEntry] = {
-    val ckpt = checkpointAtOrBelow(v)
-    val ckptActions: Seq[LogAction] =
-      if (ckpt == 0L) Seq.empty
-      else readLogFile(logDir.resolve(f"$ckpt%020d$CkptSuffix"))
-    // parquet-checkpoint anchor: the entries load through a
-    // DISTRIBUTED parquet scan (one Spark job, columnar decode) —
-    // O(live) work off the driver's line parser; `idx` restores the
-    // fold order the text form preserved implicitly
-    val anchorEntries: Seq[(String, FileEntry)] =
-      ckptActions.collectFirst { case PqEntries(dir, count) =>
-        val rows = {
-          import spark.implicits._
-          spark.read.parquet(logDir.resolve(dir).toString)
-            .as[PqEntryRow].collect()
-        }
-        if (rows.length != count) throw new IllegalStateException(
-          s"MergeTable at $root: parquet checkpoint $dir holds " +
-            s"${rows.length} entries, pointer says $count — partial " +
-            "or corrupted checkpoint dir")
-        rows.sortBy(_.idx).toSeq.map { r =>
-          val e = fromPqRow(r); e.relPath -> e
-        }
-      }.getOrElse(ckptActions.collect { case Add(e) => e.relPath -> e })
-    val base: mutable.LinkedHashMap[String, FileEntry] =
-      mutable.LinkedHashMap(anchorEntries: _*)
-    ((ckpt + 1) to v).foreach { w =>
-      val p = logDir.resolve(f"$w%020d.txt")
-      if (!Files.exists(p)) throw new IllegalStateException(
-        s"MergeTable at $root: version $v is unreadable — commit delta $w " +
-          "was pruned (vacuum removes pre-vacuum history)")
-      readLogFile(p).foreach {
-        case Add(e)    => base.update(e.relPath, e)
-        case Remove(f) => base.remove(f)
-        case _         => () // constraint metadata — folded separately
-      }
-    }
-    base.values.toSeq
-  }
-
-  /** CHECK constraints in effect at version `v` — the same
-    * checkpoint-then-deltas fold as [[snapshotAt]], over the C/D
-    * actions. MEMOIZED by version: the fold is a pure function of the
-    * immutable committed-log prefix (vacuum preserves the folded state
-    * through its checkpoint), and every write consults it up to three
-    * times (generated-column population, enforcement, rule lookup) —
-    * r11 measured the repeated per-commit refolds as a visible bench
-    * tax on lifecycle-heavy queries. */
-  /** ALL non-file log metadata at version `v`, folded in ONE pass over
-    * the checkpoint + deltas and memoized by version: CHECK
-    * constraints (C/D), column mapping (E/X), the txn ledger (T,
-    * MAX-folded), and the declared schema (M, last wins). One fold
-    * replaces the four separate per-family folds this file used to
-    * run — each parsed the SAME checkpoint and delta files again, and
-    * lifecycle-heavy queries measurably paid for it. The fold is a
-    * pure function of the immutable committed-log prefix, so
-    * version-keyed memoization is exact (vacuum preserves folded
-    * state through its checkpoint). */
-  private final case class MetaState(
-      constraints: Map[String, String],
-      renames: Map[String, String],
-      drops: Set[String],
-      txns: Map[String, Long],
-      schema: Option[org.apache.spark.sql.types.StructType],
-      protocol: (Set[String], Set[String]) = (Set.empty, Set.empty),
-      rowIdHwm: Long = 0L)
-
-  private val metaMemo =
-    new java.util.concurrent.ConcurrentHashMap[Long, MetaState]()
-
-  private def metaAt(v: Long): MetaState =
-    metaMemo.computeIfAbsent(v, metaAtUncached(_))
-
-  private def metaAtUncached(v: Long): MetaState = {
-    val ckpt = checkpointAtOrBelow(v)
-    val cons = mutable.LinkedHashMap.empty[String, String]
-    val ren = mutable.LinkedHashMap.empty[String, String]
-    val drops = mutable.LinkedHashSet.empty[String]
-    val txns = mutable.LinkedHashMap.empty[String, Long]
-    var schemaJson: Option[String] = None
-    var proto: (Set[String], Set[String]) = (Set.empty, Set.empty)
-    var hwm = 0L
-    def fold(p: Path): Unit = readLogFile(p).foreach {
-      case AddConstraint(n, pr) => cons.update(n, pr)
-      case DropConstraint(n)    => cons.remove(n)
-      case RenameCol(ph, lg)    => ren.update(ph, lg)
-      case DropCol(ph)          => ren.remove(ph); drops.add(ph)
-      case SetTxn(app, bv) =>
-        txns.update(app, math.max(bv, txns.getOrElse(app, Long.MinValue)))
-      case SetSchema(j)         => schemaJson = Some(j)
-      case Protocol(r, w)       => proto = (r, w) // last wins (Delta)
-      case SetRowIdHwm(h)       => hwm = math.max(hwm, h)
-      case _                    => ()
-    }
-    if (ckpt != 0L) fold(logDir.resolve(f"$ckpt%020d$CkptSuffix"))
-    ((ckpt + 1) to v).foreach { w =>
-      val p = logDir.resolve(f"$w%020d.txt")
-      if (Files.exists(p)) fold(p)
-    }
-    // READER gate (Delta's protocol action, r13 verdict #3): a table
-    // version that REQUIRES a reader feature this build does not
-    // implement must fail fast and loud — every read and write path
-    // resolves metadata through this fold, so nothing downstream can
-    // silently mis-read feature-bearing state it does not understand.
-    // Per-VERSION on purpose: pre-upgrade versions carry no
-    // feature-bearing actions, so time travel below the upgrade stays
-    // readable. (The throw happens inside computeIfAbsent, so nothing
-    // is memoized for a refused version — a later engine upgrade
-    // re-evaluates cleanly.)
-    val unknownR = proto._1 -- SupportedReaderFeatures
-    if (unknownR.nonEmpty) throw new IllegalStateException(
-      s"MergeTable at $root: version $v requires reader feature(s) " +
-        s"[${unknownR.toSeq.sorted.mkString(", ")}] this build does not " +
-        s"implement (supported: [${SupportedReaderFeatures.toSeq.sorted
-          .mkString(", ")}]) — upgrade the engine to read this table")
-    MetaState(cons.toMap, ren.toMap, drops.toSet, txns.toMap,
-      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]),
-      proto, hwm)
-  }
-
-  private def constraintsAt(v: Long): Map[String, String] =
-    metaAt(v).constraints
-
   /** The table's current CHECK constraints (name → SQL predicate). */
-  def constraints: Map[String, String] = {
-    val v = latestVersion()
-    if (v == 0L) Map.empty else constraintsAt(v)
-  }
+  def constraints: Map[String, String] = headMeta.constraints
 
   /** The table's protocol requirement `(readerFeatures,
     * writerFeatures)` — both empty for a table never upgraded (the
     * implicit baseline protocol every known build supports). */
-  def protocol: (Set[String], Set[String]) = {
-    val v = latestVersion()
-    if (v == 0L) (Set.empty, Set.empty) else metaAt(v).protocol
-  }
+  def protocol: (Set[String], Set[String]) = headMeta.protocol
 
   /** Delta's protocol upgrade (the reader/writer-version gate, r13
     * verdict #3): commit a protocol action REQUIRING the given
     * features of every engine that subsequently reads or writes this
     * table — a build missing a required READER feature refuses all
-    * reads and writes at the metadata fold ([[metaAt]]'s gate); one
+    * reads and writes at the log fold ([[gated]]); one
     * missing only a WRITER feature can still read but refuses to
     * publish. Monotone (features union in — an upgrade never relaxes
     * a requirement), idempotent (no commit when nothing new), and
@@ -655,43 +574,29 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     retryingCommit("UPGRADE PROTOCOL", Map(
       "readerFeatures" -> MergeTable.protoFmt(next._1),
       "writerFeatures" -> MergeTable.protoFmt(next._2))) { () =>
-      val (v, _) = latest()
-      val at = if (v == 0L) cur else metaAt(v).protocol
+      val st = latest()
+      val at = st.meta.protocol
       (CommitDelta(Nil, Nil, protocol = Some(
-        (at._1 ++ next._1, at._2 ++ at._1 ++ next._2))), v)
+        (at._1 ++ next._1, at._2 ++ at._1 ++ next._2))), st.version)
     }
   }
 
-  /** Column-mapping state at version `v`: (physical → logical renames,
-    * dropped physical names) — the same checkpoint-then-deltas fold as
-    * [[snapshotAt]], over the E/X actions. */
-  /** Per-appId high-water transaction versions at table version `v` —
-    * the streaming sink's exactly-once ledger (Delta's `txn` action).
-    * MAX-folded: replayed or out-of-order writers can only observe a
-    * watermark at least as high as any committed one. */
-  private def txnsAt(v: Long): Map[String, Long] = metaAt(v).txns
-
   /** The highest transaction version committed for `appId`, if any —
     * a writer that tracks its own monotonic version (a streaming
-    * query's batchId) skips work at or below it. */
-  def txnVersion(appId: String): Option[Long] =
-    txnsAt(latestVersion()).get(appId)
-
-  /** DECLARED SCHEMA at version `v` — the engine-side half of Delta's
-    * metaData action: when present, the log (not the parquet footers)
-    * is the source of truth for the table's PHYSICAL schema. Last `M`
-    * action wins; checkpoint-folded and vacuum-safe like every other
-    * metadata channel. Served from the unified [[metaAt]] fold. */
-  private def schemaAt(v: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    if (v == 0L) None else metaAt(v).schema
+    * query's batchId) skips work at or below it. The ledger is Delta's
+    * `txn` action, MAX-folded: replayed or out-of-order writers can
+    * only observe a watermark at least as high as any committed one. */
+  def txnVersion(appId: String): Option[Long] = headMeta.txns.get(appId)
 
   /** The declared (log-recorded) PHYSICAL schema, when this table was
     * created with one ([[declareSchema]], SQL `CREATE GRAFT TABLE`) —
-    * None for footer-schema tables, whose reads keep deriving the
-    * schema from the live files exactly as before. */
+    * the engine-side half of Delta's metaData action: when present, the
+    * log (not the parquet footers) is the source of truth for the
+    * table's physical schema. Last `M` action wins. None for
+    * footer-schema tables, whose reads keep deriving the schema from
+    * the live files exactly as before. */
   def declaredSchema: Option[org.apache.spark.sql.types.StructType] =
-    schemaAt(latestVersion())
+    headMeta.schema
 
   /** Declare (or replace) the table's schema in the LOG — what makes a
     * never-written table readable (correct empty frame), appends
@@ -714,8 +619,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     require(schema.fieldNames.map(_.toLowerCase).distinct.length ==
       schema.fields.length, s"declareSchema: duplicate names in $schema")
     retryingCommit("SET SCHEMA") { () =>
-      val (v, _) = latest()
-      (CommitDelta(Nil, Nil, mSchema = Some(schema.json)), v)
+      (CommitDelta(Nil, Nil, mSchema = Some(schema.json)), latest().version)
     }
   }
 
@@ -763,21 +667,21 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     retryingCommit("ADD COLUMN",
       Map("column" -> name, "type" -> dataType.simpleString) ++
         default.map("default" -> _)) { () =>
-      val (v, live) = latest()
-      val base = schemaAt(v).getOrElse {
-        require(live.nonEmpty,
+      val st = latest()
+      val base = st.meta.schema.getOrElse {
+        require(st.entries.nonEmpty,
           s"MergeTable at $root: no declared schema and no data — " +
             "declareSchema first")
-        physicalSchemaOf(live)
+        physicalSchemaOf(st.entries, None)
       }
-      val (ren, drops) = if (v == 0L) (Map.empty[String, String], Set.empty[String]) else mappingAt(v)
-      val taken = base.fieldNames.toSet ++ ren.values ++ drops
+      val taken = base.fieldNames.toSet ++ st.meta.renames.values ++
+        st.meta.drops
       require(!taken.exists(_.equalsIgnoreCase(name)),
         s"addColumn: '$name' collides with an existing, renamed-to, or " +
           "dropped column name")
       (CommitDelta(Nil, Nil, mSchema = Some(
         org.apache.spark.sql.types.StructType(base.fields :+
-          defaultField(name, dataType, default)).json)), v)
+          defaultField(name, dataType, default)).json)), st.version)
     }
 
   /** Build a declared-schema field, validating + recording a DEFAULT
@@ -833,12 +737,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       to: org.apache.spark.sql.types.DataType): Long =
     retryingCommit("ALTER COLUMN TYPE",
       Map("column" -> name, "type" -> to.simpleString)) { () =>
-      val (v, live) = latest()
-      val base = schemaAt(v).getOrElse {
-        require(live.nonEmpty,
+      val st = latest()
+      val base = st.meta.schema.getOrElse {
+        require(st.entries.nonEmpty,
           s"MergeTable at $root: no declared schema and no data — " +
             "declareSchema first")
-        physicalSchemaOf(live)
+        physicalSchemaOf(st.entries, None)
       }
       val phys = physicalOf(name)
       val i = base.fieldNames.indexOf(phys)
@@ -854,7 +758,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       (CommitDelta(Nil, Nil, mSchema = Some(
         org.apache.spark.sql.types.StructType(
           base.fields.updated(i, base.fields(i).copy(dataType = to)))
-          .json)), v)
+          .json)), st.version)
     }
 
   /** The widening matrix the parquet reader supports losslessly. */
@@ -873,38 +777,22 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     }
   }
 
-  /** Served from the unified [[metaAt]] fold — [[presentLogical]]
-    * consults the mapping on every read. */
-  private def mappingAt(v: Long): (Map[String, String], Set[String]) = {
-    val m = metaAt(v)
-    (m.renames, m.drops)
-  }
-
-  private def currentMapping(): (Map[String, String], Set[String]) = {
-    val v = latestVersion()
-    if (v == 0L) NoMapping else mappingAt(v)
-  }
-
   /** Current renames as physical → logical (empty when no column was
     * ever renamed). */
-  def columnMapping: Map[String, String] = currentMapping()._1
+  def columnMapping: Map[String, String] = headMeta.renames
 
   /** Physical names of metadata-dropped columns (their data survives in
     * files; readers exclude them). */
-  def droppedColumns: Set[String] = currentMapping()._2
+  def droppedColumns: Set[String] = headMeta.drops
 
-  /** Physical → logical presentation applied to every read: dropped
-    * physicals vanish, renamed physicals surface under their current
-    * logical name, order preserved. Defensive against double
-    * application (a renamed physical is simply absent the second
-    * time). */
-  private def presentLogical(df: DataFrame): DataFrame =
-    presentLogicalAs(df, currentMapping())
-
-  /** [[presentLogical]] under an explicit mapping state — time travel
-    * passes the mapping AS OF the queried version (Delta parity: a
-    * reader replaying v3 of a since-renamed table sees v3's names, and
-    * a since-dropped column is still visible at pre-drop versions). */
+  /** Physical → logical presentation applied to every read under
+    * `mapping`: dropped physicals vanish, renamed physicals surface
+    * under their logical name, order preserved. Defensive against
+    * double application (a renamed physical is simply absent the
+    * second time). Time travel passes the mapping AS OF the queried
+    * version (Delta parity: a reader replaying v3 of a since-renamed
+    * table sees v3's names, and a since-dropped column is still
+    * visible at pre-drop versions). */
   private def presentLogicalAs(df: DataFrame,
       mapping: (Map[String, String], Set[String])): DataFrame = {
     val (ren, drops) = mapping
@@ -916,12 +804,6 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     }: _*)
   }
 
-  /** Logical → physical translation applied to every write, so data
-    * files stay physically-named forever (Delta's column-mapping
-    * discipline — a rename never rewrites data). Fails fast on a
-    * column that collides with a dropped or renamed-away physical name
-    * (silently accepting either would resurrect old file data under
-    * the new column). */
   /** A physical-name schema minus DROPPED columns — the conformance
     * target for incoming frames mapped through [[toPhysical]]: a
     * dropped field still lives in old files and in a declared log
@@ -930,14 +812,20 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   private def visibleDeclared(
       d: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = {
-    val (_, drops) = currentMapping()
+    val drops = headMeta.drops
     if (drops.isEmpty) d
     else org.apache.spark.sql.types.StructType(
       d.fields.filterNot(f => drops.contains(f.name)))
   }
 
+  /** Logical → physical translation applied to every write, so data
+    * files stay physically-named forever (Delta's column-mapping
+    * discipline — a rename never rewrites data). Fails fast on a
+    * column that collides with a dropped or renamed-away physical name
+    * (silently accepting either would resurrect old file data under
+    * the new column). */
   private def toPhysical(df: DataFrame): DataFrame = {
-    val (ren, drops) = currentMapping()
+    val (ren, drops) = headMeta.mapping
     if (ren.isEmpty && drops.isEmpty) return df
     val inv = ren.map(_.swap) // logical -> physical
     df.columns.foreach { c =>
@@ -956,7 +844,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
 
   /** Resolve a current logical column name to its physical name. */
   private def physicalOf(logical: String): String =
-    currentMapping()._1.collectFirst {
+    headMeta.renames.collectFirst {
       case (ph, lg) if lg == logical => ph
     }.getOrElse(logical)
 
@@ -1230,15 +1118,14 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   private def writeCheckpoint(v: Long): Unit = {
     val target = logDir.resolve(f"$v%020d$CkptSuffix")
     if (Files.exists(target)) return
-    // a checkpoint replaces the deltas below it for readers, so it must
-    // carry the constraint AND column-mapping state too (or vacuum
-    // would silently drop them)
-    val (ren, drops) = mappingAt(v)
-    // protocol state must ride the checkpoint too — vacuum prunes the
-    // deltas below it, and a reader anchored on the checkpoint alone
-    // must still see (and be gated by) the table's required features
-    val proto = metaAt(v).protocol
-    val entries = snapshotAt(v)
+    // a checkpoint replaces the deltas below it for readers, so it
+    // carries the version's whole metadata ([[MetaState.asDelta]]) or
+    // vacuum would silently drop it: a reader anchored on the
+    // checkpoint alone must still be gated by the required features,
+    // and the row-id high-water mark must survive, or ids of removed
+    // files would be reused
+    val st = stateAt(v)
+    val entries = st.entries
     // PARQUET entry block (X207): past the threshold — and only once
     // the parquetCheckpoint reader feature is stamped, so a pre-feature
     // reader can never open an A-line-less text checkpoint as an empty
@@ -1249,7 +1136,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     // unreferenced dir (reaped with its version by retention/vacuum),
     // never a dangling pointer.
     val usePq = entries.size >= pqCkptEntries &&
-      proto._1.contains("parquetCheckpoint")
+      st.meta.protocol._1.contains("parquetCheckpoint")
     val pqPointer: Option[String] =
       if (!usePq) None
       else {
@@ -1276,18 +1163,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         }
         Some(s"Q\t$dirName\t${entries.size}")
       }
-    val body = deltaBody(CommitDelta(
-      if (usePq) Nil else entries, Nil,
-      cAdds = constraintsAt(v).toSeq,
-      mRenames = ren.toSeq, mDrops = drops.toSeq,
-      txns = txnsAt(v).toSeq,
-      mSchema = schemaAt(v).map(_.json),
-      protocol =
-        if (proto._1.isEmpty && proto._2.isEmpty) None else Some(proto),
-      // the row-id high-water mark must survive vacuum folding history
-      // onto this checkpoint — or ids of removed files would be reused
-      rowIdHwm = Some(metaAt(v).rowIdHwm).filter(_ > 0L))) +
-      pqPointer.fold("")(q => "\n" + q)
+    val body =
+      deltaBody(st.meta.asDelta.copy(adds = if (usePq) Nil else entries)) +
+        pqPointer.fold("")(q => "\n" + q)
     logStore.putIfAbsent(target, body)
     // best-effort, like the checkpoint itself: a failed prune costs
     // bytes, never correctness
@@ -1445,10 +1323,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       if (v <= 1L) None
       else for {
         (pn, px) <- readCrcLine(v - 1)
-        prev <- Option(snapMemo.synchronized(snapMemo.get(v - 1)))
+        prev <- stateMemo.peek(v - 1)
       } yield {
         val byPath = mutable.HashMap.empty[String, FileEntry]
-        prev.foreach(e => byPath.update(e.relPath, e))
+        prev.entries.foreach(e => byPath.update(e.relPath, e))
         var acc = java.lang.Long.parseUnsignedLong(px, 16)
         var n = pn
         d.removes.foreach { f =>
@@ -1465,11 +1343,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         (n, f"$acc%016x")
       }
     }
-    val (nf, xor) = fromDelta.getOrElse {
-      val entries = snapshotAt(v)
-      (entries.size.toLong, entryXorOf(entries))
-    }
-    val m = metaAt(v)
+    val st = stateAt(v)
+    val (nf, xor) = fromDelta.getOrElse(
+      (st.entries.size.toLong, entryXorOf(st.entries)))
+    val m = st.meta
     logStore.putIfAbsent(p,
       s"K\t$nf\t$xor\t${metaHashOf(m)}\t${m.rowIdHwm}")
   }
@@ -1492,15 +1369,14 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * when the recomputed state does not match what the committer
     * recorded — the log text was corrupted or tampered with after
     * commit, and nothing downstream should trust reads at `v`. */
-  def verifyChecksum(v: Long): Boolean =
-    compareCrc(v, snapshotAt(v))
+  def verifyChecksum(v: Long): Boolean = compareCrc(stateAt(v))
 
-  /** Shared comparison core: check version `v`'s ALREADY-RESOLVED
-    * entry set (plus the memoized metadata fold) against the sidecar.
-    * Returns false when no sidecar exists; throws on mismatch. Taking
-    * the entries as an argument keeps the read-path hook
-    * ([[snapshotAt]] under [[verifyOnRead]]) recursion-free. */
-  private def compareCrc(v: Long, entries: Seq[FileEntry]): Boolean = {
+  /** Shared comparison core: check an ALREADY-FOLDED state against its
+    * version's sidecar. Returns false when no sidecar exists; throws on
+    * mismatch. Taking the state as an argument keeps the read-path hook
+    * ([[verified]] under [[verifyOnRead]]) recursion-free. */
+  private def compareCrc(st: TableState): Boolean = {
+    val v = st.version
     val p = crcPath(v)
     // through the LogStore seam, like the publish (r14 ADVICE): an
     // implementation that materializes lazily must still verify its
@@ -1509,10 +1385,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     val parts = content.trim.split('\t')
     require(parts.length == 5 && parts(0) == "K",
       s"MergeTable at $root: malformed checksum sidecar $p")
-    val m = metaAt(v)
+    val m = st.meta
     val mism = Seq(
-      ("numFiles", parts(1), entries.size.toString),
-      ("entryXor", parts(2), entryXorOf(entries)),
+      ("numFiles", parts(1), st.entries.size.toString),
+      ("entryXor", parts(2), entryXorOf(st.entries)),
       ("metadataHash", parts(3), metaHashOf(m)),
       ("rowIdHwm", parts(4), m.rowIdHwm.toString))
       .collect { case (n, stored, now) if stored != now =>
@@ -1538,17 +1414,6 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     v > 0L && verifyChecksum(v)
   }
 
-  /** Run an optimistic write: `attempt` computes (delta, expectedVersion)
-    * from the CURRENT snapshot; on commit collision the computation reruns
-    * against the fresh snapshot — UNLESS the concurrent commits provably
-    * did not invalidate it given what the operation READ (`scope`, checked
-    * by [[canRebase]]), in which case the SAME delta re-publishes at the
-    * new head with no recompute. That is Delta's ConflictChecker rebase:
-    * on a busy table an append losing to an append, or a merge losing to
-    * a compaction of partitions it never touched, must not pay a full
-    * Spark recompute for a provably-compatible interleaving. Every Nth
-    * version also publishes a full checkpoint, bounding later reads'
-    * delta folds. */
   /** Run `f` under a `graft:`-prefixed Spark job description (guide
     * §1.5): every job — including broadcast futures, which inherit
     * thread-locals via withThreadLocalCaptured — launched inside is
@@ -1561,6 +1426,17 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     try f finally sc.setJobDescription(prev)
   }
 
+  /** Run an optimistic write: `attempt` computes (delta, expectedVersion)
+    * from the CURRENT snapshot; on commit collision the computation reruns
+    * against the fresh snapshot — UNLESS the concurrent commits provably
+    * did not invalidate it given what the operation READ (`scope`, checked
+    * by [[canRebase]]), in which case the SAME delta re-publishes at the
+    * new head with no recompute. That is Delta's ConflictChecker rebase:
+    * on a busy table an append losing to an append, or a merge losing to
+    * a compaction of partitions it never touched, must not pay a full
+    * Spark recompute for a provably-compatible interleaving. Every Nth
+    * version also publishes a full checkpoint, bounding later reads'
+    * delta folds. */
   private def retryingCommit(op: String,
       params: Map[String, String] = Map.empty,
       scope: ReadScope = ReadScope.Everything)(
@@ -1593,25 +1469,22 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       // (The protocol-UPGRADE commit itself is checked against the
       // PRE-upgrade state, so stamping a future feature ahead of an
       // engine rollout remains possible.)
-      val curProto =
-        if (target == 0L) (Set.empty[String], Set.empty[String])
-        else metaAt(target).protocol
-      if (target > 0L) {
-        val unknownW = curProto._2 -- SupportedWriterFeatures
-        if (unknownW.nonEmpty) throw new IllegalStateException(
-          s"MergeTable at $root: table requires writer feature(s) " +
-            s"[${unknownW.toSeq.sorted.mkString(", ")}] this build does " +
-            s"not implement (supported: [${SupportedWriterFeatures.toSeq
-              .sorted.mkString(", ")}]) — upgrade the engine to write " +
-            "this table")
-      }
+      val targetState = stateAt(target)
+      val curProto = targetState.meta.protocol
+      val unknownW = curProto._2 -- SupportedWriterFeatures
+      if (unknownW.nonEmpty) throw new IllegalStateException(
+        s"MergeTable at $root: table requires writer feature(s) " +
+          s"[${unknownW.toSeq.sorted.mkString(", ")}] this build does " +
+          s"not implement (supported: [${SupportedWriterFeatures.toSeq
+            .sorted.mkString(", ")}]) — upgrade the engine to write " +
+          "this table")
       // ROW-ID ALLOTMENT (row tracking): derived against `target` on
       // EVERY attempt — recompute or rebase republication — so a lost
       // race never republishes bases a concurrent allocator also
       // handed out; entries that already carry an allotment (RESTORE
       // re-adds, DV re-adds, clone-carried files) keep it, which is
       // exactly the id-stability contract.
-      val delta = allotRowIds(delta0, target, ridRowsMemo)
+      val delta = allotRowIds(delta0, targetState, ridRowsMemo)
       // AUTOMATIC feature enablement (Delta's table-feature upgrade):
       // the commit that first USES a gated feature — or the first
       // commit of a handle CONFIGURED for one (DV flag) — carries the
@@ -1633,9 +1506,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
           // projected count is an estimate (removes may be stale under
           // contention): overshoot stamps one commit early, undershoot
           // stamps on the next — both safe.
-          val projected =
-            (if (target == 0L) 0 else snapshotAt(target).size) +
-              delta.adds.size - delta.removes.size
+          val projected = targetState.entries.size +
+            delta.adds.size - delta.removes.size
           val fr =
             if (projected >= pqCkptEntries) fr0 + "parquetCheckpoint"
             else fr0
@@ -1647,7 +1519,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       tryCommit(stamped, target, op, params) match {
         case Some(v) =>
           // the checkpoint (and its retention pass) is DERIVED work —
-          // a failure here (e.g. the reader gate refusing metaAt right
+          // a failure here (e.g. the reader gate refusing the fold right
           // after a protocol upgrade landed at a checkpoint boundary)
           // must never make the committed write look failed
           if (v % CheckpointInterval == 0) {
@@ -1696,19 +1568,18 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * ids pre-date this commit, which is the stability contract. Pure
     * driver metadata (numFiles footer reads, memoized across commit
     * retries). */
-  private def allotRowIds(delta: CommitDelta, target: Long,
+  private def allotRowIds(delta: CommitDelta, target: TableState,
       rowsMemo: mutable.HashMap[String, Long]): CommitDelta = {
     val active = rowTracking ||
-      (target > 0L && metaAt(target).protocol._2.contains("rowTracking"))
+      target.meta.protocol._2.contains("rowTracking")
     if (!active || delta.adds.isEmpty ||
         delta.adds.forall(_.rowIds.isDefined)) return delta
-    val hwm = if (target == 0L) 0L else metaAt(target).rowIdHwm
-    var next = hwm
+    var next = target.meta.rowIdHwm
     val adds = delta.adds.map { e =>
       if (e.rowIds.isDefined) e
       else {
         val rows = rowsMemo.getOrElseUpdate(e.relPath, footerRowCount(e))
-        val ri = RowIdInfo(next, rows, target + 1)
+        val ri = RowIdInfo(next, rows, target.version + 1)
         next += rows
         e.copy(rowIds = Some(ri))
       }
@@ -1811,7 +1682,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     // keeping with the any-doubt-answers-false contract, that answers
     // "recompute", never an exception out of the commit loop.
     val baseSnapshot =
-      try snapshotAt(base)
+      try stateAt(base).entries
       catch { case scala.util.control.NonFatal(_) => return false }
     val live = mutable.HashMap.empty[String, Option[String]]
     baseSnapshot.foreach(e => live.update(e.relPath, e.partitionValue))
@@ -1896,7 +1767,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * follow-on commit per write). */
   private def maybeAutoCompact(): Unit = {
     val (target, minFiles) = autoCompact.get
-    if (smallFileBins(latest()._2, target, minFiles).nonEmpty) {
+    if (smallFileBins(latest().entries, target, minFiles).nonEmpty) {
       inAutoCompact.set(true)
       try compactSmall(target, minFiles)
       finally inAutoCompact.set(false)
@@ -2268,9 +2139,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       s"MergeTable at $root: no stats columns declared on this handle")
     def missing(live: Seq[FileEntry]): Seq[FileEntry] =
       live.filter(e => statsCols.exists(c => !e.stats.contains(c)))
-    if (missing(latest()._2).isEmpty) return latestVersion()
+    if (missing(latest().entries).isEmpty) return latestVersion()
     retryingCommit("ANALYZE") { () =>
-      val (v, live) = latest()
+      val TableState(v, live, _) = latest()
       val todo = missing(live)
       if (todo.isEmpty) (CommitDelta(Nil, Nil), v)
       else (CommitDelta(statsForFiles(todo), Nil), v)
@@ -2309,7 +2180,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       checkDeclared(df1)
       val (_, entries) = writeData(df1)
       retryingCommit("WRITE", Map("mode" -> "Overwrite")) { () =>
-        val (version, live) = latest(laidOut = false)
+        val TableState(version, live, _) = latest(laidOut = false)
         (CommitDelta(entries, live.map(_.relPath)), version)
       }
     } else {
@@ -2322,8 +2193,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       // readers of the superseded version, breaking IdentityColumns'
       // unique-across-history contract.
       retryingCommit("WRITE", Map("mode" -> "Overwrite")) { () =>
-        val (version, live) = latest(laidOut = false)
-        val (df, idTxns) = withIdentity(df1, version)
+        val TableState(version, live, meta) = latest(laidOut = false)
+        val (df, idTxns) = withIdentity(df1, meta)
         enforceConstraints(df, "overwrite")
         checkDeclared(df)
         val (_, entries) = writeData(df)
@@ -2351,9 +2222,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     val df1 = withGenerated(df0)
     retryingCommit("WRITE",
       Map("mode" -> "Overwrite",
-        "replaceWhere" -> predicate.toString)) { () =>
-      val (version, live) = latest()
-      val (df, idTxns) = withIdentity(df1, version)
+        "replaceWhere" -> predicateSql(predicate))) { () =>
+      val TableState(version, live, meta) = latest()
+      val (df, idTxns) = withIdentity(df1, meta)
       enforceConstraints(df, "replaceWhere")
       // the incoming slice must conform to the TABLE schema — kept
       // partitions and the new files share every later scan, so a
@@ -2365,9 +2236,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         // column may not appear on either side, and the footer branch
         // uses the memoized metadata-only schema instead of building a
         // throwaway scan plan inside the commit attempt (r13 review)
-        declaredSchema.map(visibleDeclared).orElse(
+        meta.schema.map(visibleDeclared).orElse(
           if (live.isEmpty) None
-          else Some(visibleDeclared(physicalSchemaOf(live))))
+          else Some(visibleDeclared(physicalSchemaOf(live, None))))
       tableSchema.foreach { d =>
         // compare PHYSICAL names: the declared schema stores them, and
         // the incoming frame arrives with logical (possibly renamed)
@@ -2383,7 +2254,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       }
       // scope containment: predicate may reference only partition
       // columns, and every incoming row must satisfy it
-      val index = indexOf(live)
+      val index = indexOf(live, meta.schema)
       val cond = partitionCondition(predicate,
         if (live.isEmpty) df.schema else index.partitionSchema)
         .toOption.filter(_.references.nonEmpty)
@@ -2438,7 +2309,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       sourceRows: () => Long): Long =
     mergeCore(params, Some(upserts), keys, Seq(pk), evolveSchema,
         onEmpty = upserts, sourceRows = sourceRows) { touched =>
-      readEntries(touched).join(keys, Seq(pk), "left_anti")
+      touched.join(keys, Seq(pk), "left_anti")
         .unionByName(upserts, allowMissingColumns = evolveSchema)
     }
 
@@ -2456,7 +2327,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     *     action, cardinality-guarded — partition tuples are driver
     *     metadata); on an unpartitioned table, or with `touchAll`,
     *     every live file;
-    *   - row step: `rows(touched)` is what replaces the touched files;
+    *   - row step: `rows` of the touched files' rows is what replaces
+    *     them;
     *     an empty table gets `onEmpty`, or no write when `src` is None;
     *   - commit: the written files are added, the touched ones removed;
     *     the header records `numSourceRows` from `sourceRows`, a
@@ -2471,11 +2343,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       keys: DataFrame, keyCols: Seq[String], evolveSchema: Boolean,
       onEmpty: DataFrame, sourceRows: () => Long,
       touchAll: Boolean = false)(
-      rows: Seq[FileEntry] => DataFrame): Long =
+      rows: DataFrame => DataFrame): Long =
     retryingCommit("MERGE", params) { () =>
-      val (version, live) = latest()
-      if (!evolveSchema && (live.nonEmpty || declaredSchema.isDefined)) {
-        val tCols = logicalSchemaOf(live).fieldNames.toSeq
+      val TableState(version, live, meta) = latest()
+      if (!evolveSchema && (live.nonEmpty || meta.schema.isDefined)) {
+        val tCols = logicalSchemaOf(live, meta).fieldNames.toSeq
         src match {
           case Some(s) => require(s.columns.toSet == tCols.toSet,
             s"merge: source schema {${s.columns.mkString(",")}} != table " +
@@ -2496,7 +2368,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
           live
         } else {
           val (srcParts, matchedParts) =
-            mergeTouchedParts(src, keys, keyCols, live)
+            mergeTouchedParts(src, keys, keyCols, live, meta)
           require(srcParts.size <= MaxPartitionsPerMerge,
             s"merge touches ${srcParts.size} partitions (> " +
               s"$MaxPartitionsPerMerge); repartition the source or " +
@@ -2508,10 +2380,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       // a merge that writes no source row has nothing to write into an
       // empty table (and its source may hold the key columns alone)
       val out =
-        if (live.isEmpty) src.map(_ => onEmpty) else Some(rows(touched))
+        if (live.isEmpty) src.map(_ => onEmpty)
+        else Some(rows(readEntries(touched, meta.schema, meta.mapping)))
       val newEntries = out.fold(Seq.empty[FileEntry])(writeData(_)._2)
       (CommitDelta(newEntries, touched.map(_.relPath),
-        mSchema = if (evolveSchema) out.flatMap(evolvedSchema) else None,
+        mSchema = if (evolveSchema) out.flatMap(evolvedSchema(_, meta)) else None,
         metrics = Map("numSourceRows" -> sourceRows())), version)
     }
 
@@ -2521,8 +2394,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * otherwise the declared schema would hide the new columns from
     * every later read. No-op (None) without a declared schema or
     * without new columns. */
-  private def evolvedSchema(out: DataFrame): Option[String] =
-    declaredSchema.flatMap { d =>
+  private def evolvedSchema(out: DataFrame, meta: MetaState): Option[String] =
+    meta.schema.flatMap { d =>
       val phys = toPhysical(out).schema
       val add = phys.fields.filterNot(f => d.fieldNames.contains(f.name))
       if (add.isEmpty) None
@@ -2569,9 +2442,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     val df1 = withGenerated(df0)
     // a DECLARED schema is binding even before the first data commit —
     // readEntries(Nil) resolves it through emptyLikePhys
-    def checkSchema(df: DataFrame, live: Seq[FileEntry]): Unit =
-      if (live.nonEmpty || declaredSchema.isDefined) {
-        val tableSchema = logicalSchemaOf(live)
+    def checkSchema(df: DataFrame, st: TableState): Unit =
+      if (st.entries.nonEmpty || st.meta.schema.isDefined) {
+        val tableSchema = logicalSchemaOf(st.entries, st.meta)
         require(df.columns.toSet == tableSchema.fieldNames.toSet,
           s"append: source schema {${df.columns.mkString(",")}} != table " +
             s"schema {${tableSchema.fieldNames.mkString(",")}}")
@@ -2587,13 +2460,13 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       identityColumns.keys.exists(c => !df1.columns.contains(c))
     if (!assignsIdentity) {
       enforceConstraints(df1, "append")
-      checkSchema(df1, latest()._2)
+      checkSchema(df1, latest())
       val (_, entries) = writeData(df1)
       try retryingCommit("WRITE", appendOp(txn),
           scope = ReadScope.Nothing) { () =>
-        val (v, live) = latest()
+        val st = latest()
         txn.foreach { case (app, bv) =>
-          if (txnsAt(v).get(app).exists(_ >= bv))
+          if (st.meta.txns.get(app).exists(_ >= bv))
             throw new TxnAlreadyApplied
         }
         // re-validate inside the attempt: a lost race that RECOMPUTES
@@ -2602,8 +2475,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         // the rebase path skips this closure, so canRebase answers
         // false for that exact cell (ReadScope.Nothing × concurrent
         // overwrite × undeclared schema).
-        checkSchema(df1, live)
-        (CommitDelta(entries, Nil, txns = txn.toSeq), v)
+        checkSchema(df1, st)
+        (CommitDelta(entries, Nil, txns = txn.toSeq), st.version)
       } catch { case _: TxnAlreadyApplied => latestVersion() }
     } else {
       // identity-assigning append: the WHOLE write runs inside the
@@ -2614,16 +2487,16 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       // lost attempt is vacuum-reclaimed like any lost race)
       try retryingCommit("WRITE", appendOp(txn),
           scope = ReadScope.Nothing) { () =>
-        val (v, live) = latest()
+        val st = latest()
         txn.foreach { case (app, bv) =>
-          if (txnsAt(v).get(app).exists(_ >= bv))
+          if (st.meta.txns.get(app).exists(_ >= bv))
             throw new TxnAlreadyApplied
         }
-        val (df, idTxns) = withIdentity(df1, v)
+        val (df, idTxns) = withIdentity(df1, st.meta)
         enforceConstraints(df, "append")
-        checkSchema(df, live)
+        checkSchema(df, st)
         val (_, entries) = writeData(df)
-        (CommitDelta(entries, Nil, txns = txn.toSeq ++ idTxns), v)
+        (CommitDelta(entries, Nil, txns = txn.toSeq ++ idTxns), st.version)
       } catch { case _: TxnAlreadyApplied => latestVersion() }
     }
   }
@@ -2704,8 +2577,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
           onEmpty = if (insertUnmatched) inserts else none, sourceRows,
           // WHEN NOT MATCHED BY SOURCE must examine every live row —
           // any partition may hold an unmatched target row
-          touchAll = notMatchedBySourceDelete.isDefined) { touched =>
-        val tgt = readEntries(touched)
+          touchAll = notMatchedBySourceDelete.isDefined) { tgt =>
         val tCols = tgt.columns.toSeq
         val sCols = src.columns.toSeq
         // LEFT join from the target: unmatched target rows ride along
@@ -2824,8 +2696,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         // SEQUENCE BY stores it too) — that's what lets a sequenced
         // apply compose with a stored-sequence late-event guard like
         // [[graft.streaming.StreamIngest.runCdcAvailableNow]]'s.
-        if (keepSequence || (latestVersion() > 0L &&
-            logicalSchemaOf(liveEntries()).fieldNames.contains(seq)))
+        if (keepSequence || {
+              val st = latest()
+              st.version > 0L &&
+                logicalSchemaOf(st.entries, st.meta).fieldNames.contains(seq)
+            })
           winners
         else winners.drop(seq)
       case None => events
@@ -2878,7 +2753,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * (file selection, layout) pair over it, as Delta's OPTIMIZE is one
     * command whose WHERE and ZORDER BY clauses pick the files and the
     * layout. One optimistic commit under [[ReadScope.RemovedFiles]]:
-    * `plan` takes the latest live files to the ones to rewrite and the
+    * `plan` takes the latest state to the live files to rewrite and the
     * layout their rows are written in; the selected files are read
     * row-id-preserving (on a row-tracked snapshot each row's absolute
     * id/version rides along as the materialized columns), laid out,
@@ -2890,17 +2765,17 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * ([[MergeTable.FileKeyCol]]) captured at the scan, for a layout
     * that routes rows by the file they came from. */
   private def rewriteFiles(op: String, params: Map[String, String] = Map.empty,
-      keyed: Boolean = false)(plan: Seq[FileEntry] => (Seq[FileEntry], Layout)): Long =
+      keyed: Boolean = false)(plan: TableState => (Seq[FileEntry], Layout)): Long =
     retryingCommit(op, params, ReadScope.RemovedFiles) { () =>
-      val (version, live) = latest()
-      val (selected, layout) = plan(live)
-      if (selected.isEmpty) (CommitDelta(Nil, Nil), version)
+      val st = latest()
+      val (selected, layout) = plan(st)
+      if (selected.isEmpty) (CommitDelta(Nil, Nil), st.version)
       else {
-        val rows = readEntries(selected,
+        val rows = readEntries(selected, st.meta.schema, st.meta.mapping,
           keep = if (keyed) Seq(FileKeyCol) else Nil,
           rowIds = selected.forall(_.rowIds.isDefined))
         val (_, written) = writeData(layout(rows), rewrite = true)
-        (CommitDelta(written, selected.map(_.relPath)), version)
+        (CommitDelta(written, selected.map(_.relPath)), st.version)
       }
     }
 
@@ -2910,8 +2785,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * clustering — locality on the leading column only; for
     * multi-dimensional locality see [[zorder]]). */
   def compact(filesPerPartition: Int = 1, clusterBy: Seq[Column] = Nil): Long =
-    rewriteFiles("OPTIMIZE")(live =>
-      (live, spread(filesPerPartition, clusterBy)))
+    rewriteFiles("OPTIMIZE")(st =>
+      (st.entries, spread(filesPerPartition, clusterBy)))
 
   /** [[compact]]'s layout: `n` write tasks, round-robin, or
     * range-partitioned and sorted on `clusterBy`. Each task writes one
@@ -2943,8 +2818,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       s"minFilesPerPartition must be >= 2: $minFilesPerPartition")
     rewriteFiles("OPTIMIZE",
       Map("binPack" -> targetBytes.toString, "trigger" -> (if (inAutoCompact.get) "auto" else "manual")),
-      keyed = true) { live =>
-      val bins = smallFileBins(live, targetBytes, minFilesPerPartition)
+      keyed = true) { st =>
+      val bins = smallFileBins(st.entries, targetBytes, minFilesPerPartition)
       val binOf = for ((es, i) <- bins.zipWithIndex; e <- es)
         yield (fileKey(e.relPath), i)
       (bins.flatten, _.join(broadcast(spark.createDataFrame(binOf)
@@ -3001,8 +2876,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   def zorder(cols: Seq[String], filesPerPartition: Int = 1): Long = {
     require(cols.nonEmpty && cols.size <= 3,
       s"zorder takes 1-3 columns (16 bits each, long-width Z), got $cols")
-    rewriteFiles("OPTIMIZE", Map("zOrderBy" -> cols.mkString(",")))(live =>
-      (live, zLayout(cols, filesPerPartition)))
+    rewriteFiles("OPTIMIZE", Map("zOrderBy" -> cols.mkString(",")))(st =>
+      (st.entries, zLayout(cols, filesPerPartition)))
   }
 
   /** [[zorder]]'s layout: the [[curve]] whose key interleaves the bits
@@ -3051,8 +2926,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       s"zorder takes 1-3 columns (16 bits each, long-width Z), got " +
         zorderCols)
     rewriteFiles("OPTIMIZE",
-      Map("predicate" -> predicateSql(predicate)) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(",")))) { live =>
-      val index = indexOf(live)
+      Map("predicate" -> predicateSql(predicate)) ++ (if (zorderCols.isEmpty) Map.empty else Map("zOrderBy" -> zorderCols.mkString(",")))) { st =>
+      val index = indexOf(st.entries, st.meta.schema)
       (filesWhere(index,
         partitionCondition(predicate, index.partitionSchema).fold(
           msg => throw new IllegalArgumentException(
@@ -3156,8 +3031,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   def clusterHilbert(cols: Seq[String], filesPerPartition: Int = 1): Long = {
     require(cols.size == 2,
       s"clusterHilbert takes exactly 2 columns (16-bit Hilbert), got $cols")
-    rewriteFiles("OPTIMIZE", Map("hilbertBy" -> cols.mkString(",")))(live => (
-      live, curve(filesPerPartition, cols)(s => MergeTable.hilbertSql(s(0), s(1)))))
+    rewriteFiles("OPTIMIZE", Map("hilbertBy" -> cols.mkString(",")))(st => (
+      st.entries, curve(filesPerPartition, cols)(s => MergeTable.hilbertSql(s(0), s(1)))))
   }
 
   /** Delta-parity DELETE: drop rows where `predicate` is TRUE (null-
@@ -3177,20 +3052,20 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * manifest outright. */
   def delete(predicate: Column): Long = retryingCommit("DELETE",
       Map("predicate" -> predicateSql(predicate))) { () =>
-    val (version, live) = latest()
+    val st @ TableState(version, live, meta) = latest()
     if (live.isEmpty) (CommitDelta(Nil, Nil), version)
     else if (deletionVectors) {
-      vectorize(live, predicate) match {
+      vectorize(st, predicate) match {
         case None => (CommitDelta(Nil, Nil), version)
         case Some((_, adds, gone)) =>
           (CommitDelta(adds, gone.map(_.relPath)), version)
       }
     } else {
-      val hit = touchedFileNames(live, predicate)
+      val hit = touchedFileNames(st, predicate)
       if (hit.isEmpty) (CommitDelta(Nil, Nil), version)
       else {
         val touched = live.filter(e => hit(fileKey(e.relPath)))
-        val survivors = readEntries(touched)
+        val survivors = readEntries(touched, meta.schema, meta.mapping)
           .filter(!coalesce(predicate, lit(false)))
         val (_, newEntries) = writeData(survivors)
         (CommitDelta(newEntries, touched.map(_.relPath)), version)
@@ -3198,7 +3073,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     }
   }
 
-  /** Record the `predicate`-matched LIVE rows of `live` in a fresh
+  /** Record the `predicate`-matched LIVE rows of `st` in a fresh
     * cumulative deletion vector (one parquet dir; each touched file's
     * complete position set — its old vector unioned with the new hits —
     * so every manifest entry references exactly one vector). Returns
@@ -3207,9 +3082,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * remove). Runs inside the optimistic-commit loop — a lost race
     * leaves an orphan vector dir for [[vacuum]], same as [[writeData]]'s
     * orphan commit dirs. */
-  private def vectorize(live: Seq[FileEntry], predicate: Column)
+  private def vectorize(st: TableState, predicate: Column)
       : Option[(Seq[FileEntry], Seq[FileEntry], Seq[FileEntry])] = {
-    val pos = readEntries(live, keep = Seq(FileKeyCol, PosCol))
+    val pos = readEntries(st.entries, st.meta.schema, st.meta.mapping,
+        keep = Seq(FileKeyCol, PosCol))
       .filter(coalesce(predicate, lit(false)))
       .select(col(FileKeyCol).as(DvFile), col(PosCol).as(DvPos))
       .persist()
@@ -3218,7 +3094,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         .collect().map(_.getString(0)).toSet
       if (hit.isEmpty) None
       else {
-        val touched = live.filter(e => hit(fileKey(e.relPath)))
+        val touched = st.entries.filter(e => hit(fileKey(e.relPath)))
         val olds = touched.filter(_.dv.isDefined)
         // New positions come from a vector-applied read, so they are
         // disjoint from the old vectors — a plain union is exact.
@@ -3272,7 +3148,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * that caps read-side anti-join debt without [[compact]]'s full-table
     * rewrite. [[vacuum]] then reaps the orphaned vector dirs. */
   def purgeVectors(): Long =
-    rewriteFiles("PURGE")(live => (live.filter(_.dv.isDefined), df => df))
+    rewriteFiles("PURGE")(st => (st.entries.filter(_.dv.isDefined), df => df))
 
   /** Delta-parity UPDATE: for rows where `predicate` is TRUE, replace
     * each column in `set` with its expression (null-predicate rows stay
@@ -3292,24 +3168,26 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         "instead")
     retryingCommit("UPDATE",
       Map("predicate" -> predicateSql(predicate), "set" -> set.keys.toSeq.sorted.mkString(","))) { () =>
-      val (version, live) = latest()
+      val st @ TableState(version, live, meta) = latest()
       if (live.isEmpty) (CommitDelta(Nil, Nil), version)
       else if (deletionVectors) {
-        vectorize(live, predicate) match {
+        vectorize(st, predicate) match {
           case None => (CommitDelta(Nil, Nil), version)
           case Some((touched, adds, gone)) =>
             // The new vector isn't committed yet, so this read still
             // sees the matched rows; rewrite exactly them.
-            val (_, newEntries) = writeData(applySet(readEntries(touched)
-              .filter(coalesce(predicate, lit(false))), set, None))
+            val (_, newEntries) = writeData(applySet(
+              readEntries(touched, meta.schema, meta.mapping)
+                .filter(coalesce(predicate, lit(false))), set, None))
             (CommitDelta(adds ++ newEntries, gone.map(_.relPath)), version)
         }
       } else {
-        val hit = touchedFileNames(live, predicate)
+        val hit = touchedFileNames(st, predicate)
         if (hit.isEmpty) (CommitDelta(Nil, Nil), version)
         else {
           val touched = live.filter(e => hit(fileKey(e.relPath)))
-          val (_, newEntries) = writeData(applySet(readEntries(touched), set,
+          val (_, newEntries) = writeData(applySet(
+            readEntries(touched, meta.schema, meta.mapping), set,
             Some(coalesce(predicate, lit(false)))))
           (CommitDelta(newEntries, touched.map(_.relPath)), version)
         }
@@ -3368,11 +3246,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       s"constraint name must be [A-Za-z0-9_]+: $name")
     retryingCommit(constraintOp("ADD", name),
         Map("name" -> engineColFreeName(name))) { () =>
-      val (version, live) = latest()
-      require(!constraintsAt(version).contains(name),
+      val TableState(version, live, meta) = latest()
+      require(!meta.constraints.contains(name),
         s"MergeTable at $root already has constraint $name")
       val mS = engineCol.flatMap { case (c, typeOf) =>
-        schemaAt(version).flatMap { d =>
+        meta.schema.flatMap { d =>
           if (d.fieldNames.exists(_.equalsIgnoreCase(c))) None
           else {
             require(live.isEmpty,
@@ -3386,7 +3264,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         }
       }
       if (live.nonEmpty) {
-        val bad = readEntries(live)
+        val bad = readEntries(live, meta.schema, meta.mapping)
           .filter(not(coalesce(expr(predicate), lit(true))))
           .limit(1).collect()
         require(bad.isEmpty,
@@ -3402,11 +3280,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   def dropConstraint(name: String): Long =
     retryingCommit(constraintOp("DROP", name),
         Map("name" -> engineColFreeName(name))) { () =>
-      val (version, _) = latest()
-      require(constraintsAt(version).contains(name),
+      val st = latest()
+      require(st.meta.constraints.contains(name),
         s"MergeTable at $root has no constraint $name " +
-          s"(has: ${constraintsAt(version).keys.mkString(", ")})")
-      (CommitDelta(Nil, Nil, cDrops = Seq(name)), version)
+          s"(has: ${st.meta.constraints.keys.mkString(", ")})")
+      (CommitDelta(Nil, Nil, cDrops = Seq(name)), st.version)
     }
 
   /** Enforce every registered constraint on `df` (the NEW rows a write
@@ -3508,18 +3386,18 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
 
   /** Current identity rules: column → (start, step). */
   def identityColumns: Map[String, (Long, Long)] =
-    identityRules(latestVersion())
+    identityRules(headMeta)
       .map { case (c, r) => c -> (r.start, r.step) }
 
-  private def identityRules(v: Long): Map[String, IdentityColumns.Rule] =
-    (if (v == 0L) Map.empty[String, String] else constraintsAt(v)).collect {
+  private def identityRules(m: MetaState): Map[String, IdentityColumns.Rule] =
+    m.constraints.collect {
       case (k, p) if k.startsWith(IdentityColumns.Prefix) =>
         val c = k.stripPrefix(IdentityColumns.Prefix)
         c -> IdentityColumns.ruleOf(c, p)
     }
 
   /** Assign every DECLARED identity column MISSING from `df`,
-    * contiguous from the allocation watermark at version `v`: one
+    * contiguous from the allocation watermark in `m`: one
     * narrow per-partition COUNT job over the new rows fixes each
     * partition's slot base, then the values attach in the write pass
     * itself — O(new data), never O(table), fully distributed (the
@@ -3528,13 +3406,13 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * inside each partition), so it is the one place an RDD earns its
     * keep. Returns the widened frame plus the txn entries advancing
     * each column's watermark — committed ATOMICALLY with the data. */
-  private def withIdentity(df: DataFrame, v: Long)
+  private def withIdentity(df: DataFrame, m: MetaState)
       : (DataFrame, Seq[(String, Long)]) = {
-    val missing = identityRules(v)
+    val missing = identityRules(m)
       .filter { case (c, _) => !df.columns.contains(c) }
       .toSeq.sortBy(_._1)
     if (missing.isEmpty) return (df, Nil)
-    val ledger = txnsAt(v)
+    val ledger = m.txns
     val rulesArr = missing.map(_._2).toArray
     val allocArr = missing.map { case (c, _) =>
       math.max(0L, ledger.getOrElse(IdentityColumns.TxnPrefix + c, 0L))
@@ -3704,13 +3582,14 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       Option(df.select(expr(g)).head().get(0))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[fileKey]]s of live files holding at least one `predicate` match.
+  /** [[fileKey]]s of `st`'s files holding at least one `predicate` match.
     * The key is captured at the scan stage by [[readEntries]]
     * (exact even when the deletion-vector anti-join adds an exchange —
     * `input_file_name()` after a shuffle reads empty). */
-  private def touchedFileNames(live: Seq[FileEntry],
+  private def touchedFileNames(st: TableState,
       predicate: Column): Set[String] =
-    readEntries(live, keep = Seq(FileKeyCol))
+    readEntries(st.entries, st.meta.schema, st.meta.mapping,
+        keep = Seq(FileKeyCol))
       .filter(predicate)
       .select(col(FileKeyCol)).distinct()
       .collect().map(_.getString(0)).toSet
@@ -3745,9 +3624,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     if (latestVersion() > 0L)
       retryingCommit("VACUUM",
         Map("retainMs" -> retainMs.toString)) { () =>
-        (CommitDelta(Nil, Nil), latest()._1)
+        (CommitDelta(Nil, Nil), latest().version)
       }
-    val (latestV, _) = latest()
+    val latestV = latest().version
     if (latestV > 0L) writeCheckpoint(latestV)
     val plan = vacuumPlan(retainMs)
     plan.dataDirs.foreach(deleteRecursively)
@@ -3757,10 +3636,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     plan.logFiles.foreach(p =>
       if (Files.isDirectory(p)) deleteRecursively(p)
       else Files.deleteIfExists(p))
-    // drop memoized snapshots: versions below the fold anchor are now
+    // drop memoized states: versions below the fold anchor are now
     // unreadable BY CONTRACT (fail fast), and a cached one would
     // otherwise keep resolving — possibly onto just-deleted files
-    snapMemo.synchronized(snapMemo.clear())
+    stateMemo.clear()
   }
 
   /** Delta's `VACUUM ... DRY RUN`: the root-relative paths a
@@ -3836,7 +3715,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       // all-empty 'FSCK' commit would be a spurious version bump
       // (audit-history noise, r14 ADVICE); short-circuit to "no
       // repair needed" instead
-      val (version, live) = latest()
+      val TableState(version, live, _) = latest()
       val (gone, dangling) = fsckPlan(live)
       if (gone.isEmpty && dangling.isEmpty)
         throw new FsckAlreadyClean
@@ -3849,7 +3728,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       bfDirs: Seq[Path], logFiles: Seq[Path])
 
   private def vacuumPlan(retainMs: Long): VacuumPlan = {
-    val (latestV, live) = latest()
+    val TableState(latestV, live, _) = latest()
     val cutoff = System.currentTimeMillis() - retainMs
     // Versions still inside the window. Their snapshots' files (data,
     // deletion vectors, bloom sidecars) are all protected — a reader
@@ -3874,7 +3753,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       else (math.max(keepFromV, 1L) until latestV).filter(v =>
         Files.exists(logDir.resolve(f"$v%020d.txt")))
     val protectedEntries: Seq[FileEntry] = live ++ protectedVs.flatMap(v =>
-      scala.util.Try(snapshotAt(v)).getOrElse(Nil))
+      scala.util.Try(stateAt(v).entries).getOrElse(Nil))
     val liveDirs = protectedEntries.map(_.relPath.split('/').head).toSet
     val dataDirs = Using.resource(Files.list(root)) { stream =>
       stream.iterator().asScala
@@ -3940,7 +3819,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   /** Snapshot read of the latest version. `partitionFilter` prunes files at
     * the log level before Spark ever lists them. */
   def read(partitionFilter: Option[String => Boolean] = None): DataFrame = {
-    val (_, live) = latest()
+    val TableState(_, live, meta) = latest()
     val pruned = partitionFilter match {
       // f sees the manifest-encoded value: the raw value on a
       // single-column table, the escaped '/'-joined tuple on a
@@ -3949,7 +3828,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         live.filter(_.partitionValue.forall(f))
       case _ => live
     }
-    readEntries(pruned)
+    readEntries(pruned, meta.schema, meta.mapping)
   }
 
   /** [[readRange]] on the PRIMARY stats column. */
@@ -3982,7 +3861,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
 
   /** Latest live file entries (exposed for tests to assert which files a
     * write rewrote vs carried over). */
-  private[lake] def liveEntries(): Seq[FileEntry] = latest()._2
+  private[lake] def liveEntries(): Seq[FileEntry] = latest().entries
 
   /** The non-null rows of `c`, skipping files whose nullCount proves
     * them all-null in `c`. */
@@ -4057,7 +3936,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * against the key relation, which AQE broadcasts at Δ-scale). */
   private[lake] def probeKeysVersion(version: Long, c: String,
       values: Seq[Any]): DataFrame = {
-    val index = indexOf(laidOutAt(version))
+    // the version's files, read under the current schema and mapping
+    val meta = headMeta
+    val index = indexOf(laidOutAt(version).entries, meta.schema)
     val phys = physicalOf(c)
     val lits = values.map(v => cxp.Literal(v))
     val keys = lits.filter(_.value != null) // NULL matches nothing
@@ -4085,7 +3966,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         org.apache.spark.sql.types.NullType)(), lits)
     }
     val admits = compilePrune(cond, index, index.files.map(_.entry))
-    readEntries(index.files.collect { case f if admits(f) => f.entry })
+    readEntries(index.files.collect { case f if admits(f) => f.entry },
+      meta.schema, meta.mapping)
   }
 
   /** The type SQL `=` compares a partition value of type `p` and a key
@@ -4159,7 +4041,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * the literal overload is pinned by DedupIncrSpec. */
   def probeKeys(c: String, keys: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
-    val live = latest()._2
+    val TableState(_, live, meta) = latest()
     val phys = physicalOf(c)
     // integral keys compare long-cast (the stats/bloom contract); STRING
     // keys (r15) against the truncated string stats, without the bloom
@@ -4168,13 +4050,14 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       case StringType => StringType
       case _          => NullType
     }
-    if (live.isEmpty || kt == NullType) return readEntries(live)
+    def readOf(es: Seq[FileEntry]) = readEntries(es, meta.schema, meta.mapping)
+    if (live.isEmpty || kt == NullType) return readOf(live)
     val k = keys.select(col(keys.columns.head).cast(kt).as("__k"))
       .filter(col("__k").isNotNull).distinct()
     // manifest → metadata frame: one row per live file with the
     // admission inputs (typed partition value, null discipline, stats
     // range — absent stats admit, an absent max is open)
-    val index = indexOf(live)
+    val index = indexOf(live, meta.schema)
     val pf = Some(index.partitionSchema.fieldNames.indexOf(phys))
       .filter(_ >= 0).map(i => (i, index.partitionSchema(i).dataType))
     def st(fe: FileEntry) = fe.stats.get(phys)
@@ -4215,7 +4098,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     val admitted = live.filter(fe => admittedKeys(fileKey(fe.relPath)))
     val (bloomed, plain) = admitted.partition(fe =>
       kt == LongType && fe.bloom.exists(_.cols.contains(phys)))
-    if (bloomed.isEmpty) return readEntries(admitted)
+    if (bloomed.isEmpty) return readOf(admitted)
     val groups = bloomed.groupBy(e => (e.bloom.get.relDir, e.bloom.get.m))
       .toSeq.sortBy(_._1._1)
     val (refine, admitRest) = groups.splitAt(RelProbeBloomGroupCap)
@@ -4267,7 +4150,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       }
     val admitted2 = passed ++ admitRest.iterator
       .flatMap(_._2.map(e => fileKey(e.relPath)))
-    readEntries(plain ++ bloomed.filter(e => admitted2(fileKey(e.relPath))))
+    readOf(plain ++ bloomed.filter(e => admitted2(fileKey(e.relPath))))
   }
 
   /** The files of `index` that may hold a row satisfying `cond` — the
@@ -4614,10 +4497,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * (Current reads and the change feed keep the CURRENT presentation:
     * CDF column sets must stay aligned across rename boundaries for
     * incremental consumers — pinned by ColumnMappingSpec.) */
-  def readVersion(version: Long): DataFrame =
-    readEntries(laidOutAt(version),
-      if (version == 0L) None else schemaAt(version),
-      if (version == 0L) NoMapping else mappingAt(version))
+  def readVersion(version: Long): DataFrame = {
+    val st = laidOutAt(version)
+    readEntries(st.entries, st.meta.schema, st.meta.mapping)
+  }
 
   /** Change data feed between two committed versions (the Delta CDF
     * shape): every row inserted, updated, or deleted from `fromV` to
@@ -4643,8 +4526,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * unchanged. */
   def changes(fromV: Long, toV: Long, pk: String,
       updateImages: Boolean): DataFrame = {
-    val ea = laidOutAt(fromV)
-    val eb = laidOutAt(toV)
+    val ea = laidOutAt(fromV).entries
+    val eb = laidOutAt(toV).entries
+    // both sides present under the CURRENT schema and mapping
+    val meta = headMeta
     // The file-set signature includes each file's deletion-vector ref:
     // a vectorizing DELETE changes rows while leaving every relPath in
     // place, so a path-only signature would read the partition as
@@ -4658,8 +4543,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     val changedParts = (pa.keySet ++ pb.keySet)
       .filter(p => pa.get(p) != pb.get(p))
     diffFeed(
-      readEntries(ea.filter(e => changedParts(e.partitionValue))),
-      readEntries(eb.filter(e => changedParts(e.partitionValue))),
+      readEntries(ea.filter(e => changedParts(e.partitionValue)),
+        meta.schema, meta.mapping),
+      readEntries(eb.filter(e => changedParts(e.partitionValue)),
+        meta.schema, meta.mapping),
       pk, updateImages)
   }
 
@@ -4744,8 +4631,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   def changesByRowId(fromV: Long, toV: Long): DataFrame = {
     require(fromV <= toV,
       s"changesByRowId: fromV $fromV must be <= toV $toV")
-    val ea = laidOutAt(fromV)
-    val eb = laidOutAt(toV)
+    val (sa, sb) = (laidOutAt(fromV), laidOutAt(toV))
+    val (ea, eb) = (sa.entries, sb.entries)
     require((ea ++ eb).forall(_.rowIds.isDefined),
       s"MergeTable at $root: changesByRowId needs row tracking on " +
         "every live file of both versions (enable withRowTracking at " +
@@ -4760,10 +4647,10 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       .filter(p => pa.get(p) != pb.get(p))
     val selA = ea.filter(e => changedParts(e.partitionValue))
     val selB = eb.filter(e => changedParts(e.partitionValue))
-    def side(sel: Seq[FileEntry], v: Long,
+    def side(sel: Seq[FileEntry], at: TableState,
         forceSchema: Boolean): DataFrame = {
-      val declared = if (v == 0L) None else schemaAt(v)
-      val mapping = if (v == 0L) NoMapping else mappingAt(v)
+      val declared = at.meta.schema
+      val mapping = at.meta.mapping
       if (sel.isEmpty && !forceSchema)
         // metadata-cost empty side (the common pure-append poll: a
         // version contributes no changed partitions): the NONEMPTY
@@ -4780,7 +4667,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
         // commits between): the feed's schema must still match a
         // normal poll's (r14 ADVICE — downstream consumers union or
         // write with a fixed schema), so this side is built from the
-        // declared schema at `v` exactly like the pk feed's empty
+        // declared schema at `at` exactly like the pk feed's empty
         // reads, never a bespoke row_id-only frame. Column order
         // mirrors the nonempty read: the DECLARED order when one
         // exists (r15 review — the nonempty poll presents it via
@@ -4809,8 +4696,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     // toV == 0 (a poll against the empty table) has no schema to
     // shape by — keep the key-only frame there (legacy behavior)
     val bothEmpty = selA.isEmpty && selB.isEmpty && toV > 0L
-    diffFeed(side(selA, fromV, forceSchema = false),
-      side(selB, toV, forceSchema = bothEmpty), "row_id",
+    diffFeed(side(selA, sa, forceSchema = false),
+      side(selB, sb, forceSchema = bothEmpty), "row_id",
       updateImages = true)
   }
 
@@ -4829,8 +4716,8 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     if (version == head) return head // already there — commit nothing
     retryingCommit("RESTORE",
       Map("version" -> version.toString)) { () =>
-      val (cur, live) = latest()
-      val target = laidOutAt(version)
+      val TableState(cur, live, _) = latest()
+      val target = laidOutAt(version).entries
       val targetPaths = target.map(_.relPath).toSet
       val removed = live.filterNot(e => targetPaths(e.relPath))
       // Whole-ENTRY comparison, not path comparison: a file present in
@@ -4845,16 +4732,6 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     }
   }
 
-  /** Delta's shallow CLONE: a new table at `dest` whose first commit
-    * REFERENCES this table's live files (relative paths through the
-    * common filesystem — zero data copied, metadata-only, O(files)
-    * time at any table size). The clone then diverges copy-on-write:
-    * its merges/deletes rewrite only touched files INTO ITS OWN root,
-    * never the source's; untouched entries keep pointing at source
-    * files. Same caveat as Delta: [[vacuum]] on the SOURCE removes
-    * files a clone may still reference — vacuum sources only when no
-    * clone needs them (or re-materialize the clone via
-    * [[snapshotDir]]). */
   /** Delta's `CONVERT TO DELTA`: adopt a PLAIN parquet directory (flat,
     * or single-column hive-partitioned `pc=v/` dirs) as this table's
     * first commit — IN PLACE, zero bytes copied or rewritten at any
@@ -4935,13 +4812,30 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       s"convertInPlace: partition column '$pc' not inferred from the " +
         s"layout (schema: ${schema.fieldNames.mkString(", ")})"))
     retryingCommit("CONVERT") { () =>
-      val (v, live) = latest()
+      val TableState(v, live, _) = latest()
       require(v == 0L && live.isEmpty,
         s"convertInPlace: a concurrent writer committed at $root")
       (CommitDelta(entries, Nil, mSchema = Some(schema.json)), v)
     }
   }
 
+  /** Delta's shallow CLONE: a new table at `dest` whose first commit
+    * REFERENCES this table's live files (relative paths through the
+    * common filesystem — zero data copied, metadata-only, O(files)
+    * time at any table size). The clone then diverges copy-on-write:
+    * its merges/deletes rewrite only touched files INTO ITS OWN root,
+    * never the source's; untouched entries keep pointing at source
+    * files. Same caveat as Delta: [[vacuum]] on the SOURCE removes
+    * files a clone may still reference — vacuum sources only when no
+    * clone needs them (or re-materialize the clone via
+    * [[snapshotDir]
+    *
+    * The first commit carries the source's whole metadata, as a
+    * checkpoint does ([[MergeTable.MetaState.asDelta]]): CHECK,
+    * generated and identity rules, the column mapping, the declared
+    * schema, the row-id high-water mark, the protocol, and the txn
+    * ledger — identity allocation watermarks included, so identity
+    * values continue past the source's instead of repeating. */
   def cloneTo(dest: String): MergeTable = {
     val destPath = Paths.get(dest)
     // An existing regular file must fail THIS require (not surface later
@@ -4951,7 +4845,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       (Files.isDirectory(destPath) &&
         !Using.resource(Files.list(destPath))(_.findFirst().isPresent)),
       s"clone destination $dest is not an empty directory")
-    val (srcV, live) = latest()
+    val src = latest()
     // the clone carries the handle's whole layout
     val clone = MergeTable(spark, destPath, logStore, layout)
     Files.createDirectories(destPath)
@@ -4960,41 +4854,22 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     def rebase(p: String): String = destPath.toAbsolutePath.normalize
       .relativize(root.toAbsolutePath.normalize.resolve(p).normalize)
       .toString
-    val rebased = live.map { e =>
+    val rebased = src.entries.map { e =>
       e.copy(relPath = rebase(e.relPath),
         dv = e.dv.map(d => d.copy(relDir = rebase(d.relDir))),
         bloom = e.bloom.map(b => b.copy(relDir = rebase(b.relDir))))
     }
-    // the clone inherits the source's CHECK constraints AND column
-    // mapping in the same first commit (Delta clones carry table
-    // properties/constraints; without the mapping a clone would read
-    // the physical schema)
-    val (srcRen, srcDrops) =
-      if (srcV == 0L) (Map.empty[String, String], Set.empty[String])
-      else mappingAt(srcV)
-    // the PROTOCOL travels too: the clone's v1 carries the source's
-    // required features unioned with what its own delta introduces —
-    // this commit publishes through tryCommit directly, so the
-    // retryingCommit auto-stamp never sees it, and a clone of a
-    // feature-bearing table must not be feature-bearing-undeclared
-    // (r14 review finding)
-    val cloneDelta0 = CommitDelta(rebased, Nil,
-      cAdds = (if (srcV == 0L) Nil else constraintsAt(srcV).toSeq),
-      mRenames = srcRen.toSeq, mDrops = srcDrops.toSeq,
-      mSchema = (if (srcV == 0L) None else schemaAt(srcV)).map(_.json),
-      // the row-id high-water mark travels too: writes on the clone
-      // must never mint ids colliding with the carried files' ranges
-      rowIdHwm = (if (srcV == 0L) None
-                  else Some(metaAt(srcV).rowIdHwm).filter(_ > 0L)))
-    val srcProto =
-      if (srcV == 0L) (Set.empty[String], Set.empty[String])
-      else metaAt(srcV).protocol
-    val (fr, fw) = clone.featuresOf(cloneDelta0)
-    val proto = (srcProto._1 ++ fr,
-      srcProto._2 ++ srcProto._1 ++ fw ++ fr)
-    val cloneDelta =
-      if (proto._1.isEmpty && proto._2.isEmpty) cloneDelta0
-      else cloneDelta0.copy(protocol = Some(proto))
+    // the PROTOCOL is the source's unioned with what the clone's own
+    // delta introduces — this commit publishes through tryCommit
+    // directly, so the retryingCommit auto-stamp never sees it, and a
+    // clone of a feature-bearing table must not be
+    // feature-bearing-undeclared
+    val carried = src.meta.asDelta.copy(adds = rebased)
+    val (fr, fw) = clone.featuresOf(carried)
+    val (r0, w0) = src.meta.protocol
+    val proto = (r0 ++ fr, w0 ++ r0 ++ fw ++ fr)
+    val cloneDelta = carried.copy(protocol =
+      Some(proto).filter(p => p._1.nonEmpty || p._2.nonEmpty))
     val v = clone.tryCommit(op = "CLONE",
       params = Map("source" -> root.toAbsolutePath.normalize.toString),
       delta = cloneDelta,
@@ -5039,13 +4914,6 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       "operation_metrics")
   }
 
-  /** Time travel by timestamp (Delta's `timestampAsOf`; the reference's
-    * DOC-ONLY time-travel claim, README.md:118): the snapshot at the
-    * highest version whose manifest was published at or before `ts`.
-    * Commit times come from IN-COMMIT timestamps (mtime fallback for
-    * pre-feature history) — the clock Delta's timestamp travel trusts
-    * with its inCommitTimestamp feature on. Presents the schema as of
-    * the resolved version, like [[readVersion]]. */
   /** Delta's `COPY INTO`: load files from `src` into this table,
     * EXACTLY ONCE PER FILE across any number of invocations — the
     * retryable, idempotent batch-ingestion front door. Two ledgers
@@ -5132,9 +5000,6 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     latestVersion()
   }
 
-  /** Delta's `DESCRIBE DETAIL`: ONE row of table-level metadata — all
-    * of it driver-side manifest/log state plus one `Files.size` sweep
-    * over live files (O(live files) metadata, no jobs). */
   /** `SHOW PARTITIONS` (hive-parity surface Delta itself lacks): one
     * row per LIVE partition tuple with its file count — pure manifest
     * metadata, no data IO, O(live files) driver work at any table
@@ -5143,7 +5008,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
   def partitions(): DataFrame = {
     require(partitionCols.nonEmpty,
       s"MergeTable at $root: SHOW PARTITIONS needs a partitioned table")
-    val (_, live) = latest()
+    val live = latest().entries
     import scala.jdk.CollectionConverters._
     val schema = org.apache.spark.sql.types.StructType(
       partitionCols.map(c => org.apache.spark.sql.types.StructField(c,
@@ -5161,8 +5026,11 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** Delta's `DESCRIBE DETAIL`: ONE row of table-level metadata — all
+    * of it driver-side manifest/log state plus one `Files.size` sweep
+    * over live files (O(live files) metadata, no jobs). */
   def detail(): DataFrame = {
-    val (v, live) = latest()
+    val TableState(v, live, _) = latest()
     val bytes = live.map(e =>
       scala.util.Try(Files.size(root.resolve(e.relPath))).getOrElse(0L)).sum
     val gen = generatedColumns
@@ -5180,6 +5048,13 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       "num_check_constraints", "num_generated_columns")
   }
 
+  /** Time travel by timestamp (Delta's `timestampAsOf`; the reference's
+    * DOC-ONLY time-travel claim, README.md:118): the snapshot at the
+    * highest version whose manifest was published at or before `ts`.
+    * Commit times come from IN-COMMIT timestamps (mtime fallback for
+    * pre-feature history) — the clock Delta's timestamp travel trusts
+    * with its inCommitTimestamp feature on. Presents the schema as of
+    * the resolved version, like [[readVersion]]. */
   def readAsOf(ts: java.time.Instant): DataFrame =
     readVersion(versionAsOf(ts))
 
@@ -5204,7 +5079,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * Compacts first iff the live files span multiple commit dirs. */
   def snapshotDir(): Path = {
     def state(): (Seq[String], Boolean) = {
-      val (_, live) = latest()
+      val live = latest().entries
       (live.map(e => commitDirOf(e.relPath)).distinct,
         live.exists(_.dv.isDefined))
     }
@@ -5216,7 +5091,7 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     // LIVE (a fully-vectored or removed file stays on disk for time
     // travel until vacuum — the export must not include it).
     def physMatchesLive(dir: String): Boolean = {
-      val (_, live) = latest()
+      val live = latest().entries
       val phys = Using.resource(Files.walk(root.resolve(dir))) { s =>
         s.iterator().asScala
           .filter(p => Files.isRegularFile(p) &&
@@ -5265,13 +5140,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * the exact hive-escaped `<pc>=<value>` path components of the data
     * files themselves (no re-escaping round trip). */
   def generateSymlinkManifest(): Path = {
-    val (_, live) = latest()
+    val TableState(_, live, meta) = latest()
     require(live.forall(_.dv.isEmpty),
       "generateSymlinkManifest: snapshot carries deletion vectors — an " +
         "external manifest reader would resurrect deleted rows; run " +
         "purgeVectors() (REORG APPLY (PURGE)) first")
-    val (renames, dropped) = currentMapping()
-    require(renames.isEmpty && dropped.isEmpty,
+    require(meta.renames.isEmpty && meta.drops.isEmpty,
       "generateSymlinkManifest: table uses column mapping (renamed or " +
         "dropped columns) — parquet physical names would surface verbatim " +
         "to an external reader")
@@ -5347,16 +5221,17 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * persisted them, else the manifest allotment (`base + row_index`,
     * the adding commit); every entry must then carry an allotment.
     *
-    * `declared` is the schema to read under ([[readVersion]] threads the
-    * AS-OF schema, so a later metadata-only addColumn does not appear);
-    * `mapping` is the physical → logical presentation, applied exactly
-    * once, here ([[MergeTable.NoMapping]] reads physically). Result
+    * `declared` is the schema to read under and `mapping` the physical →
+    * logical presentation, applied exactly once, here
+    * ([[MergeTable.NoMapping]] reads physically); both come from the
+    * state the caller resolved, so a read never pairs one version's
+    * files with another's schema ([[readVersion]] passes the AS-OF
+    * state, so a later metadata-only addColumn does not appear). Result
     * columns: the visible columns in declared order, then the row-id
     * pair, then `keep`. `keep` needs non-empty `entries`. */
   private[lake] def readEntries(entries: Seq[FileEntry],
-      declared: Option[org.apache.spark.sql.types.StructType] =
-        declaredSchema,
-      mapping: (Map[String, String], Set[String]) = currentMapping(),
+      declared: Option[org.apache.spark.sql.types.StructType],
+      mapping: (Map[String, String], Set[String]),
       keep: Seq[String] = Nil,
       rowIds: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{LongType, NullType, StructField, StructType}
@@ -5484,10 +5359,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * on at 100 TB: a stable join key per row that survives OPTIMIZE,
     * which no expression over row CONTENT (and no
     * `monotonically_increasing_id`) can provide. */
-  def readWithRowIds(): DataFrame =
-    readEntries(latest()._2, rowIds = true)
+  def readWithRowIds(): DataFrame = {
+    val st = latest()
+    readEntries(st.entries, st.meta.schema, st.meta.mapping, rowIds = true)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
+  }
 
   /** [[readWithRowIds]] under time travel: the snapshot AT `version`
     * with each row's identity — ids are assigned AT COMMIT and ride
@@ -5495,13 +5372,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * `row_id` in both reads (the lineage key across history), and
     * `row_commit` is at most `version` by construction. As-of schema
     * and column mapping apply exactly as in [[readVersion]]. */
-  def readVersionWithRowIds(version: Long): DataFrame =
-    readEntries(laidOutAt(version),
-        if (version == 0L) None else schemaAt(version),
-        if (version == 0L) NoMapping else mappingAt(version),
-        rowIds = true)
+  def readVersionWithRowIds(version: Long): DataFrame = {
+    val st = laidOutAt(version)
+    readEntries(st.entries, st.meta.schema, st.meta.mapping, rowIds = true)
       .withColumnRenamed(RidCol, "row_id")
       .withColumnRenamed(RcvCol, "row_commit")
+  }
 
   /** The PHYSICAL schema of a plain [[readEntries]] of `entries`,
     * computed from (memoized) metadata alone — no throwaway scan plan
@@ -5510,9 +5386,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * check paid it on EVERY commit. Built from the same [[readFields]]
     * split and column order as the read; the deletion-vector anti-join
     * is schema-neutral. */
-  private[lake] def physicalSchemaOf(entries: Seq[FileEntry])
+  private[lake] def physicalSchemaOf(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType])
       : org.apache.spark.sql.types.StructType = {
-    val declared = declaredSchema
     if (entries.isEmpty) return emptyLikePhys(declared).schema
     val (dataFields, partFields) = readFields(declared, entries)
     val fields = dataFields ++ partFields
@@ -5535,16 +5411,16 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     case _ => cols
   }
 
-  /** The LOGICAL schema [[readEntries]] would produce — the physical
-    * schema presented through the current column mapping. Metadata
-    * only; the schema-consumer paths (append's conformance check,
-    * partition-predicate typing) use this instead of building a full
-    * scan plan they immediately discard. */
-  private def logicalSchemaOf(entries: Seq[FileEntry])
+  /** The LOGICAL schema [[readEntries]] would produce under `m` — the
+    * physical schema presented through its column mapping. Metadata
+    * only; the schema-consumer paths (append's and MERGE's conformance
+    * checks) use this instead of building a full scan plan they
+    * immediately discard. */
+  private def logicalSchemaOf(entries: Seq[FileEntry], m: MetaState)
       : org.apache.spark.sql.types.StructType =
-    presentLogical(spark.createDataFrame(
+    presentLogicalAs(spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
-      physicalSchemaOf(entries))).schema
+      physicalSchemaOf(entries, m.schema)), m.mapping).schema
 
   /** Anti-join `df` (carrying scan-level [[FileKeyCol]]/[[PosCol]]) against
     * the deletion vectors of `entries`. Each vectored entry references
@@ -5631,10 +5507,12 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
       partSchema, files, scanEntriesByCondition)
   }
 
-  /** The index a current-schema read of `entries` plans over. */
-  private def indexOf(entries: Seq[FileEntry]): ManifestFileIndex =
+  /** The index a read of `entries` under `declared` plans over. */
+  private def indexOf(entries: Seq[FileEntry],
+      declared: Option[org.apache.spark.sql.types.StructType])
+      : ManifestFileIndex =
     indexOf(entries,
-      if (entries.isEmpty) Nil else readFields(declaredSchema, entries)._2)
+      if (entries.isEmpty) Nil else readFields(declared, entries)._2)
 
   /** MEMOIZED per-commit-dir schema resolution for the multi-dir read:
     * exactly what a hive-layout read of `es` under the dir
@@ -5700,9 +5578,9 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     // still reconstructible (vacuum prunes pre-latest history), else fail.
     val vs = (1L to latestVersion()).reverse
     vs.iterator
-      .flatMap(v => scala.util.Try(snapshotAt(v)).toOption)
+      .flatMap(v => scala.util.Try(stateAt(v).entries).toOption)
       .find(_.nonEmpty) match {
-      case Some(entries) => readEntries(entries, mapping = NoMapping).limit(0)
+      case Some(entries) => readEntries(entries, None, NoMapping).limit(0)
       case None => throw new IllegalStateException(
         s"MergeTable at $root has no data and no history")
     }
@@ -5748,14 +5626,15 @@ final class MergeTable private (val spark: SparkSession, val root: Path,
     * materializations). With no `src` (a delete-only merge) only the
     * matched side runs. Tuples encode like the manifest field. */
   private def mergeTouchedParts(src: Option[DataFrame], keys: DataFrame,
-      keyCols: Seq[String], live: Seq[FileEntry])
+      keyCols: Seq[String], live: Seq[FileEntry], meta: MetaState)
       : (Set[Option[String]], Set[Option[String]]) = {
     val tag = "__graft_src_side"
     def tuples(df: DataFrame, fromSrc: Boolean): DataFrame =
       df.select(partitionCols.map(c => col(c).cast("string")) :+
         lit(fromSrc).as(tag): _*)
     val matched = tuples(
-      readEntries(live).join(keys, keyCols, "left_semi"), fromSrc = false)
+      readEntries(live, meta.schema, meta.mapping)
+        .join(keys, keyCols, "left_semi"), fromSrc = false)
     val rows = labeled("touchedParts")(src
       .fold(matched)(tuples(_, fromSrc = true).unionByName(matched))
       .distinct().collect())
@@ -5851,7 +5730,7 @@ object MergeTable {
   private[graft] val DefaultPqCkptEntries = 500000L
   private val CkptPqSuffix = ".ckptpq"
 
-  /** Max versions the per-handle snapshot memo retains (LRU). */
+  /** Max versions the per-handle state memo retains (LRU). */
   private[lake] val SnapMemoMax = 8
 
   /** Default checkpoint retention `(keep, retainMs)`: the newest 3
@@ -6319,7 +6198,7 @@ object MergeTable {
     * nothing (no spurious empty 'FSCK' version). */
   private final class FsckAlreadyClean extends RuntimeException
 
-  private sealed trait LogAction
+  private[lake] sealed trait LogAction
   private final case class Add(entry: FileEntry) extends LogAction
   private final case class Remove(relPath: String) extends LogAction
   private final case class AddConstraint(name: String,
@@ -6346,6 +6225,69 @@ object MergeTable {
     * carrying the Q line holds only metadata actions. */
   private final case class PqEntries(relDir: String, count: Long)
       extends LogAction
+
+  /** A version's non-file log state, folded action by action
+    * ([[MetaState.folded]]): CHECK constraints (C adds, D drops),
+    * column mapping (E renames, X drops), the txn ledger (T,
+    * MAX-folded), the declared schema (M, last wins), the protocol (P,
+    * last wins, Delta's) and the row-id high-water mark (W,
+    * MAX-folded). The fold keeps each family in log order and exposes
+    * it as the immutable collection a full replay's insertion-ordered
+    * builders produce, so a checkpoint written from an incrementally
+    * folded state lists the same lines as one written from a replay. */
+  private[lake] final case class MetaState(
+      constraintLog: VectorMap[String, String] = VectorMap.empty,
+      renameLog: VectorMap[String, String] = VectorMap.empty,
+      dropLog: Vector[String] = Vector.empty,
+      txnLog: VectorMap[String, Long] = VectorMap.empty,
+      schemaJson: Option[String] = None,
+      protocol: (Set[String], Set[String]) = (Set.empty, Set.empty),
+      rowIdHwm: Long = 0L) {
+    lazy val constraints: Map[String, String] = constraintLog.toSeq.toMap
+    lazy val renames: Map[String, String] = renameLog.toSeq.toMap
+    lazy val drops: Set[String] = dropLog.toSet
+    lazy val txns: Map[String, Long] = txnLog.toSeq.toMap
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
+    /** (physical → logical renames, dropped physical names). */
+    def mapping: (Map[String, String], Set[String]) = (renames, drops)
+
+    /** This state after one more log action; file actions leave it. */
+    def folded(a: LogAction): MetaState = a match {
+      case AddConstraint(n, p) => copy(constraintLog = constraintLog.updated(n, p))
+      case DropConstraint(n)   => copy(constraintLog = constraintLog - n)
+      case RenameCol(ph, lg)   => copy(renameLog = renameLog.updated(ph, lg))
+      case DropCol(ph)         => copy(renameLog = renameLog - ph,
+        dropLog = if (dropLog.contains(ph)) dropLog else dropLog :+ ph)
+      case SetTxn(app, bv)     => copy(txnLog = txnLog.updated(app,
+        math.max(bv, txnLog.getOrElse(app, Long.MinValue))))
+      case SetSchema(j)        => copy(schemaJson = Some(j))
+      case Protocol(r, w)      => copy(protocol = (r, w))
+      case SetRowIdHwm(h)      => copy(rowIdHwm = math.max(rowIdHwm, h))
+      case _                   => this
+    }
+
+    /** This state as the metadata half of a [[CommitDelta]]: what a
+      * checkpoint records beside its files and what a clone's first
+      * commit carries. */
+    def asDelta: CommitDelta = CommitDelta(Nil, Nil,
+      cAdds = constraints.toSeq,
+      mRenames = renames.toSeq, mDrops = drops.toSeq,
+      txns = txns.toSeq,
+      mSchema = schema.map(_.json),
+      protocol = Some(protocol).filter(p => p._1.nonEmpty || p._2.nonEmpty),
+      rowIdHwm = Some(rowIdHwm).filter(_ > 0L))
+  }
+
+  /** One table version, folded once from the log: its live files in
+    * fold order and its metadata. */
+  private[lake] final case class TableState(version: Long,
+      entries: Seq[FileEntry], meta: MetaState)
+
+  /** Version 0: the never-written table. */
+  private val EmptyState = TableState(0L, Nil, MetaState())
 
   /** One manifest entry as a typed parquet-checkpoint row — the exact
     * [[FileEntry]] fields (dv/bloom/row-id refs, numeric and string

@@ -112,6 +112,16 @@ class IdentityColumnSpec extends SparkSpec {
     intercept[Exception](u.addIdentityColumn("row_seq"))
   }
 
+  test("a clone carries the allocation watermark: its appends continue " +
+      "past the source's values") {
+    val t = MergeTable(spark, tmpDir("idn").toString, None)
+    t.addIdentityColumn("row_seq")
+    t.append(orders(("o1", "2024-01-01", 1.0), ("o2", "2024-01-02", 2.0)))
+    val c = t.cloneTo(tmpDir("idn_clone").toString)
+    c.append(orders(("o3", "2024-01-03", 3.0)))
+    assert(ids(c) === Seq(1L, 2L, 3L))
+  }
+
   test("SQL: ALTER TABLE ADD IDENTITY COLUMN + INSERT INTO assign " +
       "through the statement surface") {
     val root = tmpDir("idn_sql").toString

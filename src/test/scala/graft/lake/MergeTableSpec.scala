@@ -1294,14 +1294,16 @@ class MergeTableSpec extends SparkSpec {
       t.delete(col("amount") === 1),
       t.update(col("order_id") === "o2" && col("amount") > 1.5,
         Map("amount" -> lit(3.0))),
-      t.compactWhere(col("date") === "d2"))
+      t.compactWhere(col("date") === "d2"),
+      t.overwriteWhere(orders(("o3", "d1", 3.0)), col("date") === "d1"))
     val params = t.history().filter($"version".isin(vs: _*))
       .orderBy("version").select("operation_parameters")
       .as[String].collect().toSeq
     assert(params === Seq(
       "predicate=(amount = CAST(1 AS DOUBLE))",
       "predicate=((order_id = 'o2') AND (amount > 1.5D)); set=amount",
-      "predicate=(date = 'd2')"))
+      "predicate=(date = 'd2')",
+      "mode=Overwrite; replaceWhere=(date = 'd1')"))
   }
 
   test("compactWhere with zorderCols Z-clusters inside the scope only") {
@@ -1357,8 +1359,9 @@ class MergeTableSpec extends SparkSpec {
     def same(t: MergeTable, layout: String): Unit = {
       val live = t.liveEntries()
       assert(live.nonEmpty, layout)
-      assert(t.physicalSchemaOf(live) ===
-        t.readEntries(live, mapping = (Map.empty, Set.empty)).schema, layout)
+      assert(t.physicalSchemaOf(live, t.declaredSchema) ===
+        t.readEntries(live, t.declaredSchema, (Map.empty, Set.empty)).schema,
+        layout)
     }
     val flat = MergeTable(spark, tmpDir("pso_flat").toString)
     flat.overwrite(orders(("o1", "d1", 1.0), ("o2", "d2", 2.0)))
